@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query profiling harness: run one registered query N times
   * under the SAME regime as [[Bench]] (noop sink, clearCache between
   * runs) and print per-run seconds plus the formatted plan. Usage:
@@ -16,17 +14,7 @@ object BenchOne {
     val runs = if (args.length > 1) args(1).toInt else 3
     val doExplain = args.length > 2 && args(2) == "explain"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(defaultCpus = "32")
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()

@@ -1,24 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Config-robustness knob (the PERF log-#28 shake): the gate must
-      // hash-match with AQE off and odd partition counts too.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_AQE / SPARK_GRAFT_CPUS are the config-robustness
+    // knobs (the PERF log-#28 shake): the gate must hash-match with
+    // AQE off and odd partition counts too.
+    val spark = GraftSession.start(defaultCpus = "4")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names); the driver sets
     // no filter and gets every query.

@@ -66,11 +66,11 @@ package object functions {
     // contract (sorted distinct lowercase vocabulary substrings): the
     // automaton's sorted distinct indices over a byte-order-sorted
     // term table map monotonically to the binary-sorted term array the
-    // old array_sort produced. Swapped in r14 after BenchCount
+    // old array_sort produced. Swapped in r14 after a count-only run
     // attributed q25's 25 s at sf10x to this scan (2 M docs × 51
     // terms × contains = 51 passes per text; the automaton is one) —
-    // the q131/BenchPhrase measurement (60× at 800 phrases) applied
-    // to the reference's own vocabulary path.
+    // the q131 phrase-count sweep (60× at 800 phrases, PERF.md)
+    // applied to the reference's own vocabulary path.
     // Degenerate vocabularies (ADVICE r14): PhraseScan requires ≥ 1
     // non-empty phrase, so filter empty terms and short-circuit an
     // empty vocabulary to the empty array the old Contains chain

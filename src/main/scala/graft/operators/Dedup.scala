@@ -171,7 +171,7 @@ object Dedup {
     * union in `windowVocabulary(cleanedBatch)` (and re-distinct) —
     * so materialize it ONCE (a warehouse table bucketed on `wh`, or
     * any parquet snapshot, fingerprint-keyed like the
-    * `windowsFor`/[[Similarity.indexName]] machinery) and never pay a
+    * `windowsFor`/[[graft.sources.SharedTable]] machinery) and never pay a
     * corpus re-tokenize per micro-batch. */
   def windowVocabulary(docs: DataFrame, width: Int = 6,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =

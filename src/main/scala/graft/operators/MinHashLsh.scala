@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * for oracle replication), exposed with (nHashes, bands, rowsPerBand)
   * free so [[LshPlanner]]-sized bandings are a PRODUCTION path, not a
   * spec-only exercise — `plannedPairs` sizes the split from the
-  * planner at a target Jaccard threshold and `graft.BenchLsh` measures
-  * the candidate-volume / verify-cost / recall trade against the
-  * pinned split at two corpus scales.
+  * planner at a target Jaccard threshold (PERF.md records the
+  * candidate-volume / verify-cost / recall trade against the pinned
+  * split at two corpus scales).
   *
   * Determinism: shingles hash once through the 60-bit md5-prefix
   * [[graft.plans.StableHash60]]; the per-function values derive by
@@ -103,17 +103,6 @@ object MinHashLsh {
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
   }
-
-  /** Pre-dedup bucket pair volume Σ C(|bucket|, 2) over all bands —
-    * the raw shuffle/verify work a banding choice generates, computed
-    * arithmetically from bucket sizes (never materializing the pairs). */
-  def bucketPairVolume(docs: DataFrame, nHashes: Int, bands: Int,
-      rowsPerBand: Int): Long =
-    bandedSignatures(docs, nHashes, bands, rowsPerBand)
-      .groupBy("band_idx", "band_hash").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .agg(coalesce(sum(expr("n * (n - 1) div 2")), lit(0L)))
-      .head().getLong(0)
 
   /** Planner-sized candidate pairs: (b, r) chosen by [[LshPlanner]]
     * for the signature budget at the target Jaccard threshold — the

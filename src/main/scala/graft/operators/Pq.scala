@@ -320,8 +320,8 @@ object Pq {
     // CacheRegistry-tracked (DataSized: one row per corpus vector).
     // Reclamation: the query path arms+drains it automatically; a
     // DIRECT caller must CacheRegistry.drain() once its codes are
-    // materialized (BenchPq does; repeated un-drained builds would
-    // accumulate a corpus-sized cache per call)
+    // materialized (repeated un-drained builds would accumulate a
+    // corpus-sized cache per call)
     val residuals = graft.CacheRegistry.persistTracked(
       Similarity.assignToCentroids(prepped, centroids, idCol)
         .join(broadcast(centroids), col("bucket") === col("cent_id"))

@@ -58,8 +58,9 @@ object NgramDupStats {
   /** Fast-path bound: token ids must pack 3×21 bits into one long. */
   private final val MaxFastTokens = 1 << 21
 
-  /** r15 kernel (BenchCount attributed q60's sf10x cost ~entirely to
-    * this per-row profile — compute-bound, not emit-bound): the
+  /** r15 kernel (a count-only run of q60 at sf10x cost about as much
+    * as the full query, so its cost is ~entirely this per-row profile
+    * — compute-bound, not emit-bound): the
     * original shape decoded the doc to UTF-16 (`toString`), regex-split
     * it, and built a String + HashSet entry PER WINDOW. This path
     * never materializes a token or window string:

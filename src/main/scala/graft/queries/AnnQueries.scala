@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.{functions => gf}
 import graft.operators.{Multimodal, Similarity}
+import graft.sources.SharedTable
 
 /** ANN + multimodal scoring-surface entries. The IVF query replicates
   * [[graft.operators.Similarity.ivfTopK]]'s exact semantics in DuckDB
@@ -1342,12 +1343,11 @@ object AnnQueries {
   private[queries] def grownIvfIndexFor(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (Similarity.IvfIndex, String) = {
-    val name = Similarity.grownIndexName(s, "ivfgrown", dir)
+    val name = SharedTable.grownIndexName(s, "ivfgrown", dir)
     val bcTbl = s"${name}_basecounts"
     val idx = Similarity.IvfIndex(s"${name}_centroids", s"${name}_assigned")
-    if (!s.catalog.tableExists(bcTbl)) {
-      Similarity.dropStaleGenerations(
-        s, Similarity.indexName("ivfgrown", dir), name, sep = "_g")
+    SharedTable.memoTables(s, Seq(idx.centroidTable, idx.assignedTable, bcTbl),
+        Seq(SharedTable.indexName("ivfgrown", dir) -> name), sep = "_g") {
       val emb = Tables.embeddings(s, dir)
       val built = Similarity.buildIndex(
         emb.filter(col("vec_id") % 7 =!= 0), name,
@@ -1356,11 +1356,6 @@ object AnnQueries {
         .groupBy("bucket").agg(count(lit(1)).as("n_base"))
       val rows = pre.collect().toSeq // nlist-bounded (≤ 16 rows)
       Similarity.appendToIndex(built, emb.filter(col("vec_id") % 7 === 0))
-      s.sql(s"DROP TABLE IF EXISTS `$bcTbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), bcTbl.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
       graft.sources.FileIO.writeWarehouseTable(
         s.createDataFrame(java.util.Arrays.asList(rows: _*), pre.schema),
         bcTbl)

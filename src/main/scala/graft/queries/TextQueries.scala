@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{functions => gf}
 import graft.functions.FanOutOps
 import graft.Tables
+import graft.sources.SharedTable
 
 /** Training-data-pipeline operators over `documents` / `embeddings`:
   * deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard),
@@ -254,17 +255,6 @@ object TextQueries {
       timed("graft_ecomps") { embCompsFor(s, dir) })
   }
 
-  /** Session-materialized rolling-hash window frame (doc_id, i, wh),
-    * L = 6 — the ONE (scan + tokenize + hash + explode) pass shared by
-    * q77 (shared-window census), q78 (heavy hitters) and q105 (span
-    * accounting). Materialized as a warehouse table BUCKETED BY wh so
-    * every consumer's wh-keyed aggregate and the q105 dup join are
-    * bucket-local (no re-shuffle of the window stream), and the three
-    * queries stop paying the corpus pass each (the round-9 in-suite
-    * profile: q105 re-derived windows q77/q78 had just built).
-    * Memoized per session like Similarity.indexFor, with the same
-    * stale-location cleanup; values are integers, so table-vs-inline
-    * cannot diverge. */
   /** Layout bucket count for the session-materialized shared tables,
     * derived from the corpus' on-disk size instead of a constant
     * (VERDICT r15 item 7: a fixed 16 was a local-mode scale constant —
@@ -294,28 +284,27 @@ object TextQueries {
     math.min(4096L, if (pow2 == target) pow2 else pow2 * 2).toInt
   }
 
-  private def windowsFor(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graft.CatalystBridge
-    val tbl = graft.operators.Similarity.indexName(s, "graft_wins6", dir)
-    if (!s.catalog.tableExists(tbl)) {
-      graft.operators.Similarity.dropStaleGenerations(
-        s, graft.operators.Similarity.indexName("graft_wins6", dir), tbl)
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val df = Tables.documents(s, dir)
+  /** Session-materialized rolling-hash window frame (doc_id, i, wh),
+    * L = 6 — the ONE (scan + tokenize + hash + explode) pass shared by
+    * q77 (shared-window census), q78 (heavy hitters) and q105 (span
+    * accounting). Materialized as a warehouse table BUCKETED BY wh so
+    * every consumer's wh-keyed aggregate and the q105 dup join are
+    * bucket-local (no re-shuffle of the window stream), and the three
+    * queries stop paying the corpus pass each (the round-9 in-suite
+    * profile: q105 re-derived windows q77/q78 had just built).
+    * Memoized per session by [[SharedTable.memo]]; values are
+    * integers, so table-vs-inline cannot diverge. */
+  private def windowsFor(s: SparkSession, dir: String): DataFrame =
+    SharedTable.memo(s, "graft_wins6", dir, "wh", shardCount(s, dir)) {
+      import org.apache.spark.sql.graft.CatalystBridge
+      Tables.documents(s, dir)
         .repartition(col("doc_id"))
         .select(col("doc_id"),
           posexplode(CatalystBridge.column(graft.plans.RollingHashWindows(
             CatalystBridge.expr(trim(col("text"))), 6))).as(Seq("p", "wh")))
         .select(col("doc_id"), (col("p").cast("long") + 1L).as("i"),
           col("wh"))
-      graft.sources.FileIO.writeBucketedTable(df, tbl, "wh", shardCount(s, dir))
     }
-    s.table(tbl)
-  }
 
   /** Session-materialized TERM-FREQUENCY backbone `(doc_id, term,
     * tf)` — the ONE (scan + tokenize + explode + per-doc-term
@@ -331,32 +320,21 @@ object TextQueries {
     * `doc_id` so the corpus-sized tf ⨝ dl joins and per-doc
     * aggregates are bucket-local; term-keyed frames are
     * vocabulary-sized and broadcast/AQE-handled downstream. */
-  private[queries] def tfFor(s: SparkSession, dir: String): DataFrame = {
-    val tbl = graft.operators.Similarity.indexName(s, "graft_tf", dir)
-    if (!s.catalog.tableExists(tbl)) {
-      graft.operators.Similarity.dropStaleGenerations(
-        s, graft.operators.Similarity.indexName("graft_tf", dir), tbl)
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val df = Tables.documents(s, dir)
+  private[queries] def tfFor(s: SparkSession, dir: String): DataFrame =
+    SharedTable.memo(s, "graft_tf", dir, "doc_id", shardCount(s, dir)) {
+      Tables.documents(s, dir)
         .repartition(col("doc_id"))
         .select(col("doc_id"), col("source"), explode(tokenCol).as("term"))
         .groupBy("doc_id", "source", "term")
         .agg(count(lit(1)).as("tf"))
-      graft.sources.FileIO.writeBucketedTable(df, tbl, "doc_id", shardCount(s, dir))
     }
-    s.table(tbl)
-  }
 
   /** [[lshPairs]] over an arbitrary (doc_id, text) frame — q125 feeds
     * DISTINCT-TEXT representatives through the same pipeline, so the
     * banding cost tracks distinct content, not corpus rows. The
-    * pipeline lives in [[graft.operators.MinHashLsh]] (parameterized —
-    * `BenchLsh` measures planner-sized bandings on the same code
-    * path); these queries pin (16, 4, 4) for oracle replication. */
+    * pipeline lives in [[graft.operators.MinHashLsh]] (parameterized,
+    * so planner-sized bandings run the same code path); these queries
+    * pin (16, 4, 4) for oracle replication. */
   private def lshPairsFrom(docs: DataFrame): DataFrame =
     graft.operators.MinHashLsh.candidatePairs(
       docs, NumHashes, Bands, RowsPerBand)
@@ -374,7 +352,7 @@ object TextQueries {
     * function of `doc_id` ([[graft.operators.Sampling.hashSplit]]) —
     * three integers per distinct text, costless for the consumers
     * that ignore them, and exactly q167's census input. */
-  private def textGroupsFor(s: SparkSession, dir: String): DataFrame = {
+  private def textGroupsFor(s: SparkSession, dir: String): DataFrame =
     // Stem v2 since r14: the table now carries `sig` (whether the text
     // produces a minhash signature, i.e. ≥ 3 tokens) MATERIALIZED —
     // computed once per DISTINCT text at build. The first r14 shape
@@ -382,20 +360,10 @@ object TextQueries {
     // MEMBER row (post-join), which re-tokenized the full corpus per
     // query at sf10x (q64 4.6 → 21.6 s regression, caught by the
     // labeled scale run). The stem bump forces regeneration over any
-    // persisted v1 warehouse table; v1 generations of BOTH stems are
-    // GC'd below.
-    val tbl = graft.operators.Similarity.indexName(s, "graft_tgroups2", dir)
-    if (!s.catalog.tableExists(tbl)) {
-      graft.operators.Similarity.dropStaleGenerations(
-        s, graft.operators.Similarity.indexName("graft_tgroups2", dir), tbl)
-      graft.operators.Similarity.dropStaleGenerations(
-        s, graft.operators.Similarity.indexName("graft_tgroups", dir), tbl)
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val df = graft.operators.Sampling
+    // persisted v1 warehouse table; v1 generations are GC'd too.
+    SharedTable.memo(s, "graft_tgroups2", dir, "doc_id", shardCount(s, dir),
+        retired = Seq("graft_tgroups")) {
+      graft.operators.Sampling
         .hashSplit(Tables.documents(s, dir), "doc_id")
         .select(col("doc_id"), trim(col("text")).as("txt"), col("split"))
         .groupBy("txt")
@@ -404,10 +372,7 @@ object TextQueries {
           sum(when(col("split") === "val", 1L).otherwise(0L)).as("n_val"),
           sum(when(col("split") === "test", 1L).otherwise(0L)).as("n_test"))
         .withColumn("sig", size(gf.tokens(col("txt"))) >= 3)
-      graft.sources.FileIO.writeBucketedTable(df, tbl, "doc_id", shardCount(s, dir))
     }
-    s.table(tbl)
-  }
 
   /** Session-materialized LSH candidate pairs over the distinct-text
     * REPRESENTATIVES of [[textGroupsFor]] — the banding self-join is
@@ -415,22 +380,11 @@ object TextQueries {
     * four consumers band the IDENTICAL frame (same reps, same pinned
     * (16, 4, 4) parameters), so it runs once per (session, corpus)
     * and lands on disk bucketed by `doc_a`. */
-  private def repPairsFor(s: SparkSession, dir: String): DataFrame = {
-    val tbl = graft.operators.Similarity.indexName(s, "graft_reppairs", dir)
-    if (!s.catalog.tableExists(tbl)) {
-      graft.operators.Similarity.dropStaleGenerations(
-        s, graft.operators.Similarity.indexName("graft_reppairs", dir), tbl)
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val df = lshPairsFrom(
+  private def repPairsFor(s: SparkSession, dir: String): DataFrame =
+    SharedTable.memo(s, "graft_reppairs", dir, "doc_a", shardCount(s, dir)) {
+      lshPairsFrom(
         textGroupsFor(s, dir).select(col("doc_id"), col("txt").as("text")))
-      graft.sources.FileIO.writeBucketedTable(df, tbl, "doc_a", shardCount(s, dir))
     }
-    s.table(tbl)
-  }
 
   /** Session-materialized per-doc bigram counts `(doc_id, half, w1,
     * w2, k)` — the ONE corpus tokenize + bigram count every bigram-LM
@@ -446,18 +400,10 @@ object TextQueries {
     * the only shuffles left in the whole KN chain are the w2-keyed
     * continuation steps (the n1r count and its join back, broadcast
     * at toy scale) and the final per-doc rollup. */
-  private def bigramCountsFor(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graft.CatalystBridge
-    val tbl = graft.operators.Similarity.indexName(s, "graft_bigrams", dir)
-    if (!s.catalog.tableExists(tbl)) {
-      graft.operators.Similarity.dropStaleGenerations(
-        s, graft.operators.Similarity.indexName("graft_bigrams", dir), tbl)
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val df = Tables.documents(s, dir)
+  private def bigramCountsFor(s: SparkSession, dir: String): DataFrame =
+    SharedTable.memo(s, "graft_bigrams", dir, "w1", shardCount(s, dir)) {
+      import org.apache.spark.sql.graft.CatalystBridge
+      Tables.documents(s, dir)
         .repartition(col("doc_id"))
         .select(col("doc_id"), (col("doc_id") % 2).as("half"),
           explode(CatalystBridge.column(graft.plans.ShingleTokens(
@@ -469,10 +415,34 @@ object TextQueries {
           split_part(col("bigram"), lit(" "), lit(1)).as("w1"),
           split_part(col("bigram"), lit(" "), lit(2)).as("w2"),
           col("k"))
-      graft.sources.FileIO.writeBucketedTable(df, tbl, "w1", shardCount(s, dir))
     }
-    s.table(tbl)
-  }
+
+  /** Session-materialized GROUP-level connected components of the
+    * shared rep-pair graph `(gid, component_id)` — the CC fixpoint
+    * (iterative localCheckpoint rounds + convergence checksums, ~5
+    * jobs) that q64, q102 and q181 were each re-running per query on
+    * the IDENTICAL [[repPairsFor]] edges. Labels are component-min
+    * ids — a pure function of the edge set, layout-independent — and
+    * exact longs, so table-vs-inline cannot diverge. This is also the
+    * artifact a real pipeline materializes (the q102 "dedup mapping
+    * table" stance): components are computed once per corpus, then
+    * probed. */
+  private def textCompsFor(s: SparkSession, dir: String): DataFrame =
+    SharedTable.memo(s, "graft_tcomps", dir, "gid", shardCount(s, dir)) {
+      graft.operators.Dedup.connectedComponents(
+        repPairsFor(s, dir), aCol = "doc_a", bCol = "doc_b", idCol = "gid")
+    }
+
+  /** [[textCompsFor]]'s embedding-side twin: group-level CC of the
+    * [[embDupCollapsed]] pair graph, materialized once per (session,
+    * corpus). */
+  private def embCompsFor(s: SparkSession, dir: String): DataFrame =
+    SharedTable.memo(s, "graft_ecomps", dir, "gid", shardCount(s, dir)) {
+      val (_, gpairs, _) = embDupCollapsed(s, dir)
+      graft.operators.Dedup.connectedComponents(
+        gpairs.select(col("ga"), col("gb")),
+        aCol = "ga", bCol = "gb", idCol = "gid")
+    }
 
   /** Member-level connected components of the RAW LSH candidate graph
     * (q64's output shape), computed over the DISTINCT-TEXT group graph
@@ -489,55 +459,6 @@ object TextQueries {
     * min member id per group). The O(E log V) fixpoint thus runs over
     * distinct-content edges — d² fewer at duplication factor d.
     * Output: (doc_id, component_id) for every doc in ≥ 1 raw pair. */
-  /** Session-materialized GROUP-level connected components of the
-    * shared rep-pair graph `(gid, component_id)` — the CC fixpoint
-    * (iterative localCheckpoint rounds + convergence checksums, ~5
-    * jobs) that q64, q102 and q181 were each re-running per query on
-    * the IDENTICAL [[repPairsFor]] edges. Labels are component-min
-    * ids — a pure function of the edge set, layout-independent — and
-    * exact longs, so table-vs-inline cannot diverge. This is also the
-    * artifact a real pipeline materializes (the q102 "dedup mapping
-    * table" stance): components are computed once per corpus, then
-    * probed. */
-  private def textCompsFor(s: SparkSession, dir: String): DataFrame = {
-    val tbl = graft.operators.Similarity.indexName(s, "graft_tcomps", dir)
-    if (!s.catalog.tableExists(tbl)) {
-      graft.operators.Similarity.dropStaleGenerations(
-        s, graft.operators.Similarity.indexName("graft_tcomps", dir), tbl)
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val df = graft.operators.Dedup.connectedComponents(
-        repPairsFor(s, dir), aCol = "doc_a", bCol = "doc_b", idCol = "gid")
-      graft.sources.FileIO.writeBucketedTable(df, tbl, "gid", shardCount(s, dir))
-    }
-    s.table(tbl)
-  }
-
-  /** [[textCompsFor]]'s embedding-side twin: group-level CC of the
-    * [[embDupCollapsed]] pair graph, materialized once per (session,
-    * corpus). */
-  private def embCompsFor(s: SparkSession, dir: String): DataFrame = {
-    val tbl = graft.operators.Similarity.indexName(s, "graft_ecomps", dir)
-    if (!s.catalog.tableExists(tbl)) {
-      graft.operators.Similarity.dropStaleGenerations(
-        s, graft.operators.Similarity.indexName("graft_ecomps", dir), tbl)
-      s.sql(s"DROP TABLE IF EXISTS `$tbl`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val (_, gpairs, _) = embDupCollapsed(s, dir)
-      val df = graft.operators.Dedup.connectedComponents(
-        gpairs.select(col("ga"), col("gb")),
-        aCol = "ga", bCol = "gb", idCol = "gid")
-      graft.sources.FileIO.writeBucketedTable(df, tbl, "gid", shardCount(s, dir))
-    }
-    s.table(tbl)
-  }
-
   private def textDupComponents(s: SparkSession, dir: String): DataFrame = {
     val comp = textCompsFor(s, dir)
     val members = textGroupMembers(s, dir)
@@ -549,22 +470,9 @@ object TextQueries {
     viaCross.union(viaSelf)
   }
 
-  /** q30's pipeline factored into STAGES (VERDICT r13 item 1): ONE
-    * definition feeds both the oracle-gated query (`.output`) and the
-    * `graft.BenchQ30` sf1x/sf10x attribution harness, so the measured
-    * stages can never drift from what the suite ships. All frames are
-    * lazy; persistTracked caches drain per materialization, so forcing
-    * a stage pays its whole upstream — the harness reads per-stage
-    * cost as CUMULATIVE DIFFS (prep ≤ candgen ≤ verify ≤ full). */
-  private[graft] final case class Q30Stages(
-      gp: org.apache.spark.sql.DataFrame,
-      candidateShape: org.apache.spark.sql.DataFrame,
-      verifyProbe: org.apache.spark.sql.DataFrame,
-      qual: org.apache.spark.sql.DataFrame,
-      output: org.apache.spark.sql.DataFrame)
-
-  private[graft] def jaccardStages(
-      s: SparkSession, dir: String): Q30Stages = {
+  /** q30's pipeline: exact-dup collapse, triangle-blocked candidate
+    * generation, the verify kernel and the contract sort. */
+  private def jaccardPairs(s: SparkSession, dir: String): DataFrame = {
       // Exact-dup collapse BEFORE the quadratic verify: identical
       // token SETS (same canonical fingerprint) pay the
       // array_intersect once per distinct pair, not once per doc pair
@@ -659,18 +567,6 @@ object TextQueries {
           col("a.fp") < col("b.fp") && sizeBand)
         .select(col("a.ids").as("ids_a"), col("b.ids").as("ids_b"),
           col("a.ntok").as("na"), col("b.ntok").as("nb"), inter.as("inter"))
-      // Stage probe — candidate GENERATION only: the identical
-      // triangle-blocked join with the intersect kernel replaced by a
-      // size sum, so the token arrays still ride the fan-out exchange
-      // (column pruning would otherwise drop them and flatter the
-      // join) but no per-pair merge runs. Consumed by BenchQ30.
-      val candidateShape = a.join(b,
-          col("a.lang") === col("b.lang") &&
-          col("a.blk_a") === col("b.blk_a") &&
-          col("a.blk_b") === col("b.blk_b") &&
-          col("a.fp") < col("b.fp") && sizeBand)
-        .select(sum(size(col("a.toks")) + size(col("b.toks")))
-          .as("szsum"), count(lit(1)).as("n_cand"))
       // Typed barrier: a Column filter on the jaccard would get pushed
       // into the join CONDITION, where the intersection would run on
       // every hash-bucket probe before the cheap band/order
@@ -761,10 +657,8 @@ object TextQueries {
             greatest(col("ka") / 2, lit(1)).cast("long").as("weight")))
       val docWeights = withinWeights.unionAll(crossWeights)
       val bounds = graft.operators.RangeSort.weightedBounds(docWeights, parts)
-      val output = graft.operators.RangeSort.sortedByBounds(
+      graft.operators.RangeSort.sortedByBounds(
         pairs, col("doc_a"), bounds, Seq(col("doc_b")))
-      Q30Stages(gp, candidateShape, candidates.select(sum(col("inter"))
-        .as("inter_sum"), count(lit(1)).as("n_cand")), qual, output)
   }
 
   /** IVF-bucketed embedding near-dup candidate pairs with exact cosine
@@ -802,20 +696,10 @@ object TextQueries {
     // is written LAST — the memoization witness, so a crash mid-build
     // can never serve a partial trio. Cosines are computed once at
     // build and round-trip parquet bit-exactly.
-    val gT = Similarity.indexName(s, "graft_egroups", dir)
-    val pT = Similarity.indexName(s, "graft_egpairs", dir)
-    val sT = Similarity.indexName(s, "graft_eselfdups", dir)
-    if (!s.catalog.tableExists(sT)) {
-      Seq("graft_egroups" -> gT, "graft_egpairs" -> pT,
-        "graft_eselfdups" -> sT).foreach { case (stem, t) =>
-        Similarity.dropStaleGenerations(
-          s, Similarity.indexName(stem, dir), t)
-        s.sql(s"DROP TABLE IF EXISTS `$t`")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-      }
+    val stems = Seq("graft_egroups", "graft_egpairs", "graft_eselfdups")
+    val tables @ Seq(gT, pT, sT) = stems.map(SharedTable.indexName(s, _, dir))
+    SharedTable.memoTables(s, tables,
+        stems.map(SharedTable.indexName(_, dir)).zip(tables)) {
       val idx = Similarity.sharedIvfIndex(Tables.embeddings(s, dir), dir)
       val emb = Tables.embeddings(s, dir)
       val groups = graft.CacheRegistry.persistTracked(
@@ -1153,7 +1037,7 @@ object TextQueries {
         |WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
         |      / len(list_distinct(list_concat(a.toks, b.toks))) >= 0.9
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      jaccardStages(s, dir).output
+      jaccardPairs(s, dir)
     },
 
     // Brute-force cosine similarity baseline: for each query vector
@@ -3165,8 +3049,8 @@ object TextQueries {
     }) { (s, dir) =>
       import org.apache.spark.sql.graft.CatalystBridge
       val L = 6
-      // Fused rebuild (r15, PERF #55): BenchCount attributed q173's
-      // whole sf10x cost (18.7 s full vs 0.5 s count-only) to the
+      // Fused rebuild (r15, PERF #55): a count-only run attributed
+      // q173's whole sf10x cost (18.7 s full vs 0.5 s count-only) to the
       // witness tail — corpus-wide token posexplode + anti-join +
       // per-doc collect/sort/join/md5. The span list travels as two
       // per-doc position arrays and ONE codegen'd
