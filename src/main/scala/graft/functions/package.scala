@@ -171,25 +171,6 @@ package object functions {
         sequence(lit(1), size(toks) - lit(w - 1)),
         i => concat_ws(" ", slice(toks, i, lit(w)))))
 
-  // ---------------------------------------------------------------------
-  // Count-Min sketch (graft.plans.CmSketch) — mergeable frequency grid.
-  // ---------------------------------------------------------------------
-
-  /** Count-Min sketch aggregate over a string column: a depth×width
-    * mergeable counter grid, O(width·depth) state per partition. */
-  def cmSketch(item: Column, width: Int, depth: Int): Column =
-    org.apache.spark.sql.graft.CatalystBridge.column(
-      graft.plans.CmSketch(
-        org.apache.spark.sql.graft.CatalystBridge.expr(item), width, depth))
-
-  /** Point-frequency probe of a [[cmSketch]] result — never
-    * undercounts; overcounts by ≤ ~(e/width)·N w.h.p. */
-  def cmEstimate(sketch: Column, item: Column): Column =
-    org.apache.spark.sql.graft.CatalystBridge.column(
-      graft.plans.CmProbe(
-        org.apache.spark.sql.graft.CatalystBridge.expr(sketch),
-        org.apache.spark.sql.graft.CatalystBridge.expr(item)))
-
   /** Fan a scan out by `key` ONLY when it would under-parallelize:
     * a single-file (single-row-group) parquet input runs its per-row
     * tokenize/shingle/hash work in as many tasks as the scan has
@@ -218,18 +199,6 @@ package object functions {
       graft.functions.fanOutScan(df, key)
   }
 
-  /** Content-defined chunks of a text column ([[graft.plans.CdcChunks]]
-    * — FastCDC gear-hash boundaries): chunks concatenate back to the
-    * input, and an edit reshapes only its own chunk before the stream
-    * re-synchronizes. The dedup-storage split; the token-level
-    * SQL-expressible twin is q135. */
-  def cdcChunks(text: Column, maskBits: Int = 6, minLen: Int = 16,
-      maxLen: Int = 256): Column =
-    org.apache.spark.sql.graft.CatalystBridge.column(
-      graft.plans.CdcChunks(
-        org.apache.spark.sql.graft.CatalystBridge.expr(text),
-        maskBits, minLen, maxLen))
-
   /** Sorted distinct indices of the `phrases` occurring in `text` —
     * ONE Aho–Corasick pass over the bytes regardless of phrase count
     * ([[graft.plans.PhraseScan]]; the scale path where the unrolled
@@ -238,15 +207,4 @@ package object functions {
     org.apache.spark.sql.graft.CatalystBridge.column(
       graft.plans.PhraseScan(
         org.apache.spark.sql.graft.CatalystBridge.expr(text), phrases))
-
-  /** DEFLATE compression ratio of the string's UTF-8 bytes (zlib
-    * level 6) — the compressibility quality signal
-    * ([[graft.plans.DeflateRatio]]): repetitive/boilerplate text
-    * compresses far below natural language, random junk refuses to
-    * compress. NULL for empty/null input; one codegen'd O(len) pass
-    * per row, no shuffle. */
-  def deflateRatio(text: Column): Column =
-    org.apache.spark.sql.graft.CatalystBridge.column(
-      graft.plans.DeflateRatio(
-        org.apache.spark.sql.graft.CatalystBridge.expr(text)))
 }

@@ -1,40 +1,14 @@
 package graft.operators
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed BPE (byte-pair-encoding) tokenizer TRAINING — the
-  * missing half of the engine's token-accounting story (q35/q48 count
-  * tokens; this learns the merge table those tokenizers run on).
-  * Algorithm: Sennrich/Haddow/Birch, "Neural Machine Translation of
-  * Rare Words with Subword Units" (ACL 2016) — public knowledge.
-  *
-  * Scale design: the classic trainer is a corpus-scan-per-merge loop;
-  * at 100 TB that is K full scans. This implementation does what
-  * production trainers do — ONE pass over the corpus builds the
-  * word-frequency table (a map-side-combined aggregate, shuffle keyed
-  * on the word), and every subsequent iteration touches only that
-  * DISTINCT-WORD table, whose size is vocabulary-bounded (Heaps' law:
-  * sublinear in corpus), not corpus-bounded. Per iteration: one
-  * pair-count aggregate over the word table (partial aggregation
-  * upstream), one bounded top-1 (TakeOrderedAndProject — count desc,
-  * pair asc for determinism), one per-row merge application. Each
-  * round eagerly localCheckpoints its word table and unpersists the
-  * parent (the connected-components precedent — lineage would
-  * otherwise grow linearly in K, and a truncated parent must outlive
-  * its un-materialized child).
+/** The corpus pass of byte-pair-encoding (BPE) tokenizer training
+  * (Sennrich/Haddow/Birch, ACL 2016): the word-frequency table every
+  * merge round counts adjacent symbol pairs over. q103 pins round 0's
+  * pair census on it.
   */
 object BpeTrainer {
-
-  /** One learned merge: `left`+`right` → `left+right`, rank = order
-    * learned (0 first), `count` = its pair frequency when chosen. */
-  final case class Merge(left: String, right: String, rank: Int, count: Long)
-
-  /** Internal per-word state — public only because Spark's encoder
-    * codegen must construct it from generated bytecode. */
-  final case class WordSyms(syms: Seq[String], cnt: Long)
 
   /** (word, cnt) from a documents frame — the single corpus-sized
     * pass. Whitespace tokenization matching `graft.functions.tokens`. */
@@ -42,320 +16,4 @@ object BpeTrainer {
     graft.functions.fanOutScan(docs, col(textCol)) // scale-aware fan-out
       .select(explode(graft.functions.tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-
-  /** Learn `numMerges` merges from a (word, cnt) frame. Words split
-    * to characters; no end-of-word marker (document-level BPE —
-    * callers wanting the </w> convention can append it to `word`
-    * upstream). Deterministic: ties break on (left, right) ascending.
-    *
-    * HYBRID dispatch — how production trainers actually scale: the
-    * corpus-sized work (the word-frequency aggregate) is already done
-    * distributed by [[wordFrequencies]]; merge LEARNING only ever
-    * touches the distinct-word table. When that table fits the driver
-    * (`collectThreshold` rows — a few hundred MB at the default; real
-    * tokenizer vocab tables are ~1–10 M words even at web scale), the
-    * K-merge loop runs locally in [[trainLocal]]: K=32000 merges as
-    * K Spark jobs would be scheduler-bound at ~100 ms/round, while
-    * the local loop does the same arithmetic in microseconds per
-    * round. Corpora whose distinct-word count exceeds the threshold
-    * fall back to the fully distributed loop ([[trainDistributed]]) —
-    * same semantics, spec-pinned equal. */
-  def train(wordFreq: DataFrame, numMerges: Int,
-      collectThreshold: Long = 2_000_000L): Seq[Merge] = {
-    val distinctWords = wordFreq.count()
-    if (distinctWords <= collectThreshold) {
-      val spark = wordFreq.sparkSession
-      import spark.implicits._
-      val freq = wordFreq
-        .select(col("word").cast("string"), col("cnt").cast("long"))
-        .as[(String, Long)].collect()
-      trainLocal(freq, numMerges)
-    } else trainDistributed(wordFreq, numMerges)
-  }
-
-  /** Driver-side merge loop over a collected (word, cnt) table —
-    * the fast path of [[train]]. Semantics identical to
-    * [[trainDistributed]] (count desc, (left, right) asc tie-break). */
-  def trainLocal(freq: Seq[(String, Long)], numMerges: Int): Seq[Merge] = {
-    require(numMerges >= 0, s"numMerges must be >= 0: $numMerges")
-    // Collapse duplicate words defensively, then work on symbol seqs.
-    var words: Map[Seq[String], Long] = freq
-      .groupMapReduce { case (w, _) => codePointSplit(w) }(_._2)(_ + _)
-    val merges = Seq.newBuilder[Merge]
-    var rank = 0
-    var done = false
-    while (rank < numMerges && !done) {
-      val counts = mutable.Map.empty[(String, String), Long]
-      words.foreach { case (syms, c) =>
-        var i = 0
-        while (i + 1 < syms.length) {
-          val p = (syms(i), syms(i + 1))
-          counts(p) = counts.getOrElse(p, 0L) + c
-          i += 1
-        }
-      }
-      if (counts.isEmpty) done = true
-      else {
-        var best: ((String, String), Long) = null
-        counts.foreach { e =>
-          // Ties break in CODE-POINT order (cpCompare), matching
-          // Spark's UTF8String binary sort in the distributed path —
-          // Scala's String < is UTF-16 code-unit order, which disagrees
-          // for [U+E000, U+FFFF] vs supplementary symbols.
-          def beats: Boolean = {
-            val cl = cpCompare(e._1._1, best._1._1)
-            cl < 0 || (cl == 0 && cpCompare(e._1._2, best._1._2) < 0)
-          }
-          if (best == null || e._2 > best._2 || (e._2 == best._2 && beats))
-            best = e
-        }
-        val ((l, r), c) = best
-        merges += Merge(l, r, rank, c)
-        words = words.groupMapReduce { case (syms, _) =>
-          applyMerge(syms, l, r)
-        }(_._2)(_ + _)
-        rank += 1
-      }
-    }
-    merges.result()
-  }
-
-  /** Fully distributed merge loop — the unbounded-vocabulary fallback
-    * of [[train]]. Per ROUND: one pair aggregate, one bounded top-K
-    * collect, one per-row apply — but each round learns up to
-    * `batchSize` merges, not one ([[selectBatch]]): at K = 32 000
-    * merges a one-merge-per-round loop is scheduler-bound
-    * (~100 ms/round ⇒ ~1 h of pure overhead), while batching divides
-    * the round count by the realized batch width with BIT-IDENTICAL
-    * output (the selection rule provably commutes with the sequential
-    * trainer — see selectBatch's scaladoc). */
-  def trainDistributed(wordFreq: DataFrame, numMerges: Int,
-      batchSize: Int = 64): Seq[Merge] =
-    trainDistributedWithRounds(wordFreq, numMerges, batchSize)._1
-
-  /** [[trainDistributed]] plus the number of Spark rounds it ran —
-    * the observable the batching exists to shrink. */
-  def trainDistributedWithRounds(wordFreq: DataFrame, numMerges: Int,
-      batchSize: Int = 64): (Seq[Merge], Int) = {
-    require(numMerges >= 0, s"numMerges must be >= 0: $numMerges")
-    require(batchSize >= 1, s"batchSize must be >= 1: $batchSize")
-    val spark = wordFreq.sparkSession
-    import spark.implicits._
-    var words: Dataset[WordSyms] = wordFreq
-      .select(col("word").cast("string"), col("cnt").cast("long"))
-      .as[(String, Long)]
-      .map { case (w, c) => WordSyms(codePointSplit(w), c) }
-      .localCheckpoint(true)
-    val merges = Seq.newBuilder[Merge]
-    var rank = 0
-    var rounds = 0
-    var done = false
-    while (rank < numMerges && !done) {
-      // Pair counts over the word table: explode adjacent pairs
-      // weighted by word count. flatMap + groupBy = partial agg
-      // upstream of one shuffle whose key space is the pair vocab.
-      // The window is 2×want+1 so selectBatch can both fill the batch
-      // and see the tie-guard sentinel; TakeOrderedAndProject keeps
-      // the collect bounded — no global sort.
-      val want = math.min(batchSize, numMerges - rank)
-      val windowLimit = 2 * want + 1
-      val window = words
-        .flatMap(w => w.syms.iterator.zip(w.syms.iterator.drop(1))
-          .map { case (a, b) => ((a, b), w.cnt) }.toSeq)
-        .groupByKey(_._1)
-        .mapValues(_._2).reduceGroups(_ + _)
-        .map { case ((a, b), c) => (a, b, c) }
-        .orderBy(desc("_3"), asc("_1"), asc("_2"))
-        .limit(windowLimit)
-        .collect()
-      rounds += 1
-      if (window.isEmpty) done = true
-      else {
-        val batch0 = selectBatch(window.toIndexedSeq, want,
-          exhaustive = window.length < windowLimit)
-        // Concat-collision guard: selectBatch's sequential-equivalence
-        // argument assumes a batch merge only creates/destroys
-        // adjacencies involving its OWN symbols. If some admitted
-        // concatenation l+r already exists as a SYMBOL u elsewhere
-        // (two-path tokens — "aab" reachable as a+ab and aa+b), the
-        // merge also grows existing (u, ·)/(·, u) pair counts, which
-        // can reorder picks mid-batch. Exact detection: one
-        // short-circuit scan of the vocabulary-bounded word table; on
-        // a hit the round degrades to the plain one-merge step. Fires
-        // only on multi-merge rounds and only for organic two-path
-        // vocabularies — the scan is the same cost class as the
-        // census pass it accompanies.
-        val batch =
-          if (batch0.length <= 1) batch0
-          else {
-            val concats = batch0.map { case (l, r, _) => l + r }.toSet
-            val collides =
-              !words.filter(w => w.syms.exists(concats.contains)).isEmpty
-            if (collides) batch0.take(1) else batch0
-          }
-        batch.foreach { case (l, r, c) =>
-          merges += Merge(l, r, rank, c)
-          rank += 1
-        }
-        // Apply the whole batch (greedy left-to-right pass per merge —
-        // batch pairs are symbol-disjoint, so application order is
-        // immaterial) and EAGERLY checkpoint the result before
-        // unpersisting its parent: a localCheckpoint truncates
-        // lineage, so the parent's blocks must stay alive until the
-        // child's are materialized.
-        val pairs = batch.map { case (l, r, _) => (l, r) }
-        val next = words
-          .map(w => WordSyms(applyMerges(w.syms, pairs), w.cnt))
-          .localCheckpoint(true)
-        words.unpersist()
-        words = next
-      }
-    }
-    words.unpersist()
-    (merges.result(), rounds)
-  }
-
-  /** The longest prefix of one round's pair census that a SEQUENTIAL
-    * trainer provably learns in exactly this order, so applying it as
-    * one batch is bit-identical to `|prefix|` sequential rounds.
-    *
-    * `window` is the census top slice in (count desc, pair asc) order;
-    * `exhaustive` says whether it is the WHOLE census (false ⇒ pairs
-    * with count ≤ window.last exist beyond it). The argument:
-    *
-    *  - Admission stops at the first pair sharing a symbol with an
-    *    admitted one. Merges with pairwise-DISJOINT symbol sets leave
-    *    each other's census counts invariant (a merge (a,b)→ab only
-    *    creates/destroys adjacencies involving a, b, or ab), so after
-    *    applying admitted merges 1..j−1, pair j still has its census
-    *    count and everything that ranked above it is already applied.
-    *  - A merge (l,r) CREATES pairs (x, lr) / (lr, y) whose counts are
-    *    bounded by the census counts of (x,l) / (r,y) — both share a
-    *    symbol with (l,r), i.e. both rank at or below the stop point.
-    *    So created pairs can never STRICTLY outrank a kept pair; they
-    *    can TIE it, and ties break on the pair name, which a created
-    *    pair might win. The guard: every admitted pair whose count is
-    *    ≤ the best unscanned/interacting count is dropped
-    *    (`takeWhile > stopCnt`), leaving only pairs that strictly
-    *    dominate anything a batch merge could create.
-    *  - The window head is the global census max — the sequential pick
-    *    by definition — so the batch is never empty and every round
-    *    makes progress even when the guard drops everything else. */
-  private[operators] def selectBatch(
-      window: IndexedSeq[(String, String, Long)], want: Int,
-      exhaustive: Boolean): Seq[(String, String, Long)] = {
-    val used = mutable.Set.empty[String]
-    var out = Vector.empty[(String, String, Long)]
-    var stopCnt = -1L
-    var idx = 0
-    while (idx < window.length && out.length < want && stopCnt < 0) {
-      val p = window(idx)
-      if (used(p._1) || used(p._2)) stopCnt = p._3
-      else {
-        out :+= p
-        used += p._1
-        used += p._2
-        idx += 1
-      }
-    }
-    if (stopCnt < 0) {
-      // Batch filled by `want` with no interaction yet: only pairs
-      // that INTERACT with an admitted merge threaten ties (disjoint
-      // unadmitted pairs neither change counts nor get created), so
-      // scan the rest of the window for the first such pair; pairs
-      // beyond a truncated window are unknown, so its last count
-      // bounds them.
-      var j = idx
-      while (j < window.length && stopCnt < 0) {
-        val p = window(j)
-        if (used(p._1) || used(p._2)) stopCnt = p._3
-        j += 1
-      }
-      if (stopCnt < 0 && !exhaustive) stopCnt = window.last._3
-    }
-    if (stopCnt >= 0) out = out.takeWhile(_._3 > stopCnt)
-    if (out.isEmpty) out = Vector(window.head)
-    out
-  }
-
-  /** Code-point order (== UTF-8 binary order, the order Spark sorts
-    * strings in) — the tie-break both trainer paths share. */
-  private[operators] def cpCompare(a: String, b: String): Int = {
-    var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val ca = a.codePointAt(i)
-      val cb = b.codePointAt(j)
-      if (ca != cb) return Integer.compare(ca, cb)
-      i += Character.charCount(ca)
-      j += Character.charCount(cb)
-    }
-    Integer.compare(a.length - i, b.length - j)
-  }
-
-  /** Code-point-safe character split (surrogate pairs stay one
-    * symbol) — must match [[graft.plans.BpeEncode]]'s split exactly. */
-  private[operators] def codePointSplit(w: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var i = 0
-    while (i < w.length) {
-      val n = Character.charCount(w.codePointAt(i))
-      out += w.substring(i, i + n)
-      i += n
-    }
-    out.result()
-  }
-
-  /** Apply a batch of symbol-disjoint merges: one greedy pass each.
-    * Disjointness makes the order immaterial; rank order is kept for
-    * readability. */
-  private[operators] def applyMerges(
-      syms: Seq[String], pairs: Seq[(String, String)]): Seq[String] =
-    pairs.foldLeft(syms) { case (s, (l, r)) => applyMerge(s, l, r) }
-
-  /** One greedy left-to-right application of merge (l, r). */
-  private[operators] def applyMerge(
-      syms: Seq[String], l: String, r: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var i = 0
-    val n = syms.length
-    while (i < n) {
-      if (i + 1 < n && syms(i) == l && syms(i + 1) == r) {
-        out += l + r
-        i += 2
-      } else {
-        out += syms(i)
-        i += 1
-      }
-    }
-    out.result()
-  }
-
-  /** Encode one word with a learned merge table: split to chars, apply
-    * merges in rank order (the standard BPE encode). Pure JVM — shared
-    * by [[graft.plans.BpeEncode]]'s interpreted and codegen paths. */
-  def encodeWord(word: String, merges: Seq[Merge]): Seq[String] = {
-    var syms: Seq[String] = codePointSplit(word)
-    merges.foreach { m =>
-      if (syms.length > 1) syms = applyMerge(syms, m.left, m.right)
-    }
-    syms
-  }
-
-  /** Vocabulary implied by a merge table: single characters seen in
-    * the word table plus one entry per merge. The char split is
-    * CODE-POINT-wise (Java regex `.` consumes a full surrogate pair),
-    * matching [[codePointSplit]] — `split(word, "")` would shear
-    * supplementary characters into lone surrogates and disagree with
-    * the symbols training actually produced. */
-  def vocabulary(wordFreq: DataFrame, merges: Seq[Merge]): DataFrame = {
-    val spark = wordFreq.sparkSession
-    import spark.implicits._
-    val chars = wordFreq
-      .select(explode(
-        regexp_extract_all(col("word"), lit("(?s)."), lit(0))).as("token"))
-      .filter(col("token") =!= "").distinct()
-    val merged = merges.map(m => m.left + m.right).toDF("token")
-    chars.union(merged).distinct()
-  }
 }

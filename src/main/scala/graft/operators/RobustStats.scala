@@ -89,32 +89,6 @@ object RobustStats {
     * multiplicatively, which would misroute the choice — q113's MAD
     * pass (a broadcast-join of the median onto the same scan) shows a
     * 45× inflation. */
-  /** ONE-PASS approximate grouped quantiles on the mergeable KLL
-    * aggregate ([[graft.plans.QuantileSketch]]) — the sketch twin of
-    * [[quantilesByKey]]: where the exact path pays one corpus scan
-    * per refinement round (and the sort path a per-key sort), this is
-    * a single hash aggregate shipping O(k log(n/k)) sketch state per
-    * (partition, key) — the only shape available to a streaming
-    * aggregation, and the cheap one for monitoring where ≲1% rank
-    * error (k=200) is acceptable. Output: one column per probe name,
-    * same layout as [[quantilesByKey]]. */
-  def approxQuantilesByKey(df: DataFrame, keyCol: String, valCol: String,
-      probes: Seq[(Double, String)], k: Int = 200): DataFrame = {
-    require(probes.nonEmpty, "at least one quantile probe is required")
-    val sketch = org.apache.spark.sql.graft.CatalystBridge.column(
-      graft.plans.QuantileSketch(
-        org.apache.spark.sql.graft.CatalystBridge.expr(
-          col(valCol).cast("double")),
-        k, probes.map(_._1)))
-    df.filter(col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(sketch.as("_qs"))
-      .select(col(keyCol) +:
-        probes.zipWithIndex.map { case ((_, name), i) =>
-          col("_qs").getItem(i).as(name)
-        }: _*)
-  }
-
   def quantilesByKey(df: DataFrame, keyCol: String, valCol: String,
       probes: Seq[(Double, String)], buckets: Int = 4096,
       sortPathMaxBytes: Long = SortPathMaxBytes,
@@ -302,10 +276,8 @@ object RobustStats {
       keyCol, replicates)
 
   /** The one-pass half: per-key exact-long bootstrap sums (2R+2
-    * columns). ALGEBRAIC — cells merge by addition, which is what lets
-    * [[graft.streaming.DocumentStreams.bootstrapMeanStream]] maintain
-    * the identical state incrementally under Structured Streaming. */
-  private[graft] def bootstrapCells(df: DataFrame, keyCol: String,
+    * columns). ALGEBRAIC — cells merge by addition. */
+  private def bootstrapCells(df: DataFrame, keyCol: String,
       valCol: String, idCol: String, replicates: Int): DataFrame = {
     require(replicates >= 2, s"need >= 2 replicates, got $replicates")
     val vt = df.schema(valCol).dataType
@@ -353,9 +325,8 @@ object RobustStats {
   }
 
   /** The row-local half: replicate means → se → normal CI. Pure
-    * projection over [[bootstrapCells]] output — no aggregation, so it
-    * composes with both the batch pass and a streaming aggregation. */
-  private[graft] def bootstrapFinish(cells: DataFrame, keyCol: String,
+    * projection over [[bootstrapCells]] output — no aggregation. */
+  private def bootstrapFinish(cells: DataFrame, keyCol: String,
       replicates: Int): DataFrame = {
     val point = col("_sx").cast("double") / col("n_rows")
     val means = array((0 until replicates).map { r =>

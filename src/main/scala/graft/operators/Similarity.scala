@@ -145,28 +145,18 @@ object Similarity {
   }
 
   /** Probe + exact in-bucket search over an already-assigned corpus:
-    * queries probe their `nprobe` nearest centroids, the exact cosine
+    * each query (`qid`, `qe`, `qn`) probes its `nprobe` nearest
+    * centroids by cosine (ties by cent_id), and the exact cosine
     * ranking runs only inside the probed buckets (equi-join on bucket
     * id). Output: (qid, idCol, cos, rank). */
-  /** Coarse-quantizer probe: each query row (`qid`, `qe`, `qn`, plus
-    * any carried columns) → its `nprobe` nearest centroids by cosine
-    * (ties by cent_id), one output row per (query, probed bucket)
-    * carrying `qid`, `carry` and `bucket`. Shared by the exact
-    * in-bucket search and the IVFADC composition ([[Pq.ivfAdcProbe]])
-    * so probe semantics can never drift between them. */
-  private[operators] def probeBuckets(q: DataFrame, cent: DataFrame,
-      nprobe: Int, carry: Seq[String]): DataFrame = {
+  private def searchBuckets(assigned: DataFrame, cent: DataFrame,
+      q: DataFrame, k: Int, nprobe: Int, idCol: String): DataFrame = {
     val qw = Window.partitionBy("qid").orderBy(desc("qsim"), asc("cent_id"))
-    broadcast(q).join(broadcast(cent), lit(true))
+    val probes = broadcast(q).join(broadcast(cent), lit(true))
       .withColumn("qsim", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
       .withColumn("prank", row_number().over(qw))
       .filter(col("prank") <= nprobe)
-      .select((col("qid") +: carry.map(col)) :+ col("cent_id").as("bucket"): _*)
-  }
-
-  private def searchBuckets(assigned: DataFrame, cent: DataFrame,
-      q: DataFrame, k: Int, nprobe: Int, idCol: String): DataFrame = {
-    val probes = probeBuckets(q, cent, nprobe, Seq("qe", "qn"))
+      .select(col("qid"), col("qe"), col("qn"), col("cent_id").as("bucket"))
 
     val cos = dot(col("qe"), col("e")) / (col("qn") * col("nrm"))
     val rw = Window.partitionBy("qid").orderBy(desc("cos"), asc(idCol))
@@ -222,46 +212,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** [[hardNegatives]]' scale path: the same label exclusion applied
-    * INSIDE the probed IVF buckets, so mining cost per query is
-    * nprobe·(N/nlist) scored rows instead of N (at √N sizing,
-    * nprobe·√N). The corpus label rides a skinny (id, label) join onto
-    * the assigned index — [[assignToCentroids]] stays label-agnostic.
-    * Same output shape as [[hardNegatives]]; recall vs the exact
-    * variant is the IVF contract (`SimilaritySpec` pins both the
-    * no-same-label invariant and the recall floor). */
-  def hardNegativesIvf(corpus: DataFrame, queries: DataFrame, k: Int,
-      nCentroids: Int = 16, nprobe: Int = 2,
-      trainN: Int = 128, iters: Int = 2,
-      labelCol: String = "label",
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val cent = trainCentroids(corpus, nCentroids, trainN, iters, idCol, embCol)
-    val assigned = assignToCentroids(prep(corpus, idCol, embCol), cent, idCol)
-      .join(corpus.select(col(idCol), col(labelCol)), Seq(idCol))
-    val q = queries.select(col(idCol).as("qid"),
-        col(labelCol).as("_qlabel"),
-        transform(col(embCol), x => x.cast("double")).as("qe"))
-      .withColumn("qn", norm(col("qe")))
-    val probes = probeBuckets(q, cent, nprobe, Seq("qe", "qn", "_qlabel"))
-    val cos = dot(col("qe"), col("e")) / (col("qn") * col("nrm"))
-    val rw = Window.partitionBy("qid").orderBy(desc("cos"), asc(idCol))
-    assigned.join(broadcast(probes), Seq("bucket"))
-      .filter(col(labelCol) =!= col("_qlabel"))
-      .select(col("qid"), col(idCol), gf.roundz(cos, 6).as("cos"))
-      .withColumn("rank", row_number().over(rw).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  /** Production index sizing (the rule `SimilaritySpec` pins — ONE
-    * definition, so the spec and every caller share it): nlist ≈ √N
-    * keeps per-bucket membership at ~√N and probe work at nprobe·√N
-    * as the corpus grows; the Lloyd sample is 4× the centroid count
-    * (bounded below by the 128-vector default). */
-  def sqrtNlist(n: Long): Int =
-    math.max(4, math.round(math.sqrt(n.toDouble)).toInt)
-
-  def sizingTrainN(nlist: Int): Int = math.max(128, nlist * 4)
-
   /** Handle to a persisted IVF index: a centroid table plus the
     * assigned corpus written as a warehouse table BUCKETED on the
     * centroid id — the probe-time bucket equi-join reads only the
@@ -302,10 +252,10 @@ object Similarity {
     * catalog (zero jobs), build otherwise. The
     * name keys the (corpus, params) pair — callers must not reuse a
     * name across different corpora. For a fingerprinted name
-    * (`SharedTable.indexName(spark, prefix, dir)`), `stem` is its
-    * `SharedTable.indexName(prefix, dir)`: an absent table then means
-    * the corpus was regenerated, and the build GCs the superseded
-    * generation's tables first. */
+    * (`SharedTable.indexName(spark, prefix, dir, sources)`), `stem` is
+    * its `SharedTable.indexName(prefix, dir)`: an absent table then
+    * means the corpus was regenerated, and the build GCs the
+    * superseded generation's tables first. */
   def indexFor(
       corpus: DataFrame, name: String,
       nCentroids: Int = 16, trainN: Int = 128, iters: Int = 2,
@@ -345,9 +295,9 @@ object Similarity {
     * across appends is the caller's contract, as for any table.
     *
     * NOT for fingerprint-memoized indexes (ADVICE r13): tables named
-    * by the 3-arg [[SharedTable.indexName]] (stem + `_f` + corpus
-    * fingerprint, e.g. the shared "ivf" stem) have a lifecycle that
-    * assumes their contents are a PURE FUNCTION of the corpus
+    * by the fingerprinted [[SharedTable.indexName]] (stem + `_f` +
+    * corpus fingerprint, e.g. the shared "ivf" stem) have a lifecycle
+    * that assumes their contents are a PURE FUNCTION of the corpus
     * directory — [[indexFor]] serves them memoized,
     * [[SharedTable.dropStaleGenerations]] deletes superseded
     * generations, and a fingerprint-triggered
@@ -379,34 +329,13 @@ object Similarity {
   }
 
   /** Assign a batch under an index's FROZEN coarse quantizer — the
-    * shared kernel of [[appendToIndex]] (which folds the result into
-    * the bucketed table) and the streaming delta ingest
-    * ([[graft.streaming.EmbeddingStreams.annIngestStream]], which
-    * commits it as a tagged snapshot version instead). Output matches
-    * the assigned table's schema: (idCol, e, nrm, bucket). */
-  def assignUnderIndex(index: IvfIndex, batch: DataFrame,
+    * kernel of [[appendToIndex]], which folds the result into the
+    * bucketed table. Output matches the assigned table's schema:
+    * (idCol, e, nrm, bucket). */
+  private def assignUnderIndex(index: IvfIndex, batch: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
     assignToCentroids(prep(batch, idCol, embCol),
       batch.sparkSession.table(index.centroidTable), idCol)
-
-  /** [[ivfTopK]] over a persisted index PLUS un-compacted delta
-    * assignments (rows shaped like the assigned table — the streaming
-    * ingest's snapshot store): the probe join runs over base ∪ delta.
-    * The base side keeps its bucketed layout; the delta side is
-    * unbucketed so its (small) share of the probe join shuffles —
-    * bounded by ingest volume since the last rebuild/compaction, which
-    * is the LSM-style serving contract (FAISS add-buffer, Lucene
-    * segments): deltas stay cheap because rebuilds fold them in. */
-  def ivfTopKWithDelta(index: IvfIndex, delta: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val spark = queries.sparkSession
-    val q = prep(queries, idCol, embCol)
-      .select(col(idCol).as("qid"), col("e").as("qe"), col("nrm").as("qn"))
-    val base = spark.table(index.assignedTable)
-    searchBuckets(base.unionByName(delta.select(base.columns.map(col): _*)),
-      spark.table(index.centroidTable), q, k, nprobe, idCol)
-  }
 
   /** IVF APPEND-HEALTH census + rebuild trigger (VERDICT r13 item 4) —
     * the q149/q156 evaluation-gate stance applied to index
@@ -442,22 +371,6 @@ object Similarity {
       rebuildTenths: Int = 3): DataFrame = {
     val spark = baseCounts.sparkSession
     healthCensus(spark.table(index.assignedTable),
-      spark.table(index.centroidTable), baseCounts,
-      skewFactor, staleTenths, rebuildTenths)
-  }
-
-  /** [[appendHealth]] for a STREAM-GROWN index (T164's serving shape):
-    * the same census and rebuild policy with the un-compacted snapshot
-    * DELTA counted as appended mass alongside any bucketed-table
-    * appends — so the rebuild trigger watches exactly what
-    * [[ivfTopKWithDelta]] serves. `delta` is rows shaped like the
-    * assigned table (the ingest stream's snapshot store). */
-  def appendHealthWithDelta(index: IvfIndex, baseCounts: DataFrame,
-      delta: DataFrame, skewFactor: Int = 4, staleTenths: Int = 6,
-      rebuildTenths: Int = 3): DataFrame = {
-    val spark = baseCounts.sparkSession
-    val base = spark.table(index.assignedTable)
-    healthCensus(base.unionByName(delta.select(base.columns.map(col): _*)),
       spark.table(index.centroidTable), baseCounts,
       skewFactor, staleTenths, rebuildTenths)
   }
@@ -509,7 +422,8 @@ object Similarity {
     * nCent = 16, trainN = 128, iters = 2). */
   def sharedIvfIndex(corpus: DataFrame, dir: String): IvfIndex =
     indexFor(corpus,
-      SharedTable.indexName(corpus.sparkSession, "ivf", dir),
+      SharedTable.indexName(corpus.sparkSession, "ivf", dir,
+        Seq("embeddings")),
       nCentroids = 16, trainN = 128, iters = 2, numBuckets = 16,
       stem = Some(SharedTable.indexName("ivf", dir)))
 
@@ -530,90 +444,41 @@ object Similarity {
       embCol = "embedding")
 
   /** KNN GRAPH: approximate top-k neighbors for EVERY corpus vector —
-    * the all-vectors generalization of [[ivfTopK]] and the kernel
-    * under semantic dedup, retrieval-based mixing, and embedding-graph
-    * clustering. Same IVF index semantics (hash-seeded Lloyd
-    * centroids, argmax assignment, nprobe probes, exact cosine inside
-    * probed buckets), but the query side IS the corpus, so the
-    * [[searchBuckets]] broadcasts are structurally wrong here.
+    * the all-vectors generalization of [[ivfTopK]]. Same IVF index
+    * semantics (hash-seeded Lloyd centroids, argmax assignment, nprobe
+    * probes, exact cosine inside probed buckets), but the query side
+    * IS the corpus, so the [[searchBuckets]] broadcasts are
+    * structurally wrong here.
     *
-    * DISTINCT-CONTENT COLLAPSE (the q162 contract generalized to
-    * top-k): real corpora are duplicate-heavy, and every per-vector
-    * quantity here — bucket (argmax over the pinned centroid chain),
-    * probe set, and the 6-dp cosine against any partner — is a pure
-    * function of the vector's CONTENT. So the expensive stages run
-    * over one representative per distinct embedding:
+    * Runs over PRE-BUILT distinct-content collapse frames (r15):
+    * `groups` = (gid, __ids) one row per distinct embedding (gid = min
+    * member id), `repvec` = (idCol, e, nrm, bucket) for exactly the
+    * rep ids, `cent` the centroid frame. Every per-vector quantity —
+    * bucket, probe set, and the 6-dp cosine against any partner — is
+    * a pure function of the vector's CONTENT, so the session's shared
+    * IVF index and embedding dup-group tables serve these frames
+    * without a per-run training, groupBy or assignment pass.
     *
-    *   - group once on the raw embedding bytes → sorted member-id
-    *     list per content group (gid = min id, the representative);
-    *   - probe selection (top-`nprobe` centroids per GROUP over the
-    *     R × nlist score product, R = distinct contents) and the
+    *   - probe selection (top-`nprobe` centroids per GROUP) and the
     *     per-group candidate top-(k+1) both run on
     *     [[graft.plans.TopKPerKey]]'s bounded heap — one clustered
-    *     shuffle each, no windowed full sort, spill fallback past the
-    *     task byte budget;
-    *   - candidate generation is a SHUFFLE equi-join on bucket id
-    *     over GROUP representatives (R-sized sides; nothing
-    *     broadcast), so with duplication factor d the scored
-    *     candidate volume shrinks d² vs the raw join — per-bucket
-    *     work stays bounded by distinct-content membership, and
-    *     nlist ≈ [[sqrtNlist]] keeps that at ~√R;
-    *   - each candidate GROUP contributes only its k+1 smallest
-    *     member ids (`head`): within a group all members share one
-    *     cosine and order consecutively by id, so any member beyond
-    *     its group's first k+1 is preceded by k+1 same-cosine
-    *     smaller ids and can never enter a top-(k+1);
+    *     shuffle each, no windowed full sort;
+    *   - candidate generation is a SHUFFLE equi-join on bucket id over
+    *     GROUP representatives, so with duplication factor d the
+    *     scored candidate volume shrinks d² vs the raw join;
+    *   - each candidate GROUP contributes only its k+1 smallest member
+    *     ids (`head`): within a group all members share one cosine and
+    *     order consecutively by id, so any member beyond its group's
+    *     first k+1 can never enter a top-(k+1);
     *   - EXPANSION is arithmetic: every member of a query group
-    *     inherits the group's top-(k+1) list minus (at most) itself —
-    *     one equi-join on gid producing ≤ N·(k+1) rows, then the
-    *     cheap re-rank.
+    *     inherits the group's top-(k+1) list minus (at most) itself,
+    *     then a row_number re-rank over the (k+1)-bounded rows.
     *
-    * Bit-parity with the raw-row semantics (q114's oracle pins probe
-    * ties, candidate sets, and rank tie-breaks): buckets/probes/
-    * cosines are content-determined, and the head-truncation argument
-    * above is exact, so the expanded top-k is row-for-row the raw
-    * top-k. Centroid TRAINING stays on the raw corpus — its
-    * hash-seeded sample is id-keyed, which the oracle replicates.
-    *
-    * The rank column is re-derived by a row_number over the ALREADY
-    * (k+1)-bounded rows (partitions of ≤ k+1) — the cheap sort, not
-    * the one TopKPerKey avoided. Output: (qid, idCol, cos, rank),
-    * ties broken (cos desc, id asc) on the 6-decimal-rounded cosine
-    * in both engines. */
-  def knnJoin(
-      corpus: DataFrame, k: Int,
-      nCentroids: Int = 16, nprobe: Int = 2,
-      trainN: Int = 128, iters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val cent = trainCentroids(corpus, nCentroids, trainN, iters, idCol, embCol)
-    // One content group per distinct embedding; ≤ corpus rows, usually
-    // far fewer. Persisted: referenced by reps, heads and members (an
-    // un-persisted subtree would re-run the groupBy per reference).
-    val groups = graft.CacheRegistry.persistTracked(
-      corpus.select(col(idCol), col(embCol))
-        .groupBy(col(embCol))
-        .agg(sort_array(collect_list(col(idCol))).as("__ids"))
-        .select(col(embCol), col("__ids"),
-          element_at(col("__ids"), 1).as("gid")),
-      graft.CacheRegistry.DataSized)
-    val reps = prep(groups.select(col("gid").as(idCol), col(embCol)),
-      idCol, embCol)
-    val repvec = assignToCentroids(reps, cent, idCol)
-    knnJoinCollapsed(groups.select(col("gid"), col("__ids")),
-      repvec, cent, k, nprobe, idCol)
-  }
-
-  /** [[knnJoin]]'s probe/score/expand tail over PRE-BUILT collapse
-    * frames (r15): `groups` = (gid, __ids) one row per distinct
-    * embedding (gid = min member id), `repvec` = (idCol, e, nrm,
-    * bucket) for exactly the rep ids, `cent` the centroid frame. A
-    * caller holding the session-materialized shared artifacts (the
-    * IVF index's assigned/centroid tables, the embedding dup-group
-    * table) skips the per-run training + groupBy + assignment passes
-    * entirely — bucket/e/nrm are content-determined, so the shared
-    * index's rows for the rep ids are bit-identical to an inline
-    * assignment. ONE implementation of the truncation-exact tail
-    * serves both entries. */
+    * The head-truncation argument is exact, so the expanded top-k is
+    * row-for-row the raw top-k (q114's oracle pins probe ties,
+    * candidate sets, and rank tie-breaks). Output: (qid, idCol, cos,
+    * rank), ties broken (cos desc, id asc) on the 6-decimal-rounded
+    * cosine in both engines. */
   def knnJoinCollapsed(groups: DataFrame, repvec: DataFrame,
       cent: DataFrame, k: Int, nprobe: Int = 2,
       idCol: String = "vec_id"): DataFrame = {

@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   *     on (key, salt), then merge on key. The hot key's rows spread
   *     over `salts` reducers in phase 1; phase 2 merges `salts` tiny
   *     partials. Works for any algebraic aggregate (sum/count/min/max).
-  *   - [[saltedBroadcastJoin]]: replicate the SMALL side per salt and
-  *     join on (key, salt) — an equi-join that distributes a hot key's
-  *     probe rows across the cluster instead of one reducer.
   */
 object Skew {
 
@@ -45,17 +42,5 @@ object Skew {
       .groupBy(col(keyName))
       .agg(aggs.head.phase2(col(s"_p_${aggs.head.name}")).as(aggs.head.name),
         aggs.tail.map(a => a.phase2(col(s"_p_${a.name}")).as(a.name)): _*)
-  }
-
-  /** Join a skewed LARGE side to a small dimension: the dimension is
-    * replicated once per salt (broadcast anyway), the large side gets a
-    * random salt — the hot key fans out over `salts` tasks. */
-  def saltedBroadcastJoin(
-      large: DataFrame, small: DataFrame, key: String, salts: Int): DataFrame = {
-    val saltedLarge = large.withColumn("_salt",
-      (rand(seed = 42) * salts).cast("int"))
-    val replicated = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    saltedLarge.join(broadcast(replicated), Seq(key, "_salt")).drop("_salt")
   }
 }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * (Charikar 2002, random-hyperplane LSH — public knowledge): `Bits`
   * sign bits of deterministic ±1 projections compress a float vector
   * to `Bits/8` bytes, and Hamming distance on the sketch estimates
-  * the angle. Shared by q161's fidelity census (batch) and
-  * [[graft.streaming.EmbeddingStreams]]'s candidate generator.
+  * the angle. Used by q161's fidelity census.
   *
   * Determinism discipline (the q130 lesson): the sign matrix is drawn
   * ONCE from md5 (the T17/T90 draw — no RNG), and the per-bit sign
@@ -33,14 +32,6 @@ object Srp {
       if ((h(0) & 1) == 0) 1L else -1L
     }
 
-  /** floor(x·2^15) component quantization (array<double> →
-    * array<long>) — the fixed-point front door every exact-arithmetic
-    * embedding path shares. [[sketch]] fuses this step natively; this
-    * Column form remains for paths that need the quantized array
-    * itself. */
-  def quantize(e: Column): Column =
-    transform(e, x => floor(x * 32768.0).cast("long"))
-
   /** The `Bits`-bit sketch over an `array<double>` vector: bit b set
     * iff Σᵢ floor(eᵢ·2^15)·sign(b,i) > 0. Exact long sums; ties
     * (Σ = 0) are bit 0 in both engines by the same strict inequality.
@@ -52,8 +43,8 @@ object Srp {
     CatalystBridge.column(graft.plans.SrpSketch(CatalystBridge.expr(e)))
   }
 
-  /** Scala-side twin of [[sketch]] for state-store code paths —
-    * bit-identical by sharing [[signs]] and the same strict-positive
+  /** Scala-side twin of [[sketch]] over already-quantized components
+    * — bit-identical by sharing [[signs]] and the same strict-positive
     * rule. */
   def sketchOf(eq: Array[Long]): Long = {
     require(eq.length == Dims, s"expected $Dims components: ${eq.length}")

@@ -20,9 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * layout-independent, unlike Misra–Gries whose pruning depends on
   * arrival order).
   *
-  * The third classical mergeable summary next to [[FreqSketch]]
-  * (Misra–Gries heavy hitters: WHICH items are frequent) and
-  * [[QuantileSketch]] (KLL: rank statistics): Count-Min answers "HOW
+  * The mergeable summary next to [[FreqSketch]] (Misra–Gries heavy
+  * hitters: WHICH items are frequent): Count-Min answers "HOW
   * often did THIS item occur" for any later probe — the serving shape
   * where a trained blocklist/token-frequency model must score
   * arbitrary keys without shipping the distinct-key space. At 100 TB

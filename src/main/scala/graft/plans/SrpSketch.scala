@@ -7,9 +7,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native codegen'd SRP sketch over an `array<double>` embedding: the
-  * fused form of `Srp.sketch(Srp.quantize(e))` — floor(x·2^15)
-  * quantization and all [[graft.operators.Srp.Bits]] exact-long sign
-  * projections in ONE while-loop pass, no intermediate arrays.
+  * fused form of floor(x·2^15) component quantization and all
+  * [[graft.operators.Srp.Bits]] exact-long sign projections in ONE
+  * while-loop pass, no intermediate arrays.
   *
   * The Column-composed form built one zip_with product array and one
   * interpreted aggregate fold PER BIT PER ROW (32 array allocations +

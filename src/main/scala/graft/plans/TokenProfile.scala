@@ -32,8 +32,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * on StringType.
   *
   * Scale: per-row map, whole-stage codegen via a static call, stop
-  * list shipped once per task as a codegen reference (the BpeEncode
-  * pattern), allocation bounded by tokens-per-row.
+  * list shipped once per task as a codegen reference, allocation
+  * bounded by tokens-per-row.
   */
 case class TokenProfile(child: Expression, stops: Seq[String])
     extends UnaryExpression {

@@ -122,8 +122,8 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
         TopKPerKey(partitionSpec, orderSpec, k, child, rankOut))
 
     // Same idiom with no PROJECT above the filter (an API returning the
-    // ranked frame as-is, e.g. Pq.topK; or a caller aggregating the
-    // filter output directly — RemoveNoopOperators strips any identity
+    // ranked frame as-is, or a caller aggregating the filter output
+    // directly — RemoveNoopOperators strips any identity
     // Project before this batch runs). Reached only when the case above
     // did not match (top-down traversal), so the rank really is part of
     // the visible output here and is always emitted.

@@ -24,8 +24,4 @@ object QueryDef {
   def apply(name: String, oracle: String)(
       build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, build, Some(oracle))
-
-  def rowsOnly(name: String)(
-      build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, build, None)
 }

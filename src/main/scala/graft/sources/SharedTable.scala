@@ -14,8 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * generation's table(s); if absent, drop the superseded generations
   * ([[dropStaleGenerations]]), clear whatever a crashed earlier session
   * left at the managed locations ([[clear]]), and build. Table names
-  * carry the corpus fingerprint ([[indexName]]), so a corpus rewritten
-  * in place gets a fresh generation instead of stale frames.
+  * carry the fingerprint of the source tables the family reads
+  * ([[indexName]]), so a source rewritten in place gets a fresh
+  * generation instead of stale frames, while a rewrite of any other
+  * table under the same directory rebuilds nothing.
   *
   * First use is serialized per witness table: a second thread that
   * asks for the same family waits for the first build and then reads
@@ -30,13 +32,15 @@ object SharedTable {
     locks.computeIfAbsent(table.toLowerCase, _ => new AnyRef)
 
   /** Single-table memo: `build`'s frame written as a warehouse table
-    * named [[indexName]](`stem`, `dir`), bucketed by `bucketCol` into
-    * `buckets` (evaluated only when building). `retired` names earlier
-    * stems of the same family whose generations the build also GCs. */
-  def memo(s: SparkSession, stem: String, dir: String, bucketCol: String,
-      buckets: => Int, retired: Seq[String] = Nil)(build: => DataFrame)
-      : DataFrame = {
-    val tbl = indexName(s, stem, dir)
+    * named [[indexName]](`stem`, `dir`, `sources`), bucketed by
+    * `bucketCol` into `buckets` (evaluated only when building).
+    * `sources` names the tables under `dir` whose rows `build` reads.
+    * `retired` names earlier stems of the same family whose
+    * generations the build also GCs. */
+  def memo(s: SparkSession, stem: String, dir: String, sources: Seq[String],
+      bucketCol: String, buckets: => Int, retired: Seq[String] = Nil)(
+      build: => DataFrame): DataFrame = {
+    val tbl = indexName(s, stem, dir, sources)
     memoTables(s, Seq(tbl),
         (stem +: retired).map(st => indexName(st, dir) -> tbl)) {
       FileIO.writeBucketedTable(build, tbl, bucketCol, buckets)
@@ -74,44 +78,48 @@ object SharedTable {
   }
 
   /** Catalog-safe name STEM for a data directory. Prefer the
-    * fingerprinted 3-arg overload for any table that memoizes derived
+    * fingerprinted overload for any table that memoizes derived
     * data — this stem alone keys on the PATH only, so a corpus
     * regenerated in place at the same path would be served stale
     * frames (VERDICT r11 item 2). */
   def indexName(prefix: String, dir: String): String =
     prefix + "_" + dir.replaceAll("[^a-zA-Z0-9]+", "_").toLowerCase
 
-  /** Corpus-keyed table name: stem + `_f` + [[dirFingerprint]]. Any
-    * change to the directory's file listing (names, sizes, mtimes —
-    * i.e. any rewrite of the corpus) yields a NEW table name, so a
+  /** Source-keyed table name: stem + `_f` + [[dirFingerprint]] of the
+    * `sources` tables (`<dir>/<table>.parquet`) the family derives
+    * from. Any change to their file listing (names, sizes, mtimes —
+    * i.e. any rewrite of a source) yields a NEW table name, so a
     * session-materialized table can never silently serve a previous
     * generation of the data. */
-  def indexName(spark: SparkSession, prefix: String, dir: String): String =
-    indexName(prefix, dir) + "_f" + dirFingerprint(spark, dir)
+  def indexName(spark: SparkSession, prefix: String, dir: String,
+      sources: Seq[String]): String =
+    indexName(prefix, dir) + "_f" + dirFingerprint(spark, dir, sources)
 
   /** Corpus-keyed name for a GROWN (append-allowed) index: stem + `_g`
     * + fingerprint — deliberately NOT the `_f` convention
     * [[graft.operators.Similarity.appendToIndex]] rejects. `_f` tables
     * are pure corpus functions served memoized; a `_g` index is built
     * by an explicit caller flow that owns its build→append sequence.
-    * The fingerprint still keys generations (an in-place corpus
-    * rewrite gets a fresh build; GC with `sep = "_g"`), and by the
-    * same token a rebuild DISCARDS appended rows — so a `_g` name is
-    * only safe when the appends are themselves derivable from the
+    * The fingerprint of `sources` still keys generations (an in-place
+    * source rewrite gets a fresh build; GC with `sep = "_g"`), and by
+    * the same token a rebuild DISCARDS appended rows — so a `_g` name
+    * is only safe when the appends are themselves derivable from the
     * corpus (the q182 census replay); EXTERNAL ingest belongs under
-    * caller-owned unmanaged names or the streaming delta store. */
-  def grownIndexName(spark: SparkSession, prefix: String,
-      dir: String): String =
-    indexName(prefix, dir) + "_g" + dirFingerprint(spark, dir)
+    * caller-owned unmanaged names. */
+  def grownIndexName(spark: SparkSession, prefix: String, dir: String,
+      sources: Seq[String]): String =
+    indexName(prefix, dir) + "_g" + dirFingerprint(spark, dir, sources)
 
-  /** 40-bit hex fingerprint of a data directory's RECURSIVE file
-    * listing (relative-path:length:mtime rows, sorted — no data
-    * read, one driver-side listing). Changes whenever any file under
-    * the corpus directory is added, removed, resized, or rewritten.
-    * Cost class: the same O(#files) driver-side listing every
-    * parquet scan's planning already pays — called once per memoized
-    * table lookup, never per row/partition, so it stays planning
-    * cost at 100 TB (object stores serve it as LIST pages).
+  /** 40-bit hex fingerprint of the RECURSIVE file listing of the
+    * `tables` under a data directory, each `<dir>/<table>.parquet`
+    * (relative-path:length:mtime rows, sorted — no data read, one
+    * driver-side listing). Changes whenever any file of those tables
+    * is added, removed, resized, or rewritten; files of other tables
+    * under `dir` do not enter it. Cost class: the same O(#files)
+    * driver-side listing every parquet scan's planning already pays
+    * — called once per memoized table lookup, never per
+    * row/partition, so it stays planning cost at 100 TB (object
+    * stores serve it as LIST pages).
     *
     * GRANULARITY CAVEAT (deliberate trade): the fingerprint reads NO
     * file content, so a corpus regenerated in place with identical
@@ -124,7 +132,8 @@ object SharedTable {
     * the same assumption — but a pipeline that rewrites corpora
     * sub-second with length-stable files must mix a content etag into
     * the listing row instead of relying on (length, mtime). */
-  def dirFingerprint(spark: SparkSession, dir: String): String = {
+  def dirFingerprint(spark: SparkSession, dir: String,
+      tables: Seq[String]): String = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rootUri = fs.makeQualified(root).toUri
@@ -135,7 +144,8 @@ object SharedTable {
         else rows += s"${rootUri.relativize(st.getPath.toUri)}:" +
           s"${st.getLen}:${st.getModificationTime}"
       }
-    if (fs.exists(root)) walk(root)
+    tables.map(t => new Path(root, s"$t.parquet")).filter(fs.exists)
+      .foreach(walk)
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(rows.sorted.mkString("\n").getBytes("UTF-8"))
     md.digest().take(5).map("%02x".format(_)).mkString

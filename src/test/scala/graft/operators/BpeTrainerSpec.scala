@@ -1,224 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CatalystBridge
-
 import graft.SparkSpec
-import graft.plans.BpeEncode
 
 class BpeTrainerSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Independent sequential reference trainer (same tie-break:
-    * count desc, then (left, right) ascending). */
-  private def refTrain(freq: Map[String, Long], k: Int)
-      : Seq[(String, String, Long)] = {
-    def splitCp(w: String): List[String] = {
-      val out = List.newBuilder[String]
-      var i = 0
-      while (i < w.length) {
-        val n = Character.charCount(w.codePointAt(i))
-        out += w.substring(i, i + n)
-        i += n
-      }
-      out.result()
-    }
-    var words: Map[List[String], Long] =
-      freq.groupMapReduce { case (w, _) => splitCp(w) }(_._2)(_ + _)
-    val merges = Seq.newBuilder[(String, String, Long)]
-    var continue = true
-    var rank = 0
-    while (rank < k && continue) {
-      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-      words.foreach { case (syms, c) =>
-        syms.zip(syms.drop(1)).foreach(p =>
-          counts(p) = counts.getOrElse(p, 0L) + c)
-      }
-      if (counts.isEmpty) continue = false
-      else {
-        val ((l, r), c) = counts.toSeq.minBy { case ((a, b), n) =>
-          (-n, a, b)
-        }
-        merges += ((l, r, c))
-        words = words.groupMapReduce { case (syms, _) =>
-          BpeTrainer.applyMerge(syms, l, r).toList
-        }(_._2)(_ + _)
-        rank += 1
-      }
-    }
-    merges.result()
-  }
-
-  private val classic = Map(
-    "low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
-
-  test("all three trainer paths match the sequential reference on the classic corpus") {
-    val freq = classic.toSeq.toDF("word", "cnt")
-    val want = refTrain(classic, 8)
-    // Hybrid dispatch (small vocab → local path).
-    val got = BpeTrainer.train(freq, 8)
-    got.map(m => (m.left, m.right, m.count)) shouldBe want
-    got.map(_.rank) shouldBe (0 until got.length)
-    // The textbook first merge: ('e','s') with count 9 (newest+widest).
-    (got.head.left, got.head.right, got.head.count) shouldBe (("e", "s", 9L))
-    // Forced distributed path (threshold 0) and direct local path.
-    BpeTrainer.train(freq, 8, collectThreshold = 0L)
-      .map(m => (m.left, m.right, m.count)) shouldBe want
-    BpeTrainer.trainLocal(classic.toSeq, 8)
-      .map(m => (m.left, m.right, m.count)) shouldBe want
-  }
-
-  test("fuzz: distributed == local == sequential on random corpora") {
-    val rnd = new scala.util.Random(31)
-    val alphabet = "abcde"
-    (0 until 3).foreach { _ =>
-      val freq = (0 until 30).map { _ =>
-        val w = (0 until 1 + rnd.nextInt(6))
-          .map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
-        w -> (1L + rnd.nextInt(9))
-      }.groupMapReduce(_._1)(_._2)(_ + _)
-      val want = refTrain(freq, 6)
-      BpeTrainer.train(freq.toSeq.toDF("word", "cnt"), 6, collectThreshold = 0L)
-        .map(m => (m.left, m.right, m.count)) shouldBe want
-      BpeTrainer.trainLocal(freq.toSeq, 6)
-        .map(m => (m.left, m.right, m.count)) shouldBe want
-    }
-  }
-
-  test("batched distributed rounds: bit-identical merges, >=5x fewer rounds") {
-    // 20 two-letter words over 40 DISJOINT symbols with strictly
-    // decreasing counts: the census is exactly 20 disjoint pairs, so
-    // wide batches are provably safe and realized.
-    val syms = ('a' to 'z') ++ ('A' to 'N')
-    val freq = (0 until 20).map { i =>
-      s"${syms(2 * i)}${syms(2 * i + 1)}" -> (100L - i)
-    }
-    val want = refTrain(freq.toMap, 20)
-    val (batched, rounds) =
-      BpeTrainer.trainDistributedWithRounds(
-        freq.toDF("word", "cnt"), 20, batchSize = 16)
-    batched.map(m => (m.left, m.right, m.count)) shouldBe want
-    batched.map(_.rank) shouldBe (0 until 20)
-    rounds should be <= 2 // 16 + 4 vs 20 one-merge rounds: 10x fewer
-  }
-
-  test("fuzz: narrow alphabet (heavy interaction) batched == sequential") {
-    // 3-letter alphabet makes nearly every top pair share a symbol —
-    // the selectBatch guard paths (interaction stop, tie drop, head
-    // fallback) all fire; output must still be bit-identical.
-    val rnd = new scala.util.Random(17)
-    (0 until 3).foreach { _ =>
-      val freq = (0 until 25).map { _ =>
-        val w = (0 until 1 + rnd.nextInt(5))
-          .map(_ => "abc"(rnd.nextInt(3))).mkString
-        w -> (1L + rnd.nextInt(7))
-      }.groupMapReduce(_._1)(_._2)(_ + _)
-      val want = refTrain(freq, 6)
-      BpeTrainer.trainDistributed(freq.toSeq.toDF("word", "cnt"), 6,
-          batchSize = 4)
-        .map(m => (m.left, m.right, m.count)) shouldBe want
-    }
-  }
-
-  test("selectBatch: disjoint prefix, interaction stop, tie guard, head fallback") {
-    import BpeTrainer.selectBatch
-    // plain disjoint prefix, exhaustive window: keep everything
-    selectBatch(IndexedSeq(("a", "b", 10L), ("c", "d", 9L), ("e", "f", 8L)),
-      3, exhaustive = true) shouldBe
-      Seq(("a", "b", 10L), ("c", "d", 9L), ("e", "f", 8L))
-    // interaction stops admission; equal-count admitted pair dropped
-    // (a created pair could tie it and win the name tie-break)
-    selectBatch(IndexedSeq(("a", "b", 10L), ("c", "d", 9L), ("b", "e", 9L)),
-      3, exhaustive = true) shouldBe Seq(("a", "b", 10L))
-    // strictly dominating admitted pairs survive the guard
-    selectBatch(IndexedSeq(("a", "b", 10L), ("c", "d", 9L), ("b", "e", 8L)),
-      3, exhaustive = true) shouldBe Seq(("a", "b", 10L), ("c", "d", 9L))
-    // the head is the sequential pick by definition — always kept
-    selectBatch(IndexedSeq(("a", "b", 5L), ("b", "c", 5L)),
-      2, exhaustive = true) shouldBe Seq(("a", "b", 5L))
-    // truncated window: unseen pairs bound by the last fetched count
-    selectBatch(IndexedSeq(("a", "b", 10L), ("c", "d", 10L)),
-      2, exhaustive = false) shouldBe Seq(("a", "b", 10L))
-    // want-stop with only DISJOINT pairs behind: no guard needed
-    selectBatch(IndexedSeq(("a", "b", 9L), ("c", "d", 9L), ("e", "f", 9L)),
-      2, exhaustive = true) shouldBe Seq(("a", "b", 9L), ("c", "d", 9L))
-  }
-
-  test("tie-break is code-point order in BOTH paths (BMP private-use vs supplementary)") {
-    // U+E000 sorts BELOW U+1F600 in code-point/UTF-8 order, but their
-    // UTF-16 lead units compare 0xE000 > 0xD83D — the orders disagree
-    // exactly here. Both trainer paths must pick the U+E000 pair.
-    val pua = "\uE000"
-    val freq = Seq(pua + "x" -> 1L, "\uD83D\uDE00x" -> 1L)
-    val local = BpeTrainer.trainLocal(freq, 1)
-    (local.head.left, local.head.right) shouldBe ((pua, "x"))
-    val dist = BpeTrainer.trainDistributed(freq.toDF("word", "cnt"), 1)
-    (dist.head.left, dist.head.right) shouldBe ((pua, "x"))
-  }
 
   test("wordFrequencies is the one corpus pass: counts whitespace tokens") {
     val docs = Seq("low low lower", "newest low").toDF("text")
     val wf = BpeTrainer.wordFrequencies(docs).as[(String, Long)]
       .collect().toMap
     wf shouldBe Map("low" -> 3L, "lower" -> 1L, "newest" -> 1L)
-  }
-
-  test("encodeWord applies merges in rank order; BpeEncode matches incl. codegen") {
-    val merges = BpeTrainer.train(classic.toSeq.toDF("word", "cnt"), 6)
-    val words = Seq("lowest", "newest", "low", "x", "", "wider")
-    val viaJvm = words.map(w => BpeTrainer.encodeWord(w, merges))
-    // Concatenation invariant: encoding never loses characters.
-    words.zip(viaJvm).foreach { case (w, syms) =>
-      syms.mkString shouldBe w
-    }
-    val lefts = merges.map(_.left).toArray
-    val rights = merges.map(_.right).toArray
-    val viaExpr = words.toDF("w")
-      .select(CatalystBridge.column(
-        BpeEncode(CatalystBridge.expr(col("w")), lefts, rights)).as("e"))
-      .as[Seq[String]].collect().toSeq
-    viaExpr shouldBe viaJvm
-    // Null propagates; surrogate pairs stay whole symbols.
-    val rows = Seq(Option("a😀b"), None).toDF("w")
-      .select(CatalystBridge.column(
-        BpeEncode(CatalystBridge.expr(col("w")), Array(), Array())).as("e"))
-      .collect()
-    rows(0).getSeq[String](0) shouldBe Seq("a", "😀", "b")
-    rows(1).isNullAt(0) shouldBe true
-  }
-
-  test("end-to-end: corpus -> word table -> merges -> subword-encoded corpus") {
-    // The full tokenizer pipeline over a documents frame: one corpus
-    // pass to frequencies, train, then encode the corpus as a pure
-    // map (BpeEncode) and check token accounting against the JVM
-    // encoder word by word.
-    val docs = Seq("low lower low", "newest widest", "low newest")
-      .toDF("text")
-    val wf = BpeTrainer.wordFrequencies(docs)
-    val merges = BpeTrainer.train(wf, 5)
-    val lefts = merges.map(_.left).toArray
-    val rights = merges.map(_.right).toArray
-    val encoded = docs
-      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
-      .select(col("w"), CatalystBridge.column(
-        BpeEncode(CatalystBridge.expr(col("w")), lefts, rights)).as("toks"))
-      .as[(String, Seq[String])].collect()
-    encoded.foreach { case (w, toks) =>
-      toks shouldBe BpeTrainer.encodeWord(w, merges)
-      toks.mkString shouldBe w // nothing lost
-      all(toks.map(_.length)) should be > 0
-    }
-    // Every emitted subword is in the implied vocabulary.
-    val vocab = BpeTrainer.vocabulary(wf, merges).as[String].collect().toSet
-    encoded.flatMap(_._2).toSet.subsetOf(vocab) shouldBe true
-  }
-
-  test("vocabulary = seen characters + one entry per merge") {
-    val freq = classic.toSeq.toDF("word", "cnt")
-    val merges = BpeTrainer.train(freq, 3)
-    val vocab = BpeTrainer.vocabulary(freq, merges).as[String]
-      .collect().toSet
-    val chars = classic.keys.flatMap(_.toSeq).map(_.toString).toSet
-    vocab shouldBe chars ++ merges.map(m => m.left + m.right)
   }
 }

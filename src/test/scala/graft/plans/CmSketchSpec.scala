@@ -1,9 +1,10 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
 
 import graft.SparkSpec
-import graft.{functions => gf}
 
 /** Count-Min sketch: the no-undercount guarantee, the ε·N overcount
   * bound, exact layout independence (cell-wise-add merge is
@@ -19,14 +20,21 @@ class CmSketchSpec extends SparkSpec {
   private val Width = 256
   private val Depth = 4
 
+  private def sketchCol(item: Column, width: Int, depth: Int): Column =
+    CatalystBridge.column(CmSketch(CatalystBridge.expr(item), width, depth))
+
+  private def estimateCol(sketch: Column, item: Column): Column =
+    CatalystBridge.column(
+      CmProbe(CatalystBridge.expr(sketch), CatalystBridge.expr(item)))
+
   test("never undercounts, and overcount stays within the e/width bound") {
     val data = zipf(500, 2000) // 500 distinct, ~15k rows
     val truth = data.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val df = data.toDF("tok")
-    val sk = df.agg(gf.cmSketch(col("tok"), Width, Depth).as("s"))
+    val sk = df.agg(sketchCol(col("tok"), Width, Depth).as("s"))
     val probes = truth.keys.toSeq.toDF("tok")
       .crossJoin(sk)
-      .select(col("tok"), gf.cmEstimate(col("s"), col("tok")).as("est"))
+      .select(col("tok"), estimateCol(col("s"), col("tok")).as("est"))
       .as[(String, Long)].collect()
     val n = data.size.toLong
     val bound = math.ceil(math.E / Width * n).toLong // ε·N
@@ -45,7 +53,7 @@ class CmSketchSpec extends SparkSpec {
     val data = zipf(300, 1000)
     def cells(parts: Int): (Long, Seq[Long]) = {
       val r = data.toDF("tok").repartition(parts)
-        .agg(gf.cmSketch(col("tok"), Width, Depth).as("s"))
+        .agg(sketchCol(col("tok"), Width, Depth).as("s"))
         .select(col("s.total"), col("s.cells")).collect()(0)
       (r.getLong(0), r.getSeq[Long](1))
     }
@@ -59,10 +67,10 @@ class CmSketchSpec extends SparkSpec {
     val a = zipf(100, 500)
     val b = zipf(100, 500).map(_.toUpperCase)
     val whole = (a ++ b).toDF("tok").coalesce(1)
-      .agg(gf.cmSketch(col("tok"), Width, Depth).as("s"))
+      .agg(sketchCol(col("tok"), Width, Depth).as("s"))
       .select(col("s.cells")).as[Seq[Long]].collect()(0)
     val split = a.toDF("tok").union(b.toDF("tok")).repartition(9)
-      .agg(gf.cmSketch(col("tok"), Width, Depth).as("s"))
+      .agg(sketchCol(col("tok"), Width, Depth).as("s"))
       .select(col("s.cells")).as[Seq[Long]].collect()(0)
     split shouldBe whole
   }
@@ -72,13 +80,13 @@ class CmSketchSpec extends SparkSpec {
     // the Column-API estimate must agree with a Buffer built locally.
     val data = zipf(50, 200)
     val sk = data.toDF("tok")
-      .agg(gf.cmSketch(col("tok"), Width, Depth).as("s"))
+      .agg(sketchCol(col("tok"), Width, Depth).as("s"))
     val ref = new CmSketch.Buffer(Width, Depth)
     data.foreach(s => ref.add(
       org.apache.spark.unsafe.types.UTF8String.fromString(s), 1L))
     val probes = (1 to 50).map(i => s"item$i").toDF("tok")
       .crossJoin(sk)
-      .select(col("tok"), gf.cmEstimate(col("s"), col("tok")).as("est"))
+      .select(col("tok"), estimateCol(col("s"), col("tok")).as("est"))
       .as[(String, Long)].collect()
     probes.foreach { case (tok, est) =>
       est shouldBe ref.estimate(
@@ -90,9 +98,9 @@ class CmSketchSpec extends SparkSpec {
     val rows = Seq.fill(100)("only_a").map(("ka", _)) ++
       Seq.fill(7)("only_b").map(("kb", _))
     val out = rows.toDF("k", "tok").repartition(5)
-      .groupBy("k").agg(gf.cmSketch(col("tok"), Width, Depth).as("s"))
+      .groupBy("k").agg(sketchCol(col("tok"), Width, Depth).as("s"))
       .select(col("k"),
-        gf.cmEstimate(col("s"), lit("only_a")).as("ea"),
+        estimateCol(col("s"), lit("only_a")).as("ea"),
         col("s.total").as("n"))
       .as[(String, Long, Long)].collect().sortBy(_._1)
     out(0) shouldBe (("ka", 100L, 100L))

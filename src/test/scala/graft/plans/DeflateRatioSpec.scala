@@ -1,6 +1,9 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
+
 import graft.SparkSpec
 
 /** T169 — compressibility quality signal: the DEFLATE ratio separates
@@ -8,6 +11,9 @@ import graft.SparkSpec
   * deterministically, with the documented null contract. */
 class DeflateRatioSpec extends SparkSpec {
   import spark.implicits._
+
+  private def ratioOf(text: Column): Column =
+    CatalystBridge.column(DeflateRatio(CatalystBridge.expr(text)))
 
   private val repetitive = "lorem ipsum " * 400
   private val natural =
@@ -25,7 +31,7 @@ class DeflateRatioSpec extends SparkSpec {
   test("signal separation: boilerplate << natural << junk") {
     val got = Seq((1L, repetitive), (2L, natural), (3L, junk))
       .toDF("id", "t")
-      .select($"id", graft.functions.deflateRatio($"t").as("r"))
+      .select($"id", ratioOf($"t").as("r"))
       .as[(Long, Double)].collect().toMap
     got(1L) should be < 0.1 // 400 identical phrases: near-total collapse
     got(1L) should be < got(2L)
@@ -42,7 +48,7 @@ class DeflateRatioSpec extends SparkSpec {
     }.toMap
     Seq(1, 7).foreach { parts =>
       val got = rows.toDF("id", "t").repartition(parts)
-        .select($"id", graft.functions.deflateRatio($"t").as("r"))
+        .select($"id", ratioOf($"t").as("r"))
         .as[(Long, Double)].collect().toMap
       got shouldBe expect
     }
@@ -51,7 +57,7 @@ class DeflateRatioSpec extends SparkSpec {
   test("null contract and type reject") {
     val got = Seq((1L, ""), (2L, null.asInstanceOf[String]), (3L, "x"))
       .toDF("id", "t")
-      .select($"id", graft.functions.deflateRatio($"t").as("r"))
+      .select($"id", ratioOf($"t").as("r"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None
         else Some(r.getDouble(1)))).toMap
     got(1L) shouldBe None // empty: 0/0 has no meaning
@@ -61,12 +67,12 @@ class DeflateRatioSpec extends SparkSpec {
     // GraftExtensionsSpec — the shared test session carries no
     // extensions)
     an[Exception] should be thrownBy
-      Seq(1).toDF("i").select(graft.functions.deflateRatio($"i")).collect()
+      Seq(1).toDF("i").select(ratioOf($"i")).collect()
   }
 
   test("interpreted eval matches codegen") {
     val df = Seq((1L, natural), (2L, repetitive)).toDF("id", "t")
-    val expr = graft.functions.deflateRatio($"t").as("r")
+    val expr = ratioOf($"t").as("r")
     val on = df.select($"id", expr).as[(Long, Double)].collect().toMap
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {

@@ -14,9 +14,9 @@ import graft.sources.SharedTable
   * warehouse shared across sessions — exactly how bench windows
   * behave) serving a corpus regenerated in place at the same path must
   * rebuild, never silently read the previous generation's frames.
-  * The mechanism is [[SharedTable.dirFingerprint]] mixed into every
-  * memoized table name, plus [[SharedTable.dropStaleGenerations]] GC
-  * in the build paths. */
+  * The mechanism is [[SharedTable.dirFingerprint]] of the tables a
+  * family reads mixed into every memoized table name, plus
+  * [[SharedTable.dropStaleGenerations]] GC in the build paths. */
 class WarehouseInvalidationSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,12 +27,12 @@ class WarehouseInvalidationSpec extends SparkSpec {
   test("dirFingerprint changes when a file in the corpus is rewritten") {
     val dir = Files.createTempDirectory("graft-fp").toString
     writeDocs(dir, Seq((1L, "a b"), (2L, "b c")))
-    val fp1 = SharedTable.dirFingerprint(spark, dir)
+    val fp1 = SharedTable.dirFingerprint(spark, dir, Seq("documents"))
     fp1 should fullyMatch regex "[0-9a-f]{10}"
     // Same listing → same fingerprint (pure function of the listing).
-    SharedTable.dirFingerprint(spark, dir) shouldBe fp1
+    SharedTable.dirFingerprint(spark, dir, Seq("documents")) shouldBe fp1
     writeDocs(dir, Seq((1L, "a b"), (2L, "b c"), (3L, "c d plus extra")))
-    SharedTable.dirFingerprint(spark, dir) should not be fp1
+    SharedTable.dirFingerprint(spark, dir, Seq("documents")) should not be fp1
   }
 
   test("regenerating the corpus at the same path rebuilds shared tables") {
@@ -42,7 +42,8 @@ class WarehouseInvalidationSpec extends SparkSpec {
     val q = graft.SparkEntry.queries("q86_bigram_lm")
     val top1 = q(spark, dir).select("bigram").as[String].head()
     top1 shouldBe "x y"
-    val gen1Tbl = SharedTable.indexName(spark, "graft_bigrams", dir)
+    val gen1Tbl =
+      SharedTable.indexName(spark, "graft_bigrams", dir, Seq("documents"))
     assert(spark.catalog.tableExists(gen1Tbl))
 
     // Generation 2: SAME PATH, different corpus — "m n" dominates.
@@ -53,7 +54,8 @@ class WarehouseInvalidationSpec extends SparkSpec {
     top2 shouldBe "m n" // stale graft_bigrams would still say "x y"
 
     // The superseded generation's table was GC'd by the rebuild.
-    val gen2Tbl = SharedTable.indexName(spark, "graft_bigrams", dir)
+    val gen2Tbl =
+      SharedTable.indexName(spark, "graft_bigrams", dir, Seq("documents"))
     gen2Tbl should not be gen1Tbl
     assert(spark.catalog.tableExists(gen2Tbl))
     assert(!spark.catalog.tableExists(gen1Tbl))
@@ -84,14 +86,14 @@ class WarehouseInvalidationSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
     writeEmb(seed = 0, n = 24)
-    val name1 = SharedTable.indexName(spark, "ivf", dir)
+    val name1 = SharedTable.indexName(spark, "ivf", dir, Seq("embeddings"))
     val idx1 = Similarity.indexFor(graft.Tables.embeddings(spark, dir),
       name1, nCentroids = 2, trainN = 24, iters = 1, numBuckets = 2,
       stem = Some(SharedTable.indexName("ivf", dir)))
     spark.table(idx1.assignedTable).count() shouldBe 24L
 
     writeEmb(seed = 5, n = 30) // regenerate in place, different count
-    val name2 = SharedTable.indexName(spark, "ivf", dir)
+    val name2 = SharedTable.indexName(spark, "ivf", dir, Seq("embeddings"))
     name2 should not be name1
     val idx2 = Similarity.indexFor(graft.Tables.embeddings(spark, dir),
       name2, nCentroids = 2, trainN = 30, iters = 1, numBuckets = 2,
@@ -103,7 +105,8 @@ class WarehouseInvalidationSpec extends SparkSpec {
   }
 
   private def memoCounted(dir: String, built: AtomicInteger) =
-    SharedTable.memo(spark, "graft_memotest", dir, "doc_id", 2) {
+    SharedTable.memo(spark, "graft_memotest", dir, Seq("documents"),
+        "doc_id", 2) {
       built.incrementAndGet()
       graft.Tables.documents(spark, dir).select("doc_id", "text")
     }
@@ -117,13 +120,32 @@ class WarehouseInvalidationSpec extends SparkSpec {
     built.get() shouldBe 1
   }
 
+  test("memo rebuilds after its source table is rewritten, not after another table") {
+    val dir = Files.createTempDirectory("graft-memo-sources").toString
+    writeDocs(dir, Seq((1L, "a b"), (2L, "b c")))
+    def writeLineitem(n: Int): Unit =
+      (1 to n).map(i => (i.toLong, i.toDouble)).toDF("l_orderkey", "l_quantity")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    writeLineitem(3)
+    val built = new AtomicInteger(0)
+    memoCounted(dir, built).count() shouldBe 2L
+    // lineitem is not a source of the documents-derived family.
+    writeLineitem(5)
+    memoCounted(dir, built).count() shouldBe 2L
+    built.get() shouldBe 1
+    writeDocs(dir, Seq((1L, "a b"), (2L, "b c"), (3L, "c d plus extra")))
+    memoCounted(dir, built).count() shouldBe 3L
+    built.get() shouldBe 2
+  }
+
   test("memo builds over a leftover location with no catalog entry") {
     // A crashed earlier session leaves the current generation's managed
     // location behind; the fresh catalog does not know the table, and
     // CREATE would refuse the non-empty location without the pre-clear.
     val dir = Files.createTempDirectory("graft-memo-crash").toString
     writeDocs(dir, Seq((1L, "a b"), (2L, "b c"), (3L, "c d")))
-    val tbl = SharedTable.indexName(spark, "graft_memotest", dir)
+    val tbl =
+      SharedTable.indexName(spark, "graft_memotest", dir, Seq("documents"))
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
