@@ -199,6 +199,18 @@ package object functions {
       graft.functions.fanOutScan(df, key)
   }
 
+  /** Content-defined chunks of a text column ([[graft.plans.CdcChunks]]
+    * — FastCDC gear-hash boundaries): chunks concatenate back to the
+    * input, and an edit reshapes only its own chunk before the stream
+    * re-synchronizes. The dedup-storage split; the token-level
+    * SQL-expressible twin is q135. */
+  def cdcChunks(text: Column, maskBits: Int = 6, minLen: Int = 16,
+      maxLen: Int = 256): Column =
+    org.apache.spark.sql.graft.CatalystBridge.column(
+      graft.plans.CdcChunks(
+        org.apache.spark.sql.graft.CatalystBridge.expr(text),
+        maskBits, minLen, maxLen))
+
   /** Sorted distinct indices of the `phrases` occurring in `text` —
     * ONE Aho–Corasick pass over the bytes regardless of phrase count
     * ([[graft.plans.PhraseScan]]; the scale path where the unrolled

@@ -3,15 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Embedding-matrix statistics and full-corpus k-means: corpus
-  * covariance in ONE pass — the QA kernel run before ANN index builds
-  * (mis-scaled encoders, correlated dimensions and collapsed
-  * representations all show up here first).
+/** Embedding-matrix statistics: corpus covariance in ONE pass and the
+  * top principal component — the QA/whitening kernel run before ANN
+  * index builds (mis-scaled encoders, correlated dimensions and
+  * collapsed representations all show up here first).
   *
-  * Scale shape: the whole covariance reduction is
+  * Scale shape: the whole reduction is
   * [[graft.plans.VecOuterSum]] — O(dim²) state per partition,
   * cell-wise-add merge, one emitted row. The dim×dim matrix is
-  * driver-trivial (64×64 = 32 KB) and never grows with the corpus.
+  * driver-trivial (64×64 = 32 KB), so the eigen step is deterministic
+  * local arithmetic, never a distributed iteration: power iteration
+  * needs the COVARIANCE, not the data, and the covariance never
+  * grows with the corpus.
   */
 object Embeddings {
 
@@ -31,6 +34,109 @@ object Embeddings {
       .collect()(0)
     CovStats(row.getLong(0), row.getInt(1),
       row.getSeq[Double](2).toArray, row.getSeq[Double](3).toArray)
+  }
+
+  final case class TopComponent(
+      eigenvalue: Double,
+      component: Array[Double], // unit length, sign-fixed
+      explainedVariance: Double) // λ / trace(cov)
+
+  /** Top principal component by deterministic power iteration on the
+    * collected covariance: v₀ = 1/√d, fixed `iters` Rayleigh steps,
+    * sign fixed so the largest-|coordinate| entry is positive (lowest
+    * index on ties) — reproducible across runs and layouts. */
+  def topComponent(stats: CovStats, iters: Int = 100): TopComponent = {
+    require(iters >= 1, s"iters must be >= 1: $iters")
+    val d = stats.dim
+    val c = stats.cov
+    var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
+    var it = 0
+    while (it < iters) {
+      val w = new Array[Double](d)
+      var i = 0
+      while (i < d) {
+        var s = 0.0
+        var j = 0
+        while (j < d) { s += c(i * d + j) * v(j); j += 1 }
+        w(i) = s
+        i += 1
+      }
+      val norm = math.sqrt(w.map(x => x * x).sum)
+      if (norm == 0.0) it = iters // degenerate (zero matrix): keep v₀
+      else { v = w.map(_ / norm); it += 1 }
+    }
+    // Rayleigh quotient λ = vᵀCv (v is unit length).
+    var lambda = 0.0
+    var i = 0
+    while (i < d) {
+      var s = 0.0
+      var j = 0
+      while (j < d) { s += c(i * d + j) * v(j); j += 1 }
+      lambda += v(i) * s
+      i += 1
+    }
+    // Sign convention: the largest-|coordinate| entry is positive.
+    var arg = 0
+    i = 1
+    while (i < d) { if (math.abs(v(i)) > math.abs(v(arg))) arg = i; i += 1 }
+    if (v(arg) < 0.0) v = v.map(-_)
+    val trace = (0 until d).map(k => c(k * d + k)).sum
+    TopComponent(lambda, v, if (trace > 0.0) lambda / trace else 0.0)
+  }
+
+  /** Whitening matrix W = L⁻¹ where cov + ridge·I = L·Lᵀ (Cholesky):
+    * applying y = W·(x − mean) makes the output covariance ≈ identity.
+    * The ridge keeps degenerate (dead) dimensions factorizable —
+    * standard practice, and the reason this never throws on a
+    * collapsed representation. Row-major d×d (lower triangular). */
+  def whiteningMatrix(stats: CovStats, ridge: Double = 1e-9): Array[Double] = {
+    val d = stats.dim
+    // Cholesky: L lower-triangular with cov = L·Lᵀ.
+    val l = new Array[Double](d * d)
+    var i = 0
+    while (i < d) {
+      var j = 0
+      while (j <= i) {
+        var s = stats.cov(i * d + j) + (if (i == j) ridge else 0.0)
+        var k = 0
+        while (k < j) { s -= l(i * d + k) * l(j * d + k); k += 1 }
+        if (i == j) l(i * d + i) = math.sqrt(math.max(s, ridge))
+        else l(i * d + j) = s / l(j * d + j)
+        j += 1
+      }
+      i += 1
+    }
+    // Forward-substitute column by column for L⁻¹ (lower triangular).
+    val inv = new Array[Double](d * d)
+    var c = 0
+    while (c < d) {
+      inv(c * d + c) = 1.0 / l(c * d + c)
+      var r = c + 1
+      while (r < d) {
+        var s = 0.0
+        var k = c
+        while (k < r) { s -= l(r * d + k) * inv(k * d + c); k += 1 }
+        inv(r * d + c) = s / l(r * d + r)
+        r += 1
+      }
+      c += 1
+    }
+    inv
+  }
+
+  /** Whitened copy of `vecCol` as `outCol` (array<double>): one fused
+    * d² multiply-add per row via the codegen'd [[graft.plans.MatVec]];
+    * the d×d matrix ships once per executor as a codegen reference,
+    * never per row. Downstream covariance of `outCol` ≈ identity —
+    * the isotropy normalization run before cosine ANN indexes. */
+  def whiten(df: DataFrame, vecCol: String, stats: CovStats,
+      outCol: String = "white", ridge: Double = 1e-9): DataFrame = {
+    val w = whiteningMatrix(stats, ridge)
+    df.withColumn(outCol,
+      org.apache.spark.sql.graft.CatalystBridge.column(
+        graft.plans.MatVec(
+          org.apache.spark.sql.graft.CatalystBridge.expr(col(vecCol)),
+          w, stats.mean, stats.dim)))
   }
 
   // ---------------------------------------------------------------------
@@ -136,6 +242,73 @@ object Embeddings {
       transform(col(embCol), x => x.cast("double")).as("e"))
     assign(v, model.centroids)
       .select(col("_id").as(idCol), col("cl").as("cluster"), col("d2"))
+  }
+
+  /** Running state of the mini-batch k-means (Sculley 2010, "Web-scale
+    * k-means clustering"): per surviving cluster, its LIFETIME
+    * fixed-point coordinate sums and member count — the centroid is
+    * always `sums / (n · 2^20)`, so merging a new batch is pure long
+    * addition and the state is exactly reproducible from the batch
+    * sequence. k × (dim + 1) longs total — driver-trivial at any k. */
+  final case class KMeansState(
+      clusters: Array[(Int, Long, Array[Long])] /* (cl, n, sumFx) */) {
+    def model: KMeansModel = KMeansModel(clusters.map { case (cl, n, s) =>
+      (cl, s.map(_.toDouble / (n * KMeansScale)))
+    })
+  }
+
+  /** Seed a streaming state from the first batch: the k smallest
+    * md5(id) rows become singleton clusters (the [[kmeansFit]] draw),
+    * then the WHOLE batch — seed rows included — folds in via
+    * [[kmeansUpdate]]. Each seed row therefore carries lifetime
+    * weight 2 (its singleton init plus its fold vote): deliberate —
+    * the seed acts as the cluster's prior, keeping a cluster anchored
+    * even when the first fold assigns it nothing else — and exactly
+    * reproduced by `StreamingKMeansSpec`'s sequential reference. */
+  def kmeansInit(firstBatch: DataFrame, k: Int,
+      idCol: String = "vec_id", embCol: String = "embedding"): KMeansState = {
+    require(k >= 1, s"need k >= 1: $k")
+    val seeds = firstBatch.select(col(idCol).as("_id"),
+        transform(col(embCol), x => x.cast("double")).as("e"))
+      .withColumn("_h", md5(col("_id").cast("string")))
+      .orderBy("_h", "_id").limit(k)
+      .select("e").collect()
+      .map(_.getSeq[Double](0).toArray)
+    require(seeds.nonEmpty,
+      "kmeansInit: empty first batch — nothing to seed from")
+    val st = KMeansState(seeds.zipWithIndex.map { case (c, i) =>
+      (i, 1L, c.map(x => math.floor(x * KMeansScale).toLong))
+    })
+    kmeansUpdate(st, firstBatch, idCol, embCol)
+  }
+
+  /** One mini-batch update: assign the batch under the CURRENT
+    * centroids (the same (d2, cl)-lexicographic pick as [[kmeansFit]]),
+    * then fold its per-cluster fixed-point sums into the lifetime
+    * state. ONE pass over the batch, a (k × dim)-bounded shuffle, pure
+    * long addition into k × (dim+1) longs of driver state — the
+    * foreachBatch shape (`StreamingKMeansSpec` pins determinism and
+    * the sequential-reference equality). Unlike [[kmeansFit]]'s
+    * fixed-iteration batch Lloyd, the result depends on arrival order
+    * — inherent to one-pass clustering and exactly reproducible given
+    * the same batch sequence. */
+  def kmeansUpdate(state: KMeansState, batch: DataFrame,
+      idCol: String = "vec_id", embCol: String = "embedding"): KMeansState = {
+    val v = batch.select(col(idCol).as("_id"),
+      transform(col(embCol), x => x.cast("double")).as("e"))
+    val dim = state.clusters.head._3.length
+    val census = clusterCensus(assign(v, state.model.centroids), dim)
+      .map { case (cl, n, sums) => cl -> ((n, sums)) }.toMap
+    KMeansState(state.clusters.map { case (cl, n, s) =>
+      census.get(cl) match {
+        case Some((dn, delta)) =>
+          val merged = s.clone()
+          var i = 0
+          while (i < merged.length) { merged(i) += delta(i); i += 1 }
+          (cl, n + dn, merged)
+        case None => (cl, n, s)
+      }
+    })
   }
 
   /** One fused census pass under the current assignment: per surviving

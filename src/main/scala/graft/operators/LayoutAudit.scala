@@ -4,7 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +13,18 @@ import scala.jdk.CollectionConverters._
   * footers. Per (file, row group) it reports row counts, compressed /
   * uncompressed bytes, and per-column min/max statistics for the
   * requested columns — the numbers that decide whether a scan can
-  * skip a row group.
+  * skip a row group ([[ZOrder]]'s whole reason to exist) and whether a
+  * table needs [[Compaction]] (file-size histogram) before they cost
+  * anything at query time.
+  *
+  * [[clusteringScore]] turns the stats into the actionable metric: the
+  * mean fraction of each column's GLOBAL value range that a single row
+  * group spans. Random layout → every row group spans ~the full range
+  * (score ≈ 1, nothing prunes); perfectly clustered → each spans
+  * ~1/n_groups (score → 0, a point predicate touches one group). The
+  * ZOrderSpec proves span tightening from the DATA; this proves it
+  * from the FOOTERS — the artifact the engine's own row-group pruning
+  * actually consults.
   *
   * Scale shape: the audit never reads data pages — one footer per
   * file, fetched in parallel via `mapPartitions` over the FILE LIST
@@ -85,6 +97,72 @@ object LayoutAudit {
           } finally footer.close()
         }
       }
+  }
+
+  /** File-size histogram — the [[Compaction]] decision input: files,
+    * rows, bytes per file (one row per file). */
+  def fileProfile(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val files = listParquetFiles(spark, dir)
+    require(files.nonEmpty, s"no parquet files under $dir")
+    spark.createDataset(files)
+      .repartition(math.min(files.size, 64))
+      .map { p =>
+        val conf = new Configuration()
+        val footer = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(p), conf))
+        try {
+          val blocks = footer.getFooter.getBlocks.asScala
+          (p, blocks.size, blocks.map(_.getRowCount).sum,
+            blocks.map(_.getCompressedSize).sum)
+        } finally footer.close()
+      }
+      .toDF("file", "n_row_groups", "n_rows", "compressed_bytes")
+  }
+
+  /** Mean fraction of a LONG column's global range that one row group
+    * spans (1 ≈ random layout, → 0 ≈ clustered). Computed from the
+    * audit frame — footer statistics only. */
+  def clusteringScore(stats: Dataset[ColumnStat], column: String): Double = {
+    val rows = stats.filter(_.column == column).collect()
+      .filter(s => s.min_long.isDefined && s.max_long.isDefined)
+    require(rows.nonEmpty, s"no long statistics for column $column")
+    val gMin = rows.map(_.min_long.get).min
+    val gMax = rows.map(_.max_long.get).max
+    if (gMax == gMin) return 0.0
+    val span = (gMax - gMin).toDouble
+    rows.map(s => (s.max_long.get - s.min_long.get) / span).sum / rows.length
+  }
+
+  /** Schema drift between two table releases — the axis the rest of
+    * the release-diff family doesn't cover (q136 diffs ROWS, q144
+    * embedding GEOMETRY, `audit` physical LAYOUT; a silently widened
+    * int or a dropped column breaks every downstream consumer first).
+    * One row per column name present in either release:
+    * (column, status ∈ added|removed|type_changed|unchanged,
+    * type_a, type_b). Reads ONLY footer metadata via Spark's schema
+    * resolution — no data pages at any table size; output bounded by
+    * the wider schema's width. Nested types compare by full DDL
+    * (catalogString), so a struct field change surfaces as
+    * type_changed on its top-level column. */
+  def schemaDiff(spark: SparkSession, dirA: String,
+      dirB: String): DataFrame = {
+    import spark.implicits._
+    def types(dir: String): Map[String, String] =
+      spark.read.parquet(dir).schema.fields
+        .map(f => f.name -> f.dataType.catalogString).toMap
+    val a = types(dirA)
+    val b = types(dirB)
+    (a.keySet ++ b.keySet).toSeq.sorted.map { c =>
+      val (ta, tb) = (a.get(c), b.get(c))
+      val status = (ta, tb) match {
+        case (None, Some(_))                  => "added"
+        case (Some(_), None)                  => "removed"
+        case (Some(x), Some(y)) if x != y     => "type_changed"
+        case _                                => "unchanged"
+      }
+      (c, status, ta.getOrElse(""), tb.getOrElse(""))
+    }.toDF("column", "status", "type_a", "type_b")
   }
 
   private def listParquetFiles(spark: SparkSession, dir: String): Seq[String] = {

@@ -1,11 +1,53 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Media as opaque `binary` payloads with typed metadata. The engine
-  * decodes no media: [[mediaFromDocuments]] wraps documents as media
-  * records so the binary-column plumbing runs on the corpus.
+/** Multimodal column handling: media as opaque `binary` payloads with
+  * typed metadata, processed per-partition in batches.
+  *
+  * The Spark-side plumbing is real — schema, partition-preserving
+  * batch iteration, deterministic outputs. Image METADATA decode is
+  * real ([[ImageIoCodec.imageMeta]] header-parses PNG/JPEG/GIF/BMP via
+  * `javax.imageio` — ships in the JDK, no external libraries), and so
+  * are PIXEL features for images of ANY size: [[decodePixels]] rasters
+  * the payload in full within the memory cap and through uniform
+  * source subsampling above it (bounded raster, estimated means —
+  * `exact_pixels` says which), reporting mean-R/G/B and Rec.601 luma.
+  * Audio METADATA is real too ([[AudioIoCodec.audioMeta]]): the JDK
+  * ships WAV/AIFF/AU parsers in `javax.sound.sampled`, so container
+  * type, encoding, sample rate, channels, bit depth, and frame count
+  * come from `AudioSystem.getAudioFileFormat` — a header parse, no
+  * sample decode. Audio SAMPLE features are real as well
+  * ([[AudioIoCodec.sampleStats]]): the JDK decodes WAV/AIFF/AU PCM
+  * (and converts ULAW/ALAW) via `AudioSystem.getAudioInputStream`, so
+  * RMS / peak / zero-crossing rate / clipping come from the actual
+  * waveform, streamed through a fixed buffer. Video CONTAINER
+  * metadata is real ([[IsoBmffCodec.videoMeta]]): MP4/MOV duration,
+  * dimensions, codec fourcc, and track count via a pure-JDK ISO-BMFF
+  * box parse; so are frame-level STREAM statistics
+  * ([[IsoBmffCodec.frameStats]] — per-frame sizes, fps, bitrate,
+  * keyframe ratio from the `stbl` sample tables) and frame SAMPLING
+  * ([[IsoBmffCodec.syncFrameSlices]] — the actual compressed bytes of
+  * evenly spaced keyframes, located through `stss`/`stsc`/`stco`/
+  * `stsz`). Image RESIZE is real ([[resizeImages]]): decode →
+  * bilinear resample → PNG re-encode, pure `java.awt`.
+  *
+  * Video frame RASTER decode is real for JPEG-coded tracks
+  * ([[decodeVideoPixels]] — Motion-JPEG keyframe slices piped into the
+  * still-image raster path). The one remaining STUB is raster decode
+  * of ENTROPY-coded video (H.264/HEVC have no JDK implementation):
+  * [[StubCodec.decode]] stands in with a deterministic byte histogram
+  * where a pixel-level feature would go. Swapping in a full codec
+  * (JavaCV, ffmpeg-over-pipe) changes ONLY that function — batch
+  * shape, schema, and distribution are unchanged.
+  *
+  * Scale notes: decode runs via `mapPartitions` — per-partition
+  * imperative logic over opaque bytes is the one documented case where
+  * dropping below the Column API is warranted (builder prompt (d);
+  * a JVM codec call can't be a Catalyst expression). No shuffle is
+  * introduced: features are computed where the bytes already live —
+  * at 100 TB of media that data-locality is the whole game.
   */
 object Multimodal {
 
@@ -16,6 +58,1343 @@ object Multimodal {
       format: String,
       declared_width: Int,
       declared_height: Int)
+
+  final case class MediaFeatures(
+      media_id: Long,
+      kind: String,
+      n_bytes: Long,
+      checksum: Long,
+      histogram: Array[Long]) // 16 coarse byte-value bins
+
+  /** File extension → media kind for [[readMediaDir]]. Unknown
+    * extensions map to "other" (kept, not dropped — the audit decides
+    * downstream). */
+  private val KindByExt: Map[String, String] = Map(
+    "png" -> "image", "jpg" -> "image", "jpeg" -> "image",
+    "gif" -> "image", "bmp" -> "image",
+    "wav" -> "audio", "aiff" -> "audio", "aif" -> "audio", "au" -> "audio",
+    "mp4" -> "video", "mov" -> "video", "m4v" -> "video")
+
+  /** Ingest a media LAKE directory through Spark's built-in
+    * `binaryFile` source: (path, modificationTime, length, content) →
+    * [[MediaRecord]] rows, kind/format inferred from the extension,
+    * media_id the stable 60-bit hash of the path (layout- and
+    * listing-order-independent; re-ingesting the same lake yields the
+    * same ids). Declared dimensions stay 0 — real dimensions come from
+    * the decode operators (the header, not the filename, is the
+    * authority).
+    *
+    * Scale notes: `binaryFile` is a real FileFormat — directory
+    * listing distributes, each file body is read exactly once by the
+    * task that gets it (no driver collect), and the `length` metadata
+    * column supports pushdown (`maxBytes` becomes a scan-level filter
+    * that skips oversized payloads WITHOUT reading their bytes — at
+    * 100 TB of media the skip is the difference between a metadata
+    * listing and a full read). Feature extraction composes directly:
+    * the decode operators are mapPartitions over these rows, so bytes
+    * are processed where the scan put them. */
+  def readMediaDir(spark: SparkSession, dir: String,
+      maxBytes: Long = 256L << 20,
+      glob: String = "*"): Dataset[MediaRecord] = {
+    import spark.implicits._
+    // A dotless path has NO extension: split leaves one element (the
+    // whole path), which must become the explicit unknown marker ''
+    // rather than leaking the full lowercased path into `format`.
+    val parts = split(col("path"), "\\.")
+    val ext = when(size(parts) === 1, lit(""))
+      .otherwise(lower(element_at(parts, -1)))
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", glob)
+      .load(dir)
+      .filter(col("length") <= maxBytes) // pushed into the file index
+      .select(
+        graft.functions.stableHash(col("path")).as("media_id"),
+        KindByExt.foldRight(lit("other"): Column) {
+          case ((e, k), rest) => when(ext === e, k).otherwise(rest)
+        }.as("kind"),
+        col("content").as("payload"),
+        ext.as("format"),
+        lit(0).as("declared_width"),
+        lit(0).as("declared_height"))
+      .as[MediaRecord]
+  }
+
+  /** STUB codec — deterministic fake of the decode step. A real
+    * implementation would parse `format` and emit pixel/sample
+    * statistics; the container ships no media libs, so features come
+    * from the payload bytes themselves. */
+  object StubCodec {
+    val HistogramBins = 16
+    def decode(r: MediaRecord): MediaFeatures = {
+      val hist = new Array[Long](HistogramBins)
+      var checksum = 0L
+      var i = 0
+      while (i < r.payload.length) {
+        val b = r.payload(i) & 0xff
+        hist(b * HistogramBins / 256) += 1
+        checksum = (checksum * 31 + b) & 0xfffffffffffffL
+        i += 1
+      }
+      MediaFeatures(r.media_id, r.kind, r.payload.length.toLong, checksum, hist)
+    }
+  }
+
+  /** Decode a media dataset to features, batch-wise per partition. */
+  def decodeFeatures(media: Dataset[MediaRecord])(
+      implicit spark: SparkSession): Dataset[MediaFeatures] = {
+    import spark.implicits._
+    media.mapPartitions(_.map(StubCodec.decode))
+  }
+
+  /** Image metadata decoded for real: id, whether a registered JDK
+    * codec recognized the payload, and the decoded (or declared, on
+    * fallback) dimensions/channels. */
+  final case class MediaMeta(
+      media_id: Long,
+      kind: String,
+      decoded: Boolean,
+      width: Int,
+      height: Int,
+      channels: Int,
+      n_bytes: Long)
+
+  /** REAL codec for the formats the JDK ships readers for (PNG, JPEG,
+    * GIF, BMP, WBMP) — no external libraries. Reads the image HEADER
+    * only: `ImageReader.getWidth/getHeight/getImageTypes` parse IHDR /
+    * SOF markers without decoding pixel data, so metadata extraction
+    * over 100 TB of media costs header bytes, not decode CPU. Payloads
+    * no reader claims (or that fail to parse) return None and the
+    * caller falls back to [[StubCodec]] semantics. */
+  object ImageIoCodec {
+    import javax.imageio.ImageIO
+
+    /** (width, height, channels) from the image header, or None. */
+    def imageMeta(bytes: Array[Byte]): Option[(Int, Int, Int)] = {
+      if (bytes == null || bytes.length == 0) return None
+      try {
+        val iis = ImageIO.createImageInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        try {
+          val readers = ImageIO.getImageReaders(iis)
+          if (!readers.hasNext) None
+          else {
+            val reader = readers.next()
+            try {
+              reader.setInput(iis, true, true)
+              val w = reader.getWidth(0)
+              val h = reader.getHeight(0)
+              val types = reader.getImageTypes(0)
+              // 0 = "unknown", documented: a reader that can size the
+              // image but advertises no image type gives no band count;
+              // -1 would read as a valid-looking sentinel downstream.
+              val channels =
+                if (types.hasNext) types.next().getNumBands else 0
+              Some((w, h, channels))
+            } finally reader.dispose()
+          }
+        } finally iis.close()
+      } catch { case _: Exception => None }
+    }
+
+    /** Raster memory cap: a decoded ARGB raster costs 4 bytes/pixel of
+      * executor heap, so an unbounded `ImageIO.read` on adversarial
+      * dimensions (a 1 GB decompression-bomb PNG header claiming
+      * 50k×50k) would OOM the task. 1 MPix ≈ 4 MB raster — safe at
+      * full mapPartitions parallelism. Images ABOVE the cap are not
+      * skipped: they decode through `ImageReadParam.setSourceSubsampling`
+      * with the smallest step whose subsampled raster fits the cap, so
+      * the RASTER memory stays bounded while the means become a
+      * uniform-grid estimate (`PixelStats.exact = false`). */
+    val DefaultMaxDecodePixels: Long = 1L << 20
+
+    /** Header claims beyond this (16 Gpix) are refused outright: even a
+      * subsampled read must inflate every source row CPU-wise, and a
+      * fabricated petapixel header would pin a task on pure decode. */
+    val HardMaxSourcePixels: Long = 1L << 34
+
+    /** Pixel statistics for one image. `width`/`height` are the FULL
+      * source dimensions (from the header) even when the raster was
+      * subsampled; `exact` says whether the means cover every pixel
+      * (step 1) or a uniform step×step grid sample. */
+    final case class PixelStats(
+        width: Int,
+        height: Int,
+        meanR: Double,
+        meanG: Double,
+        meanB: Double,
+        meanLuma: Double,
+        exact: Boolean)
+
+    /** REAL pixel statistics — mean R/G/B and Rec.601 luma — for ANY
+      * JDK-decodable image. Within `maxPixels` the raster is read in
+      * full (exact means); above it the reader decodes a uniformly
+      * subsampled grid sized to the cap (estimated means, bounded
+      * memory) — the standard estimator for channel statistics over
+      * images too large to raster whole. None for non-images, refused
+      * oversize headers, or payloads the reader sizes but cannot
+      * raster. */
+    def pixelStats(bytes: Array[Byte], maxPixels: Long = DefaultMaxDecodePixels)
+        : Option[PixelStats] = {
+      if (bytes == null || bytes.length == 0) return None
+      try {
+        val iis = ImageIO.createImageInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        try {
+          val readers = ImageIO.getImageReaders(iis)
+          if (!readers.hasNext) None
+          else {
+            val reader = readers.next()
+            try {
+              reader.setInput(iis, true, true)
+              val w = reader.getWidth(0)
+              val h = reader.getHeight(0)
+              val pixels = w.toLong * h
+              if (pixels <= 0 || pixels > HardMaxSourcePixels) None
+              else {
+                val step = math.max(1,
+                  math.ceil(math.sqrt(pixels.toDouble / maxPixels)).toInt)
+                val param = reader.getDefaultReadParam
+                if (step > 1) param.setSourceSubsampling(step, step, 0, 0)
+                val img = reader.read(0, param)
+                if (img == null) None
+                else {
+                  val sw = img.getWidth
+                  val sh = img.getHeight
+                  var sr = 0.0; var sg = 0.0; var sb = 0.0
+                  val row = new Array[Int](sw)
+                  var y = 0
+                  while (y < sh) {
+                    img.getRGB(0, y, sw, 1, row, 0, sw)
+                    var x = 0
+                    while (x < sw) {
+                      val p = row(x)
+                      sr += (p >> 16) & 0xff
+                      sg += (p >> 8) & 0xff
+                      sb += p & 0xff
+                      x += 1
+                    }
+                    y += 1
+                  }
+                  val n = sw.toDouble * sh
+                  if (n <= 0) None
+                  else {
+                    val (mr, mg, mb) = (sr / n, sg / n, sb / n)
+                    Some(PixelStats(w, h, mr, mg, mb,
+                      0.299 * mr + 0.587 * mg + 0.114 * mb,
+                      exact = step == 1))
+                  }
+                }
+              }
+            } finally reader.dispose()
+          }
+        } finally iis.close()
+      } catch { case _: Exception => None }
+    }
+
+    /** 64-bit average-hash (aHash) perceptual fingerprint: the raster
+      * (decoded under the same subsampling/bomb caps as [[pixelStats]])
+      * is pooled into an 8×8 grid of Rec.601 luma means; bit r·8+c is
+      * set when cell (r,c)'s mean exceeds the global mean. Invariant to
+      * uniform resize and robust to small brightness/noise deltas —
+      * near-duplicate renditions land within a few bits of Hamming
+      * distance, the property the LSH banding in
+      * [[Multimodal.imageNearDupCensus]] exploits. Cells that receive
+      * no pixels (source narrower/shorter than 8) read as mean 0 —
+      * deterministic, and identical for identically-shaped images.
+      * None for non-images / refused headers, same contract as
+      * [[pixelStats]]. */
+    def aHash64(bytes: Array[Byte],
+        maxPixels: Long = DefaultMaxDecodePixels): Option[Long] = {
+      if (bytes == null || bytes.length == 0) return None
+      try {
+        val iis = ImageIO.createImageInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        try {
+          val readers = ImageIO.getImageReaders(iis)
+          if (!readers.hasNext) None
+          else {
+            val reader = readers.next()
+            try {
+              reader.setInput(iis, true, true)
+              val w = reader.getWidth(0)
+              val h = reader.getHeight(0)
+              val pixels = w.toLong * h
+              if (pixels <= 0 || pixels > HardMaxSourcePixels) None
+              else {
+                val step = math.max(1,
+                  math.ceil(math.sqrt(pixels.toDouble / maxPixels)).toInt)
+                val param = reader.getDefaultReadParam
+                if (step > 1) param.setSourceSubsampling(step, step, 0, 0)
+                val img = reader.read(0, param)
+                if (img == null) None
+                else {
+                  val sw = img.getWidth
+                  val sh = img.getHeight
+                  if (sw <= 0 || sh <= 0) None
+                  else {
+                    val sums = new Array[Double](64)
+                    val counts = new Array[Long](64)
+                    val row = new Array[Int](sw)
+                    var y = 0
+                    while (y < sh) {
+                      val r8 = (y.toLong * 8 / sh).toInt
+                      img.getRGB(0, y, sw, 1, row, 0, sw)
+                      var x = 0
+                      while (x < sw) {
+                        val p = row(x)
+                        val luma = 0.299 * ((p >> 16) & 0xff) +
+                          0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
+                        val cell = r8 * 8 + (x.toLong * 8 / sw).toInt
+                        sums(cell) += luma
+                        counts(cell) += 1
+                        x += 1
+                      }
+                      y += 1
+                    }
+                    val means = Array.tabulate(64)(i =>
+                      if (counts(i) == 0) 0.0 else sums(i) / counts(i))
+                    val global = means.sum / 64.0
+                    var hash = 0L
+                    var i = 0
+                    while (i < 64) {
+                      if (means(i) > global) hash |= 1L << i
+                      i += 1
+                    }
+                    Some(hash)
+                  }
+                }
+              }
+            } finally reader.dispose()
+          }
+        } finally iis.close()
+      } catch { case _: Exception => None }
+    }
+
+    def decode(r: MediaRecord): MediaMeta = imageMeta(r.payload) match {
+      case Some((w, h, c)) =>
+        MediaMeta(r.media_id, r.kind, decoded = true, w, h, c,
+          r.payload.length.toLong)
+      case None =>
+        MediaMeta(r.media_id, r.kind, decoded = false,
+          r.declared_width, r.declared_height, 0, r.payload.length.toLong)
+    }
+  }
+
+  /** Decode real image metadata per partition — same no-shuffle
+    * plumbing as [[decodeFeatures]], real header parse via
+    * [[ImageIoCodec]], declared-metadata fallback for payloads the JDK
+    * has no reader for. */
+  def decodeMeta(media: Dataset[MediaRecord])(
+      implicit spark: SparkSession): Dataset[MediaMeta] = {
+    import spark.implicits._
+    media.mapPartitions(_.map(ImageIoCodec.decode))
+  }
+
+  /** Real pixel features when the payload is a JDK-decodable image:
+    * exact channel means within the raster cap, uniform-grid estimates
+    * above it (`exact_pixels = false` — bounded memory via source
+    * subsampling). Header/declared fallback for non-images
+    * (`decoded_pixels = false`, means 0.0 — read the flag, not the
+    * zeros). */
+  final case class PixelFeatures(
+      media_id: Long,
+      kind: String,
+      decoded_pixels: Boolean,
+      exact_pixels: Boolean,
+      width: Int,
+      height: Int,
+      mean_r: Double,
+      mean_g: Double,
+      mean_b: Double,
+      mean_luma: Double,
+      n_bytes: Long)
+
+  /** Mean-RGB / luma per image ([[ImageIoCodec.pixelStats]]): full
+    * decode within `maxPixels`, subsampled decode above it — same
+    * no-shuffle mapPartitions plumbing as [[decodeMeta]]; the raster
+    * cap means one poison row can't OOM a task at any claimed size. */
+  def decodePixels(media: Dataset[MediaRecord],
+      maxPixels: Long = ImageIoCodec.DefaultMaxDecodePixels)(
+      implicit spark: SparkSession): Dataset[PixelFeatures] = {
+    import spark.implicits._
+    media.mapPartitions(_.map { r =>
+      ImageIoCodec.pixelStats(r.payload, maxPixels) match {
+        case Some(ps) =>
+          PixelFeatures(r.media_id, r.kind, decoded_pixels = true,
+            exact_pixels = ps.exact, ps.width, ps.height,
+            ps.meanR, ps.meanG, ps.meanB, ps.meanLuma,
+            r.payload.length.toLong)
+        case None =>
+          val (w, h) = ImageIoCodec.imageMeta(r.payload)
+            .map { case (w0, h0, _) => (w0, h0) }
+            .getOrElse((r.declared_width, r.declared_height))
+          PixelFeatures(r.media_id, r.kind, decoded_pixels = false,
+            exact_pixels = false, w, h, 0.0, 0.0, 0.0, 0.0,
+            r.payload.length.toLong)
+      }
+    })
+  }
+
+  final case class ImageHash(
+      media_id: Long,
+      kind: String,
+      decoded: Boolean,
+      ahash: Long)
+
+  /** 64-bit perceptual (average-hash) fingerprint per image — the
+    * multimodal entry into the dedup family: byte-UNidentical
+    * renditions of the same picture (re-encode, resize, small
+    * brightness shift) hash within a few Hamming bits of each other,
+    * so near-duplicate detection becomes the same banded
+    * signature-join problem the text side solves with SimHash (q59).
+    * Same no-shuffle mapPartitions plumbing and decode caps as
+    * [[decodePixels]]; `decoded = false` rows carry hash 0. */
+  def perceptualHashes(media: Dataset[MediaRecord],
+      maxPixels: Long = ImageIoCodec.DefaultMaxDecodePixels)(
+      implicit spark: SparkSession): Dataset[ImageHash] = {
+    import spark.implicits._
+    media.mapPartitions(_.map { r =>
+      ImageIoCodec.aHash64(r.payload, maxPixels) match {
+        case Some(h) => ImageHash(r.media_id, r.kind, decoded = true, h)
+        case None => ImageHash(r.media_id, r.kind, decoded = false, 0L)
+      }
+    })
+  }
+
+  /** Near-duplicate image pairs between DISTINCT perceptual hashes:
+    * `(hash_a, hash_b, hamming)` with 0 < hamming ≤ maxHamming,
+    * hash_a < hash_b. Never all-pairs: hashes are banded into `bands`
+    * contiguous bit-slices and only in-bucket combinations are
+    * verified (pigeonhole: any pair within `bands − 1` bits collides
+    * on at least one full band, so `maxHamming < bands` finds every
+    * qualifying pair — the q59 SimHash contract on the image side).
+    * Operates on the DISTINCT-hash frame, so dup-group size never
+    * inflates the pair stream; byte-identical images (hamming 0)
+    * are exact-dedup territory ([[Dedup.exact]]) and excluded here. */
+  def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 3,
+      bands: Int = 4): DataFrame = {
+    require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
+    require(maxHamming > 0 && maxHamming < bands,
+      s"banding guarantee needs 0 < maxHamming < bands, got $maxHamming/$bands")
+    val bits = 64 / bands
+    val mask = if (bits == 64) -1L else (1L << bits) - 1
+    val distinctHashes = hashes.select(col("ahash")).distinct()
+    val bandStructs = array((0 until bands).map { b =>
+      struct(lit(b).as("band_idx"),
+        shiftright(col("ahash"), b * bits).bitwiseAND(mask).as("band_val"))
+    }: _*)
+    val buckets = distinctHashes
+      .select(col("ahash"), explode(bandStructs).as("bd"))
+      .select(col("ahash"), col("bd.band_idx").as("band_idx"),
+        col("bd.band_val").as("band_val"))
+      .groupBy("band_idx", "band_val")
+      .agg(sort_array(collect_list(col("ahash"))).as("sigs"))
+      .filter(size(col("sigs")) > 1)
+    // In-bucket ordered combinations (sig_a < sig_b by sort_array).
+    val pairCol = flatten(transform(col("sigs"), (x, i) =>
+      transform(
+        slice(col("sigs"), i + lit(2), size(col("sigs")) - i - lit(1)),
+        y => struct(x.as("hash_a"), y.as("hash_b")))))
+    buckets
+      .select(explode(pairCol).as("p"))
+      .select(col("p.hash_a").as("hash_a"), col("p.hash_b").as("hash_b"))
+      .distinct()
+      .withColumn("hamming",
+        bit_count(col("hash_a").bitwiseXOR(col("hash_b"))).cast("int"))
+      .filter(col("hamming") <= maxHamming)
+  }
+
+  /** Near-dup census over decoded image hashes: `(hamming, n_pairs)`
+    * including the hamming-0 (byte- or raster-identical) band computed
+    * ARITHMETICALLY from group sizes — the pair stream only ever
+    * carries distinct-hash pairs (the q125 distinct-content-collapse
+    * lesson applied to images). */
+  def imageNearDupCensus(hashes: DataFrame, maxHamming: Int = 3,
+      bands: Int = 4): DataFrame = {
+    val hg = hashes.filter(col("decoded"))
+      .groupBy("ahash").agg(count(lit(1)).as("m"))
+    val exact = hg.filter(col("m") > 1)
+      .agg(lit(0).as("hamming"),
+        sum(col("m") * (col("m") - 1) / 2).cast("long").as("n_pairs"))
+      .filter(col("n_pairs").isNotNull)
+    val cross = imageNearDupPairs(hg, maxHamming, bands)
+      .join(hg.select(col("ahash").as("hash_a"), col("m").as("ma")), "hash_a")
+      .join(hg.select(col("ahash").as("hash_b"), col("m").as("mb")), "hash_b")
+      .groupBy("hamming")
+      .agg(sum(col("ma") * col("mb")).cast("long").as("n_pairs"))
+    exact.unionByName(cross).filter(col("n_pairs") > 0).orderBy("hamming")
+  }
+
+  /** Audio metadata decoded for real from the container header — the
+    * audio twin of [[MediaMeta]]. `frame_count` is -1 when the header
+    * does not declare it (streamed/truncated containers);
+    * `duration_sec` is derived (frames / frame rate) and -1.0 when
+    * either side is unknown. */
+  final case class AudioMeta(
+      media_id: Long,
+      kind: String,
+      decoded: Boolean,
+      container: String, // WAVE | AIFF | AU
+      encoding: String, // PCM_SIGNED | ULAW | ...
+      sample_rate: Double,
+      channels: Int,
+      bit_depth: Int,
+      frame_count: Long,
+      duration_sec: Double,
+      n_bytes: Long)
+
+  /** REAL codec for the audio containers the JDK ships parsers for
+    * (WAV, AIFF, AU — `javax.sound.sampled`, no external libraries).
+    * `AudioSystem.getAudioFileFormat` reads the CONTAINER HEADER only
+    * (RIFF/FORM/.snd chunks): sample rate, channels, bit depth, and
+    * frame count cost header bytes, not sample-decode CPU — the same
+    * 100 TB story as [[ImageIoCodec.imageMeta]]. Payloads no provider
+    * claims return None and the caller keeps declared metadata. */
+  object AudioIoCodec {
+
+    /** (container, encoding, sampleRate, channels, bitDepth, frames)
+      * from the audio header, or None. ByteArrayInputStream supports
+      * mark/reset, which `getAudioFileFormat(InputStream)` requires. */
+    def audioMeta(bytes: Array[Byte])
+        : Option[(String, String, Double, Int, Int, Long)] = {
+      if (bytes == null || bytes.length == 0) return None
+      try {
+        val aff = javax.sound.sampled.AudioSystem.getAudioFileFormat(
+          new java.io.ByteArrayInputStream(bytes))
+        val f = aff.getFormat
+        Some((aff.getType.toString, f.getEncoding.toString,
+          f.getSampleRate.toDouble, f.getChannels, f.getSampleSizeInBits,
+          aff.getFrameLength.toLong))
+      } catch {
+        // UnsupportedAudioFileException for non-audio payloads; any
+        // IO/parse failure means "not decodable", same as ImageIoCodec.
+        case _: Exception => None
+      }
+    }
+
+    /** Waveform statistics from a REAL sample decode. Samples are
+      * normalized to [-1, 1); `rms`/`peak`/`mean_sample` cover every
+      * decoded sample across channels, `zero_cross_rate` is the
+      * per-channel sign-change fraction (the classic voiced/unvoiced
+      * discriminator), `clipped_frac` the fraction of samples at
+      * full scale (|x| ≥ 1 − 1/2^(bits−1)). */
+    final case class SampleStats(
+        nSamples: Long,
+        rms: Double,
+        peak: Double,
+        meanSample: Double,
+        zeroCrossRate: Double,
+        clippedFrac: Double)
+
+    /** REAL audio sample decode — no external libraries. The JDK's
+      * `AudioSystem.getAudioInputStream` yields the PCM waveform for
+      * WAV/AIFF/AU directly and converts ULAW/ALAW to PCM_SIGNED on
+      * request. The stream is consumed through a FIXED 8 KiB buffer:
+      * memory stays bounded no matter what frame count the header
+      * claims (a forged multi-GB header costs CPU proportional to the
+      * actual payload, never heap), which is the executor-safety
+      * property that matters at mapPartitions parallelism. Returns
+      * None for payloads that are not decodable audio. */
+    def sampleStats(bytes: Array[Byte]): Option[SampleStats] = {
+      import javax.sound.sampled._
+      if (bytes == null || bytes.length == 0) return None
+      try {
+        val raw = AudioSystem.getAudioInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        val enc = raw.getFormat.getEncoding
+        val pcm =
+          if (enc == AudioFormat.Encoding.PCM_SIGNED ||
+              enc == AudioFormat.Encoding.PCM_UNSIGNED) raw
+          else AudioSystem.getAudioInputStream(
+            AudioFormat.Encoding.PCM_SIGNED, raw)
+        try {
+          val f = pcm.getFormat
+          val bits = f.getSampleSizeInBits
+          val channels = math.max(f.getChannels, 1)
+          if (bits % 8 != 0 || bits <= 0 || bits > 32) return None
+          val bytesPer = bits / 8
+          val unsigned = f.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED
+          val big = f.isBigEndian
+          val fullScale = (1L << (bits - 1)).toDouble
+          val clipBar = 1.0 - 1.0 / fullScale
+          // Buffer sized to a whole number of frames so no sample
+          // straddles a read boundary.
+          val frameSize = math.max(f.getFrameSize, bytesPer * channels)
+          val buf = new Array[Byte](math.max(frameSize, 8192 / frameSize * frameSize))
+          val prev = new Array[Double](channels) // last sample per channel
+          val hasPrev = new Array[Boolean](channels)
+          var n = 0L; var sum = 0.0; var sumSq = 0.0; var peak = 0.0
+          var crossings = 0L; var clipped = 0L
+          var read = pcm.read(buf)
+          while (read > 0) {
+            var o = 0
+            while (o + bytesPer <= read) {
+              var v = 0L
+              var i = 0
+              while (i < bytesPer) {
+                val b = buf(o + (if (big) i else bytesPer - 1 - i)) & 0xffL
+                v = (v << 8) | b
+                i += 1
+              }
+              val signed =
+                if (unsigned) v - (1L << (bits - 1))
+                else (v << (64 - bits)) >> (64 - bits) // sign-extend
+              val x = signed / fullScale
+              val ch = (n % channels).toInt
+              n += 1; sum += x; sumSq += x * x
+              val ax = math.abs(x)
+              if (ax > peak) peak = ax
+              if (ax >= clipBar) clipped += 1
+              if (hasPrev(ch) && (prev(ch) >= 0) != (x >= 0)) crossings += 1
+              prev(ch) = x; hasPrev(ch) = true
+              o += bytesPer
+            }
+            read = pcm.read(buf)
+          }
+          if (n == 0) None
+          else Some(SampleStats(n, math.sqrt(sumSq / n), peak, sum / n,
+            crossings.toDouble / n, clipped.toDouble / n))
+        } finally pcm.close()
+      } catch { case _: Exception => None }
+    }
+
+    /** Spectral band energies at the given `freqs` (Hz) via the
+      * Goertzel algorithm over the mono mix — per-band power computed
+      * WITHOUT an FFT or any external DSP library, in the same
+      * bounded-buffer single pass as [[sampleStats]]: k running
+      * second-order recurrences (3 doubles each), O(n·k) time, O(k)
+      * state no matter what the header claims. Returns the RELATIVE
+      * band fractions (each band's power over the probed total), the
+      * robust spectral profile for tone/voicing classification —
+      * absolute Goertzel magnitudes scale with n² and signal level,
+      * fractions don't. None when the payload isn't decodable audio
+      * or no band is below Nyquist. */
+    def bandEnergies(bytes: Array[Byte], freqs: Seq[Double])
+        : Option[Array[Double]] = {
+      import javax.sound.sampled._
+      if (bytes == null || bytes.length == 0 || freqs.isEmpty) return None
+      try {
+        val raw = AudioSystem.getAudioInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        val enc = raw.getFormat.getEncoding
+        val pcm =
+          if (enc == AudioFormat.Encoding.PCM_SIGNED ||
+              enc == AudioFormat.Encoding.PCM_UNSIGNED) raw
+          else AudioSystem.getAudioInputStream(
+            AudioFormat.Encoding.PCM_SIGNED, raw)
+        try {
+          val f = pcm.getFormat
+          val bits = f.getSampleSizeInBits
+          val channels = math.max(f.getChannels, 1)
+          val rate = f.getSampleRate.toDouble
+          if (bits % 8 != 0 || bits <= 0 || bits > 32 || rate <= 0) return None
+          val k = freqs.length
+          // Bands at or above Nyquist alias — they report 0 and are
+          // excluded from the normalizing total.
+          val live = freqs.map(fr => fr > 0 && fr < rate / 2).toArray
+          if (!live.exists(identity)) return None
+          val coeff = freqs.map(fr =>
+            2.0 * math.cos(2.0 * math.Pi * fr / rate)).toArray
+          val s1 = new Array[Double](k)
+          val s2 = new Array[Double](k)
+          val bytesPer = bits / 8
+          val unsigned = f.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED
+          val big = f.isBigEndian
+          val fullScale = (1L << (bits - 1)).toDouble
+          val frameSize = math.max(f.getFrameSize, bytesPer * channels)
+          val buf = new Array[Byte](math.max(frameSize, 8192 / frameSize * frameSize))
+          var mix = 0.0 // running per-frame channel mix
+          var chIdx = 0
+          var n = 0L
+          var read = pcm.read(buf)
+          while (read > 0) {
+            var o = 0
+            while (o + bytesPer <= read) {
+              var v = 0L
+              var i = 0
+              while (i < bytesPer) {
+                val b = buf(o + (if (big) i else bytesPer - 1 - i)) & 0xffL
+                v = (v << 8) | b
+                i += 1
+              }
+              val signed =
+                if (unsigned) v - (1L << (bits - 1))
+                else (v << (64 - bits)) >> (64 - bits)
+              mix += signed / fullScale
+              chIdx += 1
+              if (chIdx == channels) {
+                val x = mix / channels
+                var j = 0
+                while (j < k) {
+                  if (live(j)) {
+                    val s0 = x + coeff(j) * s1(j) - s2(j)
+                    s2(j) = s1(j)
+                    s1(j) = s0
+                  }
+                  j += 1
+                }
+                n += 1L
+                mix = 0.0
+                chIdx = 0
+              }
+              o += bytesPer
+            }
+            read = pcm.read(buf)
+          }
+          if (n == 0L) return None
+          val powers = Array.tabulate(k) { j =>
+            if (!live(j)) 0.0
+            else math.max(
+              s1(j) * s1(j) + s2(j) * s2(j) - coeff(j) * s1(j) * s2(j), 0.0)
+          }
+          val total = powers.sum
+          Some(if (total > 0.0) powers.map(_ / total) else powers)
+        } finally pcm.close()
+      } catch { case _: Exception => None }
+    }
+
+    def decode(r: MediaRecord): AudioMeta = audioMeta(r.payload) match {
+      case Some((container, enc, rate, ch, bits, frames)) =>
+        val dur =
+          if (frames >= 0 && rate > 0) frames / rate else -1.0
+        AudioMeta(r.media_id, r.kind, decoded = true, container, enc,
+          rate, ch, bits, frames, dur, r.payload.length.toLong)
+      case None =>
+        AudioMeta(r.media_id, r.kind, decoded = false, "", "",
+          -1.0, 0, 0, -1L, -1.0, r.payload.length.toLong)
+    }
+  }
+
+  /** Decode real audio metadata per partition — same no-shuffle
+    * plumbing as [[decodeMeta]], real header parse via
+    * [[AudioIoCodec]]. */
+  def decodeAudioMeta(media: Dataset[MediaRecord])(
+      implicit spark: SparkSession): Dataset[AudioMeta] = {
+    import spark.implicits._
+    media.mapPartitions(_.map(AudioIoCodec.decode))
+  }
+
+  /** Waveform features from a REAL sample decode
+    * ([[AudioIoCodec.sampleStats]]): `decoded_samples = false` rows
+    * carry zeros — read the flag, not the values. */
+  final case class AudioSampleFeatures(
+      media_id: Long,
+      kind: String,
+      decoded_samples: Boolean,
+      n_samples: Long,
+      rms: Double,
+      peak: Double,
+      mean_sample: Double,
+      zero_cross_rate: Double,
+      clipped_frac: Double,
+      n_bytes: Long)
+
+  /** RMS / peak / zero-crossing / clipping per audio payload — the
+    * audio twin of [[decodePixels]]: real JDK decode, fixed-buffer
+    * streaming (bounded memory at any claimed frame count), same
+    * no-shuffle mapPartitions plumbing. */
+  def decodeAudioSamples(media: Dataset[MediaRecord])(
+      implicit spark: SparkSession): Dataset[AudioSampleFeatures] = {
+    import spark.implicits._
+    media.mapPartitions(_.map { r =>
+      AudioIoCodec.sampleStats(r.payload) match {
+        case Some(s) =>
+          AudioSampleFeatures(r.media_id, r.kind, decoded_samples = true,
+            s.nSamples, s.rms, s.peak, s.meanSample, s.zeroCrossRate,
+            s.clippedFrac, r.payload.length.toLong)
+        case None =>
+          AudioSampleFeatures(r.media_id, r.kind, decoded_samples = false,
+            0L, 0.0, 0.0, 0.0, 0.0, 0.0,
+            if (r.payload == null) 0L else r.payload.length.toLong)
+      }
+    })
+  }
+
+  final case class AudioBandProfile(
+      media_id: Long,
+      kind: String,
+      decoded_samples: Boolean,
+      band_fracs: Array[Double], // one fraction per requested freq
+      n_bytes: Long)
+
+  /** Relative Goertzel band energies per audio payload
+    * ([[AudioIoCodec.bandEnergies]]) — the spectral-profile feature
+    * column (tone/voicing classification, synthetic-audio detection)
+    * on the same no-shuffle mapPartitions plumbing as
+    * [[decodeAudioSamples]]: k second-order recurrences per payload,
+    * O(k) state, bounded read buffer, no FFT and no external DSP
+    * dependency. Undecodable payloads carry an empty array behind
+    * `decoded_samples = false`. */
+  def audioBandProfile(media: Dataset[MediaRecord], freqs: Seq[Double])(
+      implicit spark: SparkSession): Dataset[AudioBandProfile] = {
+    import spark.implicits._
+    media.mapPartitions(_.map { r =>
+      AudioIoCodec.bandEnergies(r.payload, freqs) match {
+        case Some(fr) =>
+          AudioBandProfile(r.media_id, r.kind, decoded_samples = true,
+            fr, r.payload.length.toLong)
+        case None =>
+          AudioBandProfile(r.media_id, r.kind, decoded_samples = false,
+            Array.empty[Double],
+            if (r.payload == null) 0L else r.payload.length.toLong)
+      }
+    })
+  }
+
+  /** Video container metadata decoded for real from the ISO-BMFF
+    * (MP4/MOV) header — the video twin of [[MediaMeta]]/[[AudioMeta]].
+    * `duration_sec`/`width`/`height` are -1/-1/-1 when the container
+    * does not declare them. */
+  final case class VideoMeta(
+      media_id: Long,
+      kind: String,
+      decoded: Boolean,
+      brand: String, // ftyp major brand ("isom", "mp42", "qt  ", ...)
+      duration_sec: Double,
+      width: Int,
+      height: Int,
+      codec: String, // sample-entry fourcc: avc1, hvc1, vp09, ...
+      n_tracks: Int,
+      n_bytes: Long)
+
+  /** REAL codec for MP4/MOV container METADATA — a pure-JDK byte parse
+    * of the ISO-BMFF box structure (ISO/IEC 14496-12, a published
+    * public format; the audio precedent from round 7). The file is a
+    * sequence of `[u32 size][4cc type]` boxes; `moov/mvhd` carries
+    * duration+timescale, `moov/trak/tkhd` carries 16.16-fixed
+    * width/height, `trak/mdia/hdlr` distinguishes the video track,
+    * and `stbl/stsd`'s first sample entry names the codec fourcc.
+    * Header-only — ~1 KB of byte arithmetic per file, no sample
+    * decode, no media libraries: the same 100 TB cost story as
+    * [[ImageIoCodec.imageMeta]]. Payloads that are not ISO-BMFF (no
+    * parseable `moov`) return None and the caller keeps declared
+    * metadata. Codec FEATURE extraction (frame raster) remains out of
+    * scope for this container — see the class scaladoc. */
+  object IsoBmffCodec {
+
+    private def u32(b: Array[Byte], o: Int): Long =
+      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
+        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+
+    private def u64(b: Array[Byte], o: Int): Long =
+      (u32(b, o) << 32) | u32(b, o + 4)
+
+    private def fourcc(b: Array[Byte], o: Int): String =
+      new String(b, o, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
+
+    /** A box's payload span (after the 8- or 16-byte header). */
+    private final case class Box(typ: String, start: Int, end: Int)
+
+    /** Parse the box sequence in [from, to). Malformed sizes terminate
+      * the walk rather than throw — truncated files yield whatever
+      * prefix parsed. */
+    private def boxes(b: Array[Byte], from: Int, to: Int): List[Box] = {
+      val out = List.newBuilder[Box]
+      var o = from
+      var ok = true
+      while (ok && o + 8 <= to) {
+        var size = u32(b, o)
+        var hdr = 8
+        val typ = fourcc(b, o + 4)
+        if (size == 1 && o + 16 <= to) { size = u64(b, o + 8); hdr = 16 }
+        else if (size == 0) size = (to - o).toLong // "to end of file"
+        if (size < hdr || o + size > to) ok = false
+        else {
+          out += Box(typ, o + hdr, o + size.toInt)
+          o += size.toInt
+        }
+      }
+      out.result()
+    }
+
+    private def child(b: Array[Byte], parent: Box, typ: String): Option[Box] =
+      boxes(b, parent.start, parent.end).find(_.typ == typ)
+
+    /** (brand, durationSec, width, height, codecFourcc, nTracks) from
+      * the container header, or None when no parseable `moov` exists. */
+    def videoMeta(bytes: Array[Byte])
+        : Option[(String, Double, Int, Int, String, Int)] = {
+      if (bytes == null || bytes.length < 16) return None
+      try {
+        val top = boxes(bytes, 0, bytes.length)
+        val moov = top.find(_.typ == "moov").getOrElse(return None)
+        val brand = top.find(_.typ == "ftyp")
+          .filter(f => f.end - f.start >= 4)
+          .map(f => fourcc(bytes, f.start))
+          .getOrElse("") // bare QuickTime files may lack ftyp
+        // mvhd: v0 = ts@12 dur@16 (u32); v1 = ts@20 dur@24 (u64);
+        // offsets relative to the payload, after version(1)+flags(3).
+        val duration = child(bytes, moov, "mvhd").flatMap { m =>
+          val v = bytes(m.start) & 0xff
+          val (tsOff, durOff) = if (v == 1) (20, 24) else (12, 16)
+          if (m.end - m.start < durOff + (if (v == 1) 8 else 4)) None
+          else {
+            val ts = u32(bytes, m.start + tsOff)
+            val dur =
+              if (v == 1) u64(bytes, m.start + durOff)
+              else u32(bytes, m.start + durOff)
+            if (ts > 0) Some(dur.toDouble / ts) else None
+          }
+        }
+        val traks = boxes(bytes, moov.start, moov.end).filter(_.typ == "trak")
+        // Per track: handler type (vide/soun), tkhd dimensions, stsd fourcc.
+        val parsed = traks.map { trak =>
+          val mdia = child(bytes, trak, "mdia")
+          val handler = mdia.flatMap(child(bytes, _, "hdlr"))
+            .filter(h => h.end - h.start >= 12)
+            .map(h => fourcc(bytes, h.start + 8))
+          val dims = child(bytes, trak, "tkhd").flatMap { t =>
+            val v = bytes(t.start) & 0xff
+            // width/height are 16.16 fixed at payload offset 76 (v0)
+            // / 88 (v1): version+flags(4) + times+ids(20 or 32) +
+            // reserved(8)+layer(2)+alt(2)+volume(2)+reserved(2)+matrix(36).
+            val wOff = if (v == 1) 88 else 76
+            if (t.end - t.start < wOff + 8) None
+            else Some(((u32(bytes, t.start + wOff) >> 16).toInt,
+              (u32(bytes, t.start + wOff + 4) >> 16).toInt))
+          }
+          val codec = mdia.flatMap(child(bytes, _, "minf"))
+            .flatMap(child(bytes, _, "stbl"))
+            .flatMap(child(bytes, _, "stsd"))
+            // stsd payload: version+flags(4) entry_count(4), then the
+            // first sample entry's [u32 size][4cc format].
+            .filter(s => s.end - s.start >= 16)
+            .map(s => fourcc(bytes, s.start + 12))
+          (handler, dims, codec)
+        }
+        val video = parsed.find(_._1.contains("vide"))
+          .orElse(parsed.find(_._2.exists(d => d._1 > 0 && d._2 > 0)))
+        val (w, h) = video.flatMap(_._2).getOrElse((-1, -1))
+        val codec = video.flatMap(_._3).getOrElse("")
+        Some((brand, duration.getOrElse(-1.0), w, h, codec, traks.length))
+      } catch { case _: Exception => None }
+    }
+
+    /** The video track's `stbl` sample-table boxes plus its `mdhd`
+      * timescale, or None when the container has no video track. */
+    private def videoSampleTable(b: Array[Byte]): Option[(Box, Long)] = {
+      val top = boxes(b, 0, b.length)
+      val moov = top.find(_.typ == "moov").getOrElse(return None)
+      boxes(b, moov.start, moov.end).filter(_.typ == "trak").flatMap { trak =>
+        val mdia = child(b, trak, "mdia")
+        val isVideo = mdia.flatMap(child(b, _, "hdlr"))
+          .filter(h => h.end - h.start >= 12)
+          .exists(h => fourcc(b, h.start + 8) == "vide")
+        if (!isVideo) None
+        else for {
+          m <- mdia
+          stbl <- child(b, m, "minf").flatMap(child(b, _, "stbl"))
+          mdhd <- child(b, m, "mdhd")
+          ts <- {
+            // mdhd v0: ver+flags(4) creation(4) mod(4) timescale@12;
+            // v1: creation(8) mod(8) timescale@20.
+            val v = b(mdhd.start) & 0xff
+            val off = if (v == 1) 20 else 12
+            if (mdhd.end - mdhd.start < off + 4) None
+            else Some(u32(b, mdhd.start + off)).filter(_ > 0)
+          }
+        } yield (stbl, ts)
+      }.headOption
+    }
+
+    /** Entry count of a full box whose payload is ver+flags(4) +
+      * count(4) + `entryBytes`-wide entries — validated against the
+      * box extent so a forged count can never drive an allocation or
+      * read past the payload. */
+    private def entryCount(b: Array[Byte], box: Box, entryBytes: Int,
+        headerBytes: Int = 8): Option[Int] = {
+      if (box.end - box.start < headerBytes) return None
+      val n = u32(b, box.start + 4)
+      if (n < 0 || box.start + headerBytes + n * entryBytes.toLong > box.end) None
+      else Some(n.toInt)
+    }
+
+    /** Frame-STREAM statistics from the sample tables: count and byte
+      * sizes from `stsz`, timing from `stts`, sync samples from
+      * `stss` (absent ⇒ every frame is sync, per ISO/IEC 14496-12).
+      * (nFrames, fps, meanFrameBytes, maxFrameBytes, bitrateBps,
+      * keyframeRatio), or None without a parseable video `stbl`. */
+    def frameStats(bytes: Array[Byte])
+        : Option[(Long, Double, Double, Long, Double, Double)] = {
+      if (bytes == null || bytes.length < 16) return None
+      try {
+        val (stbl, timescale) = videoSampleTable(bytes).getOrElse(return None)
+        val stsz = child(bytes, stbl, "stsz").getOrElse(return None)
+        // stsz payload: ver+flags(4) sample_size(4) sample_count(4).
+        if (stsz.end - stsz.start < 12) return None
+        val fixedSize = u32(bytes, stsz.start + 4)
+        val nSamples = u32(bytes, stsz.start + 8)
+        if (nSamples <= 0) return None
+        var total = 0L; var maxSz = 0L
+        if (fixedSize > 0) { total = fixedSize * nSamples; maxSz = fixedSize }
+        else {
+          if (stsz.start + 12 + nSamples * 4 > stsz.end) return None
+          var i = 0
+          while (i < nSamples) {
+            val s = u32(bytes, stsz.start + 12 + i * 4)
+            total += s
+            if (s > maxSz) maxSz = s
+            i += 1
+          }
+        }
+        // stts: media duration in timescale ticks = Σ count×delta.
+        val durTicks = child(bytes, stbl, "stts").flatMap { stts =>
+          entryCount(bytes, stts, 8).map { n =>
+            var d = 0L; var i = 0
+            while (i < n) {
+              d += u32(bytes, stts.start + 8 + i * 8) *
+                u32(bytes, stts.start + 12 + i * 8)
+              i += 1
+            }
+            d
+          }
+        }.getOrElse(0L)
+        val durSec = durTicks.toDouble / timescale
+        val nSync = child(bytes, stbl, "stss")
+          .flatMap(entryCount(bytes, _, 4).map(_.toLong))
+          .getOrElse(nSamples) // no stss ⇒ all frames sync
+        Some((nSamples, if (durSec > 0) nSamples / durSec else -1.0,
+          total.toDouble / nSamples, maxSz,
+          if (durSec > 0) total * 8 / durSec else -1.0,
+          nSync.toDouble / nSamples))
+      } catch { case _: Exception => None }
+    }
+
+    /** REAL frame sampling: the compressed bytes of up to `n` evenly
+      * spaced SYNC frames (self-contained keyframes — the ones a
+      * downstream decoder can raster without inter-frame state),
+      * located through the `stss`→`stsc`→`stco`/`co64`→`stsz` chain.
+      * No codec involved: this is byte-exact extraction of the frame
+      * payloads a real pipeline would hand to its decode stage.
+      * Returns (1-based sample number, frame bytes) pairs; empty when
+      * the container has no locatable video samples. */
+    def syncFrameSlices(bytes: Array[Byte], n: Int)
+        : Seq[(Long, Array[Byte])] = {
+      if (bytes == null || bytes.length < 16 || n <= 0) return Nil
+      try {
+        val (stbl, _) = videoSampleTable(bytes).getOrElse(return Nil)
+        val stsz = child(bytes, stbl, "stsz").getOrElse(return Nil)
+        if (stsz.end - stsz.start < 12) return Nil
+        val fixedSize = u32(bytes, stsz.start + 4)
+        val nSamples = u32(bytes, stsz.start + 8).toInt
+        if (nSamples <= 0) return Nil
+        if (fixedSize == 0 && stsz.start + 12 + nSamples * 4L > stsz.end)
+          return Nil
+        // Payload-derived bound for the fixed-size path (the variable
+        // path above is already bounded by the stsz box extent): every
+        // sample must live inside the file, so a forged sample_count
+        // claiming more fixed-size samples than the payload can hold is
+        // rejected before any count-proportional work — the same "a
+        // forged count can never drive an allocation" contract
+        // entryCount enforces for entry tables.
+        if (fixedSize > 0 && fixedSize * nSamples.toLong > bytes.length)
+          return Nil
+        def sizeOf(k: Int): Long = // k is 0-based
+          if (fixedSize > 0) fixedSize
+          else u32(bytes, stsz.start + 12 + k * 4)
+        // Chunk offsets (stco u32 / co64 u64).
+        val offsets: IndexedSeq[Long] =
+          child(bytes, stbl, "stco").flatMap(c => entryCount(bytes, c, 4)
+            .map(m => (0 until m).map(i => u32(bytes, c.start + 8 + i * 4))))
+          .orElse(child(bytes, stbl, "co64").flatMap(c =>
+            entryCount(bytes, c, 8)
+              .map(m => (0 until m).map(i => u64(bytes, c.start + 8 + i * 8)))))
+          .getOrElse(return Nil)
+        if (offsets.isEmpty) return Nil
+        // stsc runs → first 0-based sample index of each chunk.
+        val stsc = child(bytes, stbl, "stsc").getOrElse(return Nil)
+        val nRuns = entryCount(bytes, stsc, 12).getOrElse(return Nil)
+        if (nRuns <= 0) return Nil
+        val firstSample = new Array[Long](offsets.length)
+        val perChunk = new Array[Int](offsets.length)
+        var run = 0; var acc = 0L
+        var chunk = 0
+        while (chunk < offsets.length) {
+          // advance run while the NEXT run starts at or before this chunk
+          while (run + 1 < nRuns &&
+              u32(bytes, stsc.start + 8 + (run + 1) * 12) <= chunk + 1)
+            run += 1
+          val spc = u32(bytes, stsc.start + 12 + run * 12).toInt
+          firstSample(chunk) = acc
+          perChunk(chunk) = spc
+          acc += spc
+          chunk += 1
+        }
+        // Sync sample numbers (1-based); no stss ⇒ every sample is
+        // sync (ISO/IEC 14496-12) — but nSamples there comes straight
+        // from the header, so the "every sample" set is never
+        // materialized: the ≤ n evenly spaced picks are computed
+        // arithmetically (allocation bounded by the caller's n, not by
+        // a forged sample_count).
+        val picks: Seq[Long] = child(bytes, stbl, "stss")
+          .flatMap(s => entryCount(bytes, s, 4)
+            .map(m => (0 until m).map(i => u32(bytes, s.start + 8 + i * 4)))) match {
+          case Some(sync) =>
+            if (sync.isEmpty) return Nil
+            if (sync.length <= n) sync
+            else (0 until n).map(i => sync(((sync.length - 1).toLong * i /
+              math.max(n - 1, 1)).toInt)).distinct
+          case None =>
+            if (nSamples <= n) (1 to nSamples).map(_.toLong)
+            else (0 until n).map(i => 1L + (nSamples - 1).toLong * i /
+              math.max(n - 1, 1)).distinct
+        }
+        picks.flatMap { num =>
+          val k = num - 1 // 0-based sample index
+          if (k < 0 || k >= nSamples) None
+          else {
+            // chunk holding k: last chunk with firstSample <= k
+            var lo = 0; var hi = offsets.length - 1
+            while (lo < hi) {
+              val mid = (lo + hi + 1) >>> 1
+              if (firstSample(mid) <= k) lo = mid else hi = mid - 1
+            }
+            if (k >= firstSample(lo) + perChunk(lo)) None // sparse table
+            else {
+              var off = offsets(lo)
+              var j = firstSample(lo)
+              while (j < k) { off += sizeOf(j.toInt); j += 1 }
+              val sz = sizeOf(k.toInt)
+              if (off < 0 || sz < 0 || off + sz > bytes.length) None
+              else Some((num,
+                java.util.Arrays.copyOfRange(bytes, off.toInt, (off + sz).toInt)))
+            }
+          }
+        }
+      } catch { case _: Exception => Nil }
+    }
+
+    def decode(r: MediaRecord): VideoMeta = videoMeta(r.payload) match {
+      case Some((brand, dur, w, h, codec, n)) =>
+        VideoMeta(r.media_id, r.kind, decoded = true, brand, dur, w, h,
+          codec, n, r.payload.length.toLong)
+      case None =>
+        VideoMeta(r.media_id, r.kind, decoded = false, "", -1.0,
+          r.declared_width, r.declared_height, "", 0,
+          r.payload.length.toLong)
+    }
+  }
+
+  /** Decode real video container metadata per partition — same
+    * no-shuffle plumbing as [[decodeMeta]]/[[decodeAudioMeta]], real
+    * ISO-BMFF header parse via [[IsoBmffCodec]]. */
+  def decodeVideoMeta(media: Dataset[MediaRecord])(
+      implicit spark: SparkSession): Dataset[VideoMeta] = {
+    import spark.implicits._
+    media.mapPartitions(_.map(IsoBmffCodec.decode))
+  }
+
+  /** Frame-stream statistics from the real `stbl` sample-table parse
+    * ([[IsoBmffCodec.frameStats]]); `decoded = false` rows carry
+    * zeros/-1 — read the flag. */
+  final case class VideoFrameFeatures(
+      media_id: Long,
+      kind: String,
+      decoded: Boolean,
+      n_frames: Long,
+      fps: Double,
+      mean_frame_bytes: Double,
+      max_frame_bytes: Long,
+      bitrate_bps: Double,
+      keyframe_ratio: Double,
+      n_bytes: Long)
+
+  /** Per-video frame count / fps / bitrate / keyframe ratio — real
+    * sample-table features, no codec, same no-shuffle plumbing. */
+  def decodeVideoFrameStats(media: Dataset[MediaRecord])(
+      implicit spark: SparkSession): Dataset[VideoFrameFeatures] = {
+    import spark.implicits._
+    media.mapPartitions(_.map { r =>
+      IsoBmffCodec.frameStats(r.payload) match {
+        case Some((nf, fps, mean, max, bps, kr)) =>
+          VideoFrameFeatures(r.media_id, r.kind, decoded = true, nf, fps,
+            mean, max, bps, kr, r.payload.length.toLong)
+        case None =>
+          VideoFrameFeatures(r.media_id, r.kind, decoded = false, 0L, -1.0,
+            0.0, 0L, -1.0, 0.0,
+            if (r.payload == null) 0L else r.payload.length.toLong)
+      }
+    })
+  }
+
+  /** Video sample descriptions whose frames are standalone JPEG
+    * images the JDK CAN raster: `jpeg` (QuickTime/ISO-BMFF
+    * Motion-JPEG) and `mjpa` (Motion-JPEG A — each sample is a valid
+    * JFIF stream with extension markers ImageIO tolerates). For these
+    * codecs frame RASTER decode is real; the [[StubCodec]] surface is
+    * down to entropy-coded codecs (H.264/HEVC) with no JDK decoder. */
+  val JpegVideoCodecs: Set[String] = Set("jpeg", "mjpa")
+
+  /** REAL pixel features for JPEG-coded video tracks: mean R/G/B and
+    * Rec.601 luma averaged over up to `nFrames` evenly spaced SYNC
+    * frames, each rastered through [[ImageIoCodec.pixelStats]] (same
+    * decompression-bomb cap as still images). `decoded_frames = false`
+    * rows (non-BMFF payloads, entropy-coded codecs, undecodable frame
+    * bytes) carry zeros — read the flag. */
+  final case class VideoPixelFeatures(
+      media_id: Long,
+      kind: String,
+      decoded_frames: Boolean,
+      codec: String,
+      n_frames_sampled: Int,
+      width: Int,
+      height: Int,
+      mean_r: Double,
+      mean_g: Double,
+      mean_b: Double,
+      mean_luma: Double,
+      n_bytes: Long)
+
+  private[operators] def videoPixelsOne(r: MediaRecord, nFrames: Int,
+      maxPixels: Long): VideoPixelFeatures = {
+    val nBytes = if (r.payload == null) 0L else r.payload.length.toLong
+    val codec = IsoBmffCodec.videoMeta(r.payload)
+      .map(_._5).getOrElse("")
+    val stats =
+      if (!JpegVideoCodecs.contains(codec)) Nil
+      else IsoBmffCodec.syncFrameSlices(r.payload, nFrames)
+        .flatMap { case (_, frame) =>
+          ImageIoCodec.pixelStats(frame, maxPixels)
+        }
+    if (stats.isEmpty)
+      VideoPixelFeatures(r.media_id, r.kind, decoded_frames = false,
+        codec, 0, -1, -1, 0.0, 0.0, 0.0, 0.0, nBytes)
+    else {
+      val k = stats.length
+      val mr = stats.iterator.map(_.meanR).sum / k
+      val mg = stats.iterator.map(_.meanG).sum / k
+      val mb = stats.iterator.map(_.meanB).sum / k
+      VideoPixelFeatures(r.media_id, r.kind, decoded_frames = true,
+        codec, k, stats.head.width, stats.head.height,
+        mr, mg, mb, 0.299 * mr + 0.587 * mg + 0.114 * mb, nBytes)
+    }
+  }
+
+  /** Per-video REAL frame raster features for JPEG-coded tracks —
+    * keyframe slices ([[IsoBmffCodec.syncFrameSlices]]) piped into the
+    * still-image raster path, same no-shuffle mapPartitions plumbing
+    * as every decode in this module. */
+  def decodeVideoPixels(media: Dataset[MediaRecord], nFrames: Int = 4,
+      maxPixels: Long = ImageIoCodec.DefaultMaxDecodePixels)(
+      implicit spark: SparkSession): Dataset[VideoPixelFeatures] = {
+    import spark.implicits._
+    media.mapPartitions(_.map(videoPixelsOne(_, nFrames, maxPixels)))
+  }
+
+  /** One row per sampled SYNC frame: (media_id, 1-based frame number,
+    * compressed frame bytes) — [[IsoBmffCodec.syncFrameSlices]] over
+    * each payload, flatMapped in place (no shuffle; videos with no
+    * locatable samples contribute zero rows). The real analog of
+    * [[sampleChunks]]'s byte-slicing: these are decodable frame
+    * payloads, not arbitrary spans. */
+  final case class FrameSample(media_id: Long, frame_no: Long,
+      frame: Array[Byte])
+
+  def sampleSyncFrames(media: Dataset[MediaRecord], n: Int)(
+      implicit spark: SparkSession): Dataset[FrameSample] = {
+    import spark.implicits._
+    media.mapPartitions(_.flatMap { r =>
+      IsoBmffCodec.syncFrameSlices(r.payload, n).map {
+        case (num, bytes) => FrameSample(r.media_id, num, bytes)
+      }
+    })
+  }
+
+  /** Deterministic frame/chunk sampling: `n` evenly spaced slices of
+    * `chunk` bytes — the video-frame-sample analog, pure Column ops. */
+  def sampleChunks(payload: org.apache.spark.sql.Column, n: Int, chunk: Int)
+      : org.apache.spark.sql.Column =
+    transform(sequence(lit(0), lit(n - 1)), i => {
+      val len = length(payload)
+      val pos = lit(1) + (i * greatest((len - chunk) / math.max(n - 1, 1), lit(0)))
+      payload.substr(pos, lit(chunk))
+    })
+
+  /** REAL image resize — decode, bilinear resample, PNG re-encode,
+    * all `java.awt`/`javax.imageio` (ships in the JDK). Images whose
+    * longest side exceeds `maxDim` are scaled down aspect-preserving;
+    * smaller images and payloads the JDK cannot decode pass through
+    * unchanged (read `format` for `;resized`). The decode reuses
+    * [[ImageIoCodec.pixelStats]]'s safety story: the source raster is
+    * read with subsampling when the header claims more than
+    * `maxDecodePixels`, so a decompression-bomb header cannot OOM the
+    * task — the subsampled raster IS the resample's input then (the
+    * output is `maxDim`-bounded either way). */
+  def resizeImages(media: Dataset[MediaRecord], maxDim: Int,
+      maxDecodePixels: Long = ImageIoCodec.DefaultMaxDecodePixels)(
+      implicit spark: SparkSession): Dataset[MediaRecord] = {
+    import spark.implicits._
+    require(maxDim > 0, s"maxDim must be positive, got $maxDim")
+    media.mapPartitions(_.map { r =>
+      resizeOneImage(r, maxDim, maxDecodePixels)
+    })
+  }
+
+  private[operators] def resizeOneImage(r: MediaRecord, maxDim: Int,
+      maxDecodePixels: Long): MediaRecord = {
+    import javax.imageio.ImageIO
+    if (r.payload == null || r.payload.length == 0) return r
+    try {
+      val iis = ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(r.payload))
+      try {
+        val readers = ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) return r
+        val reader = readers.next()
+        try {
+          reader.setInput(iis, true, true)
+          val w = reader.getWidth(0)
+          val h = reader.getHeight(0)
+          val pixels = w.toLong * h
+          if (pixels <= 0 || pixels > ImageIoCodec.HardMaxSourcePixels ||
+              math.max(w, h) <= maxDim) return r
+          val step = math.max(1,
+            math.ceil(math.sqrt(pixels.toDouble / maxDecodePixels)).toInt)
+          val param = reader.getDefaultReadParam
+          if (step > 1) param.setSourceSubsampling(step, step, 0, 0)
+          val src = reader.read(0, param)
+          if (src == null) return r
+          // Target dims from the FULL source aspect, never upscaled.
+          val scale = maxDim.toDouble / math.max(w, h)
+          val tw = math.max(1, math.round(w * scale).toInt)
+          val th = math.max(1, math.round(h * scale).toInt)
+          val dst = new java.awt.image.BufferedImage(
+            tw, th, java.awt.image.BufferedImage.TYPE_INT_RGB)
+          val g = dst.createGraphics()
+          try {
+            g.setRenderingHint(
+              java.awt.RenderingHints.KEY_INTERPOLATION,
+              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+            g.drawImage(src, 0, 0, tw, th, null)
+          } finally g.dispose()
+          val out = new java.io.ByteArrayOutputStream()
+          ImageIO.write(dst, "png", out)
+          r.copy(payload = out.toByteArray, format = "png;resized",
+            declared_width = tw, declared_height = th)
+        } finally reader.dispose()
+      } finally iis.close()
+    } catch { case _: Exception => r }
+  }
+
+  /** STUB resize: deterministic stride downsample of the payload to
+    * ~`targetBytes` (a real codec would decode, bilinear-resample, and
+    * re-encode — [[resizeImages]] does exactly that for JDK-decodable
+    * images; this byte-level stride covers payloads with no JDK
+    * decoder, keeping the plumbing — schema, size contract,
+    * distribution — identical). Runs inside the same mapPartitions
+    * pass as decode when chained. */
+  def resizeStub(media: Dataset[MediaRecord], targetBytes: Int)(
+      implicit spark: SparkSession): Dataset[MediaRecord] = {
+    import spark.implicits._
+    media.mapPartitions(_.map { r =>
+      if (r.payload.length <= targetBytes) r
+      else {
+        val stride = r.payload.length.toDouble / targetBytes
+        val out = Array.tabulate(targetBytes)(i => r.payload((i * stride).toInt))
+        r.copy(payload = out, format = r.format + ";resized")
+      }
+    })
+  }
 
   /** Wrap documents as fake media records (payload = utf-8 bytes) —
     * exercises the full plumbing without real media files. */

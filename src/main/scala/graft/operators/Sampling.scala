@@ -12,6 +12,11 @@ import graft.{functions => gf}
   *     (unlike `rand()`-based splits, which depend on partition layout).
   *     Buckets are `hash mod 100`: [0, trainPct) → train,
   *     [trainPct, trainPct+valPct) → val, rest → test.
+  *   - [[stratified]]: per-stratum Bernoulli sampling via `sampleBy` —
+  *     keeps group proportions when strata are imbalanced (by lang /
+  *     source / quality bucket). Seeded, but partition-layout
+  *     dependent like all Bernoulli sampling; use [[hashSplit]] when
+  *     exact reproducibility across engines matters.
   */
 object Sampling {
 
@@ -25,6 +30,37 @@ object Sampling {
       when(b < trainPct, "train")
         .when(b < trainPct + valPct, "val")
         .otherwise("test"))
+  }
+
+  def stratified(df: DataFrame, stratumCol: String,
+      fractions: Map[String, Double], seed: Long = 42L): DataFrame =
+    df.stat.sampleBy(stratumCol, fractions, seed)
+
+  /** EXACT-quota stratified sample: per stratum, keep exactly
+    * `greatest(1, ⌊cnt·fraction⌋)` rows, chosen deterministically by
+    * `(md5(id), id)` order — for eval-set carving and per-source quota
+    * audits where [[stratified]]'s Bernoulli draw (exact only in
+    * expectation) is not enough. Engine-independent like
+    * [[hashSplit]]: the same rows are selected on every engine at any
+    * partitioning (q107's oracle pins this cross-engine).
+    *
+    * Scale shape: the quota table is one bounded stratum-keyed
+    * aggregate broadcast back; the rank is a per-stratum window —
+    * strata sort in parallel through Spark's spill-capable external
+    * sort. Only this exactness contract needs a sort at all; use
+    * [[hashSplit]]/[[weightedMix]] when expectation suffices. */
+  def stratifiedExact(df: DataFrame, stratumCol: String, idCol: String,
+      fraction: Double): DataFrame = {
+    require(fraction > 0 && fraction <= 1, s"fraction in (0,1]: $fraction")
+    val quotas = df.groupBy(stratumCol)
+      .agg(greatest(lit(1L), floor(count(lit(1)) * fraction)).as("__quota"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(stratumCol)
+      .orderBy(md5(col(idCol).cast("string")), col(idCol))
+    df.withColumn("__rk", row_number().over(w).cast("long"))
+      .join(broadcast(quotas), stratumCol)
+      .filter(col("__rk") <= col("__quota"))
+      .select(df.columns.map(col): _*)
   }
 
   /** Deterministic WEIGHTED sampling per stratum — Efraimidis–Spirakis
@@ -56,7 +92,7 @@ object Sampling {
     * `(md5(id), id)` order while the running token sum stays within
     * `budget` (a row is kept iff its INCLUSIVE prefix sum ≤ budget) —
     * how a training mix is assembled to a per-source token budget
-    * rather than a row quota (q107's exact-quota carve). Same determinism
+    * rather than a row quota ([[stratifiedExact]]). Same determinism
     * story: engine- and layout-independent. Scale shape: one
     * per-stratum window prefix sum — strata sort in parallel,
     * spill-capable; no driver state. */
@@ -94,13 +130,9 @@ object Sampling {
     df.filter(bucket < round(rateCol * 10000).cast("long"))
   }
 
-  /** Per-group acceptance-THRESHOLD frame for TEMPERATURE-scaled
-    * source sampling (α-sampling: Conneau & Lample 2019 §3.1, XLM;
-    * Raffel et al. 2020 mT5's language balancing): sample source s
-    * with probability ∝ p_s^α (α < 1 boosts small sources, α = 1 is
-    * natural, α = 0 is uniform), to a total budget of documents in
-    * expectation; [[temperatureSampleWith]] applies it. q175
-    * oracle-gates this arithmetic directly. One row per
+  /** Per-group acceptance-THRESHOLD frame for [[temperatureSample]] —
+    * exposed so census queries (q175) can oracle-gate the operator's
+    * arithmetic directly instead of re-deriving it inline. One row per
     * distinct `groupCol` value (a NULL group is a group like any
     * other), columns `(groupCol, n, nn, z, zt, b, thr)`:
     * n = group count, nn = corpus count, z = floor(p^α·1e9) as an
@@ -159,6 +191,36 @@ object Sampling {
     df.join(broadcast(thr), df(groupCol) <=> col("__g"))
       .filter(gf.stableHash(col(idCol).cast("string")) < col("__thr"))
       .select(df.columns.map(df(_)): _*)
+  }
+
+  /** TEMPERATURE-scaled source sampling (α-sampling: Conneau &
+    * Lample 2019 §3.1, XLM; Raffel et al. 2020 mT5's language
+    * balancing — public knowledge): flatten a skewed source mix by
+    * sampling source s with probability ∝ p_s^α (α < 1 boosts small
+    * sources, α = 1 is natural, α = 0 is uniform), to a total budget
+    * of `budget` documents in expectation. Unlike [[weightedMix]],
+    * the rates are computed FROM the corpus
+    * ([[temperatureThresholds]] — a bounded group-keyed aggregate,
+    * never collected), then applied with the [[hashSplit]]
+    * determinism story: accept iff stableHash(id) < floor(r_s·2^60)
+    * — a row's fate depends only on its own id and its source's
+    * aggregate count, independent of engine, layout, or unrelated
+    * rows. r_s = min(1, B·q_s/n_s) caps oversampling at 1 (no
+    * replication — matching the without-replacement reading; a
+    * source whose quota exceeds its size is taken whole).
+    *
+    * q175 pins the α = 0.5 cross-engine contract BY CALLING
+    * [[temperatureThresholds]]/[[temperatureSampleWith]] (sqrt is
+    * IEEE-correctly-rounded in every engine; the per-source sqrt(p_s)
+    * quantizes to floor(·1e9) exact longs before the bounded
+    * normalization sum, so the rates are bit-identical at any fold
+    * order). α ∉ {0.25, 0.5, 1} is deterministic within the engine
+    * (`pow`) but not oracle-gated. */
+  def temperatureSample(df: DataFrame, groupCol: String, idCol: String,
+      alpha: Double, budget: Long): DataFrame = {
+    require(budget > 0, s"budget must be positive: $budget")
+    temperatureSampleWith(df, groupCol, idCol,
+      temperatureThresholds(df, groupCol, alpha, _ => lit(budget)))
   }
 
   /** Deterministic seeded EPOCH SHUFFLE: the corpus in a pseudo-random

@@ -145,18 +145,28 @@ object Similarity {
   }
 
   /** Probe + exact in-bucket search over an already-assigned corpus:
-    * each query (`qid`, `qe`, `qn`) probes its `nprobe` nearest
-    * centroids by cosine (ties by cent_id), and the exact cosine
+    * queries probe their `nprobe` nearest centroids, the exact cosine
     * ranking runs only inside the probed buckets (equi-join on bucket
     * id). Output: (qid, idCol, cos, rank). */
-  private def searchBuckets(assigned: DataFrame, cent: DataFrame,
-      q: DataFrame, k: Int, nprobe: Int, idCol: String): DataFrame = {
+  /** Coarse-quantizer probe: each query row (`qid`, `qe`, `qn`, plus
+    * any carried columns) → its `nprobe` nearest centroids by cosine
+    * (ties by cent_id), one output row per (query, probed bucket)
+    * carrying `qid`, `carry` and `bucket`. Shared by the exact
+    * in-bucket search and [[hardNegativesIvf]] so probe semantics can
+    * never drift between them. */
+  private[operators] def probeBuckets(q: DataFrame, cent: DataFrame,
+      nprobe: Int, carry: Seq[String]): DataFrame = {
     val qw = Window.partitionBy("qid").orderBy(desc("qsim"), asc("cent_id"))
-    val probes = broadcast(q).join(broadcast(cent), lit(true))
+    broadcast(q).join(broadcast(cent), lit(true))
       .withColumn("qsim", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
       .withColumn("prank", row_number().over(qw))
       .filter(col("prank") <= nprobe)
-      .select(col("qid"), col("qe"), col("qn"), col("cent_id").as("bucket"))
+      .select((col("qid") +: carry.map(col)) :+ col("cent_id").as("bucket"): _*)
+  }
+
+  private def searchBuckets(assigned: DataFrame, cent: DataFrame,
+      q: DataFrame, k: Int, nprobe: Int, idCol: String): DataFrame = {
+    val probes = probeBuckets(q, cent, nprobe, Seq("qe", "qn"))
 
     val cos = dot(col("qe"), col("e")) / (col("qn") * col("nrm"))
     val rw = Window.partitionBy("qid").orderBy(desc("cos"), asc(idCol))
@@ -211,6 +221,46 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
   }
+
+  /** [[hardNegatives]]' scale path: the same label exclusion applied
+    * INSIDE the probed IVF buckets, so mining cost per query is
+    * nprobe·(N/nlist) scored rows instead of N (at √N sizing,
+    * nprobe·√N). The corpus label rides a skinny (id, label) join onto
+    * the assigned index — [[assignToCentroids]] stays label-agnostic.
+    * Same output shape as [[hardNegatives]]; recall vs the exact
+    * variant is the IVF contract (`SimilaritySpec` pins both the
+    * no-same-label invariant and the recall floor). */
+  def hardNegativesIvf(corpus: DataFrame, queries: DataFrame, k: Int,
+      nCentroids: Int = 16, nprobe: Int = 2,
+      trainN: Int = 128, iters: Int = 2,
+      labelCol: String = "label",
+      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+    val cent = trainCentroids(corpus, nCentroids, trainN, iters, idCol, embCol)
+    val assigned = assignToCentroids(prep(corpus, idCol, embCol), cent, idCol)
+      .join(corpus.select(col(idCol), col(labelCol)), Seq(idCol))
+    val q = queries.select(col(idCol).as("qid"),
+        col(labelCol).as("_qlabel"),
+        transform(col(embCol), x => x.cast("double")).as("qe"))
+      .withColumn("qn", norm(col("qe")))
+    val probes = probeBuckets(q, cent, nprobe, Seq("qe", "qn", "_qlabel"))
+    val cos = dot(col("qe"), col("e")) / (col("qn") * col("nrm"))
+    val rw = Window.partitionBy("qid").orderBy(desc("cos"), asc(idCol))
+    assigned.join(broadcast(probes), Seq("bucket"))
+      .filter(col(labelCol) =!= col("_qlabel"))
+      .select(col("qid"), col(idCol), gf.roundz(cos, 6).as("cos"))
+      .withColumn("rank", row_number().over(rw).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  /** Production index sizing (the rule `SimilaritySpec` pins — ONE
+    * definition, so the spec and every caller share it): nlist ≈ √N
+    * keeps per-bucket membership at ~√N and probe work at nprobe·√N
+    * as the corpus grows; the Lloyd sample is 4× the centroid count
+    * (bounded below by the 128-vector default). */
+  def sqrtNlist(n: Long): Int =
+    math.max(4, math.round(math.sqrt(n.toDouble)).toInt)
+
+  def sizingTrainN(nlist: Int): Int = math.max(128, nlist * 4)
 
   /** Handle to a persisted IVF index: a centroid table plus the
     * assigned corpus written as a warehouse table BUCKETED on the
@@ -296,9 +346,9 @@ object Similarity {
     *
     * NOT for fingerprint-memoized indexes (ADVICE r13): tables named
     * by the fingerprinted [[SharedTable.indexName]] (stem + `_f` +
-    * corpus fingerprint, e.g. the shared "ivf" stem) have a lifecycle
-    * that assumes their contents are a PURE FUNCTION of the corpus
-    * directory — [[indexFor]] serves them memoized,
+    * source-table fingerprint, e.g. the shared "ivf" stem) have a
+    * lifecycle that assumes their contents are a PURE FUNCTION of the
+    * source tables — [[indexFor]] serves them memoized,
     * [[SharedTable.dropStaleGenerations]] deletes superseded
     * generations, and a fingerprint-triggered
     * rebuild would silently DISCARD appended vectors; worse, appending
@@ -444,41 +494,90 @@ object Similarity {
       embCol = "embedding")
 
   /** KNN GRAPH: approximate top-k neighbors for EVERY corpus vector —
-    * the all-vectors generalization of [[ivfTopK]]. Same IVF index
-    * semantics (hash-seeded Lloyd centroids, argmax assignment, nprobe
-    * probes, exact cosine inside probed buckets), but the query side
-    * IS the corpus, so the [[searchBuckets]] broadcasts are
-    * structurally wrong here.
+    * the all-vectors generalization of [[ivfTopK]] and the kernel
+    * under semantic dedup, retrieval-based mixing, and embedding-graph
+    * clustering. Same IVF index semantics (hash-seeded Lloyd
+    * centroids, argmax assignment, nprobe probes, exact cosine inside
+    * probed buckets), but the query side IS the corpus, so the
+    * [[searchBuckets]] broadcasts are structurally wrong here.
     *
-    * Runs over PRE-BUILT distinct-content collapse frames (r15):
-    * `groups` = (gid, __ids) one row per distinct embedding (gid = min
-    * member id), `repvec` = (idCol, e, nrm, bucket) for exactly the
-    * rep ids, `cent` the centroid frame. Every per-vector quantity —
-    * bucket, probe set, and the 6-dp cosine against any partner — is
-    * a pure function of the vector's CONTENT, so the session's shared
-    * IVF index and embedding dup-group tables serve these frames
-    * without a per-run training, groupBy or assignment pass.
+    * DISTINCT-CONTENT COLLAPSE (the q162 contract generalized to
+    * top-k): real corpora are duplicate-heavy, and every per-vector
+    * quantity here — bucket (argmax over the pinned centroid chain),
+    * probe set, and the 6-dp cosine against any partner — is a pure
+    * function of the vector's CONTENT. So the expensive stages run
+    * over one representative per distinct embedding:
     *
-    *   - probe selection (top-`nprobe` centroids per GROUP) and the
+    *   - group once on the raw embedding bytes → sorted member-id
+    *     list per content group (gid = min id, the representative);
+    *   - probe selection (top-`nprobe` centroids per GROUP over the
+    *     R × nlist score product, R = distinct contents) and the
     *     per-group candidate top-(k+1) both run on
     *     [[graft.plans.TopKPerKey]]'s bounded heap — one clustered
-    *     shuffle each, no windowed full sort;
-    *   - candidate generation is a SHUFFLE equi-join on bucket id over
-    *     GROUP representatives, so with duplication factor d the
-    *     scored candidate volume shrinks d² vs the raw join;
-    *   - each candidate GROUP contributes only its k+1 smallest member
-    *     ids (`head`): within a group all members share one cosine and
-    *     order consecutively by id, so any member beyond its group's
-    *     first k+1 can never enter a top-(k+1);
+    *     shuffle each, no windowed full sort, spill fallback past the
+    *     task byte budget;
+    *   - candidate generation is a SHUFFLE equi-join on bucket id
+    *     over GROUP representatives (R-sized sides; nothing
+    *     broadcast), so with duplication factor d the scored
+    *     candidate volume shrinks d² vs the raw join — per-bucket
+    *     work stays bounded by distinct-content membership, and
+    *     nlist ≈ [[sqrtNlist]] keeps that at ~√R;
+    *   - each candidate GROUP contributes only its k+1 smallest
+    *     member ids (`head`): within a group all members share one
+    *     cosine and order consecutively by id, so any member beyond
+    *     its group's first k+1 is preceded by k+1 same-cosine
+    *     smaller ids and can never enter a top-(k+1);
     *   - EXPANSION is arithmetic: every member of a query group
-    *     inherits the group's top-(k+1) list minus (at most) itself,
-    *     then a row_number re-rank over the (k+1)-bounded rows.
+    *     inherits the group's top-(k+1) list minus (at most) itself —
+    *     one equi-join on gid producing ≤ N·(k+1) rows, then the
+    *     cheap re-rank.
     *
-    * The head-truncation argument is exact, so the expanded top-k is
-    * row-for-row the raw top-k (q114's oracle pins probe ties,
-    * candidate sets, and rank tie-breaks). Output: (qid, idCol, cos,
-    * rank), ties broken (cos desc, id asc) on the 6-decimal-rounded
-    * cosine in both engines. */
+    * Bit-parity with the raw-row semantics (q114's oracle pins probe
+    * ties, candidate sets, and rank tie-breaks): buckets/probes/
+    * cosines are content-determined, and the head-truncation argument
+    * above is exact, so the expanded top-k is row-for-row the raw
+    * top-k. Centroid TRAINING stays on the raw corpus — its
+    * hash-seeded sample is id-keyed, which the oracle replicates.
+    *
+    * The rank column is re-derived by a row_number over the ALREADY
+    * (k+1)-bounded rows (partitions of ≤ k+1) — the cheap sort, not
+    * the one TopKPerKey avoided. Output: (qid, idCol, cos, rank),
+    * ties broken (cos desc, id asc) on the 6-decimal-rounded cosine
+    * in both engines. */
+  def knnJoin(
+      corpus: DataFrame, k: Int,
+      nCentroids: Int = 16, nprobe: Int = 2,
+      trainN: Int = 128, iters: Int = 2,
+      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+    val cent = trainCentroids(corpus, nCentroids, trainN, iters, idCol, embCol)
+    // One content group per distinct embedding; ≤ corpus rows, usually
+    // far fewer. Persisted: referenced by reps, heads and members (an
+    // un-persisted subtree would re-run the groupBy per reference).
+    val groups = graft.CacheRegistry.persistTracked(
+      corpus.select(col(idCol), col(embCol))
+        .groupBy(col(embCol))
+        .agg(sort_array(collect_list(col(idCol))).as("__ids"))
+        .select(col(embCol), col("__ids"),
+          element_at(col("__ids"), 1).as("gid")),
+      graft.CacheRegistry.DataSized)
+    val reps = prep(groups.select(col("gid").as(idCol), col(embCol)),
+      idCol, embCol)
+    val repvec = assignToCentroids(reps, cent, idCol)
+    knnJoinCollapsed(groups.select(col("gid"), col("__ids")),
+      repvec, cent, k, nprobe, idCol)
+  }
+
+  /** [[knnJoin]]'s probe/score/expand tail over PRE-BUILT collapse
+    * frames (r15): `groups` = (gid, __ids) one row per distinct
+    * embedding (gid = min member id), `repvec` = (idCol, e, nrm,
+    * bucket) for exactly the rep ids, `cent` the centroid frame. A
+    * caller holding the session-materialized shared artifacts (the
+    * IVF index's assigned/centroid tables, the embedding dup-group
+    * table) skips the per-run training + groupBy + assignment passes
+    * entirely — bucket/e/nrm are content-determined, so the shared
+    * index's rows for the rep ids are bit-identical to an inline
+    * assignment. ONE implementation of the truncation-exact tail
+    * serves both entries. */
   def knnJoinCollapsed(groups: DataFrame, repvec: DataFrame,
       cent: DataFrame, k: Int, nprobe: Int = 2,
       idCol: String = "vec_id"): DataFrame = {

@@ -19,8 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * other sketches can: Misra–Gries answers "which items are heavy",
   * KLL "what rank is this value", Count-Min "how often this key",
   * HLL "how many distinct" — KMV answers "how many distinct do these
-  * two 100 TB streams SHARE" from two kilobyte-sized states, where
-  * the exact answer is a corpus-wide distinct shuffle join.
+  * two 100 TB streams SHARE" from two kilobyte-sized states
+  * ([[Kmv.intersectEstimate]] / [[Kmv.jaccardEstimate]] /
+  * [[Kmv.unionEstimate]]), where the exact answer is a corpus-wide
+  * distinct shuffle join.
   *
   * Determinism is stronger than the usual sketch contract: the k
   * smallest distinct md5-derived hashes are a FUNCTION OF THE SET —
@@ -124,5 +126,54 @@ object KmvSketch {
       while (it.hasNext) { out(i) = it.next(); i += 1 }
       out // TreeSet iterates ascending
     }
+  }
+}
+
+/** Driver-side KMV estimators over the sketch arrays `kmv_sketch`
+  * emits. Hashes are uniform on [0, 2^60) by the md5 construction, so
+  * u = h / 2^60 is uniform on [0, 1) and the classic estimators apply
+  * verbatim. */
+object Kmv {
+  private val Space = (1L << 60).toDouble
+
+  /** Distinct-count estimate: exact when the sketch is not full
+    * (|values| < k), else the unbiased (k−1)/u_(k). */
+  def estimate(values: Array[Long], k: Int): Double =
+    if (values.length < k) values.length.toDouble
+    else (k - 1) * Space / values(k - 1).toDouble
+
+  /** Union estimate: merge the two min-k sets and estimate. */
+  def unionEstimate(a: Array[Long], b: Array[Long], k: Int): Double =
+    estimate(mergeMinK(a, b, k), k)
+
+  /** Jaccard estimate (Beyer et al. 2007): the fraction of the merged
+    * min-k that lies in BOTH input sketches. Exact when both sketches
+    * are exact. */
+  def jaccardEstimate(a: Array[Long], b: Array[Long], k: Int): Double = {
+    val m = mergeMinK(a, b, k)
+    if (m.isEmpty) return 0.0
+    val sa = a.toSet
+    val sb = b.toSet
+    m.count(v => sa.contains(v) && sb.contains(v)).toDouble / m.length
+  }
+
+  /** Intersection estimate: ĵ · |A ∪ B|^. */
+  def intersectEstimate(a: Array[Long], b: Array[Long], k: Int): Double =
+    jaccardEstimate(a, b, k) * unionEstimate(a, b, k)
+
+  /** Merged min-k of two sorted-ascending sketch arrays (two-pointer,
+    * dedup — the union sketch). */
+  def mergeMinK(a: Array[Long], b: Array[Long], k: Int): Array[Long] = {
+    val out = new Array[Long](math.min(k, a.length + b.length))
+    var i = 0; var j = 0; var n = 0
+    var last = Long.MinValue
+    var first = true
+    while (n < k && (i < a.length || j < b.length)) {
+      val v =
+        if (j >= b.length || (i < a.length && a(i) <= b(j))) { i += 1; a(i - 1) }
+        else { j += 1; b(j - 1) }
+      if (first || v != last) { out(n) = v; n += 1; last = v; first = false }
+    }
+    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * via the same [[StableHash60]]-mod-dim bucket the trainer used
   * (md5-derived: engine-independent, layout-independent, no JVM
   * hashCode). Weights ship to generated code as a codegen reference
-  * (the [[MatVec]]/[[BpeEncode]] pattern), deserialized once per task.
+  * (the [[MatVec]] pattern), deserialized once per task.
   *
   * Empty token arrays score σ(b) (zero feature vector), null inputs
   * propagate null.

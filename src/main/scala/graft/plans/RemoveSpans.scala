@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * no null elements by construction), `starts`/`ends` array<long> —
   * the per-doc span list as 1-BASED INCLUSIVE token positions, both
   * ascending and PAIRED BY INDEX. Spans from
-  * [[graft.operators.Dedup.duplicatedSpanArrays]] are disjoint islands
+  * [[graft.operators.Dedup.duplicatedSpans]] are disjoint islands
   * (consecutive duplicated window starts merge; inter-island gap
   * > width), so sorting the collected starts and ends INDEPENDENTLY
   * (`sort_array(collect_list(...))`) preserves the pairing — s_i < s_j

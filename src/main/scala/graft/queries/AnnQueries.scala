@@ -724,8 +724,8 @@ object AnnQueries {
         .orderBy("label_a", "label_b")
     },
 
-    // Multimodal metadata over binary payloads (the byte-level
-    // plumbing is oracle-checked here).
+    // Multimodal metadata over binary payloads (decode stub tested in
+    // MultimodalSpec; the byte-level plumbing is oracle-checked here).
     QueryDef("q43_media_meta",
       """SELECT doc_id AS media_id,
         |  octet_length(CAST(encode(text) AS BLOB)) AS n_bytes,
@@ -751,7 +751,7 @@ object AnnQueries {
     // Engine side: query side is corpus-sized, so nothing broadcasts
     // and no windowed sort touches the candidate volume — probe top-2
     // and neighbor top-5 both run on TopKPerKey's bounded heap
-    // (see Similarity.knnJoinCollapsed).
+    // (see Similarity.knnJoin).
     QueryDef("q114_knn_graph",
       s"""WITH v AS (
          |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -784,7 +784,7 @@ object AnnQueries {
          |ORDER BY qid, rank""".stripMargin) { (s, dir) =>
       // Rides the session-materialized shared artifacts (r15): the
       // IVF index supplies centroids + rep (e, nrm, bucket) rows —
-      // content-determined, so bit-identical to an inline
+      // content-determined, so bit-identical to knnJoin's inline
       // training/assignment — and the embedding dup-group table
       // supplies (gid, __ids). Per run only knnJoinCollapsed's
       // probe/score/expand tail executes; the oracle pins the whole
@@ -869,8 +869,12 @@ object AnnQueries {
     // in near-misses). The label exclusion is a join predicate BELOW
     // the per-query rank, so same-label rows never enter the window —
     // and since a row shares its own label, self-exclusion is free.
-    // Scale shape: the broadcast-query × corpus scan of q41 with the
-    // predicate fused into the same pass.
+    // Scale shape: exact variant is the broadcast-query × corpus scan
+    // of q41 with the predicate fused into the same pass;
+    // [[Similarity.hardNegativesIvf]] is the probed-bucket twin
+    // (nprobe·√N scored rows per query at production sizing) with the
+    // identical exclusion — `SimilaritySpec` pins its no-same-label
+    // invariant and recall floor vs this exact oracle.
     QueryDef("q147_hard_negatives",
       s"""WITH v AS (
          |  SELECT vec_id, label,

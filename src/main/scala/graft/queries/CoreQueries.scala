@@ -484,10 +484,12 @@ object CoreQueries {
         .orderBy("k")
     },
 
-    // Z-order curve key (plans/InterleaveBits): the Morton-key census
-    // over fixed-width (orderkey, partkey) buckets — a cross-engine
-    // bit-exactness witness for the curve key. The oracle spells the
-    // 8-bit interleave out as 16 shift/mask terms.
+    // Z-order layout curve (operators/ZOrder + plans/InterleaveBits):
+    // the Morton-key census over fixed-width (orderkey, partkey)
+    // buckets — a cross-engine bit-exactness witness for the curve key
+    // the clustering write sorts by (the layout itself is spec-gated in
+    // ZOrderSpec: per-file min/max spans tighten on BOTH dims). The
+    // oracle spells the 8-bit interleave out as 16 shift/mask terms.
     QueryDef("q101_zorder_cells", {
       val terms = (0 until 8).flatMap(i => Seq(
         s"(((xb >> $i) & 1) << ${2 * i})",

@@ -7,9 +7,12 @@ import graft.Tables
 import graft.{functions => gf}
 
 /** Event-stream analytics in batch form — tumbling/sliding windows,
-  * sessionization, daily funnels over the `events` table, the
+  * sessionization, daily funnels over the `events` table. The same
+  * transforms run incrementally under Structured Streaming via
+  * [[graft.streaming.EventStreams]]; these batch variants are the
   * oracle-checkable surface (SURVEY.md §2.12 — the reference is batch
-  * only).
+  * only; streaming is the driver-mandated generalization of its
+  * hand-rolled watermark (C2)).
   *
   * Scale notes: tumbling/sliding aggs shuffle once on the window bucket
   * (partial aggregation upstream); sessionization shuffles once on

@@ -53,6 +53,23 @@ object TextQueries {
   private val HashB: Seq[Long] =
     (0 until NumHashes).map(i => (i * 40503L + 7L) % MinhashP)
 
+  /** Aggregates over the per-shingle hash column `h` (already reduced
+    * mod P in a projection BELOW the groupBy, so the md5 runs once per
+    * shingle, not once per aggregate expression). */
+  private def minhashAggs(h: Column): Seq[Column] =
+    (0 until NumHashes).map { i =>
+      min((h * HashA(i) + HashB(i)) % MinhashP).as(s"mh$i")
+    }
+
+  /** Per-shingle 60-bit hash via the native expression. */
+  private def shingleHash(tok: Column): Column =
+    org.apache.spark.sql.graft.CatalystBridge.column(
+      graft.plans.StableHash60(
+        org.apache.spark.sql.graft.CatalystBridge.expr(tok)))
+
+  private def bandCol(b: Int): Column =
+    concat_ws("|", (0 until RowsPerBand).map(r => col(s"mh${b * RowsPerBand + r}")): _*)
+
   /** Non-deduped token explode via the native expression (tf semantics
     * need duplicates; the composed filter(split) runs interpreted). */
   private def tokenCol =
@@ -60,6 +77,21 @@ object TextQueries {
       graft.plans.ShingleTokens(
         org.apache.spark.sql.graft.CatalystBridge.expr(trim(col("text"))),
         1, dedupe = false))
+
+  /** 3-token shingles of a doc, deduped — shared by minhash queries.
+    * Uses the native codegen'd [[graft.plans.ShingleTokens]] (the
+    * higher-order-function composition runs interpreted — ~10× slower
+    * on this hot path). The repartition fans the (often single-file)
+    * scan out BEFORE the explode + 16×md5 partial aggregation —
+    * otherwise all the hash work runs in as many tasks as there are
+    * input files. */
+  private def shingled(docs: DataFrame): DataFrame =
+    docs.fanOutScan(col("doc_id"))
+      .select(col("doc_id"),
+        explode(org.apache.spark.sql.graft.CatalystBridge.column(
+          graft.plans.ShingleTokens(
+            org.apache.spark.sql.graft.CatalystBridge.expr(trim(col("text"))),
+            3))).as("tok"))
 
   private val shingleSql =
     """SELECT DISTINCT doc_id, tok FROM (
@@ -302,7 +334,8 @@ object TextQueries {
   /** [[lshPairs]] over an arbitrary (doc_id, text) frame — q125 feeds
     * DISTINCT-TEXT representatives through the same pipeline, so the
     * banding cost tracks distinct content, not corpus rows. The
-    * pipeline lives in [[graft.operators.MinHashLsh]]; these queries
+    * pipeline lives in [[graft.operators.MinHashLsh]] (parameterized,
+    * so planner-sized bandings run the same code path); these queries
     * pin (16, 4, 4) for oracle replication. */
   private def lshPairsFrom(docs: DataFrame): DataFrame =
     graft.operators.MinHashLsh.candidatePairs(
@@ -795,6 +828,25 @@ object TextQueries {
           when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))
         }.reduce(_ + _).as("simhash"))
   }
+
+  /** Approximate twin of q63 (`approx_percentile`, t-digest): for
+    * metrics whose value space is NOT bounded — raw byte lengths,
+    * float scores — the exact percentile's O(distinct values) buffer
+    * stops being safe, and the fixed-size sketch is the 100 TB path.
+    * Same output shape as q63 so the two are directly comparable;
+    * `accuracy` is Spark's inverse-error knob (error ≈ 1/accuracy of
+    * the rank, i.e. 10000 → 0.01% rank error). */
+  def lengthProfileApprox(s: SparkSession, dir: String,
+      accuracy: Int = 10000): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("lang"), size(gf.tokens(col("text"))).cast("double").as("n"))
+      .groupBy("lang")
+      .agg(
+        gf.roundz(expr(s"approx_percentile(n, 0.5D, $accuracy)"), 4).as("p50"),
+        gf.roundz(expr(s"approx_percentile(n, 0.9D, $accuracy)"), 4).as("p90"),
+        gf.roundz(expr(s"approx_percentile(n, 0.99D, $accuracy)"), 4).as("p99"),
+        count(lit(1)).as("n_docs"))
+      .orderBy("lang")
 
   val defs: Seq[QueryDef] = Seq(
     // Exact dedup: hash-groupBy, keep min doc_id per content hash.
@@ -1881,6 +1933,11 @@ object TextQueries {
         .orderBy("lang")
     },
 
+    // Approximate twin of q63 — see lengthProfileApprox below. Not a
+    // registered query: approx_percentile's t-digest result has no
+    // cross-engine oracle; its error bound vs the exact profile is
+    // spec-asserted instead (LengthProfileSpec).
+
     // Near-dup CLUSTERS over the LSH candidate pairs: connected
     // components via alternating large-star/small-star (one survivor
     // per cluster is then a filter on id == component_id). The oracle
@@ -1972,12 +2029,13 @@ object TextQueries {
     },
 
     // BPE trainer kernel, cross-engine witnessed: the weighted
-    // adjacent-character pair census over the word-frequency table
-    // (operators/BpeTrainer) that a merge round counts; this oracle
-    // pins the round-0 aggregate both engines must agree on. Scale
-    // shape: one corpus pass to (word, cnt), then pair explosion
-    // bounded by VOCABULARY (distinct words × word length), not
-    // corpus size.
+    // adjacent-character pair census over the word-frequency table —
+    // exactly what operators/BpeTrainer counts each merge round (the
+    // full K-round loop is iterative and spec-gated in BpeTrainerSpec;
+    // this oracle pins the round-0 aggregate both engines must agree
+    // on). Scale shape: one corpus pass to (word, cnt), then pair
+    // explosion bounded by VOCABULARY (distinct words × word length),
+    // not corpus size.
     QueryDef("q103_bpe_pair_census",
       """WITH wf AS (
         |  SELECT word, count(*) AS cnt FROM (
@@ -2370,7 +2428,10 @@ object TextQueries {
     // source — vocabulary growth is how pipelines detect corpus drift
     // and near-duplicate ingestion batches. Exact distinct is the
     // oracle-checked path (two-phase aggregate: Spark plans the
-    // partial-distinct expansion before the final count).
+    // partial-distinct expansion before the final count); the one-pass
+    // fixed-state HLL twin for 100 TB lives next to it
+    // (cardinalityProfileApprox, error spec'd in CardinalitySpec —
+    // sketches have no cross-engine oracle).
     QueryDef("q70_vocab_profile",
       """SELECT source,
         |  CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct_toks,
@@ -2934,8 +2995,10 @@ object TextQueries {
     // against the per-doc span list (spans per doc are few; no pair
     // explosion) + ONE per-doc kept-token collect — the q134 idiom,
     // O(doc) state. Docs with < 6 tokens pass through whitespace-
-    // normalized; fully-covered docs emit md5(''). This query rides
-    // the shared windowsFor table instead of re-hashing the corpus.
+    // normalized; fully-covered docs emit md5(''). The reusable
+    // cleaned-TEXT transform is [[graft.operators.Dedup
+    // .removeDuplicatedSpans]]; this query rides the shared
+    // windowsFor table instead of re-hashing the corpus.
     QueryDef("q173_remove_dup_spans", {
       val B = graft.plans.RollingHashWindows.Base
       val mask = 0xffffffffL
@@ -3653,7 +3716,9 @@ object TextQueries {
     // ratio — the self-repetition metric (inverse Self-BLEU proxy)
     // that flags template-generated or boilerplate-heavy feeds before
     // they flood the mix. One explode + one source-keyed aggregate;
-    // the exact count(DISTINCT) shuffles distinct trigrams.
+    // the exact count(DISTINCT) shuffles distinct trigrams (the exact
+    // path — its fixed-state HLL twin is the q70 pattern,
+    // `cardinalityProfileApprox`).
     QueryDef("q91_ngram_diversity",
       """WITH tg AS (
         |  SELECT source, unnest(list_transform(
@@ -4286,8 +4351,9 @@ object TextQueries {
     // double op (one ((B·z)/Z)/n chain, one ·2^60 floor) is spelled
     // in the same order in both engines, and membership is the q58
     // stable-hash threshold — a doc's fate depends only on its id and
-    // its source's aggregate. Scale: one source-keyed count,
-    // bounded-frame rate
+    // its source's aggregate. The reusable corpus transform is
+    // [[graft.operators.Sampling.temperatureSample]] (any α, same
+    // hash rule). Scale: one source-keyed count, bounded-frame rate
     // arithmetic broadcast back, one filter — no sort, no sample
     // pass, no driver data.
     QueryDef("q175_temperature_mix",
@@ -4443,7 +4509,8 @@ object TextQueries {
         .orderBy("batch_size")
     },
 
-    // T104 — content-defined chunking census (token-level): chunk
+    // T104 — content-defined chunking census (token-level twin of the
+    // byte-level FastCDC expression in plans/CdcChunks): chunk
     // boundaries close AFTER any token whose stable hash ≡ 0 (mod 16)
     // — boundaries depend only on CONTENT, so an insertion reshapes
     // only its own chunk while fixed-size blocks (q134/q69) shift
@@ -5569,8 +5636,8 @@ object TextQueries {
     // window VOCABULARY from the shared `windowsFor` warehouse table
     // (one filtered scan of materialized integers — the corpus TEXT
     // is never re-read, re-tokenized, or re-hashed per increment) and
-    // feeds it to `Dedup.incrementalSpanArrays`; the census is q173's
-    // md5-witnessed shape over the cleaned batch.
+    // feeds it to `Dedup.removeDuplicatedSpansIncrementalWith`; the
+    // census is q173's md5-witnessed shape over the cleaned batch.
     // A batch token is dropped when a covering 6-window occurs
     // anywhere in the corpus vocabulary or in ≥ 2 distinct batch docs.
     QueryDef("q178_incremental_span_dedup", {
@@ -5648,8 +5715,8 @@ object TextQueries {
       // The published vocabulary AND the batch windows: two filtered
       // scans of the shared materialized window table — integers
       // only. r16: the old shape re-derived the batch windows with a
-      // fresh tokenize + rolling-hash pass (≡ the table's rows for
-      // batch docs, so the pass was pure re-compute), then
+      // fresh tokenize + rolling-hash pass (windowFrame ≡ the table's
+      // rows for batch docs, so the pass was pure re-compute), then
       // tokenized the batch TWICE more — once for n_tokens, once
       // re-tokenizing the CLEANED text for removed_tokens. Now the
       // span arrays come off the table (incrementalSpanArrays), and
@@ -6074,4 +6141,58 @@ object TextQueries {
       .fanOutScan(col("doc_id")) // scale-adaptive scan fan-out (r16)
       .select(col("doc_id"), col("source"),
         explode(gf.tokens(col("text"))).as("tok"))
+
+  /** HLL twin of q70: one pass, fixed sketch state per group — the
+    * 100 TB path for cardinality (exact count(DISTINCT) shuffles every
+    * distinct value; the sketch shuffles kilobytes). `rsd` is Spark's
+    * relative-standard-deviation knob. No oracle entry: sketch values
+    * have no cross-engine twin; CardinalitySpec bounds the error
+    * against the exact profile instead. */
+  def cardinalityProfileApprox(s: SparkSession, dir: String,
+      rsd: Double = 0.02): DataFrame =
+    tokensBySource(s, dir)
+      .groupBy("source")
+      .agg(approx_count_distinct(col("tok"), rsd).as("n_distinct_toks"),
+        count(lit(1)).as("n_tokens"),
+        approx_count_distinct(col("doc_id"), rsd).as("n_docs"))
+      .orderBy("source")
+
+  /** KMV scale twin of q73: per-source k-minimum-values vocabulary
+    * sketches ([[graft.plans.KmvSketch]] — ONE corpus pass, O(k) longs
+    * of state per source) + pairwise set-operation estimates over the
+    * collected sketches (sources-bounded driver work) — the 100 TB
+    * path q73's scaladoc promises: with millions of distinct tokens
+    * per source the exact postings self-join shuffles the full
+    * source×token table, while the sketches ship kilobytes and the
+    * estimates carry the ~1/√(k−2) KMV error. When a source's
+    * vocabulary fits inside k the sketch — and therefore the estimate
+    * — is EXACT (the spec pins this against q73's exact Jaccard). */
+  def vocabOverlapApprox(s: SparkSession, dir: String,
+      k: Int = 1024): DataFrame = {
+    import org.apache.spark.sql.graft.CatalystBridge
+    import s.implicits._
+    val sketches = Tables.documents(s, dir)
+      .select(col("source"), explode(gf.tokens(col("text"))).as("tok"))
+      .groupBy("source")
+      .agg(CatalystBridge.column(
+        graft.plans.KmvSketch(CatalystBridge.expr(col("tok")), k)
+          .toAggregateExpression()).as("sketch"))
+      .as[(String, Array[Long])]
+      .collect() // sources-bounded (one O(k) array per source)
+      .sortBy(_._1)
+    val pairs = for {
+      i <- sketches.indices
+      j <- (i + 1) until sketches.length
+    } yield {
+      val (sa, va) = sketches(i)
+      val (sb, vb) = sketches(j)
+      (sa, sb,
+        graft.plans.Kmv.estimate(va, k),
+        graft.plans.Kmv.estimate(vb, k),
+        graft.plans.Kmv.intersectEstimate(va, vb, k),
+        graft.plans.Kmv.jaccardEstimate(va, vb, k))
+    }
+    pairs.toDF("src_a", "src_b", "est_n_a", "est_n_b",
+      "est_shared", "est_jaccard")
+  }
 }

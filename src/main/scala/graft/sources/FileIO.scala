@@ -7,6 +7,10 @@ import org.apache.spark.sql.types.StructType
   *
   * Sources always take an explicit schema — conformance, not inference
   * (inference means an extra full scan and type drift between runs).
+  * The partitioned parquet sink writes the reference's
+  * `country=/load_date=` style layout (`extract_postgres_table.py:
+  * 68-70`) so downstream reads get static + dynamic partition pruning
+  * for free.
   */
 object FileIO {
 
@@ -18,6 +22,16 @@ object FileIO {
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("header", "true").csv(path)
 
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path)
+
+  /** ORC source — Spark's second first-class columnar format (ships in
+    * the distribution, no extra dependency). Same pushdown/pruning
+    * story as parquet: min/max stripe statistics + predicate pushdown,
+    * so a filtered scan skips stripes at the footer. */
+  def readOrc(spark: SparkSession, path: String): DataFrame =
+    spark.read.orc(path)
+
   // ---- sinks ------------------------------------------------------------
 
   def writeJson(df: DataFrame, path: String,
@@ -27,6 +41,18 @@ object FileIO {
   def writeCsv(df: DataFrame, path: String,
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).option("header", "true").csv(path)
+
+  def writeOrc(df: DataFrame, path: String,
+      mode: SaveMode = SaveMode.Overwrite): Unit =
+    df.write.mode(mode).orc(path)
+
+  /** Partitioned parquet append — the engine's native incremental
+    * layout. Partition columns become directories; a scan filtered on
+    * them prunes at the file listing, before any IO. */
+  def writePartitionedParquet(df: DataFrame, path: String,
+      partitionCols: Seq[String],
+      mode: SaveMode = SaveMode.Append): Unit =
+    df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
   /** Warehouse table sink — the Snowflake stand-in (S8): a managed
     * table in the session catalog, overwrite per run like the

@@ -114,4 +114,111 @@ class DedupSpec extends SparkSpec {
     Dedup.cleanCorpus(docs, pairs)
       .select("doc_id").as[Long].collect().sorted shouldBe Array(1L, 5L)
   }
+
+  test("removeDuplicatedSpans is identity when no cross-doc span repeats") {
+    // Distinct content per doc (no shared 6-token window): reassembly
+    // must equal the whitespace-normalized original, every token kept.
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "  one   two three four five six seven eight  "),
+      (3L, "tiny doc"), // < 6 tokens: no windows, passes through
+      (4L, "")) // token-free: empty out
+      .toDF("doc_id", "text")
+    val out = Dedup.removeDuplicatedSpans(docs)
+      .orderBy("doc_id").as[(Long, String)].collect()
+    out shouldBe Array(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "one two three four five six seven eight"),
+      (3L, "tiny doc"),
+      (4L, ""))
+  }
+
+  test("removeDuplicatedSpansIncremental: corpus echoes stripped, corpus untouched") {
+    val run = "c1 c2 c3 c4 c5 c6 c7"
+    val corpus = Seq((1L, s"$run corpus-only tail")).toDF("doc_id", "text")
+    val batch = Seq(
+      (10L, s"fresh stuff here $run"), // echoes the corpus run -> stripped
+      (11L, "completely novel text with no overlap at all"),
+      (12L, "b1 b2 b3 b4 b5 b6 extra"), // intra-batch pair with 13
+      (13L, "b1 b2 b3 b4 b5 b6 other"))
+      .toDF("doc_id", "text")
+    val out = Dedup.removeDuplicatedSpansIncremental(corpus, batch)
+      .orderBy("doc_id").as[(Long, String)].collect()
+    out shouldBe Array(
+      (10L, "fresh stuff here"),
+      (11L, "completely novel text with no overlap at all"),
+      (12L, "extra"),
+      (13L, "other"))
+    // The corpus is never rewritten: only batch ids come back.
+    out.map(_._1).toSet shouldBe Set(10L, 11L, 12L, 13L)
+  }
+
+  test("removeDuplicatedSpansIncrementalWith: published vocabulary, no corpus scan in the plan") {
+    val run = "c1 c2 c3 c4 c5 c6 c7"
+    val corpus = Seq((1L, s"$run corpus-only tail")).toDF("doc_id", "text")
+    val batch = Seq(
+      (10L, s"fresh stuff here $run"),
+      (11L, "completely novel text with no overlap at all"),
+      (12L, "b1 b2 b3 b4 b5 b6 extra"),
+      (13L, "b1 b2 b3 b4 b5 b6 other"))
+      .toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("dedup_vocab").toString
+    val corpusPath = s"$tmp/corpus.parquet"
+    val vocabPath = s"$tmp/vocab.parquet"
+    corpus.write.parquet(corpusPath)
+    // Publish the vocabulary ONCE from the published corpus.
+    Dedup.windowVocabulary(spark.read.parquet(corpusPath))
+      .write.parquet(vocabPath)
+
+    val out = Dedup.removeDuplicatedSpansIncrementalWith(
+      spark.read.parquet(vocabPath), batch)
+    // Identical results to the inline-corpus variant.
+    out.orderBy("doc_id").as[(Long, String)].collect() shouldBe
+      Dedup.removeDuplicatedSpansIncremental(
+          spark.read.parquet(corpusPath), batch)
+        .orderBy("doc_id").as[(Long, String)].collect()
+    // The increment's plan reads the VOCABULARY table, never the
+    // corpus parquet (the whole point: no corpus pass per micro-batch).
+    val root = out.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    val scans = root.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.map(_.toString)
+    }.flatten
+    scans.exists(_.contains("vocab.parquet")) shouldBe true
+    scans.exists(_.contains("corpus.parquet")) shouldBe false
+
+    // Publish-append invariant: vocab(corpus) ∪ vocab(published batch)
+    // == vocab(corpus ∪ published batch) — the append-only contract
+    // that lets the table grow without ever re-reading the corpus.
+    val published = out
+    val appended = spark.read.parquet(vocabPath)
+      .union(Dedup.windowVocabulary(published)).distinct()
+      .as[Long].collect().toSet
+    val full = Dedup.windowVocabulary(corpus.union(published))
+      .as[Long].collect().toSet
+    appended shouldBe full
+  }
+
+  test("removeDuplicatedSpans removes the shared run and keeps the rest") {
+    // Docs 1 and 2 share an 8-token run -> three duplicated 6-windows
+    // per doc, one island covering exactly those 8 positions. The
+    // unique prefix/suffix tokens survive in order; doc 3 is a full
+    // duplicate of the run alone and empties out.
+    val run = "s1 s2 s3 s4 s5 s6 s7 s8"
+    val docs = Seq(
+      (1L, s"pre1 pre2 $run post1"),
+      (2L, s"$run tail1 tail2"),
+      (3L, run))
+      .toDF("doc_id", "text")
+    val out = Dedup.removeDuplicatedSpans(docs)
+      .orderBy("doc_id").as[(Long, String)].collect()
+    out shouldBe Array(
+      (1L, "pre1 pre2 post1"),
+      (2L, "tail1 tail2"),
+      (3L, ""))
+  }
 }

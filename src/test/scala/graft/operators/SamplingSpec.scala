@@ -9,13 +9,6 @@ class SamplingSpec extends SparkSpec {
   private lazy val docs = (1L to 10000L).map(i => (i, s"lang${i % 4}"))
     .toDF("doc_id", "lang")
 
-  /** Temperature sampling to a literal budget: thresholds, then the
-    * hash-rule acceptance (q175's composition). */
-  private def temperatureMix(df: org.apache.spark.sql.DataFrame,
-      groupCol: String, idCol: String, alpha: Double, budget: Long) =
-    Sampling.temperatureSampleWith(df, groupCol, idCol,
-      Sampling.temperatureThresholds(df, groupCol, alpha, _ => lit(budget)))
-
   test("hashSplit is deterministic and partition-layout independent") {
     val a = Sampling.hashSplit(docs, "doc_id")
       .select("doc_id", "split").as[(Long, String)].collect().toMap
@@ -51,6 +44,33 @@ class SamplingSpec extends SparkSpec {
       "doc_id", rates, defaultRate = 0.1)
       .select("doc_id").as[Long].collect().sorted
     half shouldBe again.filter(_ <= 5000L)
+  }
+
+  test("stratified sampling respects per-stratum fractions") {
+    val got = Sampling.stratified(docs, "lang",
+      Map("lang0" -> 0.5, "lang1" -> 0.1, "lang2" -> 0.0, "lang3" -> 1.0))
+    val counts = got.groupBy("lang").count().as[(String, Long)].collect().toMap
+    counts.getOrElse("lang2", 0L) shouldBe 0L
+    counts("lang3") shouldBe 2500L // fraction 1.0 keeps everything
+    counts("lang0").toDouble / 2500 shouldBe 0.5 +- 0.1
+    counts("lang1").toDouble / 2500 shouldBe 0.1 +- 0.06
+  }
+
+  test("stratifiedExact: exact per-stratum quotas, layout-independent, schema preserved") {
+    // Bernoulli (stratified) is exact only in expectation; this one
+    // must hit greatest(1, ⌊cnt·p⌋) dead on, per stratum.
+    val got = Sampling.stratifiedExact(docs, "lang", "doc_id", 0.2)
+    got.columns shouldBe docs.columns
+    val counts = got.groupBy("lang").count().as[(String, Long)].collect().toMap
+    counts.values.foreach(_ shouldBe 500L) // ⌊2500·0.2⌋ exactly
+    // Deterministic under any input partitioning: same rows selected.
+    val again = Sampling
+      .stratifiedExact(docs.repartition(13), "lang", "doc_id", 0.2)
+      .select("doc_id").as[Long].collect().sorted
+    again shouldBe got.select("doc_id").as[Long].collect().sorted
+    // Tiny stratum: quota floors to 0 → greatest(1, …) keeps one row.
+    val tiny = docs.limit(3).withColumn("lang", lit("solo"))
+    Sampling.stratifiedExact(tiny, "lang", "doc_id", 0.05).count() shouldBe 1L
   }
 
   test("tokenBudget: inclusive prefix-sum cut per stratum, deterministic") {
@@ -136,13 +156,13 @@ class SamplingSpec extends SparkSpec {
     other.toSeq should not be got.toSeq
   }
 
-  test("temperature sampling: alpha<1 boosts small sources, caps at whole source") {
+  test("temperatureSample: alpha<1 boosts small sources, caps at whole source") {
     // Heavy skew: big=900 docs, small=100. At alpha=0.5 the quotas go
     // as sqrt: q_big = 3/4, q_small = 1/4 — the small source's RATE
     // (B*q/n) is boosted 2.5x over natural while big is suppressed.
     val docs = ((1L to 900L).map(i => (i, "big")) ++
       (1001L to 1100L).map(i => (i, "small"))).toDF("doc_id", "source")
-    val out = temperatureMix(docs, "source", "doc_id",
+    val out = Sampling.temperatureSample(docs, "source", "doc_id",
         alpha = 0.5, budget = 400)
       .groupBy("source").agg(count(lit(1)).as("c"))
       .as[(String, Long)].collect().toMap
@@ -154,7 +174,7 @@ class SamplingSpec extends SparkSpec {
     out("big").toDouble shouldBe 300.0 +- 60.0
 
     // alpha = 1 is the natural mix: every source rate = B/N.
-    val nat = temperatureMix(docs, "source", "doc_id",
+    val nat = Sampling.temperatureSample(docs, "source", "doc_id",
         alpha = 1.0, budget = 500)
       .groupBy("source").agg(count(lit(1)).as("c"))
       .as[(String, Long)].collect().toMap
@@ -162,9 +182,9 @@ class SamplingSpec extends SparkSpec {
     nat("small").toDouble shouldBe 50.0 +- 25.0
 
     // Deterministic: identical output under a different layout.
-    val a = temperatureMix(docs, "source", "doc_id", 0.5, 400)
+    val a = Sampling.temperatureSample(docs, "source", "doc_id", 0.5, 400)
       .select("doc_id").as[Long].collect().sorted
-    val b = temperatureMix(docs.repartition(13), "source",
+    val b = Sampling.temperatureSample(docs.repartition(13), "source",
         "doc_id", 0.5, 400)
       .select("doc_id").as[Long].collect().sorted
     a.toSeq shouldBe b.toSeq
@@ -202,7 +222,7 @@ class SamplingSpec extends SparkSpec {
         math.sqrt(math.sqrt(n.toDouble / nn.toDouble)) * 1e9).toLong
   }
 
-  test("temperature sampling: a NULL group participates with its own quota") {
+  test("temperatureSample: a NULL group participates with its own quota") {
     // ADVICE r12: nulls used to be counted into the census total but
     // never matched by the non-null-safe threshold chain — budget
     // allocated to them silently vanished. The null-safe join keeps
@@ -210,7 +230,7 @@ class SamplingSpec extends SparkSpec {
     val docs = ((1L to 600L).map(i => (i, "big")) ++
       (1001L to 1100L).map(i => (i, null: String)))
       .toDF("doc_id", "source")
-    val out = temperatureMix(docs, "source", "doc_id",
+    val out = Sampling.temperatureSample(docs, "source", "doc_id",
         alpha = 0.5, budget = 200)
       .groupBy("source").agg(count(lit(1)).as("c"))
       .as[(Option[String], Long)].collect().toMap
@@ -220,9 +240,9 @@ class SamplingSpec extends SparkSpec {
     val nullTaken = out(None)
     nullTaken.toDouble shouldBe 57.7 +- 25.0
     // Membership is deterministic and layout-independent, nulls included.
-    val a = temperatureMix(docs, "source", "doc_id", 0.5, 200)
+    val a = Sampling.temperatureSample(docs, "source", "doc_id", 0.5, 200)
       .select("doc_id").as[Long].collect().sorted
-    val b = temperatureMix(docs.repartition(7), "source",
+    val b = Sampling.temperatureSample(docs.repartition(7), "source",
         "doc_id", 0.5, 200)
       .select("doc_id").as[Long].collect().sorted
     a.toSeq shouldBe b.toSeq

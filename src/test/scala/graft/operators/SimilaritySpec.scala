@@ -44,30 +44,12 @@ class SimilaritySpec extends SparkSpec {
     approx shouldBe exact
   }
 
-  /** The KNN graph over an inline index: centroids trained on the raw
-    * corpus, one representative per distinct embedding assigned to
-    * them, then [[Similarity.knnJoinCollapsed]] — the frames q114 reads
-    * off the session's shared tables. */
-  private def knnGraph(df: org.apache.spark.sql.DataFrame, k: Int,
-      nCentroids: Int, nprobe: Int) = {
-    val cent = Similarity.trainCentroids(df, nCentroids)
-    val groups = df.groupBy("embedding")
-      .agg(sort_array(collect_list(col("vec_id"))).as("__ids"))
-      .select(element_at(col("__ids"), 1).as("gid"), col("__ids"))
-    val reps = df.join(groups.select("gid"), col("vec_id") === col("gid"))
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-      .withColumn("nrm", Similarity.norm(col("e")))
-    Similarity.knnJoinCollapsed(groups,
-      Similarity.assignToCentroids(reps, cent), cent, k, nprobe)
-  }
-
-  test("KNN graph: full recall vs brute force on separated clusters, heap plan not window") {
+  test("knnJoin: full recall vs brute force on separated clusters, heap plan not window") {
     // Every vector is a query: the graph must agree with N brute-force
     // searches when the probed buckets cover the true neighbors.
     val exact = Similarity.bruteForceTopK(corpus, corpus, k = 4)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val graph = knnGraph(corpus, k = 4, nCentroids = 9, nprobe = 3)
+    val graph = Similarity.knnJoin(corpus, k = 4, nCentroids = 9, nprobe = 3)
     val approx = graph.select("qid", "vec_id").as[(Long, Long)].collect().toSet
     approx shouldBe exact
     // Ranks dense 1..k for every query.
@@ -83,7 +65,7 @@ class SimilaritySpec extends SparkSpec {
     p should include("TopKPerKey")
   }
 
-  test("KNN graph: distinct-content collapse is row-identical to raw semantics on a dup-heavy corpus") {
+  test("knnJoin: distinct-content collapse is row-identical to raw semantics on a dup-heavy corpus") {
     // The sf10x pathology: every vector replicated many times. The
     // collapse must reproduce the RAW per-row semantics exactly —
     // same (qid, vec_id, cos, rank) rows, including intra-group id
@@ -125,7 +107,8 @@ class SimilaritySpec extends SparkSpec {
       .select("qid", "vec_id", "cos", "rank")
       .as[(Long, Long, Double, Long)].collect().toSet
 
-    val got = knnGraph(dupCorpus, k = 4, nCentroids = 6, nprobe = 2)
+    val got = Similarity.knnJoin(dupCorpus, k = 4, nCentroids = 6,
+        nprobe = 2)
       .select("qid", "vec_id", "cos", "rank")
       .as[(Long, Long, Double, Long)].collect().toSet
     got shouldBe raw
@@ -254,6 +237,54 @@ class SimilaritySpec extends SparkSpec {
     buckets.length should be > 1
   }
 
+  test("sqrt-N index sizing: bucket size tracks sqrt(N), recall holds across scales") {
+    // The oracle queries pin nCentroids=16, so bucket membership there
+    // grows linearly with the corpus. This pins the PRODUCTION sizing
+    // rule (nlist ≈ √N): as the corpus grows 4×, mean bucket size must
+    // grow ≈ √4 = 2× (not 4×), and recall against the brute-force
+    // oracle must not degrade with scale.
+    def probeStats(dir: String, tag: String)
+        : (Long, Double, Double, Double) = {
+      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val n = emb.count()
+      val nlist = Similarity.sqrtNlist(n)
+      val idx = Similarity.buildIndex(emb, s"ivfsz_$tag",
+        nCentroids = nlist, trainN = Similarity.sizingTrainN(nlist))
+      val sizes = spark.table(idx.assignedTable)
+        .groupBy("bucket").count().select("count").as[Long].collect()
+      sizes.sum shouldBe n // every vector assigned exactly once
+      val meanBucket = n.toDouble / sizes.length
+      val k = 10
+      val queries = emb.orderBy("vec_id").limit(8)
+      val exact = Similarity.bruteForceTopK(emb, queries, k)
+        .select("qid", "vec_id").as[(Long, Long)].collect().toSet
+      val approx = Similarity
+        .ivfTopK(idx, queries, k, nprobe = 4, "vec_id", "embedding")
+        .select("qid", "vec_id").as[(Long, Long)].collect().toSet
+      val recall = (approx intersect exact).size.toDouble / exact.size
+      info(f"$tag: n=$n nlist=$nlist buckets=${sizes.length} " +
+        f"meanBucket=$meanBucket%.1f maxBucket=${sizes.max} recall=$recall%.2f")
+      (n, meanBucket, sizes.max.toDouble, recall)
+    }
+    val (n1, mb1, mx1, r1) = probeStats("/root/testdata/sf0.001", "small")
+    val (n2, mb2, mx2, r2) = probeStats("/root/testdata/sf0.1", "big")
+    n2.toDouble / n1 should be >= 3.5 // the scales are really a decade apart-ish
+    // Mean bucket size tracks sqrt(N): the ratio to sqrt(N) stays in a
+    // fixed band at BOTH scales (no linear drift).
+    mb1 / math.sqrt(n1.toDouble) should (be >= 0.3 and be <= 3.0)
+    mb2 / math.sqrt(n2.toDouble) should (be >= 0.3 and be <= 3.0)
+    // Growth: 4x rows → ~2x bucket size, nowhere near linear.
+    mb2 / mb1 should be < 3.0
+    // No degenerate mega-bucket: the max stays within a constant of
+    // the mean (hash-seeded + Lloyd keeps balance).
+    mx1 / mb1 should be < 8.0
+    mx2 / mb2 should be < 8.0
+    // Recall does not degrade with scale (same probe budget RULE, not
+    // the same absolute bucket fraction).
+    r2 should be >= r1 - 0.25
+    r1 should be >= 0.3
+  }
+
   test("trainCentroids is layout-independent: same centroids under any input partitioning") {
     val a = Similarity.trainCentroids(corpus, nCentroids = 6)
       .select("cent_id", "ce").as[(Long, Seq[Double])].collect().sortBy(_._1)
@@ -367,5 +398,21 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("rank").select("vec_id").as[Long].collect().take(4)
     got.filter($"qid" === 0).orderBy("rank")
       .select("vec_id").as[Long].collect() shouldBe exact
+  }
+
+  test("hardNegativesIvf: same exclusion inside probed buckets, full recall at covering probes") {
+    val queries = labeled.filter($"vec_id" < 3)
+    val exact = Similarity.hardNegatives(labeled, queries, k = 4)
+      .select("qid", "vec_id").as[(Long, Long)].collect().toSet
+    val approx = Similarity.hardNegativesIvf(labeled, queries, k = 4,
+      nCentroids = 9, nprobe = 9)
+    // Invariant: no same-label row even when every bucket is probed.
+    val lbl = labeled.select($"vec_id".as("nid"), $"label".as("nlabel"))
+    val qlbl = labeled.select($"vec_id".as("qid"), $"label".as("qlabel"))
+    approx.join(lbl, $"vec_id" === $"nid").join(qlbl, Seq("qid"))
+      .filter($"nlabel" === $"qlabel").count() shouldBe 0
+    // Probing every bucket ⇒ identical to the exact miner.
+    approx.select("qid", "vec_id").as[(Long, Long)].collect().toSet shouldBe
+      exact
   }
 }

@@ -22,6 +22,7 @@ class KmvSketchSpec extends SparkSpec {
     s.toSeq shouldBe s.sorted.toSeq
     s.toSet shouldBe vals.map(v => StableHash60.hash(
       org.apache.spark.unsafe.types.UTF8String.fromString(v))).toSet
+    Kmv.estimate(s, 256) shouldBe 50.0
   }
 
   test("sketch is a function of the set: any partitioning, any order") {
@@ -29,6 +30,79 @@ class KmvSketchSpec extends SparkSpec {
     val a = sketchOf(vals, k = 128, parts = 1)
     val b = sketchOf(scala.util.Random.shuffle(vals), k = 128, parts = 13)
     b.toSeq shouldBe a.toSeq // byte-identical, not just close
+  }
+
+  test("merge == sketch of concatenation") {
+    val x = (0 until 3000).map(i => s"x$i")
+    val y = (1500 until 4500).map(i => s"x$i")
+    val merged = Kmv.mergeMinK(sketchOf(x, 128), sketchOf(y, 128), 128)
+    merged.toSeq shouldBe sketchOf(x ++ y, 128).toSeq
+  }
+
+  test("distinct estimate lands within the KMV error envelope") {
+    val n = 20000
+    val vals = (0 until n).map(i => s"d$i")
+    val k = 512
+    val est = Kmv.estimate(sketchOf(vals, k), k)
+    // standard error ~ n/sqrt(k-2) ⇒ 4σ ≈ 18% at k=512
+    math.abs(est - n) / n should be < 0.18
+  }
+
+  test("set-operation estimates track exact jaccard/intersection/union") {
+    // |A| = 12k, |B| = 12k, |A ∩ B| = 6k ⇒ J = 6/18 = 1/3
+    val a = (0 until 12000).map(i => s"s$i")
+    val b = (6000 until 18000).map(i => s"s$i")
+    val k = 1024
+    val sa = sketchOf(a, k)
+    val sb = sketchOf(b, k)
+    val j = Kmv.jaccardEstimate(sa, sb, k)
+    math.abs(j - 1.0 / 3.0) should be < 0.05
+    val inter = Kmv.intersectEstimate(sa, sb, k)
+    math.abs(inter - 6000) / 6000.0 should be < 0.15
+    val uni = Kmv.unionEstimate(sa, sb, k)
+    math.abs(uni - 18000) / 18000.0 should be < 0.15
+  }
+
+  test("disjoint sets estimate ~zero intersection") {
+    val a = (0 until 5000).map(i => s"a$i")
+    val b = (0 until 5000).map(i => s"b$i")
+    val k = 256
+    Kmv.jaccardEstimate(sketchOf(a, k), sketchOf(b, k), k) should be < 0.02
+  }
+
+  test("vocabOverlapApprox == exact q73 when vocabularies fit inside k") {
+    val dir = "/root/testdata/sf0.001"
+    val exact = graft.SparkEntry.allDefs.find(_.name == "q73_vocab_overlap")
+      .get.build(spark, dir)
+      .select("src_a", "src_b", "jaccard")
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2))
+      .toMap
+    // k larger than any source vocabulary ⇒ sketches exact ⇒ estimates
+    // EXACTLY the q73 jaccard (same rounding applied here)
+    val approx = graft.queries.TextQueries
+      .vocabOverlapApprox(spark, dir, k = 4096)
+      .collect().map(r => (r.getString(0), r.getString(1)) ->
+        math.round(r.getDouble(5) * 1e6) / 1e6).toMap
+    approx.keySet shouldBe exact.keySet
+    approx.foreach { case (pair, j) => j shouldBe exact(pair) }
+  }
+
+  test("vocabOverlapApprox tracks exact jaccard in the sketched regime") {
+    val dir = "/root/testdata/sf0.01"
+    val exact = graft.SparkEntry.allDefs.find(_.name == "q73_vocab_overlap")
+      .get.build(spark, dir)
+      .select("src_a", "src_b", "jaccard")
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2))
+      .toMap
+    // k = 64 forces real estimation (vocabularies exceed the sketch)
+    val approx = graft.queries.TextQueries
+      .vocabOverlapApprox(spark, dir, k = 64)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(5))
+      .toMap
+    approx.keySet shouldBe exact.keySet
+    val errs = approx.map { case (p, j) => math.abs(j - exact(p)) }
+    errs.max should be < 0.25 // 1/sqrt(62) ~ 0.13 σ; 2σ bound
+    (errs.sum / errs.size) should be < 0.10
   }
 
   test("null inputs are skipped; analysis rejects bad args") {

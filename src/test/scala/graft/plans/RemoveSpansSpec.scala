@@ -56,7 +56,7 @@ class RemoveSpansSpec extends SparkSpec {
         col("rs.cleaned").as("cleaned"))
   }
 
-  // Docs sharing 6-token windows so duplicatedSpanArrays emits real islands:
+  // Docs sharing 6-token windows so duplicatedSpans emits real islands:
   // d1/d2 share a long run (mid-doc spans), d3 is a full copy of d1
   // (fully covered), d4 short (< 6 tokens, no windows), d5 empty, d6
   // whitespace-only, d7 unique long doc (no spans), d8/d9 share the
@@ -82,11 +82,7 @@ class RemoveSpansSpec extends SparkSpec {
       posexplode(CatalystBridge.column(RollingHashWindows(
         CatalystBridge.expr(trim(col("text"))), 6))).as(Seq("p", "wh")))
       .select(col("doc_id"), (col("p").cast("long") + 1L).as("i"), col("wh"))
-    val spans = graft.operators.Dedup.duplicatedSpanArrays(wins, 6)
-      .select(col("doc_id"),
-        explode(arrays_zip(col("__ss").as("s"), col("__es").as("e")))
-          .as("sp"))
-      .select(col("doc_id"), col("sp.s").as("s"), col("sp.e").as("e"))
+    val spans = graft.operators.Dedup.duplicatedSpans(wins, 6)
     val a = newRebuild(docs, spans).orderBy("doc_id").collect()
     val b = oldRebuild(docs, spans).orderBy("doc_id").collect()
     a.length shouldBe b.length
@@ -98,6 +94,22 @@ class RemoveSpansSpec extends SparkSpec {
     val removed = a.map(r => (r.getLong(0), r.getLong(1)))
     assert(removed.exists(_._2 == 0L), "a fully-covered doc must exist")
     assert(a.exists(r => r.getString(2).nonEmpty && r.getLong(1) > 0))
+  }
+
+  test("removeDuplicatedSpans end-to-end equals the explode shape") {
+    val cleaned = graft.operators.Dedup.removeDuplicatedSpans(docs)
+      .orderBy("doc_id").collect()
+    val wins = docs.select(col("doc_id"),
+      posexplode(CatalystBridge.column(RollingHashWindows(
+        CatalystBridge.expr(trim(col("text"))), 6))).as(Seq("p", "wh")))
+      .select(col("doc_id"), (col("p").cast("long") + 1L).as("i"), col("wh"))
+    val spans = graft.operators.Dedup.duplicatedSpans(wins, 6)
+    val ref = oldRebuild(docs, spans).orderBy("doc_id").collect()
+    cleaned.zip(ref).foreach { case (n, o) =>
+      withClue(s"doc ${n.getLong(0)}: ") {
+        n.getString(1) shouldBe o.getString(2)
+      }
+    }
   }
 
   test("interpreted eval matches codegen") {

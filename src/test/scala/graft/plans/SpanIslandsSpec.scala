@@ -77,7 +77,7 @@ class SpanIslandsSpec extends SparkSpec {
     }
   }
 
-  test("Dedup.duplicatedSpanArrays: one island per doc sharing a run, unique docs absent") {
+  test("Dedup.duplicatedSpans keeps the exploded (doc_id, s, e) shape") {
     val run = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = Seq(
       (1L, s"one two $run three four"),
@@ -88,15 +88,13 @@ class SpanIslandsSpec extends SparkSpec {
       posexplode(CatalystBridge.column(RollingHashWindows(
         CatalystBridge.expr(trim(col("text"))), 6))).as(Seq("p", "wh")))
       .select(col("doc_id"), (col("p").cast("long") + 1L).as("i"), col("wh"))
-    val rows = graft.operators.Dedup.duplicatedSpanArrays(wins, 6)
-      .orderBy("doc_id").as[(Long, Seq[Long], Seq[Long])].collect()
+    val spans = graft.operators.Dedup.duplicatedSpans(wins, 6)
+    spans.columns.toSeq shouldBe Seq("doc_id", "s", "e")
+    val rows = spans.orderBy("doc_id", "s").collect()
     // d1/d2 share the 10-token run: one island each, 10 covered tokens;
     // d3 unique: absent.
-    rows.map(_._1).toSeq shouldBe Seq(1L, 2L)
-    rows.foreach { case (_, ss, es) =>
-      ss.length shouldBe 1
-      (es.head - ss.head + 1) shouldBe 10L
-    }
+    rows.map(_.getLong(0)).toSeq shouldBe Seq(1L, 2L)
+    rows.foreach { r => (r.getLong(2) - r.getLong(1) + 1) shouldBe 10L }
   }
 
   test("interpreted eval matches codegen and sorts unordered input") {

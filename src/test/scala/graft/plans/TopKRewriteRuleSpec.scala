@@ -57,7 +57,7 @@ class TopKRewriteRuleSpec extends AnyFunSuite with Matchers {
   }
 
   test("a BARE Filter(rank<=k, Window) with no Project above rewrites " +
-    "too (API surfaces returning the ranked frame as-is)") {
+    "too (API surfaces returning the ranked frame as-is, e.g. Pq.topK)") {
     import spark.implicits._
     val rows = for { key <- 1 to 5; i <- 1 to 20 }
       yield (key.toLong, (key * 100 + i).toLong, ((i * 7) % 20).toDouble)
