@@ -1,9 +1,16 @@
 package graft.pipeline
 
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import graft.CacheRegistry
 import graft.etl.{Schemas, Transform}
 import graft.sources.FileIO
-import graft.star.{JobStar, JobStarBuilder, SkStrategy}
+import graft.star.{JobStar, JobStarBuilder, SkStrategy, StarSchemaBuilder}
 
 /** End-to-end pipeline — the engine's replacement for the reference's
   * Airflow DAG chain (`dags/master_pipeline.py:76`):
@@ -62,24 +69,49 @@ object JobsPipeline {
     *     count, so the fact↔bridge join (every skill-flatten BI query)
     *     reads co-located buckets and shuffles NEITHER side — at 100 TB
     *     that join is the biggest repeated shuffle in the workload.
+    *
+    * Both bucket counts follow the landing table's size in bytes
+    * ([[FileIO.bucketCount]], floor 1), which the file listing already
+    * knows: one bucket per 256 MB of landing data, so a nightly batch
+    * of a few MB writes one fact file per date instead of up to one
+    * per date and bucket.
+    *
+    * Every frame's lineage runs once: the bounded dims are local
+    * relations (each written as one file), `dim_job_details` is
+    * persisted by the builder and the fact (read by the bridge) here.
+    * The seven dims read nothing another write produces, so they are
+    * written side by side; each is a small job whose time is mostly
+    * driver overhead.
     */
   def buildStar(spark: SparkSession, landing: DataFrame, now: Column,
-      db: String, strategy: SkStrategy.Value,
-      numBuckets: Int = 8): JobStar = {
+      db: String, strategy: SkStrategy.Value): JobStar = {
     val star = JobStarBuilder.build(landing, now, strategy)
-    star.all.foreach { case (name, df) =>
-      val writer = df.write.mode(SaveMode.Overwrite).format("parquet")
+    val buckets = FileIO.bucketCount(StarSchemaBuilder.plannedBytes(landing),
+      floor = 1)
+    CacheRegistry.persistTracked(star.fact, CacheRegistry.DataSized)
+    def write(name: String): Unit = {
+      val df = star.all(name)
       (name match {
         case "fact_job_postings" =>
-          writer.partitionBy("date_sk")
-            .bucketBy(numBuckets, "job_posting_pk")
+          df.write.partitionBy("date_sk")
+            .bucketBy(buckets, "job_posting_pk")
             .sortBy("job_posting_pk")
         case "bridge_job_skill" =>
-          writer.bucketBy(numBuckets, "job_posting_pk")
+          df.write.bucketBy(buckets, "job_posting_pk")
             .sortBy("job_posting_pk")
-        case _ => writer
-      }).saveAsTable(s"$db.$name")
+        case _ if df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] =>
+          df.coalesce(1).write
+        case _ => df.write
+      }).mode(SaveMode.Overwrite).format("parquet").saveAsTable(s"$db.$name")
     }
+    val dims = star.all.keys.filter(_.startsWith("dim_")).toSeq
+    val pool = Executors.newFixedThreadPool(dims.size)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      Await.result(Future.traverse(dims)(n => Future(write(n))), Duration.Inf)
+    } finally pool.shutdown()
+    write("fact_job_postings")
+    write("bridge_job_skill")
     star
   }
 

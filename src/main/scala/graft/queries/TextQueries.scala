@@ -276,13 +276,9 @@ object TextQueries {
     }
 
   /** The pure sizing rule behind [[shardCount]], separated for the
-    * spec: ceil(bytes / 256 MB) rounded up to a power of two,
-    * clamped to [16, 4096]. */
-  private[queries] def shardCountForBytes(bytes: Long): Int = {
-    val target = math.max(16L, (bytes + (256L << 20) - 1) / (256L << 20))
-    val pow2 = java.lang.Long.highestOneBit(target)
-    math.min(4096L, if (pow2 == target) pow2 else pow2 * 2).toInt
-  }
+    * spec: [[graft.sources.FileIO.bucketCount]] with a floor of 16. */
+  private[queries] def shardCountForBytes(bytes: Long): Int =
+    graft.sources.FileIO.bucketCount(bytes, floor = 16)
 
   /** Session-materialized rolling-hash window frame (doc_id, i, wh),
     * L = 6 — the ONE (scan + tokenize + hash + explode) pass shared by

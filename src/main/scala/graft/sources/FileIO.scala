@@ -62,6 +62,17 @@ object FileIO {
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).format("parquet").saveAsTable(table)
 
+  /** Bucket count for `bytes` of source data: one bucket per 256 MB,
+    * rounded up to a power of two, clamped to [`floor`, 4096]. Beyond
+    * 4096 buckets the per-bucket file count dominates. Two tables
+    * sized from the same bytes get the same count, so a join between
+    * them stays co-bucketed. */
+  def bucketCount(bytes: Long, floor: Int): Int = {
+    val target = math.max(floor.toLong, (bytes + (256L << 20) - 1) / (256L << 20))
+    val pow2 = java.lang.Long.highestOneBit(target)
+    math.min(4096L, if (pow2 == target) pow2 else pow2 * 2).toInt
+  }
+
   /** Bucketed warehouse table: co-locates join keys at write time so a
     * later join of two tables bucketed on the same key by the same
     * count needs NO shuffle on either side — at 100 TB the fact↔bridge

@@ -1,7 +1,11 @@
 package graft.star
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.{functions => gf}
 
 /** The full dimensional model over a landing batch. */
@@ -30,12 +34,20 @@ final case class JobStar(
 /** Assembles the reference's 7-dim + fact + bridge star from a landing
   * batch (semantics: `dags/spark_etl_script.py:86-179`), Spark-first:
   *
-  *   - every dim is distinct + normalize + dense SK (strategy pluggable,
-  *     Auto by default: distributed numbering above the size threshold);
+  *   - every dim is distinct + normalize + dense SK. The six bounded
+  *     dims (company, publisher, employment type, location, skill,
+  *     date) come out of ONE aggregate over the landing batch and are
+  *     collected into local relations, so the 6 dim writes, the fact's
+  *     lookups and the bridge read them without re-running any
+  *     lineage. The two fact-sized frames (`dim_job_details` and the
+  *     fact PK) are numbered by `strategy`, with Auto resolved once per
+  *     batch from the landing frame's planned size in bytes
+  *     ([[SkStrategy.resolve]]): no count job;
   *   - the fact resolves SKs via a 6-join chain on COMPUTED keys
   *     (normalized strings / dates). The 5 genuinely small dims
   *     (company/publisher/employment-type/location/date — bounded
-  *     vocabularies) are explicitly `broadcast()`; `dim_job_details` is
+  *     vocabularies) are explicitly `broadcast()`, as one lookup
+  *     relation that Spark broadcasts once; `dim_job_details` is
   *     NOT: it is 1:1 with distinct landing jobs, i.e. fact-sized, so a
   *     forced broadcast would OOM the driver at scale. Its join is left
   *     to Spark's size-checked planning (sort-merge above the
@@ -73,6 +85,8 @@ object JobStarBuilder {
       strategy: SkStrategy.Value = SkStrategy.Auto,
       highlightsFixedParse: Boolean = false): JobStar = {
 
+    val factStrategy = SkStrategy.resolve(strategy,
+      StarSchemaBuilder.plannedBytes(landing))
     val raw0 = landing
       .withColumn("job_natural_key",
         gf.stableHash(concat_ws("", naturalKeyCols.map(col): _*)))
@@ -81,32 +95,31 @@ object JobStarBuilder {
       .withColumn("job_posted_at_utc",
         coalesce(to_timestamp(col("job_posted_at_datetime_utc")),
           col("job_posted_at_ts")))
-    // C1 (reference spark_etl_script.py:146-153): raw feeds all 7
-    // dims plus the fact chain — without the cache every consumer
-    // re-scans and re-derives the landing batch. Tracked (DataSized:
+    // C1 (reference spark_etl_script.py:146-153): raw feeds the
+    // bounded-dims aggregate, dim_job_details, the fact chain and the
+    // bridge — without the cache every consumer re-scans and
+    // re-derives the landing batch. Tracked (DataSized:
     // one row per landing record) so embedded callers reclaim it via
     // CacheRegistry's drain/auto-drain like every other graft persist.
     val raw = graft.CacheRegistry.persistTracked(raw0,
       graft.CacheRegistry.DataSized)
 
-    val dimCompany = StarSchemaBuilder.buildDim(
-      raw, gf.normName(col("employer_name")), "company_sk", "employer_name",
-      strategy)
-    val dimPublisher = StarSchemaBuilder.buildDim(
-      raw, gf.normTitle(col("job_publisher")), "publisher_sk", "publisher_name",
-      strategy)
-    val dimEmploymentType = StarSchemaBuilder.buildDim(
-      raw, gf.normTitle(col("job_employment_type")), "employment_type_sk",
-      "employment_type_name", strategy)
-
-    val dimLocation = StarSchemaBuilder.withSurrogateKey(
-      raw.select("job_location", "job_city", "job_state", "job_country")
-        .filter(col("job_location").isNotNull).distinct(),
-      Seq("job_location"), "location_sk", strategy)
-      .select("location_sk", "job_location", "job_city", "job_state",
-        "job_country")
-
-    val dimDate = StarSchemaBuilder.buildDateDim(raw, col("job_posted_at_utc"))
+    val dims = boundedDims(raw)
+    val dimCompany = dims(Company)
+      .select(col("sk").as("company_sk"), col("key").as("employer_name"))
+    val dimPublisher = dims(Publisher)
+      .select(col("sk").as("publisher_sk"), col("key").as("publisher_name"))
+    val dimEmploymentType = dims(EmploymentType)
+      .select(col("sk").as("employment_type_sk"),
+        col("key").as("employment_type_name"))
+    val dimLocation = dims(Location)
+      .select(col("sk").as("location_sk"), col("key").as("job_location"),
+        col("city").as("job_city"), col("state").as("job_state"),
+        col("country").as("job_country"))
+    val dimSkill = dims(Skill)
+      .select(col("sk").as("skill_sk"), col("key").as("skill_name"))
+    val dimDate = StarSchemaBuilder.dateAttributes(dims(PostedDate)
+      .select(date_from_unix_date(col("key").cast("int")).as("full_date")))
 
     // Bit-compat mode parses through the reference's declared array
     // schema (NULL on the object payload) and keeps the reference's
@@ -131,25 +144,33 @@ object JobStarBuilder {
         col("job_posted_at"),
         col("job_posted_at_utc"))
       .filter(col("job_natural_key").isNotNull)
+    // GlobalRowNumber numbers in one task: gathering the rows there
+    // first lets the dedupe and the numbering share one exchange.
+    val jobInput =
+      if (factStrategy == SkStrategy.GlobalRowNumber) jobCols.repartition(1)
+      else jobCols
     val jobRows =
       if (highlightsFixedParse) {
         val rest = jobCols.columns.filter(_ != "job_natural_key")
-        jobCols.groupBy("job_natural_key")
+        jobInput.groupBy("job_natural_key")
           .agg(min(struct(rest.map(col): _*)).as("r"))
           .select(col("job_natural_key") +: rest.map(c => col(s"r.$c")): _*)
-      } else jobCols.distinct()
+      } else jobInput.distinct()
     val dimJobDetails0 = StarSchemaBuilder.withSurrogateKey(
-      jobRows, Seq("job_natural_key"), "job_sk", strategy)
-    val dimJobDetails =
+      jobRows, Seq("job_natural_key"), "job_sk", factStrategy)
+    // Persisted: its write and the fact's join both read it.
+    val dimJobDetails = graft.CacheRegistry.persistTracked(
       if (highlightsFixedParse)
         dimJobDetails0
           .withColumn("job_highlights_map",
             gf.parseJsonMap(col("job_highlights")))
           .drop("job_highlights")
-      else dimJobDetails0
+      else dimJobDetails0,
+      graft.CacheRegistry.DataSized)
 
     // Skills: the reference's bracket-string parser → explode →
-    // normalize → non-empty filter (spark_etl_script.py:132-139).
+    // normalize → non-empty filter (spark_etl_script.py:132-139);
+    // dim_skill is the bounded aggregate's view of the same rule.
     val skillsExploded = raw
       .select(col("job_natural_key"),
         explode_outer(gf.parseBracketList(col("skills"))).as("skill_name_raw"))
@@ -157,35 +178,53 @@ object JobStarBuilder {
         gf.normTitle(col("skill_name_raw")).as("skill_name"))
       .filter(col("skill_name").isNotNull && col("skill_name") =!= "")
 
-    val dimSkill = StarSchemaBuilder.withSurrogateKey(
-      skillsExploded.select("skill_name").distinct(),
-      Seq("skill_name"), "skill_sk", strategy)
-      .select("skill_sk", "skill_name")
-
     // Fact: 6-join chain on computed keys (J1-J6). Small dims are
     // broadcast; dim_job_details grows with the fact (one row per
     // distinct natural key) so it must NOT carry a broadcast hint —
     // the hint would override Spark's size check and collect a
     // fact-sized build side onto the driver at 100x scale.
-    val resolved = raw
-      .join(dimJobDetails.select("job_sk", "job_natural_key"),
-        Seq("job_natural_key"))
-      .join(broadcast(dimCompany),
-        gf.normName(raw("employer_name")) === dimCompany("employer_name"), "left")
-      .join(broadcast(dimPublisher),
-        gf.normTitle(raw("job_publisher")) === dimPublisher("publisher_name"), "left")
-      .join(broadcast(dimEmploymentType),
-        gf.normTitle(raw("job_employment_type")) ===
-          dimEmploymentType("employment_type_name"), "left")
-      .join(broadcast(dimLocation.select("location_sk", "job_location")),
-        raw("job_location") === dimLocation("job_location"), "left")
-      .join(broadcast(dimDate.select("date_sk", "full_date")),
-        to_date(col("job_posted_at_utc")) === dimDate("full_date"), "left")
+    //
+    // The five bounded lookups all read one local relation of
+    // (dim tag | key, sk) rows, taken from the dims themselves (a
+    // collect of a local relation runs no job). Each join gets its own
+    // copy of those rows: the five build sides are the same plan, so
+    // Spark broadcasts the relation once and reuses the exchange.
+    val lookupRows = Seq(
+        dimCompany.select(col("employer_name"), col("company_sk")),
+        dimPublisher.select(col("publisher_name"), col("publisher_sk")),
+        dimEmploymentType.select(col("employment_type_name"),
+          col("employment_type_sk")),
+        dimLocation.select(col("job_location"), col("location_sk")),
+        dimDate.select(col("full_date").cast("string"),
+          col("date_sk").cast("long")))
+      .zipWithIndex.flatMap { case (d, tag) =>
+        d.collect().map(r => Row(s"$tag|${r.getString(0)}", r.getLong(1)))
+      }.asJava
+    val lookupSchema = new StructType()
+      .add("lookup_key", StringType).add("sk", LongType)
+    def lookup(df: DataFrame, tag: Int, key: Column, sk: String): DataFrame = {
+      val l = raw.sparkSession.createDataFrame(lookupRows, lookupSchema)
+      df.join(broadcast(l), concat(lit(s"$tag|"), key) === l("lookup_key"),
+          "left")
+        .drop("lookup_key").withColumnRenamed("sk", sk)
+    }
+    val resolved = Seq(
+        (gf.normName(raw("employer_name")), "company_sk"),
+        (gf.normTitle(raw("job_publisher")), "publisher_sk"),
+        (gf.normTitle(raw("job_employment_type")), "employment_type_sk"),
+        (raw("job_location"), "location_sk"),
+        (to_date(col("job_posted_at_utc")).cast("string"), "date_sk"))
+      .zipWithIndex.foldLeft(raw.join(
+          dimJobDetails.select("job_sk", "job_natural_key"),
+          Seq("job_natural_key"))) {
+        case (df, ((key, sk), tag)) => lookup(df, tag, key, sk)
+      }
+      .withColumn("date_sk", col("date_sk").cast("int"))
 
     val fact = StarSchemaBuilder.withSurrogateKey(
         resolved.select("job_natural_key", "job_sk", "company_sk",
           "location_sk", "date_sk", "employment_type_sk", "publisher_sk"),
-        Seq("job_natural_key"), "job_posting_pk", strategy)
+        Seq("job_natural_key"), "job_posting_pk", factStrategy)
       .withColumn("job_count", lit(1L))
       .select("job_posting_pk", "job_natural_key", "job_sk", "company_sk",
         "location_sk", "date_sk", "employment_type_sk", "publisher_sk",
@@ -203,4 +242,71 @@ object JobStarBuilder {
     JobStar(dimCompany, dimPublisher, dimEmploymentType, dimLocation,
       dimDate, dimJobDetails, dimSkill, fact, bridge)
   }
+
+  // Tags of the bounded dims in the one aggregate that derives them.
+  private val Company = 0
+  private val Publisher = 1
+  private val EmploymentType = 2
+  private val Location = 3
+  private val Skill = 4
+  private val PostedDate = 5
+
+  /** One `(dim, key, city, state, country)` entry; only locations
+    * carry the three attributes. */
+  private def entry(dim: Int, key: Column,
+      attrs: Seq[Column] = Seq.fill(3)(lit(null).cast("string"))): Column =
+    struct(lit(dim).as("dim") +: key.as("key") +:
+      Seq("city", "state", "country").zip(attrs).map { case (n, c) => c.as(n) }: _*)
+
+  /** Every bounded dim of `raw` from one aggregate, collected to the
+    * driver: tag → local relation of `(dim, key, city, state, country,
+    * sk)`. Each landing row explodes into its normalized company,
+    * publisher, employment type, location, posted date (days since
+    * epoch) and skills. The distinct entries are numbered 1..N per dim
+    * on the driver, in Spark's ascending order of `(key, city, state,
+    * country)`: binary string order, nulls first. Those are the dense
+    * keys a `row_number over orderBy(key)` per dim gives, without a
+    * second shuffle. The vocabularies are bounded, which is also why
+    * the fact may broadcast them. */
+  private def boundedDims(raw: DataFrame): Map[Int, DataFrame] = {
+    val skills = coalesce(gf.parseBracketList(col("skills")),
+      typedLit(Seq.empty[String]))
+    val entries = concat(
+      array(
+        entry(Company, gf.normName(col("employer_name"))),
+        entry(Publisher, gf.normTitle(col("job_publisher"))),
+        entry(EmploymentType, gf.normTitle(col("job_employment_type"))),
+        entry(Location, col("job_location"),
+          Seq(col("job_city"), col("job_state"), col("job_country"))),
+        entry(PostedDate,
+          unix_date(to_date(col("job_posted_at_utc"))).cast("string"))),
+      transform(skills, s => entry(Skill, gf.normTitle(s))))
+    val distinctEntries = raw.select(explode(entries).as("e")).select("e.*")
+      .filter(col("key").isNotNull &&
+        (col("dim") =!= Skill || col("key") =!= ""))
+      .distinct()
+    val schema = distinctEntries.schema.add("sk", LongType, nullable = false)
+    val byDim = distinctEntries.collect().groupBy(_.getInt(0))
+    val spark = raw.sparkSession
+    Seq(Company, Publisher, EmploymentType, Location, Skill, PostedDate)
+      .map { d =>
+        val numbered = byDim.getOrElse(d, Array.empty[Row])
+          .sortWith((a, b) => compareEntries(a, b) < 0)
+          .zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
+        d -> spark.createDataFrame(numbered.toSeq.asJava, schema)
+      }.toMap
+  }
+
+  /** Spark's ascending order of `(key, city, state, country)`: UTF-8
+    * binary string comparison, nulls first. */
+  private def compareEntries(a: Row, b: Row): Int =
+    (1 to 4).iterator.map { i =>
+      (Option(a.getString(i)), Option(b.getString(i))) match {
+        case (None, None) => 0
+        case (None, _) => -1
+        case (_, None) => 1
+        case (Some(x), Some(y)) =>
+          UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      }
+    }.find(_ != 0).getOrElse(0)
 }

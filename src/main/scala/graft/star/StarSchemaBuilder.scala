@@ -23,13 +23,16 @@ import org.apache.spark.sql.functions._
   *     bottlenecked on one core beyond ~10^8 dim rows. Kept only as the
   *     explicit bit-compat mode.
   *
-  *   - [[SkStrategy.Auto]] (the default) — counts the (persisted)
-  *     input once and picks: GlobalRowNumber when the frame is small
-  *     enough that a single-task sort is cheaper than the two-pass
-  *     machinery (sampling job + two passes), PartitionedOffset above
-  *     the threshold. Never hits the cliff at scale, never pays the
-  *     scale machinery for a 25-row dim. The count is one cheap
-  *     aggregate over a frame both paths materialize anyway.
+  *   - [[SkStrategy.Auto]] (the default) — picks GlobalRowNumber when
+  *     the input is small enough that a single-task sort is cheaper
+  *     than the two-pass machinery (sampling job + two passes), and
+  *     PartitionedOffset above the threshold. Never hits the cliff at
+  *     scale, never pays the scale machinery for a 25-row dim. The job
+  *     star resolves it once per batch from the landing table's size
+  *     in bytes ([[SkStrategy.resolve]]), which the file listing
+  *     already knows, so the decision launches no job. A direct
+  *     `withSurrogateKey(…, Auto)` call has no such size at hand: it
+  *     persists its input and counts it.
   *
   * All strategies produce identical output whenever `orderCols` has no
   * duplicate tuples (always true after the dim's `distinct()`).
@@ -40,9 +43,26 @@ object SkStrategy extends Enumeration {
   /** Above this row count Auto switches to the distributed numbering;
     * below it a single-task sort of ≤4M skinny rows is milliseconds. */
   val AutoThreshold: Long = 4L * 1024 * 1024
+
+  /** [[AutoThreshold]]'s counterpart for a landing batch, in bytes: a
+    * 500-listing perfbench batch lands as ~340 KB of parquet, so 1 GiB
+    * is ~1.5 M listings, inside the row threshold. */
+  val AutoThresholdBytes: Long = 1L << 30
+
+  /** `strategy` with Auto resolved for an input of `bytes`. */
+  def resolve(strategy: Value, bytes: Long): Value =
+    if (strategy != Auto) strategy
+    else if (bytes <= AutoThresholdBytes) GlobalRowNumber
+    else PartitionedOffset
 }
 
 object StarSchemaBuilder {
+
+  /** The planner's estimate of `df`'s size in bytes. For a table scan
+    * it is the file listing's total, so reading it launches no job. */
+  def plannedBytes(df: DataFrame): Long =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(BigInt(Long.MaxValue)).toLong
 
   /** Distinct + normalize + dense surrogate key. Dimension rows are tiny
     * relative to the fact, so the distinct's shuffle is the real cost;
@@ -134,10 +154,14 @@ object StarSchemaBuilder {
     * `dags/spark_etl_script.py:112-120`): one row per distinct date with
     * yyyyMMdd integer SK and calendar attributes. */
   def buildDateDim(src: DataFrame, dateCol: Column): DataFrame =
-    src.select(to_date(dateCol).as("full_date"))
+    dateAttributes(src.select(to_date(dateCol).as("full_date"))
       .filter(col("full_date").isNotNull)
-      .distinct()
-      .select(
+      .distinct())
+
+  /** The date dimension's columns for a frame of distinct, non-null
+    * `full_date` values. */
+  def dateAttributes(dates: DataFrame): DataFrame =
+    dates.select(
         date_format(col("full_date"), "yyyyMMdd").cast("int").as("date_sk"),
         col("full_date"),
         date_format(col("full_date"), "EEEE").as("day_of_week"),

@@ -113,6 +113,47 @@ class JobsPipelineSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("buildStar runs a bounded number of Spark jobs; fact and bridge share one bucket") {
+    star // the landing table the main pipeline run loaded
+    val landing = spark.table("graft_test.landing_job_listings")
+    JobsPipeline.setup(spark, "graft_jobs")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // The bus is async FIFO: sentinel A flushes any straggler events
+      // from earlier cases; everything counted after n0 started after
+      // A, and sentinel B is the window's last job. An RDD count is
+      // exactly ONE job.
+      def flushWith(atLeast: Int): Unit = {
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        val deadline = System.currentTimeMillis + 30000
+        while (jobs.get() < atLeast && System.currentTimeMillis < deadline)
+          Thread.sleep(20)
+      }
+      flushWith(1)
+      val n0 = jobs.get()
+      JobsPipeline.buildStar(spark, landing,
+        lit("2026-01-01 00:00:00").cast("timestamp"), "graft_jobs",
+        graft.star.SkStrategy.Auto)
+      flushWith(n0 + 1)
+      // One aggregate for the bounded dims, one write per table, one
+      // shared broadcast for the five bounded lookups: 14 jobs on this
+      // fixture, where one build per dim took 36.
+      (jobs.get() - n0 - 1) should be <= 14
+    } finally spark.sparkContext.removeSparkListener(listener)
+    def buckets(t: String) = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
+        t, Some("graft_jobs")))
+      .bucketSpec.map(_.numBuckets)
+    buckets("fact_job_postings") shouldBe buckets("bridge_job_skill")
+    buckets("fact_job_postings") shouldBe Some(1)
+  }
+
   test("date dim covers the parsed posted dates, including relative-time fallback") {
     // 2025-12-29, 2025-12-31, 2025-12-20 from explicit UTC; the
     // "yesterday" record has no UTC timestamp and parses to NULL

@@ -22,16 +22,30 @@ class PlanAuditSpec extends SparkSpec with PredicateHelper {
     d.build(spark, dir).queryExecution.executedPlan.toString
   }
 
+  /** One registered query's plan, built once for every suite-wide
+    * case: the executed plan, its string, and [[planTrees]] of it. */
+  private final case class Built(
+      name: String, executed: SparkPlan, text: String, trees: Seq[SparkPlan]) {
+    def physical: SparkPlan = unwrapAqe(executed)
+  }
+
+  /** Every registered query, built once. The cache is cleared after
+    * each build, so one query's persists stay out of the next plan. */
+  private lazy val built: Seq[Built] = SparkEntry.allDefs.map { d =>
+    val p = d.build(spark, dir).queryExecution.executedPlan
+    val b = Built(d.name, p, p.toString, planTrees(p))
+    spark.catalog.clearCache()
+    b
+  }
+
   test("NO query plans a cartesian product") {
     // The only tolerated nested-loop shape is a BROADCAST one-row side
     // (q46's N frame, q23's max-SK frame) — an unbounded
     // CartesianProduct is always a defect at scale.
-    SparkEntry.allDefs.foreach { d =>
-      val p = d.build(spark, dir).queryExecution.executedPlan.toString
-      withClue(s"${d.name}: ") {
-        p should not include "CartesianProduct"
+    built.foreach { b =>
+      withClue(s"${b.name}: ") {
+        b.text should not include "CartesianProduct"
       }
-      spark.catalog.clearCache()
     }
   }
 
@@ -194,11 +208,9 @@ class PlanAuditSpec extends SparkSpec with PredicateHelper {
     "q57_analytics_windows")
 
   test("suite-wide: nested-loop joins only as broadcast builds of bounded frames") {
-    val offenders = SparkEntry.allDefs.flatMap { d =>
-      val plan = physical(d.name)
-      val nlj = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
-      spark.catalog.clearCache()
-      if (nlj.nonEmpty && !boundedNestedLoop.contains(d.name)) Some(d.name)
+    val offenders = built.flatMap { b =>
+      val nlj = b.physical.collect { case j: BroadcastNestedLoopJoinExec => j }
+      if (nlj.nonEmpty && !boundedNestedLoop.contains(b.name)) Some(b.name)
       else None
     }
     withClue(s"un-allow-listed nested-loop joins in: $offenders: ") {
@@ -243,18 +255,16 @@ class PlanAuditSpec extends SparkSpec with PredicateHelper {
     // PushedFilters must be non-empty — an empty list there means a
     // predicate that SHOULD prune row groups is being evaluated
     // post-scan (the regression this guard exists to catch).
-    val offenders = SparkEntry.allDefs.flatMap { d =>
-      val bad = planTrees(physical(d.name)).flatMap(_.collect {
+    val offenders = built.flatMap { b =>
+      b.trees.flatMap(_.collect {
         case f: FilterExec =>
           scansDirectlyBelow(f.child).filter { s =>
             f.condition.references.subsetOf(s.outputSet) &&
               splitConjunctivePredicates(f.condition).exists(pushableConjunct) &&
               s.metadata.get("PushedFilters").forall(_ == "[]")
-          }.map(s => s"${d.name}[${s.relation.location.rootPaths.headOption
+          }.map(s => s"${b.name}[${s.relation.location.rootPaths.headOption
             .map(_.getName).getOrElse("?")}]")
       }.flatten)
-      spark.catalog.clearCache()
-      bad
     }
     withClue(s"filter above scan with empty PushedFilters: $offenders: ") {
       offenders shouldBe empty
@@ -323,10 +333,8 @@ class PlanAuditSpec extends SparkSpec with PredicateHelper {
     // allow-list above, with a reason). Tables narrower than 3 columns
     // are exempt: there is nothing to prune (region is
     // (r_regionkey, r_name, r_comment) and most uses want all three).
-    val offenders = SparkEntry.allDefs.flatMap { d =>
-      val scans = planTrees(physical(d.name))
-        .flatMap(_.collect { case s: FileSourceScanExec => s })
-      spark.catalog.clearCache()
+    val offenders = built.flatMap { b =>
+      val scans = b.trees.flatMap(_.collect { case s: FileSourceScanExec => s })
       scans.flatMap { s =>
         val table = s.relation.location.rootPaths.headOption
           .map(_.getName.stripSuffix(".parquet")).getOrElse("?")
@@ -344,10 +352,10 @@ class PlanAuditSpec extends SparkSpec with PredicateHelper {
           // backbone columns (doc_id, source, term, tf); every other
           // consumer projects `source` away and must prune to 3/4
           // (tfFrame in RetrievalQueries), so only q35 is exempt.
-          (table.startsWith("graft_tf_") && d.name == "q35_token_stats") ||
-          fullWidthOk.get(d.name).exists(_.contains(table))
+          (table.startsWith("graft_tf_") && b.name == "q35_token_stats") ||
+          fullWidthOk.get(b.name).exists(_.contains(table))
         if (tableWidth >= 3 && readWidth >= tableWidth && !tableOk)
-          Some(s"${d.name}[$table $readWidth/$tableWidth]")
+          Some(s"${b.name}[$table $readWidth/$tableWidth]")
         else None
       }
     }

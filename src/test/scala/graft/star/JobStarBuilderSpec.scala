@@ -42,6 +42,44 @@ class JobStarBuilderSpec extends SparkSpec {
     }
   }
 
+  test("the one-aggregate bounded dims equal the per-dim GlobalRowNumber builds, keys included") {
+    val now = lit("2026-01-01 00:00:00").cast("timestamp")
+    val src = landing(4)
+    val star = JobStarBuilder.build(src, now)
+    val grn = SkStrategy.GlobalRowNumber
+    val skills = src.select(explode_outer(graft.functions.parseBracketList(
+        col("skills"))).as("s"))
+      .select(graft.functions.normTitle(col("s")).as("s"))
+      .filter(col("s") =!= "")
+    val expected = Seq(
+      "dim_company" -> StarSchemaBuilder.buildDim(src,
+        graft.functions.normName(col("employer_name")), "company_sk",
+        "employer_name", grn),
+      "dim_publisher" -> StarSchemaBuilder.buildDim(src,
+        graft.functions.normTitle(col("job_publisher")), "publisher_sk",
+        "publisher_name", grn),
+      "dim_employment_type" -> StarSchemaBuilder.buildDim(src,
+        graft.functions.normTitle(col("job_employment_type")),
+        "employment_type_sk", "employment_type_name", grn),
+      "dim_skill" -> StarSchemaBuilder.buildDim(skills, col("s"), "skill_sk",
+        "skill_name", grn),
+      "dim_location" -> StarSchemaBuilder.withSurrogateKey(
+          src.select("job_location", "job_city", "job_state", "job_country")
+            .filter(col("job_location").isNotNull).distinct(),
+          Seq("job_location"), "location_sk", grn)
+        .select("location_sk", "job_location", "job_city", "job_state",
+          "job_country"))
+    expected.foreach { case (name, want) =>
+      withClue(s"$name: ") {
+        val got = star.all(name)
+        got.columns.toSeq shouldBe want.columns.toSeq
+        got.orderBy(got.columns.head).collect().toSeq shouldBe
+          want.orderBy(want.columns.head).collect().toSeq
+        got.count() should be > 0L
+      }
+    }
+  }
+
   test("fact chain broadcasts ONLY the 5 bounded dims; fact-sized job-details is unhinted") {
     // dim_job_details is 1:1 with distinct landing jobs — fact-sized. A
     // forced broadcast() there would override Spark's size check and
