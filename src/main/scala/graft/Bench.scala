@@ -30,7 +30,7 @@ object Bench {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
       import spark.implicits._
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      Tables.lineitem(spark, sfDir)
         .groupBy("l_returnflag").count()
         .write.format("noop").mode("overwrite").save()
       val tiny = (1 to 1000).map(i => (i.toLong % 37, i.toLong, s"v$i $i"))

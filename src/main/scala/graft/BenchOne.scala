@@ -15,7 +15,7 @@ object BenchOne {
     val doExplain = args.length > 2 && args(2) == "explain"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.start(defaultCpus = "32")
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    Tables.lineitem(spark, sfDir)
       .groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()
     val d = SparkEntry.allDefs.find(_.name == name)

@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.SparkSession
 import graft.Tables
 
 /** The BI virtual-dataset surface (SURVEY §3.3): named temp views +
@@ -11,14 +13,40 @@ import graft.Tables
   */
 object SqlViews {
 
+  private val ViewTables = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "documents", "embeddings")
+
+  /** What one session's views were last registered from: the
+    * [[Tables]] resolutions, and the catalog entries they became. */
+  private final case class Registration(tables: Seq[Tables.Resolved],
+      views: Seq[AnyRef])
+
+  private val registered = new ConcurrentHashMap[SparkSession, Registration]()
+
   /** Register every testdata table as a temp view named as in the
     * oracle SQL, so spark.sql text is portable between engine and
-    * oracle. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      Tables.table(spark, sfDir, t).createOrReplaceTempView(t)
-    }
+    * oracle.
+    *
+    * Registers once per (session, dir): a later call re-registers only
+    * when a table's [[Tables]] resolution changed (its file fingerprint
+    * changed, or `sfDir` names other files) or a view was replaced or
+    * dropped since. Otherwise it costs the 9 fingerprint listings and
+    * launches no Spark job. The fingerprint's granularity caveat is
+    * [[graft.sources.SharedTable.dirFingerprint]]'s. */
+  def registerViews(spark: SparkSession, sfDir: String): Unit = {
+    val tables = ViewTables.map(Tables.resolve(spark, sfDir, _))
+    def views = ViewTables.map(spark.sessionState.catalog.getRawTempView(_).orNull)
+    if (!registered.containsKey(spark))
+      registered.keySet.removeIf(_.sparkContext.isStopped)
+    registered.compute(spark, (_, prev) =>
+      if (prev != null && prev.tables.corresponds(tables)(_ eq _) &&
+          prev.views.corresponds(views)(_ eq _)) prev
+      else {
+        ViewTables.zip(tables).foreach { case (t, r) =>
+          r.frame().createOrReplaceTempView(t) }
+        Registration(tables, views)
+      })
+  }
 
   private def sqlQuery(name: String, engineSql: String, oracleSql: String) =
     QueryDef(name, oracleSql) { (s, dir) =>

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-materialized warehouse tables: derived frames (shingle
@@ -112,7 +112,7 @@ object SharedTable {
 
   /** 40-bit hex fingerprint of the RECURSIVE file listing of the
     * `tables` under a data directory, each `<dir>/<table>.parquet`
-    * (relative-path:length:mtime rows, sorted — no data read, one
+    * ([[listFiles]] rows hashed by [[fingerprint]] — no data read, one
     * driver-side listing). Changes whenever any file of those tables
     * is added, removed, resized, or rewritten; files of other tables
     * under `dir` do not enter it. Cost class: the same O(#files)
@@ -136,16 +136,30 @@ object SharedTable {
       tables: Seq[String]): String = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootUri = fs.makeQualified(root).toUri
-    val rows = scala.collection.mutable.ArrayBuffer.empty[String]
+    fingerprint(fs, root,
+      tables.flatMap(t => listFiles(fs, new Path(root, s"$t.parquet"))))
+  }
+
+  /** Every file under `path`, recursively: the file itself when `path`
+    * is one, none when it is absent. The one listing behind each table
+    * fingerprint, here and in [[graft.Tables]]'s staleness check. */
+  def listFiles(fs: FileSystem, path: Path): Seq[FileStatus] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
     def walk(p: Path): Unit =
       fs.listStatus(p).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else rows += s"${rootUri.relativize(st.getPath.toUri)}:" +
-          s"${st.getLen}:${st.getModificationTime}"
+        if (st.isDirectory) walk(st.getPath) else out += st
       }
-    tables.map(t => new Path(root, s"$t.parquet")).filter(fs.exists)
-      .foreach(walk)
+    if (fs.exists(path)) walk(path)
+    out.toSeq
+  }
+
+  /** 40-bit hex MD5 of `files`' listing rows (path relative to `root`,
+    * length, mtime; sorted). */
+  def fingerprint(fs: FileSystem, root: Path, files: Seq[FileStatus])
+      : String = {
+    val rootUri = fs.makeQualified(root).toUri
+    val rows = files.map(st => s"${rootUri.relativize(st.getPath.toUri)}:" +
+      s"${st.getLen}:${st.getModificationTime}")
     val md = java.security.MessageDigest.getInstance("MD5")
     md.update(rows.sorted.mkString("\n").getBytes("UTF-8"))
     md.digest().take(5).map("%02x".format(_)).mkString

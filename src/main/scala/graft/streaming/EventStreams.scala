@@ -24,34 +24,15 @@ object EventStreams {
 
   /** Unbounded read of the events table from its parquet directory —
     * the engine's `readStream` entry. `ts` has shipped as two physical
-    * encodings across testdata generations (INT64 TIMESTAMP(NANOS)
-    * and plain TIMESTAMP(MICROS) — see [[graft.Tables.events]]);
-    * streams must declare their schema up front, so sniff the footer
-    * with a one-off batch read (driver-side, setup-time only) and
-    * apply the matching conversion. Both paths end at the LTZ
-    * TimestampType every batch twin was written against. */
+    * encodings across testdata generations (see [[graft.Tables.events]]);
+    * streams must declare their schema up front, so take it, and the
+    * matching `ts` conversion, from the directory's [[graft.Tables]]
+    * resolution (driver-side, setup-time only). Both encodings end at
+    * the LTZ TimestampType every batch twin was written against. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(dir).schema("ts").dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts", tsType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props",
-        org.apache.spark.sql.types.StringType)))
-    val raw = spark.readStream.schema(schema).parquet(dir)
-    tsType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
+    val files = graft.Tables.resolve(spark, dir)
+    val raw = spark.readStream.schema(files.schema).parquet(dir)
+    files.tsFix.fold(raw)(raw.withColumn("ts", _))
   }
 
   /** Tumbling 1-hour counts/sums with a late-data watermark
