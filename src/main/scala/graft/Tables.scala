@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -25,10 +25,11 @@ import graft.sources.SharedTable
   *
   * What is cached: per (session, qualified table path), the analyzed
   * `LogicalRelation` of the first `spark.read.parquet` — its schema,
-  * inferred once (a Spark job), and its file index, listed once. Every
-  * later call hands out `relation.newInstance()`: fresh attribute ids,
-  * so self-joins and double reads of one table stay distinct, and no
-  * job runs. Schema-inference confs are read at that first resolution.
+  * converted once from the first data file's footer and declared to
+  * the read, so no Spark job runs, and its file index, listed once.
+  * Every later call hands out `relation.newInstance()`: fresh attribute
+  * ids, so self-joins and double reads of one table stay distinct.
+  * Schema-conversion confs are read at that first resolution.
   *
   * Staleness: every call lists the table's files and compares their
   * fingerprint ([[SharedTable.listFiles]] rows — relative path, length,
@@ -82,11 +83,17 @@ object Tables {
 
   private def read(spark: SparkSession, fs: FileSystem, path: String,
       fp: String, files: Seq[FileStatus]): Resolved = {
+    val footer = firstFooter(fs, files)
     // Spark's reader rejects INT64 TIMESTAMP(NANOS) unless this is on;
-    // set it for the session only when the files need it.
-    if (!spark.conf.getOption(NanosAsLong).contains("true") && nanosTs(fs, files))
+    // set it for the session only when the files need it, and before
+    // the footer's schema is converted, which reads it.
+    if (!spark.conf.getOption(NanosAsLong).contains("true") && footer.exists(nanosTs))
       spark.conf.set(NanosAsLong, "true")
-    val df = spark.read.parquet(path)
+    // The first data file's schema, declared, so Spark infers none (its
+    // inference reads one footer too, in a Spark job). With no data file
+    // the read infers, and fails as an undeclared parquet read does.
+    val declared = footer.map(CatalystBridge.parquetSchema(_, spark))
+    val df = declared.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
     val relation = CatalystBridge.logicalPlan(df) match {
       case r: LogicalRelation => r
       case p => throw new IllegalStateException(
@@ -103,27 +110,29 @@ object Tables {
     new Resolved(fp, spark, relation, tsFix)
   }
 
-  /** Whether the first data file's footer stores `ts` as INT64
-    * TIMESTAMP(NANOS). */
-  private def nanosTs(fs: FileSystem, files: Seq[FileStatus]): Boolean = {
+  /** The footer of the first data file (by path) of `files`. */
+  private def firstFooter(fs: FileSystem, files: Seq[FileStatus]): Option[Footer] = {
     def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
     files.map(_.getPath).filterNot(f => hidden(f.getName) ||
         hidden(f.getParent.getName)).sortBy(_.toString).headOption
-      .exists { f =>
+      .map { f =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, fs.getConf))
-        try {
-          val schema = reader.getFooter.getFileMetaData.getSchema
-          schema.containsField("ts") && {
-            val ts = schema.getType(schema.getFieldIndex("ts"))
-            ts.isPrimitive &&
-            ts.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
-            (ts.getLogicalTypeAnnotation match {
-              case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
-              case _ => false
-            })
-          }
-        } finally reader.close()
+        try new Footer(f, reader.getFooter) finally reader.close()
       }
+  }
+
+  /** Whether `footer` stores `ts` as INT64 TIMESTAMP(NANOS). */
+  private def nanosTs(footer: Footer): Boolean = {
+    val schema = footer.getParquetMetadata.getFileMetaData.getSchema
+    schema.containsField("ts") && {
+      val ts = schema.getType(schema.getFieldIndex("ts"))
+      ts.isPrimitive &&
+      ts.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+      (ts.getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      })
+    }
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -142,8 +151,8 @@ object Tables {
     * exactly what DuckDB's µs-native reader does) and plain
     * TIMESTAMP(MICROS) (read as-is, like orders/lineitem dates).
     * The encoding is read once per resolution, from the footer and the
-    * inferred schema, so either generation works; both yield the same
-    * instants, so the oracle agrees either way. */
+    * schema converted from it, so either generation works; both yield
+    * the same instants, so the oracle agrees either way. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val r = resolve(spark, sfDir, "events")
     val raw = r.frame()

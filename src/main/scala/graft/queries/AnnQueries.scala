@@ -7,10 +7,11 @@ import graft.{functions => gf}
 import graft.operators.{Multimodal, Similarity}
 import graft.sources.SharedTable
 
-/** ANN + multimodal scoring-surface entries. The IVF query replicates
-  * [[graft.operators.Similarity.ivfTopK]]'s exact semantics in DuckDB
-  * SQL (centroids = vec_id < 16, argmax assignment, 2-probe), so the
-  * approximate index itself is oracle-checked, not just row-counted.
+/** ANN scoring-surface entries, plus q43's media-payload checks. The
+  * IVF query replicates [[graft.operators.Similarity.ivfTopK]]'s exact
+  * semantics in DuckDB SQL (centroids = vec_id < 16, argmax assignment,
+  * 2-probe), so the approximate index itself is oracle-checked, not
+  * just row-counted.
   */
 object AnnQueries {
 
@@ -724,8 +725,8 @@ object AnnQueries {
         .orderBy("label_a", "label_b")
     },
 
-    // Multimodal metadata over binary payloads (decode stub tested in
-    // MultimodalSpec; the byte-level plumbing is oracle-checked here).
+    // Documents wrapped as binary media payloads; their byte length,
+    // md5 and head bytes are oracle-checked.
     QueryDef("q43_media_meta",
       """SELECT doc_id AS media_id,
         |  octet_length(CAST(encode(text) AS BLOB)) AS n_bytes,

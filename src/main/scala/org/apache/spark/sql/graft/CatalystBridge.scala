@@ -23,6 +23,18 @@ object CatalystBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The Spark schema of a parquet `footer`, converted under `spark`'s
+    * confs as Spark's own schema inference converts each footer —
+    * `ParquetFileFormat.readSchema` is not public and the conf lives on
+    * the classic session, hence bridged. */
+  def parquetSchema(footer: org.apache.parquet.hadoop.Footer,
+      spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+  }
+
   /** Executor-side memory page size for external sorters (what
     * `SortExec` passes to `UnsafeExternalRowSorter.create`) —
     * `SparkEnv.memoryManager` is `private[spark]`, hence bridged. */

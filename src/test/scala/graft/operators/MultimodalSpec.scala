@@ -1,226 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import Multimodal.{MediaRecord, StubCodec}
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
-
-  private val records = Seq(
-    MediaRecord(1L, "image", Array[Byte](0, 1, 2, 3, -1), "raw", 0, 0),
-    MediaRecord(2L, "audio", Array[Byte](), "raw", 0, 0),
-    MediaRecord(3L, "video", Array.tabulate(256)(_.toByte), "raw", 0, 0))
-
-  test("decodeFeatures preserves ids and computes byte stats per record") {
-    implicit val s = spark
-    val got = Multimodal.decodeFeatures(records.toDS())
-      .collect().sortBy(_.media_id)
-    got.map(_.media_id) shouldBe Array(1L, 2L, 3L)
-    got(0).n_bytes shouldBe 5L
-    got(1).n_bytes shouldBe 0L
-    got(1).histogram.sum shouldBe 0L
-    // 256 distinct byte values → perfectly uniform 16-bin histogram
-    got(2).histogram.toSeq shouldBe Seq.fill(16)(16L)
-    // histogram mass equals byte count
-    got(0).histogram.sum shouldBe 5L
-  }
-
-  test("decode is deterministic and partition-count preserving") {
-    implicit val s = spark
-    val ds = records.toDS().repartition(3)
-    val a = Multimodal.decodeFeatures(ds)
-    a.rdd.getNumPartitions shouldBe 3
-    a.collect().sortBy(_.media_id).map(_.checksum) shouldBe
-      Multimodal.decodeFeatures(ds).collect().sortBy(_.media_id).map(_.checksum)
-  }
-
-  test("sampleChunks takes n evenly spaced slices") {
-    val df = Seq(("0123456789")).toDF("t")
-      .select(Multimodal.sampleChunks(encode($"t", "UTF-8"), 3, 2).as("chunks"))
-    val got = df.select(transform($"chunks", c => decode(c, "UTF-8")).as("s"))
-      .as[Seq[String]].collect().head
-    got shouldBe Seq("01", "45", "89")
-  }
-
-  test("resizeStub deterministically downsamples to the target size, small payloads untouched") {
-    implicit val s = spark
-    val got = Multimodal.resizeStub(records.toDS(), targetBytes = 64)
-      .collect().sortBy(_.media_id)
-    got(0).payload shouldBe records(0).payload // 5 bytes <= 64: unchanged
-    got(2).payload.length shouldBe 64
-    got(2).format should endWith(";resized")
-    // deterministic
-    Multimodal.resizeStub(records.toDS(), 64).collect().sortBy(_.media_id)
-      .apply(2).payload shouldBe got(2).payload
-  }
-
-  // Craft real image bytes with the JDK encoder only — no external
-  // libs, no fixture files.
-  private def imageBytes(w: Int, h: Int, fmt: String): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for { x <- 0 until w; y <- 0 until h }
-      img.setRGB(x, y, (x * 85) << 16 | (y * 85) << 8 | 0x40)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, fmt, out)
-    out.toByteArray
-  }
-
-  test("ImageIoCodec decodes a crafted 2x2 PNG's actual dimensions from the header") {
-    val png = imageBytes(2, 2, "png")
-    Multimodal.ImageIoCodec.imageMeta(png) shouldBe Some((2, 2, 3))
-    // and a non-square JPEG (channels = 3 for RGB JFIF)
-    Multimodal.ImageIoCodec.imageMeta(imageBytes(5, 3, "jpg")) shouldBe
-      Some((5, 3, 3))
-  }
-
-  test("decodeMeta: real decode for image payloads, declared-metadata fallback otherwise") {
-    implicit val s = spark
-    val mixed = Seq(
-      MediaRecord(10L, "image", imageBytes(4, 2, "png"), "png", 0, 0),
-      // declared 640x480 but payload is not an image the JDK can read
-      MediaRecord(11L, "image", "not an image".getBytes("UTF-8"), "raw",
-        640, 480),
-      MediaRecord(12L, "audio", Array[Byte](), "raw", 0, 0)).toDS()
-    val got = Multimodal.decodeMeta(mixed).collect().sortBy(_.media_id)
-    got(0).decoded shouldBe true
-    (got(0).width, got(0).height, got(0).channels) shouldBe ((4, 2, 3))
-    got(1).decoded shouldBe false
-    (got(1).width, got(1).height, got(1).channels) shouldBe ((640, 480, 0))
-    got(2).decoded shouldBe false
-    got(2).n_bytes shouldBe 0L
-  }
-
-  test("decodePixels computes the ACTUAL channel means of a crafted PNG") {
-    implicit val s = spark
-    // 2x1 PNG, lossless: pixel0 = (10, 20, 30), pixel1 = (50, 100, 200)
-    val img = new java.awt.image.BufferedImage(
-      2, 1, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, 10 << 16 | 20 << 8 | 30)
-    img.setRGB(1, 0, 50 << 16 | 100 << 8 | 200)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    val ds = Seq(MediaRecord(1L, "image", out.toByteArray, "png", 0, 0)).toDS()
-    val got = Multimodal.decodePixels(ds).collect().head
-    got.decoded_pixels shouldBe true
-    got.exact_pixels shouldBe true
-    (got.width, got.height) shouldBe ((2, 1))
-    got.mean_r shouldBe 30.0 +- 1e-9 // (10+50)/2
-    got.mean_g shouldBe 60.0 +- 1e-9 // (20+100)/2
-    got.mean_b shouldBe 115.0 +- 1e-9 // (30+200)/2
-    got.mean_luma shouldBe (0.299 * 30 + 0.587 * 60 + 0.114 * 115) +- 1e-9
-  }
-
-  test("decodePixels subsamples ABOVE the raster cap: bounded grid, real means") {
-    implicit val s = spark
-    // 4x4 image whose (0,0)-anchored step-2 grid is exactly the four
-    // corners of each 2x2 cell: pixels at (even, even) are (100,50,25),
-    // the rest (0,0,0). Subsampled means see only the even grid.
-    val img = new java.awt.image.BufferedImage(
-      4, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 4; x <- 0 until 4)
-      img.setRGB(x, y,
-        if (x % 2 == 0 && y % 2 == 0) 100 << 16 | 50 << 8 | 25 else 0)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    val ds = Seq(
-      MediaRecord(1L, "image", out.toByteArray, "png", 0, 0),
-      MediaRecord(2L, "image", "not an image".getBytes("UTF-8"), "raw", 640, 480))
-      .toDS()
-    // cap of 8 pixels forces step 2 on the 16-pixel source: a 2x2
-    // subsampled raster of the four bright pixels.
-    val got = Multimodal.decodePixels(ds, maxPixels = 8L).collect().sortBy(_.media_id)
-    got(0).decoded_pixels shouldBe true
-    got(0).exact_pixels shouldBe false // estimate, honestly flagged
-    (got(0).width, got(0).height) shouldBe ((4, 4)) // FULL source dims
-    got(0).mean_r shouldBe 100.0 +- 1e-9
-    got(0).mean_g shouldBe 50.0 +- 1e-9
-    got(0).mean_b shouldBe 25.0 +- 1e-9
-    // non-image: declared metadata fallback
-    got(1).decoded_pixels shouldBe false
-    (got(1).width, got(1).height) shouldBe ((640, 480))
-  }
-
-  test("pixelStats refuses a header claiming more than the hard source cap") {
-    // A crafted PNG IHDR claiming 2^17 x 2^17 (16 Gpix < claim): build
-    // a real 1x1 PNG and splice absurd dimensions into the IHDR so the
-    // reader sizes it without any payload to back it.
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(new java.awt.image.BufferedImage(
-      1, 1, java.awt.image.BufferedImage.TYPE_INT_RGB), "png", out)
-    val bytes = out.toByteArray
-    // IHDR width/height live at fixed offsets 16..23 in a PNG stream.
-    val big = java.nio.ByteBuffer.allocate(4).putInt(1 << 17).array()
-    System.arraycopy(big, 0, bytes, 16, 4)
-    System.arraycopy(big, 0, bytes, 20, 4)
-    // CRC now mismatches, which is also fine — either refusal path
-    // (hard cap or parse failure) must yield None, never a decode.
-    Multimodal.ImageIoCodec.pixelStats(bytes) shouldBe None
-  }
-
-  // Craft real audio bytes with the JDK encoder only — raw PCM frames
-  // wrapped in a container by AudioSystem.write; no external libs.
-  private def audioBytes(fileType: javax.sound.sampled.AudioFileFormat.Type,
-      sampleRate: Float, channels: Int, bits: Int,
-      frames: Int): Array[Byte] = {
-    import javax.sound.sampled._
-    val fmt = new AudioFormat(sampleRate, bits, channels,
-      /* signed = */ true, /* bigEndian = */ false)
-    val raw = new Array[Byte](frames * fmt.getFrameSize)
-    java.util.Arrays.fill(raw, 7.toByte)
-    val ais = new AudioInputStream(
-      new java.io.ByteArrayInputStream(raw), fmt, frames.toLong)
-    val out = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, fileType, out)
-    out.toByteArray
-  }
-
-  test("AudioIoCodec reads a crafted WAV's actual format from the header") {
-    import javax.sound.sampled.AudioFileFormat
-    val wav = audioBytes(AudioFileFormat.Type.WAVE, 8000f, 1, 16, 1000)
-    val Some((container, enc, rate, ch, bits, frames)) =
-      Multimodal.AudioIoCodec.audioMeta(wav)
-    container shouldBe "WAVE"
-    enc shouldBe "PCM_SIGNED"
-    rate shouldBe 8000.0
-    ch shouldBe 1
-    bits shouldBe 16
-    frames shouldBe 1000L
-    // and a stereo AIFF at a different rate/depth
-    val aiff = audioBytes(AudioFileFormat.Type.AIFF, 44100f, 2, 8, 441)
-    val Some((c2, _, r2, ch2, b2, f2)) =
-      Multimodal.AudioIoCodec.audioMeta(aiff)
-    c2 shouldBe "AIFF"
-    r2 shouldBe 44100.0
-    ch2 shouldBe 2
-    b2 shouldBe 8
-    f2 shouldBe 441L
-  }
-
-  test("decodeAudioMeta: real header decode for audio payloads, fallback otherwise") {
-    import javax.sound.sampled.AudioFileFormat
-    implicit val s = spark
-    val mixed = Seq(
-      MediaRecord(20L, "audio",
-        audioBytes(AudioFileFormat.Type.WAVE, 16000f, 2, 16, 3200), "wav",
-        0, 0),
-      MediaRecord(21L, "audio", "not audio at all".getBytes("UTF-8"), "raw",
-        0, 0),
-      MediaRecord(22L, "audio", Array[Byte](), "raw", 0, 0)).toDS()
-    val got = Multimodal.decodeAudioMeta(mixed).collect().sortBy(_.media_id)
-    got(0).decoded shouldBe true
-    got(0).container shouldBe "WAVE"
-    got(0).sample_rate shouldBe 16000.0
-    got(0).channels shouldBe 2
-    got(0).bit_depth shouldBe 16
-    got(0).frame_count shouldBe 3200L
-    got(0).duration_sec shouldBe 0.2 +- 1e-9 // 3200 frames / 16 kHz
-    got(1).decoded shouldBe false
-    got(1).frame_count shouldBe -1L
-    got(2).decoded shouldBe false
-    got(2).n_bytes shouldBe 0L
-  }
 
   test("mediaFromDocuments wraps text as binary payloads with metadata") {
     implicit val s = spark
@@ -229,704 +12,5 @@ class MultimodalSpec extends SparkSpec {
     got.media_id shouldBe 1L
     got.payload shouldBe "hello".getBytes("UTF-8")
     got.kind shouldBe "image"
-  }
-
-  // ---- ISO-BMFF (MP4/MOV) video container metadata -------------------
-
-  /** Compose a box: u32 big-endian size (header included) + fourcc +
-    * payload — the ISO/IEC 14496-12 wire shape. */
-  private def box(typ: String, payload: Array[Byte]): Array[Byte] = {
-    val size = payload.length + 8
-    val out = java.nio.ByteBuffer.allocate(size)
-    out.putInt(size)
-    out.put(typ.getBytes("ISO-8859-1"))
-    out.put(payload)
-    out.array()
-  }
-
-  private def u32(v: Long): Array[Byte] =
-    java.nio.ByteBuffer.allocate(4).putInt(v.toInt).array()
-
-  /** Minimal-but-valid MP4 header: ftyp(isom) + moov{mvhd(v0,
-    * timescale=1000, duration=5000), trak{tkhd(640×360 16.16 fixed),
-    * mdia{hdlr(vide), minf{stbl{stsd(avc1)}}}}}. */
-  private def craftMp4(
-      timescale: Long = 1000L, duration: Long = 5000L,
-      w: Int = 640, h: Int = 360, codec: String = "avc1"): Array[Byte] = {
-    val ftyp = box("ftyp",
-      "isom".getBytes("ISO-8859-1") ++ u32(512) ++
-        "isomavc1".getBytes("ISO-8859-1"))
-    val mvhd = box("mvhd",
-      u32(0) ++ // version 0 + flags
-        u32(0) ++ u32(0) ++ // creation, modification
-        u32(timescale) ++ u32(duration) ++
-        Array.fill[Byte](80)(0)) // rate..next_track_id, unused here
-    // tkhd v0: ver+flags(4) creation(4) mod(4) track(4) rsv(4) dur(4)
-    // rsv(8) layer(2) alt(2) vol(2) rsv(2) matrix(36) width(4) height(4)
-    val tkhd = box("tkhd",
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(1) ++ u32(0) ++ u32(duration) ++
-        Array.fill[Byte](8 + 2 + 2 + 2 + 2 + 36)(0) ++
-        u32(w.toLong << 16) ++ u32(h.toLong << 16))
-    val hdlr = box("hdlr",
-      u32(0) ++ u32(0) ++ "vide".getBytes("ISO-8859-1") ++
-        Array.fill[Byte](12)(0))
-    // stsd: ver+flags(4) entry_count(4) + one sample entry
-    // [size][fourcc][78 bytes of visual-sample-entry fields].
-    val entry = box(codec, Array.fill[Byte](78)(0))
-    val stsd = box("stsd", u32(0) ++ u32(1) ++ entry)
-    val stbl = box("stbl", stsd)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", hdlr ++ minf)
-    val trak = box("trak", tkhd ++ mdia)
-    val moov = box("moov", mvhd ++ trak)
-    ftyp ++ moov ++ box("mdat", Array.fill[Byte](32)(1))
-  }
-
-  test("IsoBmffCodec: duration, dimensions, codec, brand from a crafted MP4 header") {
-    val mp4 = craftMp4()
-    val Some((brand, dur, w, h, codec, nTracks)) =
-      Multimodal.IsoBmffCodec.videoMeta(mp4)
-    brand shouldBe "isom"
-    dur shouldBe 5.0 +- 1e-9 // 5000 ticks / 1000 ticks-per-sec
-    w shouldBe 640
-    h shouldBe 360
-    codec shouldBe "avc1"
-    nTracks shouldBe 1
-
-    // Different parameters flow through, not constants.
-    val Some((_, dur2, w2, h2, codec2, _)) = Multimodal.IsoBmffCodec
-      .videoMeta(craftMp4(timescale = 600, duration = 1200,
-        w = 1920, h = 1080, codec = "hvc1"))
-    dur2 shouldBe 2.0 +- 1e-9
-    w2 shouldBe 1920
-    h2 shouldBe 1080
-    codec2 shouldBe "hvc1"
-  }
-
-  test("IsoBmffCodec: non-BMFF, truncated, and empty payloads decline cleanly") {
-    Multimodal.IsoBmffCodec.videoMeta("plain text".getBytes("UTF-8")) shouldBe None
-    Multimodal.IsoBmffCodec.videoMeta(Array[Byte]()) shouldBe None
-    Multimodal.IsoBmffCodec.videoMeta(null) shouldBe None
-    // ftyp alone (no moov) is not enough to claim metadata…
-    val ftypOnly = box("ftyp", "isom".getBytes("ISO-8859-1") ++ u32(512))
-    Multimodal.IsoBmffCodec.videoMeta(ftypOnly) shouldBe None
-    // …and a truncated moov yields whatever parsed — never a throw.
-    val mp4 = craftMp4()
-    noException should be thrownBy
-      Multimodal.IsoBmffCodec.videoMeta(mp4.take(mp4.length / 2))
-  }
-
-  // ---- REAL audio sample decode --------------------------------------
-
-  /** 16-bit signed little-endian WAV whose frames are the given
-    * sample values — a waveform we can compute exact statistics for. */
-  private def pcm16Wav(samples: Array[Short], rate: Float = 8000f)
-      : Array[Byte] = {
-    import javax.sound.sampled._
-    val fmt = new AudioFormat(rate, 16, 1, true, false)
-    val raw = new Array[Byte](samples.length * 2)
-    val bb = java.nio.ByteBuffer.wrap(raw)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    samples.foreach(bb.putShort)
-    val ais = new AudioInputStream(
-      new java.io.ByteArrayInputStream(raw), fmt, samples.length.toLong)
-    val out = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
-  }
-
-  test("sampleStats computes the ACTUAL waveform stats of a crafted square wave") {
-    // ±16384 alternating = amplitude 0.5 exactly; sign flips at every
-    // sample after the first.
-    val n = 1000
-    val wav = pcm16Wav(Array.tabulate(n)(i =>
-      if (i % 2 == 0) 16384.toShort else (-16384).toShort))
-    val Some(s) = Multimodal.AudioIoCodec.sampleStats(wav)
-    s.nSamples shouldBe n.toLong
-    s.rms shouldBe 0.5 +- 1e-12
-    s.peak shouldBe 0.5 +- 1e-12
-    s.meanSample shouldBe 0.0 +- 1e-12
-    s.zeroCrossRate shouldBe (n - 1).toDouble / n +- 1e-12
-    s.clippedFrac shouldBe 0.0
-  }
-
-  test("sampleStats flags full-scale clipping and handles 8-bit unsigned WAV") {
-    // All samples at Short.MinValue = -1.0 full scale.
-    val clipped = pcm16Wav(Array.fill(100)(Short.MinValue))
-    val Some(c) = Multimodal.AudioIoCodec.sampleStats(clipped)
-    c.rms shouldBe 1.0 +- 1e-12
-    c.peak shouldBe 1.0 +- 1e-12
-    c.clippedFrac shouldBe 1.0
-    c.zeroCrossRate shouldBe 0.0
-    // 8-bit WAV is PCM_UNSIGNED: constant 192 decodes to (192-128)/128 = 0.5.
-    import javax.sound.sampled._
-    val fmt8 = new AudioFormat(8000f, 8, 1, false, false)
-    val raw8 = Array.fill[Byte](50)(192.toByte)
-    val out8 = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(new AudioInputStream(
-      new java.io.ByteArrayInputStream(raw8), fmt8, 50L),
-      AudioFileFormat.Type.WAVE, out8)
-    val Some(u) = Multimodal.AudioIoCodec.sampleStats(out8.toByteArray)
-    u.nSamples shouldBe 50L
-    u.meanSample shouldBe 0.5 +- 1e-12
-    u.rms shouldBe 0.5 +- 1e-12
-    u.zeroCrossRate shouldBe 0.0
-  }
-
-  test("sampleStats handles big-endian PCM (AIFF) identically to little-endian WAV") {
-    import javax.sound.sampled._
-    // Same ±8192 square wave written through both containers: AIFF is
-    // PCM_SIGNED BIG-endian, WAV little-endian — the byte-assembly
-    // branch must agree bit-for-bit on the decoded samples.
-    val samples = Array.tabulate(300)(i =>
-      if (i % 2 == 0) 8192.toShort else (-8192).toShort)
-    def container(big: Boolean, t: AudioFileFormat.Type): Array[Byte] = {
-      val fmt = new AudioFormat(8000f, 16, 1, true, big)
-      val raw = new Array[Byte](samples.length * 2)
-      val bb = java.nio.ByteBuffer.wrap(raw).order(
-        if (big) java.nio.ByteOrder.BIG_ENDIAN
-        else java.nio.ByteOrder.LITTLE_ENDIAN)
-      samples.foreach(bb.putShort)
-      val out = new java.io.ByteArrayOutputStream()
-      AudioSystem.write(new AudioInputStream(
-        new java.io.ByteArrayInputStream(raw), fmt, samples.length.toLong),
-        t, out)
-      out.toByteArray
-    }
-    val Some(le) = Multimodal.AudioIoCodec.sampleStats(
-      container(big = false, AudioFileFormat.Type.WAVE))
-    val Some(be) = Multimodal.AudioIoCodec.sampleStats(
-      container(big = true, AudioFileFormat.Type.AIFF))
-    be shouldBe le
-    be.rms shouldBe 0.25 +- 1e-12
-    be.zeroCrossRate shouldBe 299.0 / 300 +- 1e-12
-  }
-
-  test("sampleStats handles 24-bit PCM exactly (3-byte sample assembly)") {
-    import javax.sound.sampled._
-    // Constant 0x400000 = 2^22 → exactly 0.5 of 24-bit full scale.
-    val fmt = new AudioFormat(8000f, 24, 1, true, false)
-    val frames = 100
-    val raw = new Array[Byte](frames * 3)
-    var i = 0
-    while (i < frames) { // little-endian 3-byte 0x400000
-      raw(i * 3) = 0x00; raw(i * 3 + 1) = 0x00; raw(i * 3 + 2) = 0x40
-      i += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(new AudioInputStream(
-      new java.io.ByteArrayInputStream(raw), fmt, frames.toLong),
-      AudioFileFormat.Type.WAVE, out)
-    val Some(s) = Multimodal.AudioIoCodec.sampleStats(out.toByteArray)
-    s.nSamples shouldBe frames.toLong
-    s.meanSample shouldBe 0.5 +- 1e-12
-    s.rms shouldBe 0.5 +- 1e-12
-    s.peak shouldBe 0.5 +- 1e-12
-    s.clippedFrac shouldBe 0.0
-  }
-
-  test("sampleStats decodes ULAW through the JDK's PCM conversion") {
-    import javax.sound.sampled._
-    // Build a PCM sine-ish square at 0.5 amplitude, convert to ULAW, AU.
-    val fmt = new AudioFormat(8000f, 16, 1, true, false)
-    val samples = Array.tabulate(400)(i =>
-      if (i % 2 == 0) 16384.toShort else (-16384).toShort)
-    val raw = new Array[Byte](samples.length * 2)
-    val bb = java.nio.ByteBuffer.wrap(raw)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    samples.foreach(bb.putShort)
-    val pcm = new AudioInputStream(
-      new java.io.ByteArrayInputStream(raw), fmt, samples.length.toLong)
-    val ulaw = AudioSystem.getAudioInputStream(
-      AudioFormat.Encoding.ULAW, pcm)
-    val out = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ulaw, AudioFileFormat.Type.AU, out)
-    val Some(s) = Multimodal.AudioIoCodec.sampleStats(out.toByteArray)
-    s.nSamples shouldBe 400L
-    // ULAW is lossy — companding error well under 2% at this level.
-    s.rms shouldBe 0.5 +- 0.02
-    s.zeroCrossRate shouldBe 399.0 / 400 +- 1e-9
-  }
-
-  test("decodeAudioSamples: real waveform stats in the Dataset path, fallback flagged") {
-    implicit val s = spark
-    val wav = pcm16Wav(Array.tabulate(200)(i =>
-      if (i % 2 == 0) 8192.toShort else (-8192).toShort))
-    val mixed = Seq(
-      MediaRecord(40L, "audio", wav, "wav", 0, 0),
-      MediaRecord(41L, "audio", "not audio".getBytes("UTF-8"), "raw", 0, 0))
-      .toDS()
-    val got = Multimodal.decodeAudioSamples(mixed).collect().sortBy(_.media_id)
-    got(0).decoded_samples shouldBe true
-    got(0).n_samples shouldBe 200L
-    got(0).rms shouldBe 0.25 +- 1e-12
-    got(1).decoded_samples shouldBe false
-    got(1).n_samples shouldBe 0L
-  }
-
-  // ---- REAL video sample-table features ------------------------------
-
-  /** MP4 with a full video sample table: mdat FIRST (so chunk offsets
-    * are independent of moov size), 6 samples of sizes 10..60 split
-    * over two chunks (4 + 2), sample k's bytes all = k, stts 6×100
-    * ticks at mdhd timescale 600 (1 s total), sync samples {1, 5}. */
-  private def craftMp4WithSamples(): (Array[Byte], Array[Int]) = {
-    val sizes = Array(10, 20, 30, 40, 50, 60)
-    val ftyp = box("ftyp",
-      "isom".getBytes("ISO-8859-1") ++ u32(512) ++
-        "isomavc1".getBytes("ISO-8859-1"))
-    val samples = sizes.zipWithIndex.map { case (sz, i) =>
-      Array.fill[Byte](sz)((i + 1).toByte)
-    }
-    val mdat = box("mdat", samples.flatten.toArray)
-    val chunk1Off = ftyp.length + 8 // mdat payload start
-    val chunk2Off = chunk1Off + sizes.take(4).sum
-    val mvhd = box("mvhd",
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(1000) ++ u32(1000) ++
-        Array.fill[Byte](80)(0))
-    val tkhd = box("tkhd",
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(1) ++ u32(0) ++ u32(1000) ++
-        Array.fill[Byte](52)(0) ++
-        u32(320L << 16) ++ u32(240L << 16))
-    // mdhd v0: ver+flags, creation, mod, timescale=600, duration=600, lang
-    val mdhd = box("mdhd",
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(600) ++ u32(600) ++ u32(0))
-    val hdlr = box("hdlr",
-      u32(0) ++ u32(0) ++ "vide".getBytes("ISO-8859-1") ++
-        Array.fill[Byte](12)(0))
-    val entry = box("avc1", Array.fill[Byte](78)(0))
-    val stsd = box("stsd", u32(0) ++ u32(1) ++ entry)
-    val stsz = box("stsz",
-      u32(0) ++ u32(0) /* variable sizes */ ++ u32(sizes.length.toLong) ++
-        sizes.flatMap(s => u32(s.toLong)))
-    val stts = box("stts", u32(0) ++ u32(1) ++ u32(6) ++ u32(100))
-    val stsc = box("stsc", u32(0) ++ u32(2) ++
-      u32(1) ++ u32(4) ++ u32(1) ++ // chunk 1: 4 samples
-      u32(2) ++ u32(2) ++ u32(1)) // chunk 2 onward: 2 samples
-    val stco = box("stco", u32(0) ++ u32(2) ++
-      u32(chunk1Off.toLong) ++ u32(chunk2Off.toLong))
-    val stss = box("stss", u32(0) ++ u32(2) ++ u32(1) ++ u32(5))
-    val stbl = box("stbl", stsd ++ stsz ++ stts ++ stsc ++ stco ++ stss)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", mdhd ++ hdlr ++ minf)
-    val trak = box("trak", tkhd ++ mdia)
-    val moov = box("moov", mvhd ++ trak)
-    (ftyp ++ mdat ++ moov, sizes)
-  }
-
-  test("frameStats: frame count, fps, bitrate, keyframe ratio from the real sample tables") {
-    val (mp4, sizes) = craftMp4WithSamples()
-    val Some((nFrames, fps, meanB, maxB, bps, kr)) =
-      Multimodal.IsoBmffCodec.frameStats(mp4)
-    nFrames shouldBe 6L
-    fps shouldBe 6.0 +- 1e-9 // 6 frames / (600 ticks / 600 ticks-per-sec)
-    meanB shouldBe sizes.sum.toDouble / 6 +- 1e-9
-    maxB shouldBe 60L
-    bps shouldBe sizes.sum * 8.0 +- 1e-9 // 1-second stream
-    kr shouldBe 2.0 / 6 +- 1e-9 // stss lists frames 1 and 5
-    // Non-video payloads decline.
-    Multimodal.IsoBmffCodec.frameStats("text".getBytes("UTF-8")) shouldBe None
-  }
-
-  test("syncFrameSlices extracts the ACTUAL keyframe bytes via stss/stsc/stco/stsz") {
-    val (mp4, _) = craftMp4WithSamples()
-    val got = Multimodal.IsoBmffCodec.syncFrameSlices(mp4, 8)
-    got.map(_._1) shouldBe Seq(1L, 5L)
-    // Sample k was filled with byte value k at craft time — byte-exact.
-    got(0)._2 shouldBe Array.fill[Byte](10)(1)
-    got(1)._2 shouldBe Array.fill[Byte](50)(5)
-    // n=1 picks a single sync frame; truncated payloads never throw.
-    Multimodal.IsoBmffCodec.syncFrameSlices(mp4, 1).map(_._1) shouldBe Seq(1L)
-    noException should be thrownBy
-      Multimodal.IsoBmffCodec.syncFrameSlices(mp4.take(mp4.length / 3), 4)
-  }
-
-  test("sampleSyncFrames and decodeVideoFrameStats: Dataset plumbing over the real parse") {
-    implicit val s = spark
-    val (mp4, _) = craftMp4WithSamples()
-    val media = Seq(
-      MediaRecord(50L, "video", mp4, "mp4", 0, 0),
-      MediaRecord(51L, "video", "nope".getBytes("UTF-8"), "raw", 0, 0)).toDS()
-    val stats = Multimodal.decodeVideoFrameStats(media)
-      .collect().sortBy(_.media_id)
-    stats(0).decoded shouldBe true
-    stats(0).n_frames shouldBe 6L
-    stats(0).fps shouldBe 6.0 +- 1e-9
-    stats(1).decoded shouldBe false
-    val frames = Multimodal.sampleSyncFrames(media, 2).collect()
-      .sortBy(_.frame_no)
-    frames.map(_.media_id).distinct shouldBe Array(50L) // no-sample video: 0 rows
-    frames.map(_.frame_no) shouldBe Array(1L, 5L)
-    frames(1).frame shouldBe Array.fill[Byte](50)(5)
-  }
-
-  // ---- REAL MJPEG frame raster decode --------------------------------
-
-  /** MP4 whose video track is Motion-JPEG: each sample is a REAL JPEG
-    * image (JDK-encoded), sample description fourcc `jpeg`, one chunk,
-    * optionally no stss (⇒ every frame sync per 14496-12). */
-  private def craftMjpegMp4(frames: Seq[Array[Byte]],
-      codec: String = "jpeg", withStss: Boolean = false): Array[Byte] = {
-    val ftyp = box("ftyp",
-      "isom".getBytes("ISO-8859-1") ++ u32(512) ++
-        "isomjpeg".getBytes("ISO-8859-1"))
-    val mdat = box("mdat", frames.toArray.flatten)
-    val chunk1Off = ftyp.length + 8
-    val mvhd = box("mvhd",
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(1000) ++ u32(1000) ++
-        Array.fill[Byte](80)(0))
-    val tkhd = box("tkhd",
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(1) ++ u32(0) ++ u32(1000) ++
-        Array.fill[Byte](52)(0) ++
-        u32(16L << 16) ++ u32(8L << 16))
-    val mdhd = box("mdhd",
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(600) ++ u32(600) ++ u32(0))
-    val hdlr = box("hdlr",
-      u32(0) ++ u32(0) ++ "vide".getBytes("ISO-8859-1") ++
-        Array.fill[Byte](12)(0))
-    val entry = box(codec, Array.fill[Byte](78)(0))
-    val stsd = box("stsd", u32(0) ++ u32(1) ++ entry)
-    val stsz = box("stsz",
-      u32(0) ++ u32(0) ++ u32(frames.length.toLong) ++
-        frames.toArray.flatMap(f => u32(f.length.toLong)))
-    val stts = box("stts",
-      u32(0) ++ u32(1) ++ u32(frames.length.toLong) ++ u32(100))
-    val stsc = box("stsc",
-      u32(0) ++ u32(1) ++ u32(1) ++ u32(frames.length.toLong) ++ u32(1))
-    val stco = box("stco", u32(0) ++ u32(1) ++ u32(chunk1Off.toLong))
-    val stss =
-      if (withStss) box("stss", u32(0) ++ u32(1) ++ u32(1))
-      else Array[Byte]()
-    val stbl = box("stbl", stsd ++ stsz ++ stts ++ stsc ++ stco ++ stss)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", mdhd ++ hdlr ++ minf)
-    val trak = box("trak", tkhd ++ mdia)
-    val moov = box("moov", mvhd ++ trak)
-    ftyp ++ mdat ++ moov
-  }
-
-  /** Solid-color JPEG — lossy, but a constant field encodes within a
-    * couple of intensity levels. */
-  private def solidJpeg(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for { x <- 0 until w; y <- 0 until h }
-      img.setRGB(x, y, r << 16 | g << 8 | b)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", out)
-    out.toByteArray
-  }
-
-  test("decodeVideoPixels rasters REAL pixel means from JPEG-coded video frames") {
-    implicit val s = spark
-    // Two solid frames: mean over both ≈ the average of the two colors.
-    val mjpeg = craftMjpegMp4(Seq(
-      solidJpeg(16, 8, 200, 40, 40), solidJpeg(16, 8, 40, 40, 200)))
-    val avc = craftMp4() // entropy-coded codec: no raster path
-    val media = Seq(
-      MediaRecord(80L, "video", mjpeg, "mp4", 0, 0),
-      MediaRecord(81L, "video", avc, "mp4", 0, 0),
-      MediaRecord(82L, "video", "not a video".getBytes("UTF-8"), "raw", 0, 0))
-      .toDS()
-    val got = Multimodal.decodeVideoPixels(media, nFrames = 4)
-      .collect().sortBy(_.media_id)
-    got(0).decoded_frames shouldBe true
-    got(0).codec shouldBe "jpeg"
-    got(0).n_frames_sampled shouldBe 2
-    (got(0).width, got(0).height) shouldBe ((16, 8))
-    got(0).mean_r shouldBe 120.0 +- 6.0 // (200+40)/2, JPEG-lossy
-    got(0).mean_g shouldBe 40.0 +- 6.0
-    got(0).mean_b shouldBe 120.0 +- 6.0
-    got(0).mean_luma shouldBe
-      (0.299 * got(0).mean_r + 0.587 * got(0).mean_g +
-        0.114 * got(0).mean_b) +- 1e-9
-    got(1).decoded_frames shouldBe false
-    got(1).codec shouldBe "avc1"
-    got(2).decoded_frames shouldBe false
-    got(2).codec shouldBe ""
-  }
-
-  test("syncFrameSlices: no-stss picks are arithmetic and a forged fixed-size count is refused") {
-    // Six 4-byte fixed-size samples, NO stss: every sample is sync and
-    // the ≤ n picks must come out evenly spaced without materializing
-    // the full sample list.
-    val frames = (1 to 6).map(i => Array.fill[Byte](4)(i.toByte))
-    val mp4 = craftMjpegMp4(frames)
-    val got = Multimodal.IsoBmffCodec.syncFrameSlices(mp4, 3)
-    got.map(_._1) shouldBe Seq(1L, 3L, 6L) // 1 + 5i/2 for i = 0,1,2
-    got(1)._2 shouldBe Array.fill[Byte](4)(3)
-    got(2)._2 shouldBe Array.fill[Byte](4)(6)
-    // Forged header: fixed sample_size 1 MB × 2^20 samples ≫ payload.
-    // Must refuse instantly (payload-derived bound), never allocate.
-    val stszAt = {
-      // find the stsz box and forge its fixed-size + count fields
-      val idx = mp4.indexOfSlice("stsz".getBytes("ISO-8859-1"))
-      idx + 4 // payload starts after fourcc
-    }
-    val forged = mp4.clone()
-    val bb = java.nio.ByteBuffer.wrap(forged)
-    bb.putInt(stszAt + 4, 1 << 20) // sample_size = 1 MiB
-    bb.putInt(stszAt + 8, 1 << 20) // sample_count = 2^20
-    Multimodal.IsoBmffCodec.syncFrameSlices(forged, 4) shouldBe Nil
-  }
-
-  test("FUZZ: forged size/count fields — every u32 in the container × " +
-    "{1, 2^16, 2^31−1, 2^32−1} declines cleanly, output stays payload-bounded") {
-    // The structural form of the round-9 one-off guards (forged
-    // sample counts, box sizes): corrupt EVERY 4-aligned u32 of a
-    // fully valid container with each boundary count and re-run every
-    // parsing entry point. Contract: no throw, no hang, and nothing
-    // in the output proportional to a claimed count — so the next
-    // codec or table type inherits the guard instead of relearning it.
-    val (mp4, _) = craftMp4WithSamples()
-    val forgedValues = Seq(1, 0x10000, 0x7fffffff, 0xffffffff)
-    val t0 = System.nanoTime()
-    for (off <- 0 until (mp4.length - 3) by 4; v <- forgedValues) {
-      val m = mp4.clone()
-      java.nio.ByteBuffer.wrap(m).putInt(off, v)
-      withClue(s"mp4 u32@$off := $v: ") {
-        noException should be thrownBy {
-          Multimodal.IsoBmffCodec.videoMeta(m)
-          Multimodal.IsoBmffCodec.frameStats(m)
-          val slices = Multimodal.IsoBmffCodec.syncFrameSlices(m, 4)
-          assert(slices.length <= 4)
-          slices.foreach { case (_, sliceBytes) =>
-            assert(sliceBytes.length <= m.length) }
-        }
-      }
-    }
-    // Same sweep over a WAV header (fmt/data chunk sizes, rates,
-    // frame counts all live in the first bytes).
-    val wav = pcm16Wav(Array.tabulate(64)(i => (i * 257).toShort))
-    for (off <- 0 until math.min(wav.length - 3, 64) by 4;
-        v <- forgedValues) {
-      val w = wav.clone()
-      java.nio.ByteBuffer.wrap(w).putInt(off, v)
-      withClue(s"wav u32@$off := $v: ") {
-        noException should be thrownBy {
-          Multimodal.AudioIoCodec.audioMeta(w)
-          Multimodal.AudioIoCodec.sampleStats(w)
-          Multimodal.AudioIoCodec.bandEnergies(w, Seq(1000.0))
-        }
-      }
-    }
-    // Interactivity budget: a count-proportional allocation or
-    // quadratic re-walk in ANY mutant blows this bound loudly.
-    (System.nanoTime() - t0) / 1e9 should be < 120.0
-  }
-
-  // ---- REAL image resize ---------------------------------------------
-
-  test("resizeImages: bilinear downscale + PNG re-encode, pass-through below maxDim") {
-    implicit val s = spark
-    val media = Seq(
-      MediaRecord(60L, "image", imageBytes(8, 4, "png"), "png", 0, 0),
-      MediaRecord(61L, "image", imageBytes(2, 2, "png"), "png", 0, 0),
-      MediaRecord(62L, "image", "not an image".getBytes("UTF-8"), "raw", 0, 0))
-      .toDS()
-    val got = Multimodal.resizeImages(media, maxDim = 4)
-      .collect().sortBy(_.media_id)
-    // 8x4 → 4x2, real PNG out.
-    got(0).format shouldBe "png;resized"
-    (got(0).declared_width, got(0).declared_height) shouldBe ((4, 2))
-    Multimodal.ImageIoCodec.imageMeta(got(0).payload) shouldBe Some((4, 2, 3))
-    // 2x2 already under the cap: byte-identical pass-through.
-    got(1).payload shouldBe imageBytes(2, 2, "png")
-    got(1).format shouldBe "png"
-    // non-image: untouched.
-    got(2).payload shouldBe "not an image".getBytes("UTF-8")
-  }
-
-  test("resizeImages survives a tight raster cap by resampling the subsampled grid") {
-    implicit val s = spark
-    val media = Seq(
-      MediaRecord(70L, "image", imageBytes(8, 8, "png"), "png", 0, 0)).toDS()
-    // maxDecodePixels=4 forces step 2 (16-pixel subsampled raster is
-    // still > 4 at step 2? 4x4=16 > 4 → step ceil(sqrt(64/4))=4 → 2x2):
-    // output must still be a real 4x4 PNG.
-    val got = Multimodal.resizeImages(media, maxDim = 4, maxDecodePixels = 4L)
-      .collect().head
-    got.format shouldBe "png;resized"
-    Multimodal.ImageIoCodec.imageMeta(got.payload) shouldBe Some((4, 4, 3))
-  }
-
-  test("decodeVideoMeta: real container decode, declared-metadata fallback otherwise") {
-    implicit val s = spark
-    val mixed = Seq(
-      MediaRecord(30L, "video", craftMp4(), "mp4", 0, 0),
-      MediaRecord(31L, "video", "not a video".getBytes("UTF-8"), "raw",
-        320, 240),
-      MediaRecord(32L, "video", Array[Byte](), "raw", 0, 0)).toDS()
-    val got = Multimodal.decodeVideoMeta(mixed).collect().sortBy(_.media_id)
-    got(0).decoded shouldBe true
-    got(0).brand shouldBe "isom"
-    got(0).duration_sec shouldBe 5.0 +- 1e-9
-    got(0).width shouldBe 640
-    got(0).height shouldBe 360
-    got(0).codec shouldBe "avc1"
-    got(1).decoded shouldBe false
-    got(1).width shouldBe 320 // declared metadata kept on fallback
-    got(1).height shouldBe 240
-    got(2).decoded shouldBe false
-    got(2).n_bytes shouldBe 0L
-  }
-
-  // ---- perceptual hash + image near-dup (T87) ------------------------
-
-  /** PNG whose 8×8 aHash grid is EXACTLY `pattern`: block (r,c) is a
-    * constant bright (200) or dark (50) gray per pattern bit r*8+c, at
-    * `blockPx` pixels per block — the cell means are exactly 200/50,
-    * the global mean sits between, so aHash64 == pattern by
-    * construction at ANY block size (resize invariance). */
-  private def patternPng(pattern: Long, blockPx: Int,
-      brighten: Int = 0): Array[Byte] = {
-    val dim = 8 * blockPx
-    val img = new java.awt.image.BufferedImage(
-      dim, dim, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for { y <- 0 until dim; x <- 0 until dim } {
-      val bit = (y / blockPx) * 8 + (x / blockPx)
-      val base = if ((pattern >> bit & 1L) == 1L) 200 else 50
-      val g = math.min(255, base + brighten)
-      img.setRGB(x, y, g << 16 | g << 8 | g)
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    out.toByteArray
-  }
-
-  private val checker: Long = {
-    var p = 0L
-    for { r <- 0 until 8; c <- 0 until 8 if (r + c) % 2 == 0 }
-      p |= 1L << (r * 8 + c)
-    p
-  }
-
-  test("aHash64 recovers the block pattern; invariant to resize and brightness shift") {
-    val h = Multimodal.ImageIoCodec.aHash64(patternPng(checker, 8))
-    h shouldBe Some(checker)
-    // same pattern at 2x resolution and +30 uniform brightness: the
-    // cell means and the global mean shift together, bits unchanged
-    Multimodal.ImageIoCodec.aHash64(patternPng(checker, 16)) shouldBe Some(checker)
-    Multimodal.ImageIoCodec.aHash64(patternPng(checker, 8, brighten = 30)) shouldBe
-      Some(checker)
-    // non-image refuses
-    Multimodal.ImageIoCodec.aHash64("nope".getBytes("UTF-8")) shouldBe None
-  }
-
-  test("imageNearDupCensus: exact band arithmetic, banded near pair found, far image silent") {
-    implicit val s = spark
-    val near = checker ^ (1L << 3) ^ (1L << 40) // 2 blocks flipped
-    val far = ~checker // all 64 bits differ: no band collides
-    val media = Seq(
-      MediaRecord(1L, "image", patternPng(checker, 8), "png", 0, 0),
-      MediaRecord(2L, "image", patternPng(checker, 16), "png", 0, 0), // same hash, different bytes
-      MediaRecord(3L, "image", patternPng(near, 8), "png", 0, 0),
-      MediaRecord(4L, "image", patternPng(far, 8), "png", 0, 0),
-      MediaRecord(5L, "image", "not an image".getBytes("UTF-8"), "raw", 0, 0))
-      .toDS()
-    val hashes = Multimodal.perceptualHashes(media).toDF()
-    val census = Multimodal.imageNearDupCensus(hashes, maxHamming = 3)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // hamming 0: the (1,2) same-hash pair; hamming 2: {1,2} × {3}
-    census shouldBe Map(0 -> 1L, 2 -> 2L)
-    // pair frame is distinct-hash level: exactly one (checker, near) row
-    val pairs = Multimodal.imageNearDupPairs(
-      hashes.filter(org.apache.spark.sql.functions.col("decoded")), 3)
-      .collect()
-    pairs.length shouldBe 1
-    pairs(0).getInt(2) shouldBe 2
-  }
-
-  test("bandEnergies: a pure sine concentrates in its own Goertzel band") {
-    val rate = 8000f
-    val f0 = 1000.0
-    val n = 4000 // whole number of cycles at 1 kHz / 8 kHz
-    val wav = pcm16Wav(Array.tabulate(n)(i =>
-      (math.sin(2 * math.Pi * f0 * i / rate) * 20000).toShort), rate)
-    val bands = Seq(250.0, 1000.0, 3500.0)
-    val got = Multimodal.AudioIoCodec.bandEnergies(wav, bands).get
-    got.sum shouldBe 1.0 +- 1e-9
-    got(1) should be > 0.99 // the probed tone
-    got(0) should be < 0.01
-    got(2) should be < 0.01
-  }
-
-  test("bandEnergies: two-tone mix splits energy by amplitude squared") {
-    val rate = 8000f
-    val n = 8000
-    val wav = pcm16Wav(Array.tabulate(n) { i =>
-      val a = math.sin(2 * math.Pi * 500.0 * i / rate) * 16000
-      val b = math.sin(2 * math.Pi * 2000.0 * i / rate) * 8000
-      (a + b).toShort
-    }, rate)
-    val got = Multimodal.AudioIoCodec
-      .bandEnergies(wav, Seq(500.0, 2000.0)).get
-    // power ratio 4:1 → fractions 0.8 / 0.2
-    got(0) shouldBe 0.8 +- 0.01
-    got(1) shouldBe 0.2 +- 0.01
-  }
-
-  test("audioBandProfile: Dataset plumbing carries fractions and the decode flag") {
-    implicit val s = spark
-    import spark.implicits._
-    val wav = pcm16Wav(Array.tabulate(2000)(i =>
-      (math.sin(2 * math.Pi * 1000.0 * i / 8000.0) * 12000).toShort))
-    val media = Seq(
-      Multimodal.MediaRecord(1L, "audio", wav, "wav", 0, 0),
-      Multimodal.MediaRecord(2L, "junk", Array.fill[Byte](16)(3),
-        "raw", 0, 0)).toDS()
-    val rows = Multimodal.audioBandProfile(media, Seq(250.0, 1000.0))
-      .collect().sortBy(_.media_id)
-    rows(0).decoded_samples shouldBe true
-    rows(0).band_fracs(1) should be > 0.99
-    rows(1).decoded_samples shouldBe false
-    rows(1).band_fracs shouldBe empty
-  }
-
-  test("bandEnergies: Nyquist-violating bands report zero; junk payloads None") {
-    val wav = pcm16Wav(Array.tabulate(800)(i =>
-      (math.sin(2 * math.Pi * 440.0 * i / 8000.0) * 10000).toShort))
-    val got = Multimodal.AudioIoCodec
-      .bandEnergies(wav, Seq(440.0, 7999.0)).get
-    got(1) shouldBe 0.0
-    got(0) shouldBe 1.0 +- 1e-9
-    Multimodal.AudioIoCodec.bandEnergies(
-      Array.fill[Byte](64)(7), Seq(440.0)) shouldBe None
-    Multimodal.AudioIoCodec.bandEnergies(wav, Seq(7999.0)) shouldBe None
-  }
-
-  test("readMediaDir: binaryFile lake ingest — kinds by extension, stable ids, " +
-      "size filter, decode composition") {
-    val dir = java.nio.file.Files.createTempDirectory("medialake")
-    def put(name: String, bytes: Array[Byte]): Unit =
-      java.nio.file.Files.write(dir.resolve(name), bytes)
-    put("a.png", imageBytes(4, 2, "png"))
-    val wav = pcm16Wav(Array.tabulate(100)(i => (i * 100).toShort))
-    put("b.wav", wav)
-    put("notes.txt", "not media".getBytes("UTF-8"))
-    put("huge.png", Array.fill[Byte](4096)(1)) // over the maxBytes cap below
-
-    val got = Multimodal.readMediaDir(spark, dir.toString, maxBytes = 2048)
-    val rows = got.collect().map(r => r.format -> r).toMap
-    rows.keySet shouldBe Set("png", "wav", "txt") // huge.png filtered by size
-    rows("png").kind shouldBe "image"
-    rows("wav").kind shouldBe "audio"
-    rows("txt").kind shouldBe "other"
-    rows("png").payload shouldBe imageBytes(4, 2, "png")
-    // Stable ids: re-ingesting the same lake yields identical ids.
-    val again = Multimodal.readMediaDir(spark, dir.toString, maxBytes = 2048)
-      .collect().map(r => r.format -> r.media_id).toMap
-    rows.map { case (f, r) => f -> r.media_id } shouldBe again
-    // Decode operators compose directly on the ingested rows.
-    import spark.implicits._
-    implicit val s = spark
-    val meta = Multimodal.decodeMeta(got.filter($"kind" === "image"))
-      .collect()
-    meta.length shouldBe 1
-    meta(0).width shouldBe 4
-    meta(0).height shouldBe 2
-    // The scan really is the binaryFile FileFormat.
-    got.queryExecution.executedPlan.toString.toLowerCase should
-      include("binaryfile")
   }
 }
