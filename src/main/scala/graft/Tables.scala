@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.graft.CatalystBridge
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 import graft.sources.SharedTable
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md), and
@@ -55,7 +55,6 @@ object Tables {
   private[graft] final class Resolved(val fingerprint: String,
       spark: SparkSession, relation: LogicalRelation,
       val tsFix: Option[Column]) {
-    def schema: StructType = relation.schema
     def frame(): DataFrame =
       CatalystBridge.ofRows(spark, relation.newInstance())
   }
@@ -64,8 +63,11 @@ object Tables {
 
   private val resolved = new ConcurrentHashMap[(SparkSession, String), Resolved]()
 
-  /** The current resolution of the parquet files under `path`. */
-  private[graft] def resolve(spark: SparkSession, path: String): Resolved = {
+  /** The current resolution of table `name`'s parquet files under
+    * `sfDir`. */
+  private[graft] def resolve(spark: SparkSession, sfDir: String,
+      name: String): Resolved = {
+    val path = s"$sfDir/$name.parquet"
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = SharedTable.listFiles(fs, p)
@@ -77,9 +79,6 @@ object Tables {
       if (prev != null && prev.fingerprint == fp) prev
       else read(spark, fs, path, fp, files))
   }
-
-  private[graft] def resolve(spark: SparkSession, sfDir: String,
-      name: String): Resolved = resolve(spark, s"$sfDir/$name.parquet")
 
   private def read(spark: SparkSession, fs: FileSystem, path: String,
       fp: String, files: Seq[FileStatus]): Resolved = {

@@ -14,11 +14,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * dimensional min/max pruning in modern lakehouse table formats).
   *
   * Inputs are expected to be BUCKET RANKS already in
-  * `[0, 2^bitsPerDim)` — [[graft.operators.ZOrder]] produces them via
-  * [[SortedBucket]] over per-dimension quantile bounds (equi-depth, so
-  * the curve is data-adaptive, not value-range-skewed). Bits above
-  * `bitsPerDim` are ignored; negative ranks are clamped to 0 so a
-  * caller bug degrades locality, never correctness.
+  * `[0, 2^bitsPerDim)` (q101 buckets each dimension to fixed widths
+  * first). Bits above `bitsPerDim` are ignored; negative ranks are
+  * clamped to 0 so a caller bug degrades locality, never correctness.
   *
   * Why an expression: the declarative form is a 2·bits-term chain of
   * `shiftleft(shiftright(...))` bit ops whose Catalyst tree grows with

@@ -56,40 +56,4 @@ object SortedBucket {
     val r = Arrays.binarySearch(bounds, v)
     if (r >= 0) r else -r - 1
   }
-
-  /** Double twin of [[bucket]] — same upper-inclusive contract. */
-  def bucketD(bounds: Array[Double], v: Double): Int = {
-    val r = Arrays.binarySearch(bounds, v)
-    if (r >= 0) r else -r - 1
-  }
-}
-
-/** [[SortedBucket]] over DOUBLE values and bounds — the fractional-
-  * dimension twin. Long dimensions must NOT route through this (a
-  * double carries 53 mantissa bits; 60-bit hash keys would collapse) —
-  * [[graft.operators.ZOrder.dimBounds]] dispatches on the column type
-  * so each dimension gets full-resolution ranking. */
-case class SortedBucketDouble(child: Expression, bounds: Array[Double])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sorted_bucket_d requires a double argument, got ${child.dataType}")
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_bucket_d"
-
-  override protected def nullSafeEval(v: Any): Any =
-    SortedBucket.bucketD(bounds, v.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val arr = ctx.addReferenceObj("sortedBucketBoundsD", bounds, "double[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.plans.SortedBucket.bucketD($arr, $v);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : SortedBucketDouble = copy(child = newChild)
 }

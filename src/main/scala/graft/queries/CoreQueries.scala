@@ -484,11 +484,10 @@ object CoreQueries {
         .orderBy("k")
     },
 
-    // Z-order layout curve (operators/ZOrder + plans/InterleaveBits):
+    // Z-order curve key (plans/InterleaveBits, SQL `interleave_bits`):
     // the Morton-key census over fixed-width (orderkey, partkey)
-    // buckets — a cross-engine bit-exactness witness for the curve key
-    // the clustering write sorts by (the layout itself is spec-gated in
-    // ZOrderSpec: per-file min/max spans tighten on BOTH dims). The
+    // buckets — a cross-engine bit-exactness witness for the kernel
+    // (ZOrderSpec pins it against the bit-by-bit definition). The
     // oracle spells the 8-bit interleave out as 16 shift/mask terms.
     QueryDef("q101_zorder_cells", {
       val terms = (0 until 8).flatMap(i => Seq(

@@ -8,14 +8,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned snapshot table — the minimal transactional layer the
-  * incremental sinks (S7/S12) and [[graft.operators.Compaction]]'s
-  * "the swap is the table format's transaction" note assume: every
-  * write lands in its OWN data directory, then publishes by creating
-  * an immutable numbered manifest with `CREATE_NEW` (an atomic
-  * filesystem primitive). Readers resolve the highest manifest and
-  * scan exactly the directories it lists — a half-written data dir is
-  * invisible until its manifest exists, and a manifest is never
-  * rewritten, so reads are snapshot-consistent without any lock.
+  * incremental sinks (S7/S12) assume: every write lands in its OWN
+  * data directory, then publishes by creating an immutable numbered
+  * manifest with `CREATE_NEW` (an atomic filesystem primitive).
+  * Readers resolve the highest manifest and scan exactly the
+  * directories it lists — a half-written data dir is invisible until
+  * its manifest exists, and a manifest is never rewritten, so reads
+  * are snapshot-consistent without any lock.
   *
   * This is the Delta/Iceberg commit idea reduced to what local/HDFS
   * semantics give for free (atomic exclusive-create), built on public
@@ -30,7 +29,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale: manifests list data DIRECTORIES (one per commit), so
   * manifest size and read-side listing grow with commit count, not
   * row count; [[rewrite]] collapses lineage back to one directory
-  * (pair with [[graft.operators.Compaction]] for file-level sizing)
   * and [[vacuum]] deletes directories no retained manifest references.
   * Driver state is O(#versions).
   */
@@ -101,8 +99,7 @@ object SnapshotStore {
 
   /** [[appendOnce]]'s overwrite twin: replace the table as a tagged
     * version, no-op if the tag is already published — the refresh
-    * publish for replace-style consumers
-    * ([[graft.operators.IncrementalRollup]]). */
+    * publish for replace-style consumers. */
   def overwriteOnce(df: DataFrame, root: String, tag: String,
       statsCols: Seq[String] = Seq.empty): Version =
     history(root).find(_.tag.contains(tag)) match {
@@ -180,7 +177,7 @@ object SnapshotStore {
 
   /** Read specific data directories of a snapshot table (relative
     * paths as listed in a manifest) — the delta-scan hook for
-    * incremental consumers ([[graft.operators.IncrementalRollup]]). */
+    * incremental consumers. */
   def readDirs(root: String, dirs: Seq[String])(
       implicit spark: SparkSession): DataFrame = {
     require(dirs.nonEmpty, "readDirs needs at least one directory")

@@ -2,8 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 class LayoutAuditSpec extends SparkSpec {
@@ -38,94 +36,9 @@ class LayoutAuditSpec extends SparkSpec {
     scoreStats.map(_.max_double.get).max shouldBe 99.9
   }
 
-  test("fileProfile: one row per file with row-group and size totals") {
-    val dir = tmp("audit-files")
-    (0 until 500).toDF("v").repartition(5)
-      .write.mode("overwrite").parquet(dir)
-    val prof = LayoutAudit.fileProfile(spark, dir).collect()
-    prof.length shouldBe 5
-    prof.map(_.getAs[Long]("n_rows")).sum shouldBe 500L
-    prof.foreach(_.getAs[Long]("compressed_bytes") should be > 0L)
-  }
-
-  test("clusteringScore from footers: sorted layout scores far below random") {
-    val n = 20000
-    val rnd = new scala.util.Random(7)
-    val df = (0 until n).map(_ => rnd.nextLong() & 0xffffffffL)
-      .toDF("k")
-    val randomDir = tmp("audit-random")
-    val sortedDir = tmp("audit-sorted")
-    // same rows, two layouts, same file count
-    df.repartition(8).write.mode("overwrite").parquet(randomDir)
-    df.repartitionByRange(8, col("k")).sortWithinPartitions("k")
-      .write.mode("overwrite").parquet(sortedDir)
-    val randomScore = LayoutAudit.clusteringScore(
-      LayoutAudit.audit(spark, randomDir, Seq("k")), "k")
-    val sortedScore = LayoutAudit.clusteringScore(
-      LayoutAudit.audit(spark, sortedDir, Seq("k")), "k")
-    randomScore should be > 0.8 // every group spans ~the full range
-    sortedScore should be < 0.3 // each group spans ~1/8 of the range
-    sortedScore should be < randomScore / 3
-  }
-
-  test("zordered layout tightens BOTH dimensions' footer spans vs single-sort") {
-    val n = 4096
-    val rows = (0 until n).map { i =>
-      val r = new scala.util.Random(i)
-      (r.nextInt(1 << 16).toLong, r.nextInt(1 << 16).toLong, i.toLong)
-    }
-    val df = rows.toDF("x", "y", "id")
-    val single = tmp("audit-single")
-    val zord = tmp("audit-zorder")
-    df.repartitionByRange(8, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(single)
-    ZOrder.cluster(df, Seq("x", "y"), minParts = 8)
-      .write.mode("overwrite").parquet(zord)
-    def score(dir: String, c: String) =
-      LayoutAudit.clusteringScore(LayoutAudit.audit(spark, dir, Seq(c)), c)
-    // single-column sort: x tight, y unclustered (≈ full range)
-    score(single, "x") should be < 0.3
-    score(single, "y") should be > 0.8
-    // z-order: BOTH dimensions partially clustered in the FOOTERS
-    score(zord, "x") should be < 0.75
-    score(zord, "y") should be < 0.75
-  }
-
   test("empty dir fails loudly") {
     val dir = tmp("audit-empty")
     an[IllegalArgumentException] should be thrownBy
       LayoutAudit.audit(spark, dir, Seq("x"))
-  }
-
-  test("schemaDiff: added / removed / type_changed / unchanged per column, footer-only") {
-    val a = tmp("schema-a")
-    val b = tmp("schema-b")
-    Seq((1L, 1, "x", 0.5)).toDF("id", "version", "name", "score")
-      .write.mode("overwrite").parquet(a)
-    // Release B: drops `name`, widens `version` int→long, adds `lang`.
-    Seq((1L, 1L, 0.5, "en")).toDF("id", "version", "score", "lang")
-      .write.mode("overwrite").parquet(b)
-    val got = LayoutAudit.schemaDiff(spark, a, b)
-      .collect().map(r => r.getString(0) ->
-        ((r.getString(1), r.getString(2), r.getString(3)))).toMap
-    got("id") shouldBe (("unchanged", "bigint", "bigint"))
-    got("version") shouldBe (("type_changed", "int", "bigint"))
-    got("name") shouldBe (("removed", "string", ""))
-    got("lang") shouldBe (("added", "", "string"))
-    got("score") shouldBe (("unchanged", "double", "double"))
-    // Output is column-name sorted and bounded by the wider schema.
-    LayoutAudit.schemaDiff(spark, a, b).select("column")
-      .as[String].collect() shouldBe
-      Array("id", "lang", "name", "score", "version")
-  }
-
-  test("schemaDiff surfaces nested struct-field changes on the top-level column") {
-    val a = tmp("schema-na")
-    val b = tmp("schema-nb")
-    Seq((1L, (1, "u"))).toDF("id", "meta").write.mode("overwrite").parquet(a)
-    Seq((1L, (1L, "u"))).toDF("id", "meta").write.mode("overwrite").parquet(b)
-    val got = LayoutAudit.schemaDiff(spark, a, b)
-      .filter($"column" === "meta").collect()(0)
-    got.getString(1) shouldBe "type_changed"
   }
 }

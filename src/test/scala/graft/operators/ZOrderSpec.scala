@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CatalystBridge
 
 import graft.SparkSpec
 import graft.plans.InterleaveBits
 
+/** Pins the Morton interleave kernel behind q101, [[InterleaveBits]]. */
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -70,253 +70,4 @@ class ZOrderSpec extends SparkSpec {
 
   // SQL registration (`interleave_bits`) is covered in
   // GraftExtensionsSpec — extensions install at session build time.
-
-  // Deterministic pseudo-uniform 2-D points on [0, 4096)².
-  private def points(n: Int) = (0 until n).map { i =>
-    ((i * 2654435761L) % 4096, (i * 40503L + 17) % 4096)
-  }
-
-  test("cluster: rows preserved, curve key globally ordered across partitions") {
-    val df = points(40000).toDF("x", "y")
-    val out = ZOrder.cluster(df, Seq("x", "y"), bitsPerDim = 6,
-      minParts = 16)
-    // Multiset unchanged.
-    out.count() shouldBe 40000L
-    out.agg(sum("x"), sum("y")).collect().head.toSeq shouldBe
-      df.agg(sum("x"), sum("y")).collect().head.toSeq
-    // Recompute the curve key with the same (deterministic) bounds and
-    // assert the output is globally z-sorted: within-partition monotone
-    // AND partition ranges stacked in order.
-    val bounds = ZOrder.dimBounds(df, Seq("x", "y"), 6)
-    val z = ZOrder.zvalue(Seq(col("x"), col("y")), bounds, 6)
-    val perPart = out.withColumn("z", z).select("z").as[Long]
-      .rdd.mapPartitionsWithIndex { (pid, it) =>
-        val zs = it.toArray
-        if (zs.isEmpty) Iterator.empty
-        else {
-          val sortedWithin = zs.sliding(2).forall(w =>
-            w.length < 2 || w(0) <= w(1))
-          Iterator.single((pid, zs.head, zs.last, sortedWithin))
-        }
-      }.collect().sortBy(_._1)
-    all(perPart.map(_._4)) shouldBe true
-    perPart.sliding(2).foreach {
-      case Array(a, b) => assert(a._3 <= b._2,
-        s"partition ${a._1} max ${a._3} > partition ${b._1} min ${b._2}")
-      case _ =>
-    }
-    perPart.length should be >= 8 // actually fanned out, not one fat file
-  }
-
-  test("3-dimension clustering: rows preserved, curve ordered (interleave3 path)") {
-    val df = (0 until 9000).map { i =>
-      ((i * 2654435761L) % 512, (i * 40503L + 17) % 512,
-        (i * 69069L + 5) % 512)
-    }.toDF("x", "y", "w")
-    val out = ZOrder.cluster(df, Seq("x", "y", "w"), bitsPerDim = 5,
-      minParts = 8)
-    out.count() shouldBe 9000L
-    out.agg(sum("x"), sum("y"), sum("w")).collect().head.toSeq shouldBe
-      df.agg(sum("x"), sum("y"), sum("w")).collect().head.toSeq
-    val bounds = ZOrder.dimBounds(df, Seq("x", "y", "w"), 5)
-    val z = ZOrder.zvalue(Seq(col("x"), col("y"), col("w")), bounds, 5)
-    val perPart = out.withColumn("z", z).select("z").as[Long]
-      .rdd.mapPartitionsWithIndex { (pid, it) =>
-        val zs = it.toArray
-        if (zs.isEmpty) Iterator.empty
-        else Iterator.single((pid, zs.head, zs.last,
-          zs.sliding(2).forall(p => p.length < 2 || p(0) <= p(1))))
-      }.collect().sortBy(_._1)
-    all(perPart.map(_._4)) shouldBe true
-    perPart.sliding(2).foreach {
-      case Array(a, b) => assert(a._3 <= b._2)
-      case _ =>
-    }
-  }
-
-  test("null dimension values rank to the curve origin, never a null key") {
-    val df = Seq((Some(5L), Some(7L)), (None, Some(9L)), (Some(3L), None),
-      (None: Option[Long], None: Option[Long])).toDF("x", "y")
-    val bounds = Seq(ZOrder.LongBounds(Array(4L)), ZOrder.LongBounds(Array(8L)))
-    val zs = df.select(
-        ZOrder.zvalue(Seq(col("x"), col("y")), bounds, 4).as("z"))
-      .collect()
-    all(zs.map(_.isNullAt(0))) shouldBe false // every row gets a key
-    // (None, None) → both ranks 0 → z = 0, the curve origin.
-    df.filter($"x".isNull && $"y".isNull)
-      .select(ZOrder.zvalue(Seq(col("x"), col("y")), bounds, 4))
-      .as[Long].collect() shouldBe Array(0L)
-    // cluster() therefore covers null rows under the same order contract.
-    val out = ZOrder.cluster(
-      points(2000).toDF("x", "y")
-        .union(Seq((None: Option[Long], Option(5L))).toDF("x", "y")),
-      Seq("x", "y"), bitsPerDim = 4, minParts = 4)
-    out.count() shouldBe 2001L
-  }
-
-  test("double dimensions in [0,1) keep full curve resolution (no long collapse)") {
-    // Scores in [0, 1): a cast-to-long rank would put every row in
-    // bucket 0 and the dimension would contribute nothing to the curve.
-    val df = (0 until 20000).map { i =>
-      (((i * 2654435761L) % 4096) / 4096.0, ((i * 40503L + 17) % 4096) / 4096.0)
-    }.toDF("x", "y")
-    val bounds = ZOrder.dimBounds(df, Seq("x", "y"), 6)
-    bounds.foreach { b =>
-      b shouldBe a[ZOrder.DoubleBounds]
-      b.asInstanceOf[ZOrder.DoubleBounds].bounds.length should be >= 32
-    }
-    // The curve key actually spreads (not all-zero) and both dims
-    // steer it: restricting either dim restricts the key range.
-    val z = ZOrder.zvalue(Seq(col("x"), col("y")), bounds, 6)
-    val keyed = df.withColumn("z", z)
-    keyed.select(countDistinct("z")).as[Long].collect().head should be >= 1000L
-    // Not a total order per dim, but the origin corner must sit below
-    // the far corner on the curve.
-    val loBoth = keyed.filter($"x" < 0.1 && $"y" < 0.1)
-      .agg(max("z")).as[Long].collect().head
-    val hiBoth = keyed.filter($"x" > 0.9 && $"y" > 0.9)
-      .agg(min("z")).as[Long].collect().head
-    loBoth should be < hiBoth
-    // and the layout write tightens spans on BOTH double dims
-    val out = ZOrder.cluster(df, Seq("x", "y"), bitsPerDim = 6, minParts = 16)
-    out.count() shouldBe 20000L
-    val dir = java.nio.file.Files.createTempDirectory("zorder_d").toString
-    out.write.mode("overwrite").parquet(dir)
-    val spans = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg((max("x") - min("x")).as("sx"), (max("y") - min("y")).as("sy"))
-      .agg(avg("sx"), avg("sy")).collect().head
-    spans.getDouble(0) should be < 0.55
-    spans.getDouble(1) should be < 0.55
-  }
-
-  test("60-bit hash dimensions keep exact bounds (beyond double precision)") {
-    // Keys near 2^60: a Double round-trip sheds the low ~7 bits of the
-    // BOUND VALUES; the histogram path keeps them exact Long edges.
-    val mask = (1L << 60) - 1
-    val df = (0 until 20000).map { i =>
-      ((i * 6364136223846793005L) & mask, (i * 2862933555777941757L) & mask)
-    }.toDF("h1", "h2")
-    val bounds = ZOrder.dimBounds(df, Seq("h1", "h2"), 6)
-    bounds.foreach { b =>
-      b shouldBe a[ZOrder.LongBounds]
-      val bs = b.asInstanceOf[ZOrder.LongBounds].bounds
-      bs.length shouldBe 63 // full 6-bit resolution on uniform keys
-      // Edges are exact longs, not multiples of a double ulp (2^7 at
-      // this magnitude): at least one bound must be off any 128-grid.
-      bs.count(v => (v & 127L) != 0L) should be > 0
-    }
-    // Clustering on the hash dims yields DISTINCT per-file spans on
-    // both dimensions (each file covers a fraction of each dim).
-    val out = ZOrder.cluster(df, Seq("h1", "h2"), bitsPerDim = 6,
-      minParts = 16)
-    out.count() shouldBe 20000L
-    val dir = java.nio.file.Files.createTempDirectory("zorder_h").toString
-    out.write.mode("overwrite").parquet(dir)
-    val spans = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg((max("h1") - min("h1")).as("s1"), (max("h2") - min("h2")).as("s2"))
-      .collect()
-    spans.length should be >= 8
-    val full = mask.toDouble
-    spans.map(_.getLong(1)).count(_ < full * 0.55) should be >= spans.length / 2
-    spans.map(_.getLong(2)).count(_ < full * 0.55) should be >= spans.length / 2
-  }
-
-  test("full-range signed 64-bit dimensions: no overflow, sane bounds, global order") {
-    // Raw signed hash values spanning ~Long.Min..Long.Max: the exact
-    // `c - lo` cell arithmetic would overflow (ANSI crash / silent
-    // wrap), and the top bucket edge would wrap negative in Long math.
-    val df = (0 until 20000).map { i =>
-      (i * -7046029254386353131L + 99991L, // full signed range walk
-        i * 6364136223846793005L + 1442695040888963407L)
-    }.toDF("h1", "h2")
-    val bounds = ZOrder.dimBounds(df, Seq("h1", "h2"), 6)
-    bounds.foreach { b =>
-      val bs = b.asInstanceOf[ZOrder.LongBounds].bounds
-      bs.length should be >= 32 // real resolution, not a collapse
-      bs.sorted shouldBe bs // sorted-distinct contract
-      bs.distinct.length shouldBe bs.length
-    }
-    val out = ZOrder.cluster(df, Seq("h1", "h2"), bitsPerDim = 6,
-      minParts = 8)
-    out.count() shouldBe 20000L
-    // Global curve order across partitions (the cluster contract).
-    val z = ZOrder.zvalue(Seq(col("h1"), col("h2")), bounds, 6)
-    val perPart = out.withColumn("z", z).select("z").as[Long]
-      .rdd.mapPartitionsWithIndex { (pid, it) =>
-        val zs = it.toArray
-        if (zs.isEmpty) Iterator.empty
-        else Iterator.single((pid, zs.head, zs.last,
-          zs.sliding(2).forall(p => p.length < 2 || p(0) <= p(1))))
-      }.collect().sortBy(_._1)
-    all(perPart.map(_._4)) shouldBe true
-    perPart.sliding(2).foreach {
-      case Array(a, b) => assert(a._3 <= b._2)
-      case _ =>
-    }
-  }
-
-  test("clustered parquet files have tight min/max spans on BOTH dimensions") {
-    val df = points(40000).toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    // Baseline: sort by x alone — y stats are useless (full range).
-    ZOrder.cluster(df, Seq("x", "y"), bitsPerDim = 6, minParts = 16)
-      .write.mode("overwrite").parquet(s"$dir/z")
-    df.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(s"$dir/x")
-    def meanSpans(path: String): (Double, Double) = {
-      val spans = spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg((max("x") - min("x")).as("sx"), (max("y") - min("y")).as("sy"))
-        .agg(avg("sx"), avg("sy")).collect().head
-      (spans.getDouble(0), spans.getDouble(1))
-    }
-    val (zx, zy) = meanSpans(s"$dir/z")
-    val (bx, by) = meanSpans(s"$dir/x")
-    // Z-order: BOTH dims tight (16 parts ≈ 4 curve splits — each dim
-    // sees ≥ 2, so ≤ ~25-50% span; allow slack for bound granularity).
-    zx should be < 4096.0 * 0.55
-    zy should be < 4096.0 * 0.55
-    // Single-column sort: x tight but y spans ~everything.
-    bx should be < 4096.0 * 0.2
-    by should be > 4096.0 * 0.9
-  }
-
-  test("FUZZ: adversarial bounds arrays — unsorted, duplicated, extreme, " +
-    "NaN/Inf, oversized — never throw and the curve key stays in range") {
-    // The structural form of the round-9 wide-bounds guard: whatever
-    // garbage a caller feeds as per-dimension bounds (a future
-    // dimension type's bug, a stale persisted bounds file), zvalue
-    // must stay total — no throw, no null for non-null input, every
-    // key inside [0, 2^(ndims·bits)). Degraded LOCALITY is acceptable
-    // (InterleaveBits' documented stance); a wrapped or out-of-range
-    // key would silently break the global-order clustering contract.
-    val longSets: Seq[Array[Long]] = Seq(
-      Array(0L), Array(Long.MinValue), Array(Long.MaxValue),
-      Array(Long.MinValue, Long.MaxValue),
-      Array(5L, -5L, 5L), // unsorted + duplicate
-      Array.tabulate(1 << 12)(i => i * 2654435761L), // oversized, unsorted
-      Array.fill(64)(7L)) // all-equal
-    val dblSets: Seq[Array[Double]] = Seq(
-      Array(0.0), Array(Double.NaN), Array(Double.PositiveInfinity),
-      Array(Double.NegativeInfinity, Double.NaN, 0.5),
-      Array(1.0, -1.0, 1.0), // unsorted + duplicate
-      Array.tabulate(1000)(i => math.sin(i.toDouble)))
-    val df = spark.range(-8, 8).select(
-      col("id").as("x"), (col("id").cast("double") / 3.0).as("xd"))
-    val bits = 6
-    for (ba <- longSets; bb <- dblSets) {
-      val z = ZOrder.zvalue(Seq(col("x"), col("xd")),
-        Seq(ZOrder.LongBounds(ba), ZOrder.DoubleBounds(bb)), bits)
-      val got = df.select(z.as("z")).collect()
-      got.foreach { r =>
-        assert(!r.isNullAt(0), "null curve key for non-null input")
-        val v = r.getLong(0)
-        assert(v >= 0L && v < (1L << (2 * bits)),
-          s"curve key $v out of range under forged bounds " +
-            s"(${ba.length} long / ${bb.length} double cells)")
-      }
-    }
-  }
 }
