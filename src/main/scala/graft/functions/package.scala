@@ -118,23 +118,11 @@ package object functions {
   def parseBracketList(c: Column): Column =
     split(translate(c, "[]'\"", ""), ",\\s*")
 
-  /** Correct JSON-array parse of the same payload — the "fixed" variant of
-    * the reference's from_json quirk (SURVEY §1.2). */
+  /** JSON-array parse of a string payload — the reference's declared
+    * `job_highlights` parse (`spark_etl_script.py:126`), which yields
+    * NULL on its object-shaped records (SURVEY §1.2 quirk). */
   def parseJsonList(c: Column): Column =
     from_json(c, ArrayType(StringType))
-
-  /** The TRUE-SHAPE parse of the `job_highlights` payload (SURVEY
-    * §1.2): every record in the reference's raw feed carries a JSON
-    * OBJECT — section name → bullet list, e.g. `{"Qualifications":
-    * [...], "Responsibilities": [...]}` (`data/raw_jobs.json`; the
-    * reference's declared ARRAY parse at `spark_etl_script.py:126`
-    * therefore NULLs the column for every well-formed record). This
-    * variant recovers the data: `map<string, array<string>>`.
-    * Opt-in via [[graft.star.JobStarBuilder.build]]'s
-    * `highlightsFixedParse` flag; the bit-compat default keeps the
-    * reference's NULLing array parse. */
-  def parseJsonMap(c: Column): Column =
-    from_json(c, MapType(StringType, ArrayType(StringType)))
 
   /** Signed-zero-safe rounding for FLOAT OUTPUT columns — the suite-wide
     * fix for the class of bug that kept q130 red for two rounds
@@ -198,18 +186,6 @@ package object functions {
     def fanOutScan(key: Column): org.apache.spark.sql.DataFrame =
       graft.functions.fanOutScan(df, key)
   }
-
-  /** Content-defined chunks of a text column ([[graft.plans.CdcChunks]]
-    * — FastCDC gear-hash boundaries): chunks concatenate back to the
-    * input, and an edit reshapes only its own chunk before the stream
-    * re-synchronizes. The dedup-storage split; the token-level
-    * SQL-expressible twin is q135. */
-  def cdcChunks(text: Column, maskBits: Int = 6, minLen: Int = 16,
-      maxLen: Int = 256): Column =
-    org.apache.spark.sql.graft.CatalystBridge.column(
-      graft.plans.CdcChunks(
-        org.apache.spark.sql.graft.CatalystBridge.expr(text),
-        maskBits, minLen, maxLen))
 
   /** Sorted distinct indices of the `phrases` occurring in `text` —
     * ONE Aho–Corasick pass over the bytes regardless of phrase count

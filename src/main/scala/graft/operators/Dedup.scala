@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{functions => gf}
 
 /** Corpus deduplication — the operators that turn near-dup PAIR lists
   * (q27/q28/q30's output shape) into a deduplicated corpus.
@@ -98,122 +97,15 @@ object Dedup {
         col("__isl.ss").as("__ss"), col("__isl.es").as("__es"))
   }
 
-  /** Rolling-hash window frame `(doc_id, i, wh)` for a (id, text)
-    * frame — the windowsFor shape, built inline. */
-  private def windowFrame(docs: DataFrame, width: Int,
-      idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.graft.CatalystBridge
-    docs.select(col(idCol),
-        posexplode(CatalystBridge.column(graft.plans.RollingHashWindows(
-          CatalystBridge.expr(trim(col(textCol))), width)))
-          .as(Seq("p", "wh")))
-      .select(col(idCol).as("doc_id"), (col("p").cast("long") + 1L).as("i"),
-        col("wh"))
-  }
-
-  /** Drop every token of `docs` covered by a span in `spanArrays`
-    * `(doc_id, __ss, __es)` — [[islandSpanArrays]]' per-doc ascending
-    * index-paired form — and reassemble the survivors in position
-    * order with ONE codegen'd [[graft.plans.RemoveSpans]] skip+rejoin
-    * pass (r15, PERF #55; the old posexplode + anti-join + per-doc
-    * collect/sort/join tail was q173's entire measured sf10x cost).
-    * The only corpus-sized movement is the doc_id-equi join of the
-    * skinny span arrays to the text. Every input doc is kept; fully
-    * covered or token-free docs emit an empty string. Parity with the
-    * explode shape (incl. those edge rows) is spec-pinned in
-    * RemoveSpansSpec. */
-  private def rebuildWithoutSpans(docs: DataFrame, spanArrays: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.graft.CatalystBridge
-    val emptyPos = typedLit(Array.empty[Long])
-    docs.join(spanArrays, docs(idCol) === spanArrays("doc_id"), "left")
-      .select(docs(idCol),
-        CatalystBridge.column(graft.plans.RemoveSpans(
-          CatalystBridge.expr(gf.tokens(docs(textCol))),
-          CatalystBridge.expr(coalesce(col("__ss"), emptyPos)),
-          CatalystBridge.expr(coalesce(col("__es"), emptyPos)))).as("__rs"))
-      .select(col(idCol),
-        coalesce(col("__rs.cleaned"), lit("")).as(textCol))
-  }
-
-  /** ExactSubstr POST-PROCESS — the cleaned-corpus EMITTER (Lee et
-    * al. 2021, "Deduplicating Training Data Makes Language Models
-    * Better", §4: after finding duplicated substrings, REMOVE them
-    * and keep the rest of each document). q105 counts what this
-    * removes; this emits the rewritten corpus: every token covered by
-    * a cross-doc duplicated `width`-token window is dropped, the
-    * survivors are rejoined with single spaces in position order.
-    * Docs shorter than `width` tokens have no windows and pass
-    * through (whitespace-normalized); docs whose every token is
-    * covered emit an empty string.
-    *
-    * Returns `(idCol, textCol)` — same shape in, same shape out, so
-    * it composes with [[exact]]/[[qualityFilter]]/[[cleanCorpus]].
-    *
-    * Scale: the window frame and span census are q105's (banded
-    * census + equi-join, no pair explosion); span derivation is one
-    * per-doc aggregate ([[islandSpanArrays]]); the rebuild is one
-    * doc_id-equi join of the skinny per-doc span arrays to the text
-    * plus a codegen'd [[graft.plans.RemoveSpans]] skip+rejoin pass
-    * (O(doc) state, like any per-doc map). Nothing here is quadratic
-    * in corpus size. */
-  def removeDuplicatedSpans(docs: DataFrame, width: Int = 6,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val spans = duplicatedSpanArrays(
-      windowFrame(docs, width, idCol, textCol), width)
-    rebuildWithoutSpans(docs, spans, idCol, textCol)
-  }
-
-  /** The corpus's WINDOW-HASH VOCABULARY `(wh)` — the distinct
-    * rolling-hash `width`-token windows of a published corpus. This is
-    * the ONLY corpus-derived state incremental span dedup needs, and
-    * it is APPEND-ONLY under publishes: publish a cleaned batch →
-    * union in `windowVocabulary(cleanedBatch)` (and re-distinct) —
-    * so materialize it ONCE (a warehouse table bucketed on `wh`, or
-    * any parquet snapshot, fingerprint-keyed like the
-    * `windowsFor`/[[graft.sources.SharedTable]] machinery) and never pay a
-    * corpus re-tokenize per micro-batch. */
-  def windowVocabulary(docs: DataFrame, width: Int = 6,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    windowFrame(docs, width, idCol, textCol).select("wh").distinct()
-
-  /** INCREMENTAL [[removeDuplicatedSpans]] against a PUBLISHED
-    * vocabulary — clean a NEW batch against an already-published
-    * corpus's [[windowVocabulary]] plus the batch itself (the q87
-    * incremental-dedup stance applied to spans: continuously-ingested
-    * training data must not re-emit text the corpus already carries,
-    * and the corpus is immutable — only batch docs are rewritten).
-    * A batch token is dropped when a `width`-token window covering it
+  /** Incremental span derivation against a PUBLISHED window-hash
+    * vocabulary `vocab` (a `wh` column, treated as a set; extra
+    * columns are ignored) for a batch window frame `bwins`
+    * `(doc_id, i, wh)`: a batch window is duplicated when its hash
     * occurs in the vocabulary, or in ≥ 2 distinct batch docs (the
-    * intra-batch rule of the full-corpus variant).
-    *
-    * `vocab` needs a `wh` column (extra columns are ignored); rows
-    * are treated as a SET. Returns the cleaned BATCH, same
-    * `(idCol, textCol)` shape.
-    *
-    * Scale: THIS is the steady-state shape — per increment the corpus
-    * contributes one scan of its materialized vocabulary table (join
-    * state bounded by the vocabulary, bucket-local when the table is
-    * bucketed on `wh`), the batch census is batch-sized, and the span
-    * join + rebuild touch batch rows only. Compute cost is O(batch +
-    * vocabulary scan); no corpus text is tokenized, hashed, or even
-    * read (`DedupSpec` pins the increment's plan to scan no corpus
-    * file). */
-  def removeDuplicatedSpansIncrementalWith(vocab: DataFrame,
-      batch: DataFrame, width: Int = 6, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    rebuildWithoutSpans(batch,
-      incrementalSpanArrays(vocab,
-        windowFrame(batch, width, idCol, textCol), width),
-      idCol, textCol)
-
-  /** The span DERIVATION of [[removeDuplicatedSpansIncrementalWith]]
-    * off a PRECOMPUTED batch window frame `(doc_id, i, wh)` — for
-    * callers that already hold the batch's windows (e.g. a filtered
-    * read of the session's materialized window table, which is
-    * exactly the [[windowFrame]] rows), so the batch is not
-    * re-tokenized and re-hashed per call. Returns the per-doc
-    * ascending index-paired span arrays `(doc_id, __ss, __es)` —
+    * intra-batch rule of [[duplicatedSpanArrays]]). The corpus
+    * contributes only one scan of its vocabulary; no corpus text is
+    * tokenized or hashed (q178). Returns the per-doc ascending
+    * index-paired span arrays `(doc_id, __ss, __es)` —
     * [[graft.plans.RemoveSpans]]' input contract; docs without
     * duplicated windows are absent. */
   def incrementalSpanArrays(vocab: DataFrame, bwins: DataFrame,
@@ -224,19 +116,6 @@ object Dedup {
     val dupWh = vocab.select("wh").union(batchRep).distinct()
     islandSpanArrays(bwins.join(dupWh, "wh").select("doc_id", "i"), width)
   }
-
-  /** [[removeDuplicatedSpansIncrementalWith]] with the vocabulary
-    * derived INLINE from the raw corpus — the one-shot/compat form.
-    * Each call re-tokenizes and re-hashes the whole corpus to
-    * re-derive a vocabulary that is immutable between publishes
-    * (VERDICT r12 item 2), so for a standing ingest pipeline publish
-    * the vocabulary once and call the `With` variant per batch. */
-  def removeDuplicatedSpansIncremental(corpus: DataFrame, batch: DataFrame,
-      width: Int = 6, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    removeDuplicatedSpansIncrementalWith(
-      windowVocabulary(corpus, width, idCol, textCol),
-      batch, width, idCol, textCol)
 
   /** Connected components over a near-dup pair list — the alternating
     * large-star / small-star algorithm (Kiveris et al., "Connected

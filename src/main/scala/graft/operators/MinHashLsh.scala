@@ -6,12 +6,8 @@ import org.apache.spark.sql.functions._
 /** Parameterized MinHash + LSH banding — the candidate-pair generator
   * behind the near-dup family (q28 pair listing, q64 clustering, q125
   * fuzzy census, q156 precision census run it pinned at (16, 4, 4)
-  * for oracle replication), exposed with (nHashes, bands, rowsPerBand)
-  * free so [[LshPlanner]]-sized bandings are a PRODUCTION path, not a
-  * spec-only exercise — `plannedPairs` sizes the split from the
-  * planner at a target Jaccard threshold (PERF.md records the
-  * candidate-volume / verify-cost / recall trade against the pinned
-  * split at two corpus scales).
+  * for oracle replication), with (nHashes, bands, rowsPerBand) as
+  * parameters.
   *
   * Determinism: shingles hash once through the 60-bit md5-prefix
   * [[graft.plans.StableHash60]]; the per-function values derive by
@@ -102,14 +98,5 @@ object MinHashLsh {
       .select(explode(pairs).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
-  }
-
-  /** Planner-sized candidate pairs: (b, r) chosen by [[LshPlanner]]
-    * for the signature budget at the target Jaccard threshold — the
-    * production sizing path. */
-  def plannedPairs(docs: DataFrame, nHashes: Int, threshold: Double,
-      fnWeight: Double = 1.0): DataFrame = {
-    val p = LshPlanner.plan(nHashes, threshold, fnWeight)
-    candidatePairs(docs, nHashes, p.bands, p.rowsPerBand)
   }
 }

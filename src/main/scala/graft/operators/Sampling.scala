@@ -12,11 +12,6 @@ import graft.{functions => gf}
   *     (unlike `rand()`-based splits, which depend on partition layout).
   *     Buckets are `hash mod 100`: [0, trainPct) → train,
   *     [trainPct, trainPct+valPct) → val, rest → test.
-  *   - [[stratified]]: per-stratum Bernoulli sampling via `sampleBy` —
-  *     keeps group proportions when strata are imbalanced (by lang /
-  *     source / quality bucket). Seeded, but partition-layout
-  *     dependent like all Bernoulli sampling; use [[hashSplit]] when
-  *     exact reproducibility across engines matters.
   */
 object Sampling {
 
@@ -30,37 +25,6 @@ object Sampling {
       when(b < trainPct, "train")
         .when(b < trainPct + valPct, "val")
         .otherwise("test"))
-  }
-
-  def stratified(df: DataFrame, stratumCol: String,
-      fractions: Map[String, Double], seed: Long = 42L): DataFrame =
-    df.stat.sampleBy(stratumCol, fractions, seed)
-
-  /** EXACT-quota stratified sample: per stratum, keep exactly
-    * `greatest(1, ⌊cnt·fraction⌋)` rows, chosen deterministically by
-    * `(md5(id), id)` order — for eval-set carving and per-source quota
-    * audits where [[stratified]]'s Bernoulli draw (exact only in
-    * expectation) is not enough. Engine-independent like
-    * [[hashSplit]]: the same rows are selected on every engine at any
-    * partitioning (q107's oracle pins this cross-engine).
-    *
-    * Scale shape: the quota table is one bounded stratum-keyed
-    * aggregate broadcast back; the rank is a per-stratum window —
-    * strata sort in parallel through Spark's spill-capable external
-    * sort. Only this exactness contract needs a sort at all; use
-    * [[hashSplit]]/[[weightedMix]] when expectation suffices. */
-  def stratifiedExact(df: DataFrame, stratumCol: String, idCol: String,
-      fraction: Double): DataFrame = {
-    require(fraction > 0 && fraction <= 1, s"fraction in (0,1]: $fraction")
-    val quotas = df.groupBy(stratumCol)
-      .agg(greatest(lit(1L), floor(count(lit(1)) * fraction)).as("__quota"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(stratumCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("__rk", row_number().over(w).cast("long"))
-      .join(broadcast(quotas), stratumCol)
-      .filter(col("__rk") <= col("__quota"))
-      .select(df.columns.map(col): _*)
   }
 
   /** Deterministic WEIGHTED sampling per stratum — Efraimidis–Spirakis
@@ -92,7 +56,7 @@ object Sampling {
     * `(md5(id), id)` order while the running token sum stays within
     * `budget` (a row is kept iff its INCLUSIVE prefix sum ≤ budget) —
     * how a training mix is assembled to a per-source token budget
-    * rather than a row quota ([[stratifiedExact]]). Same determinism
+    * rather than a row quota (q107). Same determinism
     * story: engine- and layout-independent. Scale shape: one
     * per-stratum window prefix sum — strata sort in parallel,
     * spill-capable; no driver state. */

@@ -145,28 +145,18 @@ object Similarity {
   }
 
   /** Probe + exact in-bucket search over an already-assigned corpus:
-    * queries probe their `nprobe` nearest centroids, the exact cosine
+    * each query row (`qid`, `qe`, `qn`) probes its `nprobe` nearest
+    * centroids by cosine (ties by cent_id), and the exact cosine
     * ranking runs only inside the probed buckets (equi-join on bucket
     * id). Output: (qid, idCol, cos, rank). */
-  /** Coarse-quantizer probe: each query row (`qid`, `qe`, `qn`, plus
-    * any carried columns) → its `nprobe` nearest centroids by cosine
-    * (ties by cent_id), one output row per (query, probed bucket)
-    * carrying `qid`, `carry` and `bucket`. Shared by the exact
-    * in-bucket search and [[hardNegativesIvf]] so probe semantics can
-    * never drift between them. */
-  private[operators] def probeBuckets(q: DataFrame, cent: DataFrame,
-      nprobe: Int, carry: Seq[String]): DataFrame = {
+  private def searchBuckets(assigned: DataFrame, cent: DataFrame,
+      q: DataFrame, k: Int, nprobe: Int, idCol: String): DataFrame = {
     val qw = Window.partitionBy("qid").orderBy(desc("qsim"), asc("cent_id"))
-    broadcast(q).join(broadcast(cent), lit(true))
+    val probes = broadcast(q).join(broadcast(cent), lit(true))
       .withColumn("qsim", dot(col("qe"), col("ce")) / (col("qn") * col("cn")))
       .withColumn("prank", row_number().over(qw))
       .filter(col("prank") <= nprobe)
-      .select((col("qid") +: carry.map(col)) :+ col("cent_id").as("bucket"): _*)
-  }
-
-  private def searchBuckets(assigned: DataFrame, cent: DataFrame,
-      q: DataFrame, k: Int, nprobe: Int, idCol: String): DataFrame = {
-    val probes = probeBuckets(q, cent, nprobe, Seq("qe", "qn"))
+      .select(col("qid"), col("qe"), col("qn"), col("cent_id").as("bucket"))
 
     val cos = dot(col("qe"), col("e")) / (col("qn") * col("nrm"))
     val rw = Window.partitionBy("qid").orderBy(desc("cos"), asc(idCol))
@@ -221,46 +211,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
   }
-
-  /** [[hardNegatives]]' scale path: the same label exclusion applied
-    * INSIDE the probed IVF buckets, so mining cost per query is
-    * nprobe·(N/nlist) scored rows instead of N (at √N sizing,
-    * nprobe·√N). The corpus label rides a skinny (id, label) join onto
-    * the assigned index — [[assignToCentroids]] stays label-agnostic.
-    * Same output shape as [[hardNegatives]]; recall vs the exact
-    * variant is the IVF contract (`SimilaritySpec` pins both the
-    * no-same-label invariant and the recall floor). */
-  def hardNegativesIvf(corpus: DataFrame, queries: DataFrame, k: Int,
-      nCentroids: Int = 16, nprobe: Int = 2,
-      trainN: Int = 128, iters: Int = 2,
-      labelCol: String = "label",
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val cent = trainCentroids(corpus, nCentroids, trainN, iters, idCol, embCol)
-    val assigned = assignToCentroids(prep(corpus, idCol, embCol), cent, idCol)
-      .join(corpus.select(col(idCol), col(labelCol)), Seq(idCol))
-    val q = queries.select(col(idCol).as("qid"),
-        col(labelCol).as("_qlabel"),
-        transform(col(embCol), x => x.cast("double")).as("qe"))
-      .withColumn("qn", norm(col("qe")))
-    val probes = probeBuckets(q, cent, nprobe, Seq("qe", "qn", "_qlabel"))
-    val cos = dot(col("qe"), col("e")) / (col("qn") * col("nrm"))
-    val rw = Window.partitionBy("qid").orderBy(desc("cos"), asc(idCol))
-    assigned.join(broadcast(probes), Seq("bucket"))
-      .filter(col(labelCol) =!= col("_qlabel"))
-      .select(col("qid"), col(idCol), gf.roundz(cos, 6).as("cos"))
-      .withColumn("rank", row_number().over(rw).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  /** Production index sizing (the rule `SimilaritySpec` pins — ONE
-    * definition, so the spec and every caller share it): nlist ≈ √N
-    * keeps per-bucket membership at ~√N and probe work at nprobe·√N
-    * as the corpus grows; the Lloyd sample is 4× the centroid count
-    * (bounded below by the 128-vector default). */
-  def sqrtNlist(n: Long): Int =
-    math.max(4, math.round(math.sqrt(n.toDouble)).toInt)
-
-  def sizingTrainN(nlist: Int): Int = math.max(128, nlist * 4)
 
   /** Handle to a persisted IVF index: a centroid table plus the
     * assigned corpus written as a warehouse table BUCKETED on the
@@ -521,7 +471,7 @@ object Similarity {
     *     broadcast), so with duplication factor d the scored
     *     candidate volume shrinks d² vs the raw join — per-bucket
     *     work stays bounded by distinct-content membership, and
-    *     nlist ≈ [[sqrtNlist]] keeps that at ~√R;
+    *     nlist ≈ √R keeps that at ~√R;
     *   - each candidate GROUP contributes only its k+1 smallest
     *     member ids (`head`): within a group all members share one
     *     cosine and order consecutively by id, so any member beyond

@@ -16,15 +16,14 @@ import org.apache.spark.sql.types._
   * `struct<n long, dim int, mean array<double>, cov array<double>>`
   * (cov row-major dim×dim, SAMPLE covariance).
   *
-  * This is the covariance/PCA kernel for embedding QA at corpus
+  * This is the covariance kernel for embedding QA at corpus
   * scale: the naive SQL shape (posexplode → self-join on the row id →
   * covar per (i, j)) shuffles N·dim² rows; this aggregate ships ONE
   * O(dim²) partial per partition (dim 64 → 2 080 triangle longs
   * ≈ 17 KB) and merges by cell-wise addition, so a 100 TB embedding
-  * table reduces in a single map-side-combined pass. Downstream
-  * consumers ([[graft.operators.Embeddings]]) take the one emitted
-  * row: top principal component via power iteration (the dim×dim
-  * matrix is driver-trivial), whitening stats, dead-dimension checks.
+  * table reduces in a single map-side-combined pass. Consumers
+  * ([[graft.operators.Embeddings]], q130) take the one emitted row;
+  * the dim×dim matrix is driver-trivial.
   *
   * Determinism contract (the T125/T129 fixed-point idiom): every
   * component is quantized ONCE as `xq = floor(x · 2^15)` and all

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.{functions => gf}
@@ -870,12 +870,8 @@ object AnnQueries {
     // in near-misses). The label exclusion is a join predicate BELOW
     // the per-query rank, so same-label rows never enter the window —
     // and since a row shares its own label, self-exclusion is free.
-    // Scale shape: exact variant is the broadcast-query × corpus scan
-    // of q41 with the predicate fused into the same pass;
-    // [[Similarity.hardNegativesIvf]] is the probed-bucket twin
-    // (nprobe·√N scored rows per query at production sizing) with the
-    // identical exclusion — `SimilaritySpec` pins its no-same-label
-    // invariant and recall floor vs this exact oracle.
+    // Scale shape: the broadcast-query × corpus scan of q41 with the
+    // predicate fused into the same pass ([[Similarity.hardNegatives]]).
     QueryDef("q147_hard_negatives",
       s"""WITH v AS (
          |  SELECT vec_id, label,
@@ -924,9 +920,7 @@ object AnnQueries {
          |FROM ${kmeansAssignSql("c3")} GROUP BY cl
          |ORDER BY cluster""".stripMargin) { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val model = graft.operators.Embeddings.modelFor(emb,
-        s"kmeans|$dir|8|3", k = 8, iters = 3)
-      graft.operators.Embeddings.kmeansAssign(emb, model)
+      graft.operators.Embeddings.kmeansAssign(emb, kmeansModel(s, dir, emb))
         .groupBy(col("cluster").cast("long").as("cluster"))
         .agg(count(lit(1)).as("size"),
           gf.roundz(sum(floor(col("d2") * graft.operators.Embeddings.KMeansScale))
@@ -1235,7 +1229,7 @@ object AnnQueries {
          |ORDER BY cluster""".stripMargin) { (s, dir) =>
       import graft.operators.Embeddings
       val emb = Tables.embeddings(s, dir)
-      val model = Embeddings.modelFor(emb, s"kmeans|$dir|8|3", k = 8, iters = 3)
+      val model = kmeansModel(s, dir, emb)
       val S = Embeddings.KMeansScale
       val sFrame = Embeddings.kmeansAssign(emb, model)
         .groupBy("cluster")
@@ -1386,6 +1380,16 @@ object AnnQueries {
       s"max(CASE WHEN a.arank = ${i + 1} AND t.tid IS NOT NULL " +
         s"THEN 1 ELSE 0 END) * $w"
     }.mkString(" + ")
+
+  /** The k = 8, 3-iteration model q148 and q152 share, cached under a
+    * name that carries the embeddings table's file fingerprint: a
+    * corpus rewritten in place refits instead of being assigned to the
+    * previous corpus's centroids. */
+  private def kmeansModel(s: SparkSession, dir: String, emb: DataFrame)
+      : graft.operators.Embeddings.KMeansModel =
+    graft.operators.Embeddings.modelFor(emb,
+      SharedTable.indexName(s, "kmeans_8_3", dir, Seq("embeddings")),
+      k = 8, iters = 3)
 
   /** q148's squared-L2 in DuckDB — the exact expression shape
     * [[graft.operators.Embeddings.kmeansAssign]] computes:

@@ -825,25 +825,6 @@ object TextQueries {
         }.reduce(_ + _).as("simhash"))
   }
 
-  /** Approximate twin of q63 (`approx_percentile`, t-digest): for
-    * metrics whose value space is NOT bounded — raw byte lengths,
-    * float scores — the exact percentile's O(distinct values) buffer
-    * stops being safe, and the fixed-size sketch is the 100 TB path.
-    * Same output shape as q63 so the two are directly comparable;
-    * `accuracy` is Spark's inverse-error knob (error ≈ 1/accuracy of
-    * the rank, i.e. 10000 → 0.01% rank error). */
-  def lengthProfileApprox(s: SparkSession, dir: String,
-      accuracy: Int = 10000): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("lang"), size(gf.tokens(col("text"))).cast("double").as("n"))
-      .groupBy("lang")
-      .agg(
-        gf.roundz(expr(s"approx_percentile(n, 0.5D, $accuracy)"), 4).as("p50"),
-        gf.roundz(expr(s"approx_percentile(n, 0.9D, $accuracy)"), 4).as("p90"),
-        gf.roundz(expr(s"approx_percentile(n, 0.99D, $accuracy)"), 4).as("p99"),
-        count(lit(1)).as("n_docs"))
-      .orderBy("lang")
-
   val defs: Seq[QueryDef] = Seq(
     // Exact dedup: hash-groupBy, keep min doc_id per content hash.
     QueryDef("q27_dedup_exact",
@@ -1929,11 +1910,6 @@ object TextQueries {
         .orderBy("lang")
     },
 
-    // Approximate twin of q63 — see lengthProfileApprox below. Not a
-    // registered query: approx_percentile's t-digest result has no
-    // cross-engine oracle; its error bound vs the exact profile is
-    // spec-asserted instead (LengthProfileSpec).
-
     // Near-dup CLUSTERS over the LSH candidate pairs: connected
     // components via alternating large-star/small-star (one survivor
     // per cluster is then a filter on id == component_id). The oracle
@@ -2424,10 +2400,7 @@ object TextQueries {
     // source — vocabulary growth is how pipelines detect corpus drift
     // and near-duplicate ingestion batches. Exact distinct is the
     // oracle-checked path (two-phase aggregate: Spark plans the
-    // partial-distinct expansion before the final count); the one-pass
-    // fixed-state HLL twin for 100 TB lives next to it
-    // (cardinalityProfileApprox, error spec'd in CardinalitySpec —
-    // sketches have no cross-engine oracle).
+    // partial-distinct expansion before the final count).
     QueryDef("q70_vocab_profile",
       """SELECT source,
         |  CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct_toks,
@@ -2991,10 +2964,8 @@ object TextQueries {
     // against the per-doc span list (spans per doc are few; no pair
     // explosion) + ONE per-doc kept-token collect — the q134 idiom,
     // O(doc) state. Docs with < 6 tokens pass through whitespace-
-    // normalized; fully-covered docs emit md5(''). The reusable
-    // cleaned-TEXT transform is [[graft.operators.Dedup
-    // .removeDuplicatedSpans]]; this query rides the shared
-    // windowsFor table instead of re-hashing the corpus.
+    // normalized; fully-covered docs emit md5(''). The query rides
+    // the shared windowsFor table instead of re-hashing the corpus.
     QueryDef("q173_remove_dup_spans", {
       val B = graft.plans.RollingHashWindows.Base
       val mask = 0xffffffffL
@@ -3712,9 +3683,8 @@ object TextQueries {
     // ratio — the self-repetition metric (inverse Self-BLEU proxy)
     // that flags template-generated or boilerplate-heavy feeds before
     // they flood the mix. One explode + one source-keyed aggregate;
-    // the exact count(DISTINCT) shuffles distinct trigrams (the exact
-    // path — its fixed-state HLL twin is the q70 pattern,
-    // `cardinalityProfileApprox`).
+    // the exact count(DISTINCT) shuffles distinct trigrams (the q70
+    // pattern).
     QueryDef("q91_ngram_diversity",
       """WITH tg AS (
         |  SELECT source, unnest(list_transform(
@@ -4505,8 +4475,8 @@ object TextQueries {
         .orderBy("batch_size")
     },
 
-    // T104 — content-defined chunking census (token-level twin of the
-    // byte-level FastCDC expression in plans/CdcChunks): chunk
+    // T104 — content-defined chunking census (a token-level split in
+    // the style of FastCDC, Xia et al., USENIX ATC 2016): chunk
     // boundaries close AFTER any token whose stable hash ≡ 0 (mod 16)
     // — boundaries depend only on CONTENT, so an insertion reshapes
     // only its own chunk while fixed-size blocks (q134/q69) shift
@@ -5212,9 +5182,8 @@ object TextQueries {
 
     // T134 — LSH candidate-precision census: the q28 banding EVALUATED
     // — every candidate pair's exact Jaccard, censused by similarity
-    // band. The S-curve says what banding SHOULD admit
-    // (`LshPlannerSpec` pins it analytically); this measures what it
-    // DID admit on the actual corpus — the drift alarm for when the
+    // band. The S-curve 1 − (1 − s^r)^b says what banding SHOULD
+    // admit; this measures what it DID admit on the actual corpus — the drift alarm for when the
     // corpus's similarity profile departs from the banding design
     // point (precision collapse = verify-join cost explosion at
     // scale). Scale shape: the verify runs on the LSH-bounded
@@ -5632,7 +5601,7 @@ object TextQueries {
     // window VOCABULARY from the shared `windowsFor` warehouse table
     // (one filtered scan of materialized integers — the corpus TEXT
     // is never re-read, re-tokenized, or re-hashed per increment) and
-    // feeds it to `Dedup.removeDuplicatedSpansIncrementalWith`; the
+    // derives the batch's spans with `Dedup.incrementalSpanArrays`; the
     // census is q173's md5-witnessed shape over the cleaned batch.
     // A batch token is dropped when a covering 6-window occurs
     // anywhere in the corpus vocabulary or in ≥ 2 distinct batch docs.
@@ -5711,8 +5680,8 @@ object TextQueries {
       // The published vocabulary AND the batch windows: two filtered
       // scans of the shared materialized window table — integers
       // only. r16: the old shape re-derived the batch windows with a
-      // fresh tokenize + rolling-hash pass (windowFrame ≡ the table's
-      // rows for batch docs, so the pass was pure re-compute), then
+      // fresh tokenize + rolling-hash pass (≡ the table's rows for
+      // batch docs, so the pass was pure re-compute), then
       // tokenized the batch TWICE more — once for n_tokens, once
       // re-tokenizing the CLEANED text for removed_tokens. Now the
       // span arrays come off the table (incrementalSpanArrays), and
@@ -6137,21 +6106,6 @@ object TextQueries {
       .fanOutScan(col("doc_id")) // scale-adaptive scan fan-out (r16)
       .select(col("doc_id"), col("source"),
         explode(gf.tokens(col("text"))).as("tok"))
-
-  /** HLL twin of q70: one pass, fixed sketch state per group — the
-    * 100 TB path for cardinality (exact count(DISTINCT) shuffles every
-    * distinct value; the sketch shuffles kilobytes). `rsd` is Spark's
-    * relative-standard-deviation knob. No oracle entry: sketch values
-    * have no cross-engine twin; CardinalitySpec bounds the error
-    * against the exact profile instead. */
-  def cardinalityProfileApprox(s: SparkSession, dir: String,
-      rsd: Double = 0.02): DataFrame =
-    tokensBySource(s, dir)
-      .groupBy("source")
-      .agg(approx_count_distinct(col("tok"), rsd).as("n_distinct_toks"),
-        count(lit(1)).as("n_tokens"),
-        approx_count_distinct(col("doc_id"), rsd).as("n_docs"))
-      .orderBy("source")
 
   /** KMV scale twin of q73: per-source k-minimum-values vocabulary
     * sketches ([[graft.plans.KmvSketch]] — ONE corpus pass, O(k) longs

@@ -85,26 +85,15 @@ object SnapshotStore {
 
   /** Exactly-once append keyed by `tag`: if a retained manifest already
     * carries the tag, the call is a NO-OP returning that version — the
-    * replay-idempotence hook for at-least-once writers (a streaming
-    * foreachBatch replays its last batch id after a crash;
-    * [[graft.streaming.SnapshotSink]] tags each batch). The guarantee
-    * holds as long as tagged manifests outlive the writer's replay
-    * horizon — vacuum retention must cover the stream checkpoint. */
+    * replay-idempotence hook for an at-least-once writer that replays
+    * its last batch after a crash. The guarantee holds as long as
+    * tagged manifests outlive the writer's replay horizon, so vacuum
+    * retention must cover it. */
   def appendOnce(df: DataFrame, root: String, tag: String,
       statsCols: Seq[String] = Seq.empty): Version =
     history(root).find(_.tag.contains(tag)) match {
       case Some(existing) => existing
       case None => commit(df, root, "append", Some(tag), statsCols)
-    }
-
-  /** [[appendOnce]]'s overwrite twin: replace the table as a tagged
-    * version, no-op if the tag is already published — the refresh
-    * publish for replace-style consumers. */
-  def overwriteOnce(df: DataFrame, root: String, tag: String,
-      statsCols: Seq[String] = Seq.empty): Version =
-    history(root).find(_.tag.contains(tag)) match {
-      case Some(existing) => existing
-      case None => commit(df, root, "overwrite", Some(tag), statsCols)
     }
 
   /** Compact lineage: read the latest snapshot, write it as ONE new

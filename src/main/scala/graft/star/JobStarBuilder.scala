@@ -62,16 +62,7 @@ final case class JobStar(
   *
   * The `job_highlights` array keeps the reference's declared semantics:
   * an ARRAY parse of an object-shaped payload → NULL for well-formed
-  * records (SURVEY §1.2 quirk, bit-compat mode). The opt-in
-  * `highlightsFixedParse` flag instead parses the payload's TRUE
-  * shape — `map<string, array<string>>` (section → bullets) via
-  * [[graft.functions.parseJsonMap]] — as `job_highlights_map`. The
-  * parse runs AFTER surrogate-key assignment (Spark cannot DISTINCT
-  * a map column), and fixed mode dedupes by NATURAL KEY with a
-  * deterministic min tiebreak rather than by whole row: distinct
-  * over the raw JSON string would be strictly finer than distinct
-  * over the parsed map (key order / whitespace variants would mint
-  * extra job_sks and fan out the fact join on job_natural_key).
+  * records (SURVEY §1.2 quirk, bit-compat).
   */
 object JobStarBuilder {
 
@@ -82,8 +73,7 @@ object JobStarBuilder {
   def build(
       landing: DataFrame,
       now: Column,
-      strategy: SkStrategy.Value = SkStrategy.Auto,
-      highlightsFixedParse: Boolean = false): JobStar = {
+      strategy: SkStrategy.Value = SkStrategy.Auto): JobStar = {
 
     val factStrategy = SkStrategy.resolve(strategy,
       StarSchemaBuilder.plannedBytes(landing))
@@ -121,25 +111,13 @@ object JobStarBuilder {
     val dimDate = StarSchemaBuilder.dateAttributes(dims(PostedDate)
       .select(date_from_unix_date(col("key").cast("int")).as("full_date")))
 
-    // Bit-compat mode parses through the reference's declared array
-    // schema (NULL on the object payload) and keeps the reference's
-    // whole-row DISTINCT. Fixed mode carries the raw JSON string
-    // (maps can't be DISTINCTed) but must NOT distinct over it: two
-    // records with the same job_natural_key whose highlight payloads
-    // differ only in JSON key order / whitespace would survive as two
-    // dim rows with different job_sks, and the fact's equi-join on
-    // job_natural_key would then fan out every matching fact row
-    // (ADVICE r11). Fixed mode therefore dedupes BY NATURAL KEY —
-    // one dim row per key, representative chosen by a deterministic
-    // lexicographic-min tiebreak over the remaining columns — which
-    // also makes the dim's declared unique key actually unique.
+    // Parses through the reference's declared array schema (NULL on
+    // the object payload) and keeps the reference's whole-row DISTINCT.
     val jobCols = raw.select(
         col("job_natural_key"),
         trim(col("job_title")).as("job_title"),
         col("job_description"),
-        (if (highlightsFixedParse) col("job_highlights")
-         else gf.parseJsonList(col("job_highlights"))
-           .as("job_highlights_array")),
+        gf.parseJsonList(col("job_highlights")).as("job_highlights_array"),
         col("job_is_remote").cast("boolean").as("job_is_remote"),
         col("job_posted_at"),
         col("job_posted_at_utc"))
@@ -149,23 +127,10 @@ object JobStarBuilder {
     val jobInput =
       if (factStrategy == SkStrategy.GlobalRowNumber) jobCols.repartition(1)
       else jobCols
-    val jobRows =
-      if (highlightsFixedParse) {
-        val rest = jobCols.columns.filter(_ != "job_natural_key")
-        jobInput.groupBy("job_natural_key")
-          .agg(min(struct(rest.map(col): _*)).as("r"))
-          .select(col("job_natural_key") +: rest.map(c => col(s"r.$c")): _*)
-      } else jobInput.distinct()
-    val dimJobDetails0 = StarSchemaBuilder.withSurrogateKey(
-      jobRows, Seq("job_natural_key"), "job_sk", factStrategy)
     // Persisted: its write and the fact's join both read it.
     val dimJobDetails = graft.CacheRegistry.persistTracked(
-      if (highlightsFixedParse)
-        dimJobDetails0
-          .withColumn("job_highlights_map",
-            gf.parseJsonMap(col("job_highlights")))
-          .drop("job_highlights")
-      else dimJobDetails0,
+      StarSchemaBuilder.withSurrogateKey(jobInput.distinct(),
+        Seq("job_natural_key"), "job_sk", factStrategy),
       graft.CacheRegistry.DataSized)
 
     // Skills: the reference's bracket-string parser → explode →

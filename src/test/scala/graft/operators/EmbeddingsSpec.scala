@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** VecOuterSum covariance + power-iteration PCA: exact fixed-point
-  * replication of the quantized two-pass reference, BIT-IDENTICAL
-  * layout independence (the round-10 determinism contract), closeness
-  * to the unquantized covariance within the 2^-15 quantization bound,
-  * analytic principal-component recovery, and input-edge handling. */
+/** VecOuterSum covariance: exact fixed-point replication of the
+  * quantized two-pass reference, BIT-IDENTICAL layout independence (the
+  * round-10 determinism contract), closeness to the unquantized
+  * covariance within the 2^-15 quantization bound, and input-edge
+  * handling; then full-corpus k-means. */
 class EmbeddingsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -63,60 +63,6 @@ class EmbeddingsSpec extends SparkSpec {
     val df = Seq(Array(1.0e9f, 2.0f)).toDF("embedding")
     val e = intercept[Exception] { Embeddings.covStats(df, "embedding") }
     e.getMessage should include("quantizable range")
-  }
-
-  test("topComponent recovers an analytic principal direction") {
-    // Rank-1 signal along u = (3,4)/5 plus small orthogonal jitter.
-    val u = Array(0.6, 0.8)
-    val rows = (0 until 300).map { i =>
-      val t = (i % 21) - 10.0          // spread along u: variance >> noise
-      val eps = noise(i, 1) * 0.01     // orthogonal (-0.8, 0.6) jitter
-      Array((t * u(0) - eps * 0.8).toFloat, (t * u(1) + eps * 0.6).toFloat)
-    }
-    val stats = Embeddings.covStats(rows.map(Tuple1(_)).toDF("embedding"),
-      "embedding")
-    val pc = Embeddings.topComponent(stats)
-    math.abs(pc.component(0) * u(0) + pc.component(1) * u(1)) shouldBe
-      1.0 +- 1e-4
-    pc.explainedVariance shouldBe 1.0 +- 1e-3
-    // Sign convention: largest-|coordinate| entry positive → along +u.
-    pc.component(1) should be > 0.0
-  }
-
-  test("whiten: output covariance is the identity, mean is zero") {
-    // Correlated 3-dim data: x2 = x0 + x1 + jitter, distinct scales.
-    val rows = (0 until 400).map { i =>
-      val a = noise(i, 0) * 3.0
-      val b = noise(i, 1)
-      Array(a.toFloat, b.toFloat, (a + b + noise(i, 2)).toFloat)
-    }
-    val df = rows.map(Tuple1(_)).toDF("embedding")
-    val stats = Embeddings.covStats(df, "embedding")
-    val white = Embeddings.whiten(df, "embedding", stats)
-    val ws = Embeddings.covStats(white, "white")
-    for (i <- 0 until 3; j <- 0 until 3) {
-      // 1e-2 / 5e-4: whitening accuracy degrades as κ·2^-15 — the
-      // documented cost of the exact fixed-point moments (κ ~ 60
-      // here from the x2 ≈ x0 + x1 correlation; the 2^-15 input
-      // quantization amplifies through the factorization).
-      ws.cov(i * 3 + j) shouldBe (if (i == j) 1.0 else 0.0) +- 1e-2
-      ws.mean(i) shouldBe 0.0 +- 5e-4
-    }
-  }
-
-  test("whiten survives a dead (zero-variance) dimension via the ridge") {
-    val rows = (0 until 100).map(i =>
-      Array(noise(i, 0).toFloat, 0.0f)) // dim 1 is constant
-    val df = rows.map(Tuple1(_)).toDF("embedding")
-    val stats = Embeddings.covStats(df, "embedding")
-    val out = Embeddings.whiten(df, "embedding", stats)
-      .select("white").as[Seq[Double]].collect()
-    out.foreach(v => v.foreach(x => assert(!x.isNaN && !x.isInfinite)))
-    // live dim still whitens to unit variance (2e-3: the 2^-15
-    // quantization enters twice — fitting W and measuring the output)
-    Embeddings.covStats(
-      Embeddings.whiten(df, "embedding", stats), "white")
-      .cov(0) shouldBe 1.0 +- 2e-3
   }
 
   test("null vectors are skipped, and an all-null input evaluates to null") {

@@ -46,33 +46,6 @@ class SamplingSpec extends SparkSpec {
     half shouldBe again.filter(_ <= 5000L)
   }
 
-  test("stratified sampling respects per-stratum fractions") {
-    val got = Sampling.stratified(docs, "lang",
-      Map("lang0" -> 0.5, "lang1" -> 0.1, "lang2" -> 0.0, "lang3" -> 1.0))
-    val counts = got.groupBy("lang").count().as[(String, Long)].collect().toMap
-    counts.getOrElse("lang2", 0L) shouldBe 0L
-    counts("lang3") shouldBe 2500L // fraction 1.0 keeps everything
-    counts("lang0").toDouble / 2500 shouldBe 0.5 +- 0.1
-    counts("lang1").toDouble / 2500 shouldBe 0.1 +- 0.06
-  }
-
-  test("stratifiedExact: exact per-stratum quotas, layout-independent, schema preserved") {
-    // Bernoulli (stratified) is exact only in expectation; this one
-    // must hit greatest(1, ⌊cnt·p⌋) dead on, per stratum.
-    val got = Sampling.stratifiedExact(docs, "lang", "doc_id", 0.2)
-    got.columns shouldBe docs.columns
-    val counts = got.groupBy("lang").count().as[(String, Long)].collect().toMap
-    counts.values.foreach(_ shouldBe 500L) // ⌊2500·0.2⌋ exactly
-    // Deterministic under any input partitioning: same rows selected.
-    val again = Sampling
-      .stratifiedExact(docs.repartition(13), "lang", "doc_id", 0.2)
-      .select("doc_id").as[Long].collect().sorted
-    again shouldBe got.select("doc_id").as[Long].collect().sorted
-    // Tiny stratum: quota floors to 0 → greatest(1, …) keeps one row.
-    val tiny = docs.limit(3).withColumn("lang", lit("solo"))
-    Sampling.stratifiedExact(tiny, "lang", "doc_id", 0.05).count() shouldBe 1L
-  }
-
   test("tokenBudget: inclusive prefix-sum cut per stratum, deterministic") {
     val df = Seq(
       (1L, "a", 100L), (2L, "a", 100L), (3L, "a", 100L), (4L, "a", 100L),

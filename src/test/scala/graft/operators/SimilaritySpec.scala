@@ -237,54 +237,6 @@ class SimilaritySpec extends SparkSpec {
     buckets.length should be > 1
   }
 
-  test("sqrt-N index sizing: bucket size tracks sqrt(N), recall holds across scales") {
-    // The oracle queries pin nCentroids=16, so bucket membership there
-    // grows linearly with the corpus. This pins the PRODUCTION sizing
-    // rule (nlist ≈ √N): as the corpus grows 4×, mean bucket size must
-    // grow ≈ √4 = 2× (not 4×), and recall against the brute-force
-    // oracle must not degrade with scale.
-    def probeStats(dir: String, tag: String)
-        : (Long, Double, Double, Double) = {
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      val n = emb.count()
-      val nlist = Similarity.sqrtNlist(n)
-      val idx = Similarity.buildIndex(emb, s"ivfsz_$tag",
-        nCentroids = nlist, trainN = Similarity.sizingTrainN(nlist))
-      val sizes = spark.table(idx.assignedTable)
-        .groupBy("bucket").count().select("count").as[Long].collect()
-      sizes.sum shouldBe n // every vector assigned exactly once
-      val meanBucket = n.toDouble / sizes.length
-      val k = 10
-      val queries = emb.orderBy("vec_id").limit(8)
-      val exact = Similarity.bruteForceTopK(emb, queries, k)
-        .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-      val approx = Similarity
-        .ivfTopK(idx, queries, k, nprobe = 4, "vec_id", "embedding")
-        .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-      val recall = (approx intersect exact).size.toDouble / exact.size
-      info(f"$tag: n=$n nlist=$nlist buckets=${sizes.length} " +
-        f"meanBucket=$meanBucket%.1f maxBucket=${sizes.max} recall=$recall%.2f")
-      (n, meanBucket, sizes.max.toDouble, recall)
-    }
-    val (n1, mb1, mx1, r1) = probeStats("/root/testdata/sf0.001", "small")
-    val (n2, mb2, mx2, r2) = probeStats("/root/testdata/sf0.1", "big")
-    n2.toDouble / n1 should be >= 3.5 // the scales are really a decade apart-ish
-    // Mean bucket size tracks sqrt(N): the ratio to sqrt(N) stays in a
-    // fixed band at BOTH scales (no linear drift).
-    mb1 / math.sqrt(n1.toDouble) should (be >= 0.3 and be <= 3.0)
-    mb2 / math.sqrt(n2.toDouble) should (be >= 0.3 and be <= 3.0)
-    // Growth: 4x rows → ~2x bucket size, nowhere near linear.
-    mb2 / mb1 should be < 3.0
-    // No degenerate mega-bucket: the max stays within a constant of
-    // the mean (hash-seeded + Lloyd keeps balance).
-    mx1 / mb1 should be < 8.0
-    mx2 / mb2 should be < 8.0
-    // Recall does not degrade with scale (same probe budget RULE, not
-    // the same absolute bucket fraction).
-    r2 should be >= r1 - 0.25
-    r1 should be >= 0.3
-  }
-
   test("trainCentroids is layout-independent: same centroids under any input partitioning") {
     val a = Similarity.trainCentroids(corpus, nCentroids = 6)
       .select("cent_id", "ce").as[(Long, Seq[Double])].collect().sortBy(_._1)
@@ -398,21 +350,5 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("rank").select("vec_id").as[Long].collect().take(4)
     got.filter($"qid" === 0).orderBy("rank")
       .select("vec_id").as[Long].collect() shouldBe exact
-  }
-
-  test("hardNegativesIvf: same exclusion inside probed buckets, full recall at covering probes") {
-    val queries = labeled.filter($"vec_id" < 3)
-    val exact = Similarity.hardNegatives(labeled, queries, k = 4)
-      .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.hardNegativesIvf(labeled, queries, k = 4,
-      nCentroids = 9, nprobe = 9)
-    // Invariant: no same-label row even when every bucket is probed.
-    val lbl = labeled.select($"vec_id".as("nid"), $"label".as("nlabel"))
-    val qlbl = labeled.select($"vec_id".as("qid"), $"label".as("qlabel"))
-    approx.join(lbl, $"vec_id" === $"nid").join(qlbl, Seq("qid"))
-      .filter($"nlabel" === $"qlabel").count() shouldBe 0
-    // Probing every bucket ⇒ identical to the exact miner.
-    approx.select("qid", "vec_id").as[(Long, Long)].collect().toSet shouldBe
-      exact
   }
 }

@@ -11,8 +11,8 @@ import graft.SparkSpec
   * a corpus that exercises duplicated spans at doc start/middle/end,
   * adjacent islands, fully-covered docs, token-free docs, multi-byte
   * tokens, and docs with no spans at all. Also pins interpreted ≡
-  * codegen and the null/empty-array semantics the Dedup call sites
-  * rely on. */
+  * codegen and the null/empty-array semantics the q173/q178 call
+  * sites rely on. */
 class RemoveSpansSpec extends SparkSpec {
   import spark.implicits._
 
@@ -94,22 +94,6 @@ class RemoveSpansSpec extends SparkSpec {
     val removed = a.map(r => (r.getLong(0), r.getLong(1)))
     assert(removed.exists(_._2 == 0L), "a fully-covered doc must exist")
     assert(a.exists(r => r.getString(2).nonEmpty && r.getLong(1) > 0))
-  }
-
-  test("removeDuplicatedSpans end-to-end equals the explode shape") {
-    val cleaned = graft.operators.Dedup.removeDuplicatedSpans(docs)
-      .orderBy("doc_id").collect()
-    val wins = docs.select(col("doc_id"),
-      posexplode(CatalystBridge.column(RollingHashWindows(
-        CatalystBridge.expr(trim(col("text"))), 6))).as(Seq("p", "wh")))
-      .select(col("doc_id"), (col("p").cast("long") + 1L).as("i"), col("wh"))
-    val spans = graft.operators.Dedup.duplicatedSpans(wins, 6)
-    val ref = oldRebuild(docs, spans).orderBy("doc_id").collect()
-    cleaned.zip(ref).foreach { case (n, o) =>
-      withClue(s"doc ${n.getLong(0)}: ") {
-        n.getString(1) shouldBe o.getString(2)
-      }
-    }
   }
 
   test("interpreted eval matches codegen") {

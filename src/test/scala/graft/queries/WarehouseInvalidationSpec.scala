@@ -104,6 +104,40 @@ class WarehouseInvalidationSpec extends SparkSpec {
     assert(!spark.catalog.tableExists(idx1.centroidTable))
   }
 
+  test("k-means model refits when embeddings are regenerated in place") {
+    import graft.operators.Embeddings
+    val dir = Files.createTempDirectory("graft-kmeans-inval").toString
+    // n vectors around 8 centres; `scale`/`shift` move the centres, so
+    // the two generations cluster differently.
+    def writeEmb(n: Int, scale: Float, shift: Float): Unit =
+      (1 to n).map { i =>
+        val c = i % 8
+        (i.toLong, Array.tabulate(4)(d =>
+          scale * ((c * (d + 3)) % 5).toFloat + shift + (i % 3) * 0.01f))
+      }.toDF("vec_id", "embedding").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def census(df: org.apache.spark.sql.DataFrame) =
+      df.select("cluster", "size", "inertia").as[(Long, Long, Double)]
+        .collect().toSeq
+    val q148 = graft.SparkEntry.queries("q148_kmeans_census")
+
+    writeEmb(n = 40, scale = 1f, shift = 0f)
+    q148(spark, dir).count() should be > 0L
+    // Same path, different corpus: the census must come from a fit of
+    // the new corpus, not from the first corpus's cached centroids.
+    writeEmb(n = 48, scale = 3f, shift = 0.5f)
+    val emb = graft.Tables.embeddings(spark, dir)
+    val expected = Embeddings.kmeansAssign(emb,
+        Embeddings.kmeansFit(emb, k = 8, iters = 3))
+      .groupBy(col("cluster").cast("long").as("cluster"))
+      .agg(count(lit(1)).as("size"),
+        graft.functions.roundz(
+          sum(floor(col("d2") * Embeddings.KMeansScale)).cast("double")
+            / Embeddings.KMeansScale, 6).as("inertia"))
+      .orderBy("cluster")
+    census(q148(spark, dir)) shouldBe census(expected)
+  }
+
   private def memoCounted(dir: String, built: AtomicInteger) =
     SharedTable.memo(spark, "graft_memotest", dir, Seq("documents"),
         "doc_id", 2) {

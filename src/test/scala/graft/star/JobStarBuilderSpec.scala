@@ -113,61 +113,4 @@ class JobStarBuilderSpec extends SparkSpec {
       star.fact.count() shouldBe 60
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
-
-  test("highlightsFixedParse recovers the object payload as map<string,array<string>>") {
-    // Reference evidence (SURVEY §1.2): every record in
-    // data/raw_jobs.json carries an OBJECT payload — section name →
-    // bullet list — which the reference's declared ARRAY parse NULLs.
-    val now = lit("2026-01-01 00:00:00").cast("timestamp")
-    val withObj = landing(3).withColumn("job_highlights",
-      concat(
-        lit("""{"Qualifications":["sql","spark"],"Responsibilities":["etl for """),
-        col("job_title"), lit("\"]}")))
-    // bit-compat default: the declared array parse NULLs the payload
-    val compat = JobStarBuilder.build(withObj, now)
-    compat.dimJobDetails.filter(col("job_highlights_array").isNotNull)
-      .count() shouldBe 0
-    // fixed variant: the true map shape round-trips, per record
-    val fixed = JobStarBuilder.build(withObj, now,
-      highlightsFixedParse = true)
-    fixed.dimJobDetails.columns should contain("job_highlights_map")
-    fixed.dimJobDetails.columns should not contain "job_highlights"
-    val dim = fixed.dimJobDetails
-    dim.filter(col("job_highlights_map").isNull).count() shouldBe 0
-    val row = dim.filter(col("job_title") === "title 1")
-      .select(map_keys(col("job_highlights_map")),
-        col("job_highlights_map").getItem("Qualifications"),
-        element_at(col("job_highlights_map").getItem("Responsibilities"),
-          1))
-      .head()
-    row.getSeq[String](0).sorted shouldBe Seq("Qualifications",
-      "Responsibilities")
-    row.getSeq[String](1) shouldBe Seq("sql", "spark")
-    row.getString(2) shouldBe "etl for title 1"
-  }
-
-  test("highlightsFixedParse: payload variants of one natural key do not fan out") {
-    // Two landing records per job with the SAME natural key whose
-    // highlight payloads differ only in JSON key order/whitespace.
-    // A raw-string distinct would mint two job_sks per key and the
-    // fact join on job_natural_key would double every fact row
-    // (ADVICE r11); natural-key dedupe keeps exactly one dim row.
-    val now = lit("2026-01-01 00:00:00").cast("timestamp")
-    val base = landing(2)
-    val v1 = base.withColumn("job_highlights",
-      lit("""{"Qualifications":["sql"],"Responsibilities":["etl"]}"""))
-    val v2 = base.withColumn("job_highlights",
-      lit("""{ "Responsibilities":["etl"], "Qualifications":["sql"] }"""))
-    val doubled = v1.unionAll(v2)
-    val star = JobStarBuilder.build(doubled, now,
-      highlightsFixedParse = true)
-    val nKeys = doubled.select("job_title", "employer_name",
-        "job_publisher", "job_location", "job_posted_at_datetime_utc")
-      .distinct().count()
-    star.dimJobDetails.count() shouldBe nKeys
-    star.dimJobDetails.select("job_natural_key").distinct()
-      .count() shouldBe nKeys
-    // Fact carries one row per LANDING record (120), not 240 fanned.
-    star.fact.count() shouldBe doubled.count()
-  }
 }
