@@ -825,6 +825,25 @@ object TextQueries {
         }.reduce(_ + _).as("simhash"))
   }
 
+  /** Approximate twin of q63 (`approx_percentile`, t-digest): for
+    * metrics whose value space is NOT bounded — raw byte lengths,
+    * float scores — the exact percentile's O(distinct values) buffer
+    * stops being safe, and the fixed-size sketch is the 100 TB path.
+    * Same output shape as q63 so the two are directly comparable;
+    * `accuracy` is Spark's inverse-error knob (error ≈ 1/accuracy of
+    * the rank, i.e. 10000 → 0.01% rank error). */
+  def lengthProfileApprox(s: SparkSession, dir: String,
+      accuracy: Int = 10000): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("lang"), size(gf.tokens(col("text"))).cast("double").as("n"))
+      .groupBy("lang")
+      .agg(
+        gf.roundz(expr(s"approx_percentile(n, 0.5D, $accuracy)"), 4).as("p50"),
+        gf.roundz(expr(s"approx_percentile(n, 0.9D, $accuracy)"), 4).as("p90"),
+        gf.roundz(expr(s"approx_percentile(n, 0.99D, $accuracy)"), 4).as("p99"),
+        count(lit(1)).as("n_docs"))
+      .orderBy("lang")
+
   val defs: Seq[QueryDef] = Seq(
     // Exact dedup: hash-groupBy, keep min doc_id per content hash.
     QueryDef("q27_dedup_exact",
@@ -1910,6 +1929,11 @@ object TextQueries {
         .orderBy("lang")
     },
 
+    // Approximate twin of q63 — see lengthProfileApprox below. Not a
+    // registered query: approx_percentile's t-digest result has no
+    // cross-engine oracle; its error bound vs the exact profile is
+    // spec-asserted instead (LengthProfileSpec).
+
     // Near-dup CLUSTERS over the LSH candidate pairs: connected
     // components via alternating large-star/small-star (one survivor
     // per cluster is then a filter on id == component_id). The oracle
@@ -2400,7 +2424,10 @@ object TextQueries {
     // source — vocabulary growth is how pipelines detect corpus drift
     // and near-duplicate ingestion batches. Exact distinct is the
     // oracle-checked path (two-phase aggregate: Spark plans the
-    // partial-distinct expansion before the final count).
+    // partial-distinct expansion before the final count); the one-pass
+    // fixed-state HLL twin for 100 TB lives next to it
+    // (cardinalityProfileApprox, error spec'd in CardinalitySpec —
+    // sketches have no cross-engine oracle).
     QueryDef("q70_vocab_profile",
       """SELECT source,
         |  CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct_toks,
@@ -3683,8 +3710,9 @@ object TextQueries {
     // ratio — the self-repetition metric (inverse Self-BLEU proxy)
     // that flags template-generated or boilerplate-heavy feeds before
     // they flood the mix. One explode + one source-keyed aggregate;
-    // the exact count(DISTINCT) shuffles distinct trigrams (the q70
-    // pattern).
+    // the exact count(DISTINCT) shuffles distinct trigrams (the exact
+    // path — its fixed-state HLL twin is the q70 pattern,
+    // `cardinalityProfileApprox`).
     QueryDef("q91_ngram_diversity",
       """WITH tg AS (
         |  SELECT source, unnest(list_transform(
@@ -6106,6 +6134,21 @@ object TextQueries {
       .fanOutScan(col("doc_id")) // scale-adaptive scan fan-out (r16)
       .select(col("doc_id"), col("source"),
         explode(gf.tokens(col("text"))).as("tok"))
+
+  /** HLL twin of q70: one pass, fixed sketch state per group — the
+    * 100 TB path for cardinality (exact count(DISTINCT) shuffles every
+    * distinct value; the sketch shuffles kilobytes). `rsd` is Spark's
+    * relative-standard-deviation knob. No oracle entry: sketch values
+    * have no cross-engine twin; CardinalitySpec bounds the error
+    * against the exact profile instead. */
+  def cardinalityProfileApprox(s: SparkSession, dir: String,
+      rsd: Double = 0.02): DataFrame =
+    tokensBySource(s, dir)
+      .groupBy("source")
+      .agg(approx_count_distinct(col("tok"), rsd).as("n_distinct_toks"),
+        count(lit(1)).as("n_tokens"),
+        approx_count_distinct(col("doc_id"), rsd).as("n_docs"))
+      .orderBy("source")
 
   /** KMV scale twin of q73: per-source k-minimum-values vocabulary
     * sketches ([[graft.plans.KmvSketch]] — ONE corpus pass, O(k) longs
