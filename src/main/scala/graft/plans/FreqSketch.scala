@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * exact `groupBy(tok).count` top-k pays (q08/q72's
   * TakeOrderedAndProject still shuffles one row per DISTINCT key; at
   * billions of distinct tokens the sketch is the only shippable
-  * shape). The frequency analog of q70's HLL cardinality twin.
+  * shape).
   *
   * Guarantees (classic Misra–Gries, preserved under merge):
   *   - stored count c undercounts: c ≤ true ≤ c + err, where `err` is

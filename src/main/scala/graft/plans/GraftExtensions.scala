@@ -2,20 +2,13 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, TimestampType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** SparkSessionExtensions entry point — registers the engine's SQL
-  * function surface so `spark.sql` users get the same scalar library
-  * as DataFrame users. Activate with
+/** SparkSessionExtensions entry point: the TopKPerKey planner strategy
+  * and rewrite rule, plus SQL names for the native expressions that
+  * queries reach through the Column API (`GraftExtensionsSpec` pins
+  * the list). Activate with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
-  *
-  *   - `stable_hash60(str)` — the native codegen'd [[StableHash60]];
-  *   - `parse_relative_time(str, now)` — the reference's relative-time
-  *     parse (reference `dags/spark_etl_script.py:12-29`) as a pure
-  *     expression composition (analysis-time expansion → fully
-  *     codegen'd, visible post-analysis as its constituent ops);
-  *   - `extract_tags(str, vocab_csv)` — vocabulary substring tagging.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -104,38 +97,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         InterleaveBits(args.init, intLit(args.last, "interleave_bits width"))))
 
     ext.injectFunction((
-      new FunctionIdentifier("deflate_ratio"),
-      info("deflate_ratio",
-        "deflate_ratio(str) - zlib-level-6 compressed/raw byte ratio (compressibility quality signal); NULL for empty input"),
-      (args: Seq[Expression]) => DeflateRatio(args.head)))
-
-    ext.injectFunction((
       new FunctionIdentifier("freq_sketch"),
       info("freq_sketch",
         "freq_sketch(str, k) - Misra-Gries heavy-hitter aggregate: <=k (item, count_min, err) candidates"),
       (args: Seq[Expression]) =>
         FreqSketch(args(0), intLit(args(1), "freq_sketch k"))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("kmv_sketch"),
-      info("kmv_sketch",
-        "kmv_sketch(str, k) - k-minimum-values theta sketch: sorted array of the k smallest distinct stable_hash60 values (mergeable distinct/intersection/union estimates)"),
-      (args: Seq[Expression]) =>
-        KmvSketch(args(0), intLit(args(1), "kmv_sketch k"))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("cm_sketch"),
-      info("cm_sketch",
-        "cm_sketch(str, width, depth) - Count-Min frequency sketch: struct(width, depth, total, cells)"),
-      (args: Seq[Expression]) =>
-        CmSketch(args(0), intLit(args(1), "cm_sketch width"),
-          intLit(args(2), "cm_sketch depth"))))
-
-    ext.injectFunction((
-      new FunctionIdentifier("cm_estimate"),
-      info("cm_estimate",
-        "cm_estimate(sketch, item) - Count-Min point estimate (never undercounts)"),
-      (args: Seq[Expression]) => CmProbe(args(0), args(1))))
 
     ext.injectFunction((
       new FunctionIdentifier("vec_outer_sum"),
@@ -148,67 +114,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("quant_sweep",
         "quant_sweep(array<float|double>) - 2/4/6/8-bit uniform-grid error sweep: struct(n, s2..s8 micro-long err2 sums, m2..m8 max abs err)"),
       (args: Seq[Expression]) => QuantSweep(args.head)))
-
-    // parse_relative_time: native node composition mirroring
-    // graft.functions.parseRelativeTime (reference semantics: substring
-    // match on hour/day, first digit run, yesterday -> NULL). Seconds
-    // arithmetic via long casts — codegen'd end to end.
-    ext.injectFunction((
-      new FunctionIdentifier("parse_relative_time"),
-      info("parse_relative_time",
-        "parse_relative_time(str, now) - 'N hours/days ago' -> timestamp"),
-      (args: Seq[Expression]) => {
-        val s = Lower(StringTrim(args(0)))
-        val digits = RegExpExtract(s, Literal("(\\d+)"), Literal(1))
-        val n = CaseWhen(
-          Seq((Not(EqualTo(digits, Literal(""))), Cast(digits, LongType))),
-          Literal.create(null, LongType))
-        val nowSecs = Cast(args(1), LongType)
-        def ago(unitSecs: Long) =
-          Cast(Subtract(nowSecs, Multiply(n, Literal(unitSecs))), TimestampType)
-        CaseWhen(
-          Seq(
-            (Contains(s, Literal("hour")), ago(3600L)),
-            (Contains(s, Literal("day")), ago(86400L))),
-          Literal.create(null, TimestampType))
-      }))
-
-    // extract_tags: routed through the SAME one-pass Aho–Corasick
-    // composition as graft.functions.extractTags (ADVICE r14 — the
-    // unrolled per-term Contains chain this registration kept after
-    // the r14 rewrite was 51 passes per text on the reference vocab,
-    // and its "identical to extractTags" comment had gone stale).
-    ext.injectFunction((
-      new FunctionIdentifier("extract_tags"),
-      info("extract_tags",
-        "extract_tags(str, vocab_csv) - sorted array of vocabulary substring hits"),
-      (args: Seq[Expression]) => {
-        val vocab = args(1) match {
-          case e if e.foldable && e.eval() != null =>
-            e.eval().toString.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-          case other => throw new IllegalArgumentException(
-            s"extract_tags vocabulary must be a string literal, got $other")
-        }
-        // Same tree as graft.functions.extractTags, built directly in
-        // Catalyst (a Column-composed lambda cannot cross the
-        // FunctionRegistry boundary unresolved): ONE PhraseScan pass,
-        // indices mapped through the sorted term table.
-        val terms = vocab.distinct.map(_.toLowerCase).distinct
-          .filter(_.nonEmpty)
-          .sortWith((a, b) =>
-            org.apache.spark.unsafe.types.UTF8String.fromString(a)
-              .compareTo(
-                org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0)
-        if (terms.isEmpty)
-          If(IsNotNull(args(0)),
-            Literal.create(Array.empty[String], ArrayType(StringType)),
-            Literal.create(null, ArrayType(StringType)))
-        else {
-          val termArr = CreateArray(terms.map(Literal(_)))
-          val i = NamedLambdaVariable("i", IntegerType, nullable = false)
-          ArrayTransform(PhraseScan(Lower(args(0)), terms),
-            LambdaFunction(ElementAt(termArr, Add(i, Literal(1))), Seq(i)))
-        }
-      }))
   }
 }

@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * ONE pass over the bytes regardless of how many phrases there are.
   *
   * This is the scale path for blocklist/policy/contamination phrase
-  * matching: the unrolled per-term `Contains` chain
-  * ([[graft.functions.extractTags]] / `extract_tags`, fine for a
-  * dozen vocabulary terms) re-scans the document once PER PHRASE —
+  * matching and [[graft.functions.extractTags]]'s vocabulary tagging:
+  * an unrolled per-term `Contains` chain (fine for a dozen terms)
+  * re-scans the document once PER PHRASE —
   * O(len · phrases) — where a production blocklist has 10⁴–10⁵
   * entries and documents are read once. Aho–Corasick is O(len) per
   * document plus O(Σ phrase bytes) one-time automaton build; the

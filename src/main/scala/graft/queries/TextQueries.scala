@@ -263,17 +263,15 @@ object TextQueries {
     * source parquet, rounded up to a power of two, floor 16 (all
     * local SFs keep the r15-comparable layout), cap 4096 (beyond
     * that, per-bucket file counts dominate). One value per (session,
-    * corpus) so co-bucketed joins stay aligned. Override:
-    * SPARK_GRAFT_BUCKETS. */
-  private def shardCount(s: SparkSession, dir: String): Int =
-    sys.env.get("SPARK_GRAFT_BUCKETS").map(_.toInt).getOrElse {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val bytes =
-        try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-        catch { case _: java.io.IOException => 0L }
-      shardCountForBytes(bytes)
-    }
+    * corpus) so co-bucketed joins stay aligned. */
+  private def shardCount(s: SparkSession, dir: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
+    val bytes =
+      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+      catch { case _: java.io.IOException => 0L }
+    shardCountForBytes(bytes)
+  }
 
   /** The pure sizing rule behind [[shardCount]], separated for the
     * spec: [[graft.sources.FileIO.bucketCount]] with a floor of 16. */
@@ -824,25 +822,6 @@ object TextQueries {
           when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L))
         }.reduce(_ + _).as("simhash"))
   }
-
-  /** Approximate twin of q63 (`approx_percentile`, t-digest): for
-    * metrics whose value space is NOT bounded — raw byte lengths,
-    * float scores — the exact percentile's O(distinct values) buffer
-    * stops being safe, and the fixed-size sketch is the 100 TB path.
-    * Same output shape as q63 so the two are directly comparable;
-    * `accuracy` is Spark's inverse-error knob (error ≈ 1/accuracy of
-    * the rank, i.e. 10000 → 0.01% rank error). */
-  def lengthProfileApprox(s: SparkSession, dir: String,
-      accuracy: Int = 10000): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("lang"), size(gf.tokens(col("text"))).cast("double").as("n"))
-      .groupBy("lang")
-      .agg(
-        gf.roundz(expr(s"approx_percentile(n, 0.5D, $accuracy)"), 4).as("p50"),
-        gf.roundz(expr(s"approx_percentile(n, 0.9D, $accuracy)"), 4).as("p90"),
-        gf.roundz(expr(s"approx_percentile(n, 0.99D, $accuracy)"), 4).as("p99"),
-        count(lit(1)).as("n_docs"))
-      .orderBy("lang")
 
   val defs: Seq[QueryDef] = Seq(
     // Exact dedup: hash-groupBy, keep min doc_id per content hash.
@@ -1929,11 +1908,6 @@ object TextQueries {
         .orderBy("lang")
     },
 
-    // Approximate twin of q63 — see lengthProfileApprox below. Not a
-    // registered query: approx_percentile's t-digest result has no
-    // cross-engine oracle; its error bound vs the exact profile is
-    // spec-asserted instead (LengthProfileSpec).
-
     // Near-dup CLUSTERS over the LSH candidate pairs: connected
     // components via alternating large-star/small-star (one survivor
     // per cluster is then a filter on id == component_id). The oracle
@@ -2424,10 +2398,7 @@ object TextQueries {
     // source — vocabulary growth is how pipelines detect corpus drift
     // and near-duplicate ingestion batches. Exact distinct is the
     // oracle-checked path (two-phase aggregate: Spark plans the
-    // partial-distinct expansion before the final count); the one-pass
-    // fixed-state HLL twin for 100 TB lives next to it
-    // (cardinalityProfileApprox, error spec'd in CardinalitySpec —
-    // sketches have no cross-engine oracle).
+    // partial-distinct expansion before the final count).
     QueryDef("q70_vocab_profile",
       """SELECT source,
         |  CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct_toks,
@@ -3710,9 +3681,7 @@ object TextQueries {
     // ratio — the self-repetition metric (inverse Self-BLEU proxy)
     // that flags template-generated or boilerplate-heavy feeds before
     // they flood the mix. One explode + one source-keyed aggregate;
-    // the exact count(DISTINCT) shuffles distinct trigrams (the exact
-    // path — its fixed-state HLL twin is the q70 pattern,
-    // `cardinalityProfileApprox`).
+    // the exact count(DISTINCT) shuffles distinct trigrams.
     QueryDef("q91_ngram_diversity",
       """WITH tg AS (
         |  SELECT source, unnest(list_transform(
@@ -6134,58 +6103,4 @@ object TextQueries {
       .fanOutScan(col("doc_id")) // scale-adaptive scan fan-out (r16)
       .select(col("doc_id"), col("source"),
         explode(gf.tokens(col("text"))).as("tok"))
-
-  /** HLL twin of q70: one pass, fixed sketch state per group — the
-    * 100 TB path for cardinality (exact count(DISTINCT) shuffles every
-    * distinct value; the sketch shuffles kilobytes). `rsd` is Spark's
-    * relative-standard-deviation knob. No oracle entry: sketch values
-    * have no cross-engine twin; CardinalitySpec bounds the error
-    * against the exact profile instead. */
-  def cardinalityProfileApprox(s: SparkSession, dir: String,
-      rsd: Double = 0.02): DataFrame =
-    tokensBySource(s, dir)
-      .groupBy("source")
-      .agg(approx_count_distinct(col("tok"), rsd).as("n_distinct_toks"),
-        count(lit(1)).as("n_tokens"),
-        approx_count_distinct(col("doc_id"), rsd).as("n_docs"))
-      .orderBy("source")
-
-  /** KMV scale twin of q73: per-source k-minimum-values vocabulary
-    * sketches ([[graft.plans.KmvSketch]] — ONE corpus pass, O(k) longs
-    * of state per source) + pairwise set-operation estimates over the
-    * collected sketches (sources-bounded driver work) — the 100 TB
-    * path q73's scaladoc promises: with millions of distinct tokens
-    * per source the exact postings self-join shuffles the full
-    * source×token table, while the sketches ship kilobytes and the
-    * estimates carry the ~1/√(k−2) KMV error. When a source's
-    * vocabulary fits inside k the sketch — and therefore the estimate
-    * — is EXACT (the spec pins this against q73's exact Jaccard). */
-  def vocabOverlapApprox(s: SparkSession, dir: String,
-      k: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.graft.CatalystBridge
-    import s.implicits._
-    val sketches = Tables.documents(s, dir)
-      .select(col("source"), explode(gf.tokens(col("text"))).as("tok"))
-      .groupBy("source")
-      .agg(CatalystBridge.column(
-        graft.plans.KmvSketch(CatalystBridge.expr(col("tok")), k)
-          .toAggregateExpression()).as("sketch"))
-      .as[(String, Array[Long])]
-      .collect() // sources-bounded (one O(k) array per source)
-      .sortBy(_._1)
-    val pairs = for {
-      i <- sketches.indices
-      j <- (i + 1) until sketches.length
-    } yield {
-      val (sa, va) = sketches(i)
-      val (sb, vb) = sketches(j)
-      (sa, sb,
-        graft.plans.Kmv.estimate(va, k),
-        graft.plans.Kmv.estimate(vb, k),
-        graft.plans.Kmv.intersectEstimate(va, vb, k),
-        graft.plans.Kmv.jaccardEstimate(va, vb, k))
-    }
-    pairs.toDF("src_a", "src_b", "est_n_a", "est_n_b",
-      "est_shared", "est_jaccard")
-  }
 }

@@ -25,13 +25,6 @@ object FileIO {
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** ORC source — Spark's second first-class columnar format (ships in
-    * the distribution, no extra dependency). Same pushdown/pruning
-    * story as parquet: min/max stripe statistics + predicate pushdown,
-    * so a filtered scan skips stripes at the footer. */
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
   // ---- sinks ------------------------------------------------------------
 
   def writeJson(df: DataFrame, path: String,
@@ -41,10 +34,6 @@ object FileIO {
   def writeCsv(df: DataFrame, path: String,
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).option("header", "true").csv(path)
-
-  def writeOrc(df: DataFrame, path: String,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).orc(path)
 
   /** Partitioned parquet append — the engine's native incremental
     * layout. Partition columns become directories; a scan filtered on

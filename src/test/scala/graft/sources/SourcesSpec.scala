@@ -172,20 +172,4 @@ class SourcesSpec extends SparkSpec {
     FileIO.readCsv(spark, s"$dir/csv", schema).collect() shouldBe df.collect()
     FileIO.readJson(spark, s"$dir/json", schema).collect() shouldBe df.collect()
   }
-
-  test("ORC sink/source round-trips with schema fidelity and filter pushdown") {
-    val dir = Files.createTempDirectory("orc").toString
-    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "c", 3.5))
-      .toDF("id", "s", "v")
-    FileIO.writeOrc(df, s"$dir/orc")
-    val back = FileIO.readOrc(spark, s"$dir/orc")
-    // ORC keeps names and types exactly (files mark all columns
-    // nullable, so compare modulo nullability — same as parquet).
-    back.schema.fields.map(f => (f.name, f.dataType)) shouldBe
-      df.schema.fields.map(f => (f.name, f.dataType))
-    back.orderBy("id").collect() shouldBe df.orderBy("id").collect()
-    // Pushdown reaches the ORC scan like parquet (stripe-stat skipping).
-    val plan = back.filter($"id" > 1L).queryExecution.executedPlan.toString
-    plan should include("PushedFilters: [IsNotNull(id), GreaterThan(id,1)")
-  }
 }
